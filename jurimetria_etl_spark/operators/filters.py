@@ -8,7 +8,7 @@ NULL-drops-row behavior, so it gets an explicit named combinator here.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -29,12 +29,3 @@ def date_range_null_pass(
     if upper is not None:
         pred = pred & (c <= upper)
     return c.isNull() | pred
-
-
-def filter_date_range_null_pass(
-    df: DataFrame,
-    col: str,
-    lower: Column | None = None,
-    upper: Column | None = None,
-) -> DataFrame:
-    return df.where(date_range_null_pass(col, lower, upper))

@@ -33,8 +33,7 @@ from jurimetria_etl_spark.session import get_spark
 from jurimetria_etl_spark.sinks.writers import (
     plot_horario,
     render_movimentos_json,
-    write_csv,
-    write_parquet,
+    write_artifacts,
 )
 from jurimetria_etl_spark.sources.datajud import DEFAULT_TRIBUNAIS, DataJudSource
 from jurimetria_etl_spark.sources.municipios import load_municipios
@@ -102,17 +101,13 @@ def run(
 ) -> dict[str, Any]:
     """EP1: ingest → render → artifacts.
 
-    Sink fan-out strategy: the ingest lineage executes exactly ONCE — into
-    the parquet artifact — and the count, CSV, and chart all derive from
-    re-reading that written table.  A ``.cache()`` of the full corpus would
-    serve the same purpose at fixture scale but is a memory-pressure trap
-    at 100 TB (and re-scanning freshly written local parquet is cheap);
-    test_pipeline_e2e pins that no cache/persist enters this path.  On
-    empty input the parquet dir is rolled back so the reference's K3
-    "no artifacts" contract holds (reference ``:261-263``)."""
-    import shutil
-    from pathlib import Path
-
+    ``write_artifacts`` (the strategy behind ``persist``) runs the ingest
+    lineage exactly once, into the one-file Parquet artifact (a shuffle to
+    one writer task, so the tribunals still page in parallel), and counts
+    and writes the CSV from reading that table back; on empty input it
+    rolls the artifacts back (K3).  The chart reads the written table too,
+    so no cache/persist of the corpus enters this path (test_pipeline_e2e
+    pins that)."""
     spark = get_spark("jurimetria-pipeline")
     df = build_dataframe(
         spark,
@@ -125,23 +120,9 @@ def run(
         municipios_path=args.municipios,
         source=source,
     )
-    df = render_movimentos_json(df)
-    out = Path(args.out_dir)
-    pq_path = out / "jurimetria.parquet"
-    out.mkdir(parents=True, exist_ok=True)
-    write_parquet(df, str(pq_path), single_file=True)
-    back = spark.read.parquet(str(pq_path))
-    total = back.count()
-    if total == 0:
-        shutil.rmtree(pq_path, ignore_errors=True)
-        if not any(out.iterdir()):
-            out.rmdir()
-        print("Total de processos: 0")
-        print("Nenhum dado para persistir.")
-        return {"total": 0}
-    print(f"Total de processos: {total:,}")
-    write_csv(back, str(out / "jurimetria.csv"), single_file=True)
-    plot_horario(back, f"{args.out_dir}/horario_jurimetria.jpg")
+    back, total = write_artifacts(render_movimentos_json(df), args.out_dir)
+    if total:
+        plot_horario(back, f"{args.out_dir}/horario_jurimetria.jpg")
     return {"total": total}
 
 

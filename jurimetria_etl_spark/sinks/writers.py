@@ -3,23 +3,32 @@
 K1 parquet-zstd, K2 csv, K3 empty-input guard, K4 JPEG histogram chart —
 mirroring ``/root/reference/src/jurimetria_pipeline.py:260-296`` with Spark
 writers.  pandas writes one file; Spark writes a directory — ``single_file``
-coalesces to 1 part for artifact-compatible layouts (SURVEY §7 hard-part 7).
+writes one part file for artifact-compatible layouts (SURVEY §7 hard-part
+7).  The Parquet write shuffles to one writer task rather than
+``coalesce(1)``, which Spark folds into the upstream stage and so would run
+the whole ingest (fetch, parse, flatten, render) in that one task.
 """
 
 from __future__ import annotations
 
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from jurimetria_etl_spark.functions.temporal import hour_in_sp, iso_render_sp
+from jurimetria_etl_spark.functions.temporal import SP_TZ, hour_in_sp
 
 
 def write_parquet(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """K1 — Parquet, zstd (reference ``:266``)."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("compression", "zstd").parquet(path)
+    """K1 — Parquet, zstd (reference ``:266``).  ``single_file`` shuffles
+    to one writer task, so the upstream keeps its parallelism; the
+    ``monotonically_increasing_id`` tag encodes (partition, row), so
+    sorting by it keeps ``coalesce(1)``'s row order on any cluster."""
+    if single_file:
+        tagged = df.select("*", F.monotonically_increasing_id().alias("__order"))
+        df = tagged.repartition(1).sortWithinPartitions("__order").drop("__order")
+    df.write.mode("overwrite").option("compression", "zstd").parquet(path)
 
 
 def _csv_ready(df: DataFrame) -> DataFrame:
@@ -36,38 +45,56 @@ def _csv_ready(df: DataFrame) -> DataFrame:
 
 
 def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """K2 — header CSV (reference ``:267``)."""
+    """K2 — header CSV (reference ``:267``).  ``single_file`` keeps
+    ``coalesce(1)``: callers pass the one-file Parquet read-back, already
+    one partition, so it serializes nothing."""
     out = _csv_ready(df)
     out = out.coalesce(1) if single_file else out
     out.write.mode("overwrite").option("header", True).csv(path)
 
 
 def persist(df: DataFrame, out_dir: str, single_file: bool = True) -> bool:
-    """K1+K2+K3 — skip with a message on empty input (reference
-    ``:261-263``); returns True if data was written."""
-    if df.isEmpty():
-        print("Nenhum dado para persistir.")
-        return False
+    """K1+K2+K3 — returns True if data was written (see ``write_artifacts``)."""
+    return write_artifacts(df, out_dir, single_file)[1] > 0
+
+
+def write_artifacts(
+    df: DataFrame, out_dir: str, single_file: bool = True
+) -> tuple[DataFrame, int]:
+    """Write the Parquet and CSV artifacts; return the Parquet's read-back
+    and its row count.  ``df``'s lineage runs once, into the Parquet; the
+    count and CSV read that table back (a ``.cache()`` of the corpus is a
+    memory trap at 100 TB).  On a count of 0 the Parquet is rolled back,
+    leaving no artifacts (reference ``:261-263``), and the read-back must
+    not be used."""
     out = Path(out_dir)
+    pq_path = out / "jurimetria.parquet"
     out.mkdir(parents=True, exist_ok=True)
-    write_parquet(df, str(out / "jurimetria.parquet"), single_file)
-    write_csv(df, str(out / "jurimetria.csv"), single_file)
-    return True
+    write_parquet(df, str(pq_path), single_file)
+    back = df.sparkSession.read.parquet(str(pq_path))
+    total = back.count()
+    print(f"Total de processos: {total:,}")
+    if total == 0:
+        shutil.rmtree(pq_path, ignore_errors=True)
+        if not any(out.iterdir()):
+            out.rmdir()
+        print("Nenhum dado para persistir.")
+    else:
+        write_csv(back, str(out / "jurimetria.csv"), single_file)
+    return back, total
 
 
 def render_movimentos_json(df: DataFrame, col: str = "movimentos") -> DataFrame:
     """F7+F8 — movimentos array<struct> → JSON string with SP-rendered ISO
     timestamps (the reference's serialize step ``:239-255``).  Canonical form
-    is Spark ``to_json``; oracle comparisons parse, not byte-compare."""
-    rendered = F.transform(
-        F.col(col),
-        lambda m: F.struct(
-            m["codigo"].alias("codigo"),
-            m["nome"].alias("nome"),
-            iso_render_sp(m["data_hora"]).alias("data_hora"),
-        ),
-    )
-    return df.withColumn(col, F.to_json(rendered))
+    is Spark ``to_json``; oracle comparisons parse, not byte-compare.  The
+    regex drops an all-zero fraction from ``data_hora`` values only (the
+    ``pd.Timestamp.isoformat()`` shape ``iso_render_sp`` pins); quotes in
+    ``nome`` are escaped, so its text never matches the anchor."""
+    opts = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX", "timeZone": SP_TZ}
+    whole_second = r'("data_hora":"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\d)\.000000'
+    rendered = F.regexp_replace(F.to_json(F.col(col), opts), whole_second, "$1")
+    return df.withColumn(col, rendered)
 
 
 def plot_horario(df: DataFrame, out_path: str, ts_col: str = "data_ajuizamento") -> bool:

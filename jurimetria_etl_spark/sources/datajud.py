@@ -203,8 +203,3 @@ class DataJudSource:
             [T.StructField("tribunal", T.StringType()), T.StructField("hit", HIT_SCHEMA)]
         )
         return self.spark.read.schema(wrapped).json(rdd)
-
-
-def read_hits_json(spark: SparkSession, path: str) -> DataFrame:
-    """Offline path: newline-delimited hit JSON with the explicit schema."""
-    return spark.read.schema(HIT_SCHEMA).json(path)

@@ -8,6 +8,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from jurimetria_etl_spark.functions.temporal import (
@@ -21,6 +22,7 @@ from jurimetria_etl_spark.operators.flatten import flatten_hits
 from jurimetria_etl_spark.operators.joins import enrich_municipio
 from jurimetria_etl_spark.operators.setops import union_all_by_name
 from jurimetria_etl_spark.schemas import HIT_SCHEMA, MUNICIPIOS_SCHEMA, PROCESSO_SCHEMA
+from jurimetria_etl_spark.sinks.writers import render_movimentos_json
 from jurimetria_etl_spark.sources.datajud import build_base_url, build_query
 
 # The sample hit doc from /root/reference/tests/test_anpp_pipeline.py:79-96
@@ -355,3 +357,54 @@ def test_movimentos_equal_timestamps_keep_input_order(spark):
     # NULLs (epoch key) first in input order, then the tied pair in
     # input order: 5, 2, 9, 1
     assert [m["codigo"] for m in got] == [5, 2, 9, 1]
+
+
+# movimentos as (codigo, nome, dataHora) triples for the render-kernel parity
+# test; dataHora None is a NULL data_hora.
+_LOOKALIKE = '"data_hora":"2023-01-01T00:00:00.000000-03:00"'
+_RENDER_CASES = {
+    "whole_second": [(1, "A", "2023-01-10T12:00:00Z")],
+    "millis": [(1, "A", "2023-01-10T12:00:00.123Z")],
+    "one_micro": [(1, "A", "2023-01-10T12:00:00.000001Z")],
+    "dst_2018": [(1, "A", "2018-01-01T03:00:00Z")],
+    "null_data_hora": [(1, "A", None), (2, "B", "2023-01-10T12:00:00Z")],
+    "empty": [],
+    "nome_lookalike": [(1, _LOOKALIKE, "2023-01-10T12:00:00Z")],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RENDER_CASES))
+def test_render_movimentos_json_matches_iso_render_sp(spark, case):
+    """F7+F8: the one-pass ``to_json`` render equals the per-element
+    ``iso_render_sp`` render it replaced, byte for byte."""
+    raw = spark.createDataFrame(
+        [(_RENDER_CASES[case],)],
+        "m array<struct<codigo: bigint, nome: string, s: string>>",
+    )
+    movs = F.transform(
+        "m",
+        lambda m: F.struct(
+            m["codigo"].alias("codigo"),
+            m["nome"].alias("nome"),
+            F.to_timestamp(m["s"]).alias("data_hora"),
+        ),
+    )
+    df = raw.select(movs.alias("movimentos"))
+    reference = F.to_json(
+        F.transform(
+            "movimentos",
+            lambda m: F.struct(
+                m["codigo"].alias("codigo"),
+                m["nome"].alias("nome"),
+                iso_render_sp(m["data_hora"]).alias("data_hora"),
+            ),
+        )
+    )
+    row = render_movimentos_json(df.select("movimentos", reference.alias("want"))).first()
+    assert row["movimentos"] == row["want"]
+    got = json.loads(row["movimentos"])
+    if case == "null_data_hora":
+        assert "data_hora" not in got[0]
+    if case == "nome_lookalike":
+        assert got[0]["nome"] == _LOOKALIKE
+        assert got[0]["data_hora"] == "2023-01-10T09:00:00-03:00"

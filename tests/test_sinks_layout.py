@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from jurimetria_etl_spark.sinks.writers import (
     write_bucketed_table,
+    write_parquet,
     write_partitioned,
 )
 from jurimetria_etl_spark.sources.fixtures import load_fixture
@@ -183,3 +184,55 @@ def test_zordered_layout_bounds_both_dimensions(spark, tmp_path):
     assert back.agg(F.sum("x"), F.sum("y")).first() == df.agg(
         F.sum("x"), F.sum("y")
     ).first()
+
+
+def test_single_file_parquet_shuffles_to_one_writer(spark, tmp_path):
+    """``write_parquet(single_file=True)`` keeps the upstream at its own
+    width: one shuffle into a single writer task, no ``Coalesce`` folded
+    into the source stage, and the file in ``coalesce(1)``'s row order."""
+    import re
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    df = spark.range(0, 4000, 1, 4).select(
+        ((F.col("id") * 7919) % 4001).alias("k"), F.col("id").cast("string").alias("s")
+    )
+    path = str(tmp_path / "one.parquet")
+    group = "single_file_write"
+    sc.setJobGroup(group, group)  # also the SQL execution's description
+    try:
+        write_parquet(df, path, single_file=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc.listenerBus().waitUntilEmpty()
+
+    # The SQL store keeps a bounded window of executions, newest last.
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    n = executions.size()
+    recent = [executions.apply(i) for i in range(max(0, n - 20), n)]
+    plans = [e.physicalPlanDescription() for e in recent if e.description() == group]
+    assert len(plans) == 1
+    # Formatted (AQE) plan: a node tree, then one "(id) Name ... Arguments:"
+    # block per node.  Every Exchange of the executed tree must be the
+    # single-partition shuffle.
+    plan = plans[0]
+    tree = plan.split("== Initial Plan ==")[0]
+    exchanges = [
+        re.search(rf"\({n}\) Exchange\n(?:.*\n)*?Arguments: (\w+)", plan).group(1)
+        for n in re.findall(r"Exchange \((\d+)\)", tree)
+    ]
+    assert exchanges == ["SinglePartition"]
+    assert not re.search(r"\bCoalesce\b", plan)
+
+    tracker, store = sc.statusTracker(), jsc.statusStore()
+    tasks = []
+    for jid in tracker.getJobIdsForGroup(group):
+        for sid in tracker.getJobInfo(jid).stageIds:
+            st = store.lastStageAttempt(sid)
+            if st.status().toString() != "SKIPPED":
+                tasks.append(st.numCompleteTasks())
+    assert sorted(tasks) == [1, 4]
+
+    assert len(list(Path(path).glob("part-*.parquet"))) == 1
+    assert spark.read.parquet(path).collect() == df.coalesce(1).collect()
