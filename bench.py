@@ -460,23 +460,10 @@ def shed_to_fit(summary: dict, timings: dict, limit: int = 1900) -> str:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    from jurimetria_etl_spark.plans.corpus import full_registry
-    from jurimetria_etl_spark.plans.extensions import BENCH_ONLY
-    from jurimetria_etl_spark.plans.tpch import TPCH_EXTRA
+    from jurimetria_etl_spark.plans.corpus import all_queries
     from jurimetria_etl_spark.session import get_spark
 
-    # Deregistered forms stay benchable — rotation out of the driver's
-    # 50-entry correctness window must not silently drop a timing series.
-    from jurimetria_etl_spark.plans.corpus import CORPUS_DEREGISTERED
-    from jurimetria_etl_spark.plans.extensions import EXT_DEREGISTERED
-
-    registry = {
-        **CORPUS_DEREGISTERED,
-        **EXT_DEREGISTERED,
-        **full_registry(),
-        **BENCH_ONLY,
-        **TPCH_EXTRA,
-    }
+    registry = all_queries()
 
     spark = get_spark("bench")
     # Warm the JVM + parquet footers so the first timed query isn't charged

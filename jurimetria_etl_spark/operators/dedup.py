@@ -196,16 +196,6 @@ def _minhash_from_base(base: Column, k: int) -> Column:
     )
 
 
-def minhash_signature(col: Column | str, k: int = 8, n: int = 3) -> Column:
-    """MinHash signature as a single Column expression.  Prefer
-    ``add_minhash`` in pipelines: it stages the shingle-hash array in its
-    own projection so the md5 pass runs once, not once per permutation
-    (higher-order functions sit outside whole-stage codegen's
-    common-subexpression elimination)."""
-    base = F.transform(word_shingles(col, n), lambda s: hash60(s) % MINHASH_PRIME)
-    return _minhash_from_base(base, k)
-
-
 def add_minhash(
     df: DataFrame, text_col: str, k: int = 8, n: int = 3, sig_col: str = "minhash"
 ) -> DataFrame:

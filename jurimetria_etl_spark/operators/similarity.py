@@ -25,6 +25,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from jurimetria_etl_spark.memo import session_memo
 from jurimetria_etl_spark.operators.dedup import widen_partitions
 
 
@@ -225,45 +226,30 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     ]
 
 
-# Literal plane cubes are memoized per (SparkContext, params): building the
-# n_tables × n_planes × dim literal dominates driver-side query-build time
-# otherwise (~1 s per call for 8×4×64), and every query that computes
-# signatures needs the identical cube.
-_PLANE_CUBE_CACHE: dict[tuple, Column] = {}
-
-
+# Building the n_tables × n_planes × dim literal dominates driver-side
+# query-build time otherwise (~1 s per call for 8×4×64), and every query
+# that computes signatures needs the identical cube.
+@session_memo
 def _plane_cube_lit(dim: int, n_planes: int, n_tables: int, seed: int) -> Column:
     """One array<array<array<double>>> literal holding all L plane matrices.
 
     Each plane rides in as a 1-D numpy literal (one py4j conversion per
     plane — Spark rejects ≥2-D ndarray literals — ~3× faster than the
-    per-element conversion a nested python-list literal costs) and the
-    result is cached keyed by the application id so a restarted session
-    cannot serve stale JVM references.
+    per-element conversion a nested python-list literal costs).
     """
     import numpy as np
-    from pyspark.sql import SparkSession
 
-    sess = SparkSession.getActiveSession()
-    app = sess.sparkContext.applicationId if sess is not None else ""
-    key = (app, dim, n_planes, n_tables, seed)
-    if key not in _PLANE_CUBE_CACHE:
-        for stale in [k for k in _PLANE_CUBE_CACHE if k[0] != app]:
-            del _PLANE_CUBE_CACHE[stale]
-        _PLANE_CUBE_CACHE[key] = F.array(
-            *[
-                F.array(
-                    *[
-                        F.lit(np.asarray(plane))
-                        for plane in _hyperplanes(
-                            dim, n_planes, seed + 1000 * t
-                        )
-                    ]
-                )
-                for t in range(n_tables)
-            ]
-        )
-    return _PLANE_CUBE_CACHE[key]
+    return F.array(
+        *[
+            F.array(
+                *[
+                    F.lit(np.asarray(plane))
+                    for plane in _hyperplanes(dim, n_planes, seed + 1000 * t)
+                ]
+            )
+            for t in range(n_tables)
+        ]
+    )
 
 
 def _bucket_from_matrix(vec: Column, planes_mat: Column) -> Column:
@@ -936,51 +922,30 @@ def dedup_embeddings_keep_one(
     return dedup_keep_one_per_cluster(embeddings, pairs, id_col)
 
 
-# Centroid literal columns are memoized per (SparkContext, centroid set):
-# building the n_cells × dim literal matrix costs one py4j round-trip PER
+# Building the n_cells × dim literal matrix costs one py4j round-trip PER
 # CENTROID, which at production cell counts (n_cells ∝ corpus, e.g. 160
 # at the 20k-row scale fixture) dominates DRIVER-SIDE query-build time —
 # measured 2.3-2.9 s per probe at 160 cells vs a 0.7 s executed scan
-# (r11; the same economics as _PLANE_CUBE_CACHE above).  The key is the
-# FULL value tuple, not a hash of it — a hash collision would silently
-# score against the wrong geometry.  Column objects are reusable
-# expression trees within a session; stale-context entries are evicted
-# on first use of a new context.
-_CENTROID_LIT_CACHE: dict[tuple, tuple[Column, Column]] = {}
-
-
+# (r11).  The key is the FULL value tuple, not a hash of it — a hash
+# collision would silently score against the wrong geometry.
+@session_memo(
+    key=lambda centroids: tuple(
+        (int(cid), tuple(map(float, v))) for cid, v in centroids
+    ),
+    cap=8,  # bound driver memory
+)
 def _centroid_literals(
     centroids: list[tuple[int, list[float]]],
 ) -> tuple[Column, Column]:
     import numpy as np
-    from pyspark import SparkContext
 
-    sc = SparkContext._active_spark_context
-    # Identity-stable context token (r11 ADVICE): ``id(sc)`` can be
-    # REUSED by CPython for a new context after the old one is
-    # garbage-collected, defeating stale-entry eviction and handing out
-    # a Column bound to a dead JVM gateway.  (applicationId, startTime)
-    # is unique per JVM context lifetime; the _PLANE_CUBE_CACHE posture.
-    token = (
-        (sc.applicationId, sc.startTime) if sc is not None else ("", 0)
+    # 1-D numpy literals: one py4j conversion per centroid instead
+    # of one per element (Spark rejects ≥2-D ndarray literals).
+    mat = F.array(
+        *[F.lit(np.asarray(vec, dtype="float64")) for _, vec in centroids]
     )
-    key = (
-        token,
-        tuple((int(cid), tuple(map(float, v))) for cid, v in centroids),
-    )
-    if key not in _CENTROID_LIT_CACHE:
-        for stale in [k for k in _CENTROID_LIT_CACHE if k[0] != key[0]]:
-            del _CENTROID_LIT_CACHE[stale]
-        if len(_CENTROID_LIT_CACHE) >= 8:  # bound driver memory
-            _CENTROID_LIT_CACHE.pop(next(iter(_CENTROID_LIT_CACHE)))
-        # 1-D numpy literals: one py4j conversion per centroid instead
-        # of one per element (Spark rejects ≥2-D ndarray literals).
-        mat = F.array(
-            *[F.lit(np.asarray(vec, dtype="float64")) for _, vec in centroids]
-        )
-        cids = F.lit([int(cid) for cid, _ in centroids])
-        _CENTROID_LIT_CACHE[key] = (mat, cids)
-    return _CENTROID_LIT_CACHE[key]
+    cids = F.lit([int(cid) for cid, _ in centroids])
+    return mat, cids
 
 
 def _nearest_cells(
@@ -992,7 +957,7 @@ def _nearest_cells(
     a pure Catalyst expression: score every centroid against the vector,
     sort the (sim, id) structs, slice.  The centroid matrix is ONE
     array<array<double>> literal scored by a single transform lambda,
-    memoized per session (``_CENTROID_LIT_CACHE``) so repeated probes
+    memoized per session (``_centroid_literals``) so repeated probes
     against the same geometry pay the py4j literal build once."""
     mat, cids = _centroid_literals(centroids)
     scored = F.transform(

@@ -145,32 +145,6 @@ def quality_score(col: Column | str, lang: str = "en") -> Column:
     return F.round(score, 6)
 
 
-def add_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach the full text-analysis column family."""
-    from jurimetria_etl_spark.operators.dedup import fingerprint
-
-    return (
-        df.withColumn("lang_pred", lang_id(text_col))
-        .withColumn("n_tokens", token_count(text_col))
-        .withColumn("n_tokens_bpe", bpe_ish_token_count(text_col))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("fingerprint", fingerprint(text_col))
-    )
-
-
-def top_terms(df: DataFrame, text_col: str, k: int = 20) -> DataFrame:
-    """Corpus-level term frequencies: explode + hash agg + deterministic
-    top-k (count desc, term asc)."""
-    return (
-        df.select(F.explode(tokens(text_col)).alias("term"))
-        .where(F.col("term") != "")
-        .groupBy("term")
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), "term")
-        .limit(k)
-    )
-
-
 def chunk_documents(
     df: DataFrame,
     text_col: str = "text",

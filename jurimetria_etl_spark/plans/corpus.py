@@ -1586,6 +1586,23 @@ def full_registry() -> dict[str, Q]:
     return {**CORPUS, **EXTENSIONS, **TPCH}
 
 
+def all_queries() -> dict[str, Q]:
+    """Every query the repo can run: deregistered forms stay benchable, so
+    rotation out of the driver's correctness window never drops a timing
+    series, a probe or a plan pin.  The bench's query order follows this
+    merge order."""
+    from jurimetria_etl_spark.plans.extensions import BENCH_ONLY, EXT_DEREGISTERED
+    from jurimetria_etl_spark.plans.tpch import TPCH_EXTRA
+
+    return {
+        **CORPUS_DEREGISTERED,
+        **EXT_DEREGISTERED,
+        **full_registry(),
+        **BENCH_ONLY,
+        **TPCH_EXTRA,
+    }
+
+
 def query_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: q.spark for name, q in full_registry().items()}
 

@@ -106,18 +106,6 @@ MUNICIPIOS_SCHEMA = T.StructType(
     ]
 )
 
-# ── Legacy e-SAJ scrape row (SURVEY §2.1 S6,
-#    /root/reference/legacy/legacy_datajud_connector.py:62-74). ──────────────
-ESAJ_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("processo", T.StringType()),
-        T.StructField("classe", T.StringType()),
-        T.StructField("assunto", T.StringType()),
-        T.StructField("orgao", T.StringType()),
-        T.StructField("data", T.StringType()),  # yyyy-mm-dd
-    ]
-)
-
 # ── Driver fixture tables (/root/testdata, FIXTURES.md §B). ─────────────────
 FIXTURE_TABLES = (
     "region",

@@ -20,10 +20,6 @@ import re
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-
-from jurimetria_etl_spark.schemas import ESAJ_ROW_SCHEMA
-
 # transport(url, params) -> (status_code, text_or_json)
 HtmlTransport = Callable[[str, dict[str, Any]], tuple[int, str]]
 JsonTransport = Callable[[str, dict[str, Any]], tuple[int, dict[str, Any]]]
@@ -146,22 +142,6 @@ def fetch_esaj_rows(
         if pause:
             _time.sleep(pause)
     return out
-
-
-def esaj_scan(
-    spark: SparkSession,
-    transport: HtmlTransport,
-    base_url: str = "https://esaj.tjce.jus.br/cpopg/search.do",
-    max_pages: int | None = None,
-    params: dict[str, Any] | None = None,
-) -> DataFrame:
-    """S6 scan.  ``params`` defaults to the reference's full search-form
-    payload (``esaj_query()``) — the form fields must ride EVERY page
-    request, or a live scrape queries an unfiltered/invalid form."""
-    rows = fetch_esaj_rows(
-        transport, base_url, max_pages, params=params or esaj_query()
-    )
-    return spark.createDataFrame(rows or [], ESAJ_ROW_SCHEMA)
 
 
 def fetch_datajud_stats(

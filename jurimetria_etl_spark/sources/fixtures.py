@@ -6,30 +6,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from jurimetria_etl_spark.memo import session_memo
 from jurimetria_etl_spark.schemas import FIXTURE_TABLES
 
-# DataFrame memo per (session, application, dir, table): building a fresh
-# reader costs ~0.3s of driver RPC + footer/schema inference PER CALL, and
-# every corpus query loads 1-5 tables — measured as the bulk of the
-# per-query "scheduling floor" in the warm bench.  DataFrames are
-# immutable plan objects, so handing the same one to every caller is safe.
-# The key includes ``id(spark)`` because DataFrames are bound to the
-# SparkSession that created them — two sessions in one application (e.g.
-# ``newSession()``) must not receive each other's frames.  The file
-# listing is pinned at first read (same as any reused DataFrame), which is
-# exactly right for the read-only fixture dirs this loader serves;
-# regenerating a fixture dir IN-PROCESS requires ``clear_fixture_memo()``
-# (the _scale dirs are generated by a separate gen_testdata.py process,
-# so the standing tools never hit this; the hook exists for REPL use).
-_FIXTURE_MEMO: dict[tuple[int, str, str, str], DataFrame] = {}
 
-
-def clear_fixture_memo() -> None:
-    """Drop every memoized reader — required after regenerating a fixture
-    directory within the same process (the memo pins file listings)."""
-    _FIXTURE_MEMO.clear()
-
-
+# Session-memoized (memo.py): a fresh reader costs ~0.3s of driver RPC +
+# footer/schema inference per call, and every corpus query loads 1-5
+# tables.  The file listing is pinned at first read, so regenerating a
+# fixture directory in-process needs ``memo.clear()``.
+@session_memo(key=lambda spark, sf_dir, table: (sf_dir.rstrip("/"), table))
 def load_fixture(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read one fixture table.
 
@@ -39,10 +24,6 @@ def load_fixture(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     here to a proper TimestampType via exact integer division (micros
     truncation, matching DuckDB's nanos→micros read).
     """
-    key = (id(spark), spark.sparkContext.applicationId, sf_dir.rstrip("/"), table)
-    hit = _FIXTURE_MEMO.get(key)
-    if hit is not None:
-        return hit
     try:  # runtime-settable SQL conf; the driver's session may not have it
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
@@ -51,7 +32,6 @@ def load_fixture(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     for field in df.schema.fields:
         if field.name == "ts" and isinstance(field.dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    _FIXTURE_MEMO[key] = df
     return df
 
 

@@ -279,38 +279,18 @@ def _unpartitioned_windows(plan: str) -> int:
 
 @pytest.fixture(scope="module")
 def registry():
-    import jurimetria_etl_spark.plans.extensions as E
-    from jurimetria_etl_spark.plans.corpus import (
-        CORPUS_DEREGISTERED,
-        full_registry,
-    )
-    from jurimetria_etl_spark.plans.extensions import (
-        BENCH_ONLY,
-        EXT_DEREGISTERED,
-    )
-    from jurimetria_etl_spark.plans.tpch import TPCH_EXTRA
+    from jurimetria_etl_spark import memo
+    from jurimetria_etl_spark.plans.corpus import all_queries
 
     # The exchange pins below are for the COLD plan.  Other test modules
-    # sharing this session may have populated the plan-level signature
-    # caches (persisted frames), which legitimately replace an exchange
-    # with an InMemoryRelation and would make the pins order-dependent —
-    # start from a known cache state instead.
-    for cache in (E._SIMHASH_SIG_CACHE, E._LSH_BANDED_CACHE, E._IVF_CACHE):
-        for v in cache.values():
-            try:
-                (v[0] if isinstance(v, tuple) else v).unpersist()
-            except Exception:
-                pass
-        cache.clear()
+    # sharing this session may have populated the session memo (persisted
+    # signature frames), which legitimately replace an exchange with an
+    # InMemoryRelation and would make the pins order-dependent — start
+    # from a known cache state instead.
+    memo.clear()
     # Same merge bench.py uses: deregistered forms stay on the bench, so
     # their plan contracts stay pinned too.
-    return {
-        **CORPUS_DEREGISTERED,
-        **EXT_DEREGISTERED,
-        **full_registry(),
-        **BENCH_ONLY,
-        **TPCH_EXTRA,
-    }
+    return all_queries()
 
 
 def test_every_bench_query_has_a_pinned_expectation():

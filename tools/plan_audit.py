@@ -226,25 +226,11 @@ def summarize(plan: str) -> list[str]:
 
 
 def main(sf_dir: str) -> None:
-    from jurimetria_etl_spark.plans.corpus import (
-        CORPUS_DEREGISTERED,
-        full_registry,
-    )
-    from jurimetria_etl_spark.plans.extensions import (
-        BENCH_ONLY,
-        EXT_DEREGISTERED,
-    )
-    from jurimetria_etl_spark.plans.tpch import TPCH_EXTRA
+    from jurimetria_etl_spark.plans.corpus import all_queries
     from jurimetria_etl_spark.session import get_spark
 
     spark = get_spark("plan-audit")
-    registry = {
-        **CORPUS_DEREGISTERED,
-        **EXT_DEREGISTERED,
-        **full_registry(),
-        **BENCH_ONLY,
-        **TPCH_EXTRA,
-    }
+    registry = all_queries()
     print("# Physical-plan audit\n")
     print(f"Generated against `{sf_dir}` — `python tools/plan_audit.py`.\n")
     for name, intent in AUDITED:

@@ -58,27 +58,10 @@ def main() -> None:
 
     sys.path.insert(0, args.repo)
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from jurimetria_etl_spark.plans.corpus import (
-        CORPUS_DEREGISTERED,
-        full_registry,
-    )
-    from jurimetria_etl_spark.plans.extensions import (
-        BENCH_ONLY,
-        EXT_DEREGISTERED,
-    )
-    from jurimetria_etl_spark.plans.tpch import TPCH_EXTRA
+    from jurimetria_etl_spark.plans.corpus import all_queries
     from jurimetria_etl_spark.session import get_spark
 
-    # same composition as bench.py's registry: deregistered forms stay
-    # probe-able
-    reg = {
-        **CORPUS_DEREGISTERED,
-        **EXT_DEREGISTERED,
-        **full_registry(),
-        **BENCH_ONLY,
-        **TPCH_EXTRA,
-    }
-    fn = reg[args.query].spark
+    fn = all_queries()[args.query].spark
     spark = get_spark("quiet_probe")
     spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").count()
     spark.sparkContext.setJobDescription(

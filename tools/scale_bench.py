@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import sys
 import time
 
@@ -120,20 +121,13 @@ def main() -> None:
         if not os.path.isdir(d):
             raise SystemExit(f"missing {d}; run tools/gen_testdata.py first")
 
-    from jurimetria_etl_spark.plans.corpus import CORPUS_DEREGISTERED, full_registry
-    from jurimetria_etl_spark.plans.extensions import BENCH_ONLY, EXT_DEREGISTERED
-    from jurimetria_etl_spark.plans.tpch import TPCH_EXTRA
+    from jurimetria_etl_spark.memo import session_memo
+    from jurimetria_etl_spark.plans.corpus import all_queries
     from jurimetria_etl_spark.session import get_spark
 
     # deregistered forms included: rotation in/out of the driver window
     # must never change what this tool can measure
-    registry = {
-        **CORPUS_DEREGISTERED,
-        **EXT_DEREGISTERED,
-        **full_registry(),
-        **BENCH_ONLY,
-        **TPCH_EXTRA,
-    }
+    registry = all_queries()
     spark = get_spark("scale-bench")
 
     # x13 contrast pair: the registry x13 form pins FIXED n_planes=4 (16
@@ -349,36 +343,36 @@ def main() -> None:
     # corpus at ~125 occupancy, so the batch touches a bounded number
     # of cells and the pruned scan reads ~constant rows across 10×
     # data — ann_store_scaled_cells' claim, on the dedup-gate store.
-    # The store build rides the discarded cold run (cached per sf).
-    _SEM_STORE_CACHE: dict = {}
-
-    def semdedup_store_probe(spark, sf_dir):
+    # The store build rides the discarded cold run (session-memoized).
+    @session_memo(release=lambda v: shutil.rmtree(v[0], ignore_errors=True))
+    def _semdedup_store(spark, sf_dir):
         import tempfile as _tf
 
-        from pyspark.sql import functions as F
-
-        from jurimetria_etl_spark.operators.semdedup import (
-            build_semdedup_store,
-            semdedup_incremental,
-        )
+        from jurimetria_etl_spark.operators.semdedup import build_semdedup_store
         from jurimetria_etl_spark.operators.similarity import (
             train_ivf_centroids,
         )
         from jurimetria_etl_spark.sources.fixtures import load_fixture
 
         emb = load_fixture(spark, sf_dir, "embeddings")
-        key = (spark.sparkContext.applicationId, sf_dir)
-        if key not in _SEM_STORE_CACHE:
-            n_cells = max(16, emb.count() // 125)
-            cents = train_ivf_centroids(
-                emb, n_cells=n_cells, n_iters=2
-            )
-            d = _tf.mkdtemp(prefix="sem_store_scale_")
-            build_semdedup_store(emb, cents).write.mode(
-                "append"
-            ).partitionBy("sem_cluster").parquet(d)
-            _SEM_STORE_CACHE[key] = (d, cents)
-        d, cents = _SEM_STORE_CACHE[key]
+        n_cells = max(16, emb.count() // 125)
+        cents = train_ivf_centroids(
+            emb, n_cells=n_cells, n_iters=2
+        )
+        d = _tf.mkdtemp(prefix="sem_store_scale_")
+        build_semdedup_store(emb, cents).write.mode(
+            "append"
+        ).partitionBy("sem_cluster").parquet(d)
+        return d, cents
+
+    def semdedup_store_probe(spark, sf_dir):
+        from pyspark.sql import functions as F
+
+        from jurimetria_etl_spark.operators.semdedup import semdedup_incremental
+        from jurimetria_etl_spark.sources.fixtures import load_fixture
+
+        emb = load_fixture(spark, sf_dir, "embeddings")
+        d, cents = _semdedup_store(spark, sf_dir)
         store = spark.read.parquet(d)
         batch = emb.where(F.col("vec_id").isin(list(range(8)))).select(
             (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"

@@ -65,24 +65,10 @@ def main() -> None:
     ap.add_argument("--queries", nargs="*", default=TOP_SF1)
     args = ap.parse_args()
 
-    from jurimetria_etl_spark.plans.corpus import (
-        CORPUS_DEREGISTERED,
-        full_registry,
-    )
-    from jurimetria_etl_spark.plans.extensions import (
-        BENCH_ONLY,
-        EXT_DEREGISTERED,
-    )
-    from jurimetria_etl_spark.plans.tpch import TPCH_EXTRA
+    from jurimetria_etl_spark.plans.corpus import all_queries
     from jurimetria_etl_spark.session import get_spark
 
-    reg = {
-        **CORPUS_DEREGISTERED,
-        **EXT_DEREGISTERED,
-        **full_registry(),
-        **BENCH_ONLY,
-        **TPCH_EXTRA,
-    }
+    reg = all_queries()
     spark = get_spark("sf1_core_scaling")
     cpus = spark.sparkContext.defaultParallelism
     spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").count()
