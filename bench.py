@@ -32,69 +32,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "q01_scan_project",
-    "q06_join_star",
-    "q08_agg_hour",
-    "q10_agg_conditional",
-    "q12_grouping",
-    "q13_window_rank",
-    "q36_gapfill",
-    "q15_topk",
-    "q20_array_agg",
-    "q22_dedup_exact",
-    "q24_top_terms",
-    "q27_asof_join",
-    "q28_range_join",
-    "q32_percentile",
-    "t01_pricing_summary",
-    "t02_shipping_priority",
-    "t03_local_supplier_volume",
-    "t04_returned_items",
-    "t06_late_shipments",
-    "t07_promo_revenue",
-    "t08_small_qty_revenue",
-    "t09_promotion_suppliers",
-    "t10_idle_rich_customers",
-    "t11_big_orders",
-    "t12_waiting_suppliers",
-    "t13_min_cost_supplier",
-    "t14_customer_distribution",
-    "t15_disjunctive_pricing",
-    "t16_important_parts",
-    "t17_top_supplier",
-    "t18_supplier_cnt_by_part",
-    "t19_nation_volume",
-    "t20_market_share",
-    "t21_product_profit",
-    "t22_revenue_change",
-    "x05_minhash_near_dups",
-    "x08_simhash_near_dups",
-    "x09_text_profile",
-    "x13_cosine_join",
-    "x13b_cosine_join_scaled",
-    "x14_ann_ivf",
-    "x41_ann_store_topk",
-    "x15_media_metadata",
-    "x17_rolling_fingerprint",
-    "x18_near_dup_clusters",
-    "x20_pack_shards",
-    "x28_duplicate_spans",
-    "x29_boilerplate_spans",
-    "x32_duplicate_lines",
-    "x34_bloom_incremental_dedup",
-    "x35_bm25_search",
-    "x36_semdedup",
-    "x37_hybrid_search",
-    "x37b_hybrid_search_ann",
-    "x22_training_shards",
-    "x27_hll_daily_uniques",
-    "q32b_percentile_hist",
-    "x43_curation_funnel",
-]
+from jurimetria_etl_spark.plans.registry import REGISTRY  # noqa: E402
+
+HEADLINE = [name for name, q in REGISTRY.items() if q.bench]
 
 
-def _x13b_oracle_for(con, registry) -> str:
+def _x13b_oracle_for(con) -> str:
     """Re-derive x13b's oracle plane literals for the corpus in ``con`` —
     the registered SQL pins the 500-row gate fixtures' plane count, and
     DuckDB must time the SAME banding the Spark side auto-derives."""
@@ -105,7 +48,7 @@ def _x13b_oracle_for(con, registry) -> str:
     return _x13_join_sql(n_planes=suggest_lsh_planes(n))
 
 
-def run_sf1_tier(spark, registry, sf1_dir: str) -> dict:
+def run_sf1_tier(spark, sf1_dir: str) -> dict:
     """Second headline tier: the full corpus at the self-generated sf1
     (10× the driver's bench scale) — the measured answer to "does the
     per-query >2× floor story amortize", previously argued only from
@@ -144,7 +87,7 @@ def run_sf1_tier(spark, registry, sf1_dir: str) -> dict:
     for name in HEADLINE:
         if name in sf1_skip:
             continue
-        fn = registry[name].spark
+        fn = REGISTRY[name].spark
         try:
             fn(spark, sf1_dir).write.format("noop").mode("overwrite").save()
             t0 = time.time()
@@ -152,11 +95,11 @@ def run_sf1_tier(spark, registry, sf1_dir: str) -> dict:
             warm[name] = round(time.time() - t0, 3)
         except Exception as e:
             errors[name] = f"{type(e).__name__}: {e}"[:300]
-        sql = registry[name].oracle
+        sql = REGISTRY[name].oracle
         if sql is None:
             continue
         if name == "x13b_cosine_join_scaled":
-            sql = _x13b_oracle_for(con, registry)
+            sql = _x13b_oracle_for(con)
         try:
             t0 = time.time()
             con.sql(sql).fetchall()
@@ -460,10 +403,7 @@ def shed_to_fit(summary: dict, timings: dict, limit: int = 1900) -> str:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    from jurimetria_etl_spark.plans.corpus import all_queries
     from jurimetria_etl_spark.session import get_spark
-
-    registry = all_queries()
 
     spark = get_spark("bench")
     # Warm the JVM + parquet footers so the first timed query isn't charged
@@ -513,24 +453,13 @@ def main() -> None:
         nonlocal duck_total
         if _duck_con is None:
             return
-        sql = registry[name].oracle
+        sql = REGISTRY[name].oracle
         if sql is None:
             return
         if name == "x13b_cosine_join_scaled":
-            # The registered oracle pins plane literals for the 500-row
-            # GATE fixtures; at bench scale the Spark side auto-derives a
-            # different plane count.  Re-derive the literals here so
-            # DuckDB times the SAME plan — otherwise its denominator runs
-            # a coarser banding and the ratio flatters Spark.
-            from jurimetria_etl_spark.operators.similarity import (
-                suggest_lsh_planes,
-            )
-            from jurimetria_etl_spark.plans.extensions import _x13_join_sql
-
-            n = _duck_con.execute(
-                "SELECT count(*) FROM embeddings"
-            ).fetchone()[0]
-            sql = _x13_join_sql(n_planes=suggest_lsh_planes(n))
+            # Otherwise DuckDB's denominator runs a coarser banding than
+            # the Spark side and the ratio flatters Spark.
+            sql = _x13b_oracle_for(_duck_con)
         try:
             t0 = time.time()
             _duck_con.sql(sql).fetchall()
@@ -543,7 +472,7 @@ def main() -> None:
             duck_total += dt
 
     for name in HEADLINE:
-        fn = registry[name].spark
+        fn = REGISTRY[name].spark
         # One broken query must not zero out the whole round's measurement
         # (round 3 lost every number to a single AnalysisException) — record
         # the error, keep timing the rest.
@@ -658,7 +587,7 @@ def main() -> None:
     if flagged and max(load_start[0], load_start[1]) > load_thresh:
 
         def _run_query(name: str) -> float:
-            fn = registry[name].spark
+            fn = REGISTRY[name].spark
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             return time.time() - t0
@@ -760,7 +689,7 @@ def main() -> None:
     sf1_path = os.path.join(root, "BENCH_SF1.json")
     sf1: dict | None = None
     if os.environ.get("SPARK_GRAFT_SF1") == "1" and os.path.isdir(sf1_dir):
-        sf1 = run_sf1_tier(spark, registry, sf1_dir)
+        sf1 = run_sf1_tier(spark, sf1_dir)
         with open(sf1_path, "w") as f:
             json.dump(sf1, f, indent=1, sort_keys=True)
         summary["sf1_source"] = "live"

@@ -258,6 +258,12 @@ def minhash_candidate_pairs(
     # are multi-referenced (one slice per band) and the self-join would
     # otherwise recompute the shingle+minhash folds on both sides.
     sig = sig.repartition(sig.sparkSession.sparkContext.defaultParallelism)
+    return _band_candidates(sig, id_col, k, bands)
+
+
+def _band_candidates(sig: DataFrame, id_col: str, k: int, bands: int) -> DataFrame:
+    """The banded self-join: explode each ``__sig`` into its band keys and
+    pair the ids sharing any (band, bkey) as distinct (left_id < right_id)."""
     banded = sig.select(
         F.col(id_col), F.explode(band_structs("__sig", k, bands)).alias("b")
     ).select(id_col, F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey"))
@@ -319,24 +325,7 @@ def minhash_near_duplicates(
             F.transform(F.col("__sh"), lambda s: hash60(s) % MINHASH_PRIME), k
         ).alias("__sig"),
     )
-    banded = sig.select(
-        F.col(id_col), F.explode(band_structs("__sig", k, bands)).alias("b")
-    ).select(id_col, F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey"))
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cands = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bkey") == F.col("r.bkey"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("left_id"),
-            F.col(f"r.{id_col}").alias("right_id"),
-        )
-        .distinct()
-    )
+    cands = _band_candidates(sig, id_col, k, bands)
     lsh_ = sh.select(F.col(id_col).alias("left_id"), F.col("__sh").alias("__lsh"))
     rsh = sh.select(F.col(id_col).alias("right_id"), F.col("__sh").alias("__rsh"))
     return (

@@ -306,7 +306,7 @@ def duplicate_spans_against(
     right_fps: DataFrame | None = None,
     broadcast_max_rows: int | None = None,
 ) -> DataFrame:
-    """Cross-CORPUS duplicate spans: every ``span_len``-char span present
+    """Cross-corpus duplicate spans: every ``span_len``-char span present
     in a ``left`` document AND a ``right`` document, as
     (left_id, right_id, span).  Two first-class uses:
 
@@ -463,7 +463,7 @@ def strip_boilerplate(
     """Subtract a strip-list from every document: fold
     ``replace(text, span, '')`` over the spans in CANONICAL (lexicographic)
     order — deterministic and engine-portable (DuckDB ``list_reduce`` +
-    ``replace`` reproduce it exactly; pytest-oracle x30).  Spans from
+    ``replace`` reproduce it exactly).  Spans from
     ``boilerplate_spans`` all share one length, so lexicographic order is
     also unambiguous w.r.t. overlap resolution.
 

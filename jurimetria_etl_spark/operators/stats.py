@@ -359,7 +359,11 @@ def percentile_cont_selection(
         *groups,
         "metric",
         "p",
-        F.when(hi_i == lo_i, F.col("__vlo")).otherwise(interp).alias("val"),
+        F.when(
+            (hi_i == lo_i) | (F.col("__vlo") == F.col("__vhi")), F.col("__vlo")
+        )
+        .otherwise(interp)
+        .alias("val"),
     )
     if null_rows:
         nschema = StructType(
@@ -481,10 +485,11 @@ def percentile_cont_by_group(
         vlo.alias("__vlo"), vhi.alias("__vhi")
     )
     # Spark's Percentile.getPercentile interpolation form EXACTLY —
-    # (higher − position)·lower + (position − lower)·higher, with the
-    # integral-position special case — so this operator is
-    # BIT-identical to the native aggregate, not merely within the
-    # oracle gate's 1e-9 rounding.  (vlo + frac·(vhi − vlo), DuckDB's
+    # (higher − position)·lower + (position − lower)·higher, with its two
+    # special cases (integral position; both ranks on the same value,
+    # where the form would turn -61 into -61.00000000000001) — so this
+    # operator is BIT-identical to the native aggregate, not merely within
+    # the oracle gate's 1e-9 rounding.  (vlo + frac·(vhi − vlo), DuckDB's
     # form, differs in the last ulp on some inputs.)
     lo_i = F.floor("__t").cast("double")
     hi_i = F.ceil("__t").cast("double")
@@ -494,7 +499,9 @@ def percentile_cont_by_group(
     return out.select(
         *groups,
         "p",
-        F.when(hi_i == lo_i, F.col("__vlo")).otherwise(interp).alias(
-            out_col
-        ),
+        F.when(
+            (hi_i == lo_i) | (F.col("__vlo") == F.col("__vhi")), F.col("__vlo")
+        )
+        .otherwise(interp)
+        .alias(out_col),
     )

@@ -77,8 +77,8 @@ def token_count(col: Column | str) -> Column:
 # Unicode word/number/symbol chunks (r9): the ASCII form counted every
 # accented letter as its own symbol chunk, so 'ação' cost 4 "tokens" —
 # a wild over-estimate on the reference's Portuguese corpus.  \p
-# classes are identical in Java regex and DuckDB RE2, so the x09/x11
-# oracles (which interpolate this constant) recompute the same counts.
+# classes are identical in Java regex and DuckDB RE2, so the x09 profile
+# oracle (which interpolates this constant) recomputes the same counts.
 WORDLIKE_PATTERN = r"\p{L}+|\p{N}+|[^\p{L}\p{N} ]"
 
 

@@ -24,8 +24,8 @@ partitioning.  No Python anywhere.
 
 Reference parity: the reference has no time-series surface
 (SURVEY §2.10 — strictly batch, one hour histogram); this extends the
-engine's temporal family (F1/F2, q25/q26/q33 windows, q27 as-of,
-q28 range join).
+engine's temporal family (F1/F2, streaming/windows.py and the q33
+sliding window, q27 as-of, q28 range join).
 """
 
 from __future__ import annotations

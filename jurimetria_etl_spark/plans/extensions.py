@@ -18,15 +18,14 @@ from jurimetria_etl_spark.memo import session_memo
 from jurimetria_etl_spark.operators import dedup as D
 from jurimetria_etl_spark.operators import similarity as S
 from jurimetria_etl_spark.operators import text as X
-from jurimetria_etl_spark.plans.corpus import Q, Q23_SQL, Q32_SQL, _t
+from jurimetria_etl_spark.plans.corpus import _t
 
 # ── SQL fragment builders (DuckDB dialect) ─────────────────────────────────
 TOKS = "string_split(trim(text), ' ')"
-TOKS_LC = "string_split(trim(lower(text)), ' ')"
 # Linguistic tokenization (dedup.ws_words): whitespace-RUN split, empties
 # dropped — used by every oracle replicating word-count/stopword/lang-ID
-# metrics.  TOKS/TOKS_LC above remain the structural single-space split
-# of the shingle/fingerprint family.
+# metrics.  TOKS above remains the structural single-space split of the
+# shingle/fingerprint family.
 WS_TOKS = "list_filter(string_split_regex(trim(text), '\s+'), w -> w <> '')"
 WS_TOKS_LC = (
     "list_filter(string_split_regex(trim(lower(text)), '\s+'), "
@@ -63,30 +62,6 @@ SELECT count(*) AS cnt FROM (
 """
 
 
-def x02_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document 60-bit content fingerprint."""
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", D.fingerprint("text").alias("fp")
-    )
-
-
-X02_SQL = f"""
-SELECT doc_id, {h60(_NORM_TEXT)} AS fp
-FROM documents
-"""
-
-
-def x03_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures (k=8, 3-gram shingles) — narrow, no shuffle; one
-    md5 pass + k affine permutations (see operators/dedup.py).  The
-    signature array is serialized with ``to_json`` at the output boundary so
-    the driver's pandas canonicalizer can sort/hash it."""
-    sigs = D.add_minhash(
-        _t(spark, sf_dir, "documents"), "text", k=8, n=3, sig_col="__mh"
-    )
-    return sigs.select("doc_id", F.to_json(F.col("__mh")).alias("minhash"))
-
-
 def _minhash_sigs_sql(k: int) -> str:
     """The k per-permutation minima over the staged ``base`` hash array —
     same (a_i, b_i) literals as operators/dedup.py."""
@@ -100,39 +75,6 @@ def _minhash_sigs_sql(k: int) -> str:
 _BASE_HASHES = (
     f"list_transform(shingles, s -> {h60('s')} % {D.MINHASH_PRIME})"
 )
-
-
-def _x03_sql(k: int = 8) -> str:
-    return f"""
-WITH sh AS (SELECT doc_id, {shingles_sql(3)} AS shingles FROM documents),
-hs AS (SELECT doc_id, {_BASE_HASHES} AS base FROM sh)
-SELECT doc_id, CAST(to_json([{_minhash_sigs_sql(k)}]) AS VARCHAR) AS minhash FROM hs
-"""
-
-
-def x04_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash LSH candidate pairs (bands=4×2) — the one shuffle of the
-    near-dup pipeline."""
-    return D.minhash_candidate_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", k=8, bands=4, n=3
-    )
-
-
-def _x04_sql(k: int = 8, bands: int = 4) -> str:
-    rpb = k // bands
-    return f"""
-WITH sh AS (SELECT doc_id, {shingles_sql(3)} AS shingles FROM documents),
-hs AS (SELECT doc_id, {_BASE_HASHES} AS base FROM sh),
-sig AS (SELECT doc_id, [{_minhash_sigs_sql(k)}] AS sig FROM hs),
-banded AS (
-  SELECT doc_id, b,
-         {h60(f"array_to_string(sig[b*{rpb}+1 : b*{rpb}+{rpb}], ',')")} AS bkey
-  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, {bands - 1})) AS b) bs
-)
-SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id
-FROM banded l JOIN banded r
-  ON l.b = r.b AND l.bkey = r.bkey AND l.doc_id < r.doc_id
-"""
 
 
 def x05_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -164,57 +106,8 @@ WHERE round(len(list_intersect(a.shingles, b.shingles)) * 1.0
 """
 
 
-def x06_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard similarity join (threshold 0.2 → the 25
-    planted near-dup pairs at sf0.01).  ``max_shingle_df=None`` is
-    explicit: the DuckDB oracle below is the EXACT join, so the
-    library's hot-shingle cap default (which lower-bounds jaccard on
-    corpora with a >1000-df shingle) must not apply here — latent on the
-    fixtures only because their shingle DF stays far below the cap."""
-    return D.ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.2,
-        max_shingle_df=None,
-    )
-
-
-X06_SQL = f"""
-WITH sh AS (SELECT doc_id, {shingles_sql(3)} AS s FROM documents),
-ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
-shared AS (
-  SELECT l.doc_id AS left_id, r.doc_id AS right_id, count(*) AS c
-  FROM ex l JOIN ex r ON l.g = r.g AND l.doc_id < r.doc_id
-  GROUP BY 1, 2),
-sz AS (SELECT doc_id, len(s) AS n FROM sh)
-SELECT left_id, right_id, round(c * 1.0 / (la.n + lb.n - c), 6) AS jaccard
-FROM shared JOIN sz la ON left_id = la.doc_id JOIN sz lb ON right_id = lb.doc_id
-WHERE round(c * 1.0 / (la.n + lb.n - c), 6) >= 0.2
-"""
-
-
-def x07_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document 48-bit SimHash signature (48 bits keeps random-pair
-    hamming distances far from the near-dup threshold even on a small
-    vocabulary corpus).  Reads the shared per-session signature cache."""
-    return _simhash_sigs(spark, sf_dir, bits=48).select(
-        "doc_id", F.col("__sig").alias("simhash")
-    )
-
-
-def _x07_sql(bits: int = 16) -> str:
-    votes = " + ".join(
-        f"(CASE WHEN list_aggregate(list_transform(hs, h -> "
-        f"CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END), 'sum') >= 0 "
-        f"THEN {1 << b} ELSE 0 END)"
-        for b in range(bits)
-    )
-    return f"""
-WITH th AS (SELECT doc_id, list_transform({TOKS}, t -> {h60("t")}) AS hs FROM documents)
-SELECT doc_id, CAST({votes} AS BIGINT) AS simhash FROM th
-"""
-
-
 # Simhash signatures are stored once at ingest in a production corpus
-# (memo.py); x07 and x08 share the persisted frame.
+# (memo.py); x08 reads the persisted frame.
 @session_memo
 def _simhash_sigs(spark: SparkSession, sf_dir: str, bits: int = 48) -> DataFrame:
     sigs = D.add_simhash(
@@ -225,8 +118,8 @@ def _simhash_sigs(spark: SparkSession, sf_dir: str, bits: int = 48) -> DataFrame
 
 def x08_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs: banded candidates + hamming ≤ 3 verify.
-    Signatures come from the per-session persisted cache (computed once,
-    shared with x07 — the ingest-time persistence story at 100 TB)."""
+    Signatures come from the per-session persisted cache (computed once —
+    the ingest-time persistence story at 100 TB)."""
     return D.simhash_near_duplicates(
         _t(spark, sf_dir, "documents"),
         "doc_id",
@@ -262,13 +155,6 @@ WHERE bit_count(xor(l.sig, r.sig)) <= {max_hamming}
 """
 
 
-def x09_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic language-ID over documents."""
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", X.lang_id("text").alias("lang_pred")
-    )
-
-
 def _lang_filter_sql(words: tuple[str, ...]) -> str:
     inlist = ", ".join(f"'{w}'" for w in words)
     return f"len(list_filter(toks, x -> x IN ({inlist})))"
@@ -296,13 +182,6 @@ FROM s
 """
 
 
-def x10_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite quality score per document."""
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", X.quality_score("text").alias("quality")
-    )
-
-
 _EN = ", ".join(f"'{w}'" for w in X.LANG_STOPWORDS["en"])
 X10_SQL = f"""
 WITH t AS (SELECT doc_id, {WS_TOKS_LC} AS toks FROM documents),
@@ -319,34 +198,15 @@ FROM s
 """
 
 
-def x11_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting: whitespace, BPE-ish regex chunks, len/4 estimate."""
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        X.token_count("text").alias("ws_tokens"),
-        X.bpe_ish_token_count("text").alias("bpe_tokens"),
-        X.chars_per_token_estimate("text").alias("est_tokens"),
-    )
-
-
-X11_SQL = f"""
-SELECT doc_id,
-       CAST(len({WS_TOKS}) AS BIGINT) AS ws_tokens,
-       CAST(len(regexp_extract_all(lower(text), '{X.WORDLIKE_PATTERN}')) AS BIGINT) AS bpe_tokens,
-       CAST(ceil(length(text) / 4) AS BIGINT) AS est_tokens
-FROM documents
-"""
-
-
 def x09_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged per-document text-analysis profile (E4): char/token counts
-    (q24_text_stats), whitespace/BPE-ish/estimate token counting
-    (x11_token_stats), heuristic language-ID (x09_lang_id), and composite
-    quality scoring (x10_quality) in ONE narrow JVM-side projection — zero
-    Python.  Merged so the registry stays inside the driver's check window;
-    the standalone queries remain above for tests.  The input is widened to
-    cluster parallelism first (regex CPU ≫ scan bytes; no-op at 100 TB
-    where file count ≥ cores)."""
+    """Merged per-document text-analysis profile (E4): char count,
+    whitespace/BPE-ish/estimate token counting, heuristic language-ID and
+    composite quality scoring in ONE narrow JVM-side projection — zero
+    Python.  The operators' own value tests live in tests/test_dedup_text.py
+    and tests/test_scrub_quality.py; the oracle is assembled from the
+    X09_SQL (language-ID) and X10_SQL (quality) fragments below, which
+    x22 and x43 reuse.  The input is widened to cluster parallelism first
+    (regex CPU ≫ scan bytes; no-op at 100 TB where file count ≥ cores)."""
     docs = D.widen_partitions(_t(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
@@ -375,36 +235,6 @@ FROM ({_X11_CHARS_SQL}) p
 JOIN ({X09_SQL}) l USING (doc_id)
 JOIN ({X10_SQL}) q USING (doc_id)
 """
-
-
-def x12_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup, exact baseline: all-pairs cosine ≥ 0.45 through
-    ``cosine_pairs_exact`` — O(N²) by design, guarded to refuse inputs
-    beyond 20k rows so the registered query can never launch a cartesian
-    on at-scale data.  The scale path is x13_cosine_join (LSH-pruned),
-    which this query verifies."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return S.cosine_pairs_exact(emb, threshold=0.45)
-
-
-X12_SQL = """
-SELECT a.vec_id AS left_id, b.vec_id AS right_id,
-       round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-          * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))), 6) AS cos_sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-          * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))), 6) >= 0.45
-"""
-
-
-def x13_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k via LSH buckets (kept test-only, not registered:
-    approximation quality is asserted as recall-vs-brute-force in tests)."""
-    return S.lsh_bucket_topk(
-        _t(spark, sf_dir, "embeddings"), probe_id=1, k=5, dim=64, n_planes=4, n_tables=8
-    )
 
 
 # Banded LSH signatures are computed once at ingest at scale; locally the
@@ -553,41 +383,12 @@ FROM documents
 """
 
 
-def x16_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling plumbing (one blob → N frame rows): byte-slice frames
-    via mapInPandas; the oracle slices the same UTF-8 blobs with substring
-    arithmetic.  Frame payloads surface as hex strings so the driver's
-    pandas canonicalizer can sort/hash them (bytearrays are unhashable)."""
-    from jurimetria_etl_spark.operators import multimodal as M
-
-    docs = _t(spark, sf_dir, "documents")
-    blobs = M.attach_text_as_binary(docs)
-    frames = M.sample_frames(blobs, every_n_bytes=256, max_frames=4)
-    return frames.select(
-        "src", "frame_idx", F.hex(F.col("frame")).alias("frame_hex")
-    )
-
-
-# DuckDB 1.0 has no BLOB substring; the fixture docs are pure ASCII
-# (octet_length == length, asserted in tests), so char slicing before
-# encode() is byte-exact.  Both engines' hex() emit uppercase.
-X16_SQL = """
-SELECT 'mem://doc/' || doc_id AS src,
-       CAST(i AS INT) AS frame_idx,
-       hex(encode(substring(text, CAST(i * 256 + 1 AS BIGINT), 256))) AS frame_hex
-FROM documents,
-     UNNEST(generate_series(
-       0, least(4, greatest(1, octet_length(encode(text)) // 256)) - 1)) AS t(i)
-"""
-
-
 def x18_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clustering: MinHash near-dup pairs (x05) →
     connected components by min-label propagation → every document labeled
     with its cluster id (own id when it has no near-dup).  Registered since
     round 3 — the driver checks it against the recursive-CTE DuckDB oracle
-    below (and tests/test_deregistered_queries.py retains sf0.001
-    coverage via the registered-query sweep in test_correctness)."""
+    below."""
     docs = _t(spark, sf_dir, "documents")
     pairs = D.minhash_near_duplicates(docs, "doc_id", "text", threshold=0.5)
     return D.assign_near_dup_clusters(docs, pairs, "doc_id").select(
@@ -610,34 +411,6 @@ reach(id, r) AS (
 comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
 SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id
 FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
-"""
-
-
-def x19_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language corpus rebalancing (keep 20% of 'en',
-    60% of 'fr', everything else untouched at 100%), decided by hashing
-    doc_id — engine-portable, re-run-stable, no rand().  Not registered
-    (50-entry window) — oracle-checked in tests/test_deregistered_queries.py."""
-    from jurimetria_etl_spark.operators import sampling as SM
-
-    docs = _t(spark, sf_dir, "documents")
-    return SM.stratified_sample(
-        docs,
-        "lang",
-        {"en": 0.2, "fr": 0.6},
-        key_col="doc_id",
-        default_fraction=1.0,
-    ).select("doc_id", "lang")
-
-
-# Mirrors operators/sampling.py:sample_bucket — hash60 with a 'sample:'
-# salt prefix, mod 1e6, thresholded per stratum.
-_X19_BUCKET = h60("'sample:' || CAST(doc_id AS VARCHAR)") + " % 1000000"
-X19_SQL = f"""
-SELECT doc_id, lang FROM documents
-WHERE {_X19_BUCKET} < (CASE lang WHEN 'en' THEN 200000
-                                 WHEN 'fr' THEN 600000
-                                 ELSE 1000000 END)
 """
 
 
@@ -669,9 +442,9 @@ def x42_shuffled_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack_shuffled_shards): documents pack into 10k-char shards in the
     md5('shuffle:7:'‖doc_id) permutation — the training-order shuffle,
     deterministic from the seed alone and engine-portable (the oracle
-    recomputes the identical permutation from the same md5).  Not
-    registered (50-entry window; x20 covers the packing prefix sum) —
-    oracle-checked in tests/test_deregistered_queries.py."""
+    recomputes the identical permutation from the same md5).  Outside
+    the gate (x20 covers the packing prefix sum); tools/scale_bench.py
+    runs it, and tests/test_deregistered_queries.py oracle-checks it."""
     from jurimetria_etl_spark.operators.sampling import pack_shuffled_shards
 
     docs = _t(spark, sf_dir, "documents")
@@ -697,8 +470,8 @@ def x43_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture, with the x25 benchmark convention (docs where doc_id % 97 = 0)
     as the decontamination probe at min_overlap=3 / min_ratio=0.2.  The
     flags are the SAME Column expressions curate_corpus's gate conjoins
-    (curation_gate_flags).  Not registered (50-entry window) —
-    oracle-checked in tests/test_deregistered_queries.py."""
+    (curation_gate_flags).  Gated; also oracle-checked at sf0.001 in
+    tests/test_deregistered_queries.py."""
     from jurimetria_etl_spark.plans.curation import curation_funnel
 
     docs = _t(spark, sf_dir, "documents")
@@ -746,25 +519,6 @@ SELECT count(*) AS n_docs,
        CAST(sum(CAST(lang_pass AND quality_pass AND clean AS BIGINT))
             AS BIGINT) AS n_eligible
 FROM flags
-"""
-
-
-def x21_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking: 240-char windows advancing by 200 (40-char
-    overlap) — the prep step between curation and packing.  Not registered —
-    oracle-checked in tests/test_deregistered_queries.py."""
-    docs = _t(spark, sf_dir, "documents")
-    return X.chunk_documents(
-        docs, chunk_chars=240, overlap_chars=40
-    ).select("doc_id", "chunk_idx", "chunk")
-
-
-X21_SQL = """
-SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-       substring(text, i * 200 + 1, 240) AS chunk
-FROM documents,
-     UNNEST(generate_series(
-       0, CAST(ceil(greatest(length(text) - 40, 1) / 200.0) AS BIGINT) - 1)) AS t(i)
 """
 
 
@@ -821,10 +575,10 @@ def x22_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The whole pipeline re-derived in one DuckDB statement from the same
-# fragments the standalone oracles use: X09/X10 gates, X01-style
+# fragments the other oracles use: X09/X10 gates, X01-style
 # min-id-per-fingerprint dedup, the X05 minhash/banding/verify chain at
 # 0.7 over the deduped set, X18-style recursive transitive closure with
-# min-id survivors, X21 chunk arithmetic (240/40), X20 cumsum packing.
+# min-id survivors, 240/40 chunk arithmetic, X20 cumsum packing.
 X22_SQL = f"""
 WITH RECURSIVE gated AS (
   SELECT d.doc_id, d.text
@@ -952,98 +706,6 @@ def _x23_sql() -> str:
 X23_SQL = _x23_sql()
 
 
-# Synthetic-corpus thresholds: the fixture documents are single-line
-# lowercase prose (~40-260 words, mean word length ~4.4), so the Gopher
-# paper bounds would pass everything; these split the corpus instead.
-_X24_RULES = dict(
-    min_words=40,
-    max_words=100_000,
-    min_mean_word_length=3.0,
-    max_mean_word_length=4.8,
-    max_symbol_word_ratio=0.05,
-    min_alpha_word_fraction=0.9,
-    min_stopwords=2,
-    max_dup_line_fraction=0.3,
-    max_bullet_line_fraction=0.5,
-    max_ellipsis_line_fraction=0.3,
-    max_top_2gram_char_fraction=0.08,
-)
-
-
-def x24_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher/C4-style quality-rule metrics + pass flag
-    (operators/quality.py) over the documents corpus."""
-    from jurimetria_etl_spark.operators import quality as QL
-
-    docs = _t(spark, sf_dir, "documents")
-    return QL.add_quality_rules(docs).select(
-        "doc_id",
-        "n_words",
-        "mean_word_len",
-        "alpha_word_frac",
-        "symbol_word_ratio",
-        "n_stopwords",
-        "dup_line_frac",
-        "top_2gram_char_frac",
-        QL.passes_quality("text", **_X24_RULES).alias("passes"),
-    )
-
-
-_WS = WS_TOKS
-_WS_LC = WS_TOKS_LC
-_LINES = "string_split(text, chr(10))"
-_GRAMS2 = (
-    f"list_transform(generate_series(1, len({_WS}) - 1), "
-    f"i -> {_WS}[i] || ' ' || {_WS}[i+1])"
-)
-_STOPS = "('the', 'a', 'of', 'and', 'is', 'to', 'in')"
-
-X24_SQL = f"""
-WITH m AS (
-  SELECT doc_id,
-    CAST(len({_WS}) AS BIGINT) AS n_words,
-    round(list_sum(list_transform({_WS}, w -> len(w))) * 1.0
-          / nullif(len({_WS}), 0), 6) AS mean_word_len,
-    round(len(list_filter({_WS}, w -> regexp_matches(w, '\\p{{L}}'))) * 1.0
-          / nullif(len({_WS}), 0), 6) AS alpha_word_frac,
-    round((len(regexp_extract_all(text, '#'))
-           + len(regexp_extract_all(text, '\\.\\.\\.'))
-           + len(regexp_extract_all(text, '…'))) * 1.0
-          / nullif(len({_WS}), 0), 6) AS symbol_word_ratio,
-    CAST(len(list_filter({_WS_LC}, w -> w IN {_STOPS})) AS BIGINT)
-      AS n_stopwords,
-    round(1.0 - len(list_distinct({_LINES})) * 1.0 / len({_LINES}), 6)
-      AS dup_line_frac,
-    round(len(list_filter({_LINES},
-                l -> regexp_matches(ltrim(l), '^[-*•]'))) * 1.0
-          / len({_LINES}), 6) AS bullet_line_frac,
-    round(len(list_filter({_LINES},
-                l -> regexp_matches(rtrim(l), '(\\.\\.\\.|…)$'))) * 1.0
-          / len({_LINES}), 6) AS ellipsis_line_frac,
-    round(coalesce(list_max(list_transform(list_distinct({_GRAMS2}),
-            d -> len(list_filter({_GRAMS2}, g -> g = d)) * len(d))), 0) * 1.0
-          / nullif(len(trim(text)), 0), 6) AS top_2gram_char_frac
-  FROM documents)
-SELECT doc_id, n_words, mean_word_len, alpha_word_frac, symbol_word_ratio,
-       n_stopwords, dup_line_frac, top_2gram_char_frac,
-       coalesce(
-         n_words >= {_X24_RULES["min_words"]}
-         AND n_words <= {_X24_RULES["max_words"]}
-         AND mean_word_len >= {_X24_RULES["min_mean_word_length"]}
-         AND mean_word_len <= {_X24_RULES["max_mean_word_length"]}
-         AND symbol_word_ratio <= {_X24_RULES["max_symbol_word_ratio"]}
-         AND alpha_word_frac >= {_X24_RULES["min_alpha_word_fraction"]}
-         AND n_stopwords >= {_X24_RULES["min_stopwords"]}
-         AND dup_line_frac <= {_X24_RULES["max_dup_line_fraction"]}
-         AND bullet_line_frac <= {_X24_RULES["max_bullet_line_fraction"]}
-         AND ellipsis_line_frac <= {_X24_RULES["max_ellipsis_line_fraction"]}
-         AND top_2gram_char_frac
-             <= {_X24_RULES["max_top_2gram_char_fraction"]},
-         false) AS passes
-FROM m
-"""
-
-
 def x25_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (operators/decontaminate.py): 5-gram
     shingle overlap of every document against a deterministic 'benchmark'
@@ -1081,58 +743,6 @@ FROM sh s LEFT JOIN ov o USING (doc_id)
 """
 
 
-# Target mixture for x26: src4 is deliberately unweighted (dropped).  The
-# weight literals are normalized HERE so the SQL embeds the exact doubles
-# the Spark plan uses (0.4+0.3+0.2+0.1 != 1.0 in IEEE arithmetic).
-_X26_WEIGHTS = {"src0": 0.4, "src1": 0.3, "src2": 0.2, "src3": 0.1}
-_X26_NORM = {
-    s: w / sum(_X26_WEIGHTS.values()) for s, w in _X26_WEIGHTS.items()
-}
-
-
-def x26_mix_corpora(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus mixture re-weighting (operators/sampling.py:mix_corpora):
-    downsample the five fixture sources to a 40/30/20/10 mix (src4
-    dropped), deterministic per (doc_id, epoch)."""
-    from jurimetria_etl_spark.operators import sampling as SM
-
-    docs = _t(spark, sf_dir, "documents")
-    return SM.mix_corpora(docs, _X26_WEIGHTS).select(
-        "doc_id", "source", "epoch"
-    )
-
-
-def _x26_sql() -> str:
-    w_case = "CASE source " + " ".join(
-        f"WHEN '{s}' THEN {w!r}" for s, w in sorted(_X26_NORM.items())
-    ) + " END"
-    srcs = ", ".join(f"'{s}'" for s in sorted(_X26_NORM))
-    bucket = h60(
-        "'mix:' || CAST(doc_id AS VARCHAR) || ':' || CAST(e AS VARCHAR)"
-    )
-    return f"""
-WITH c AS (
-  SELECT source, count(*) AS n, {w_case} AS w
-  FROM documents WHERE source IN ({srcs}) GROUP BY source),
-t AS (SELECT min(n / w) AS total FROM c),
-plan AS (
-  SELECT source,
-         CAST(floor(w * (SELECT total FROM t) / n) AS BIGINT) AS epochs,
-         CAST(floor(w * (SELECT total FROM t) / n * 1000000) AS BIGINT)
-           - CAST(floor(w * (SELECT total FROM t) / n) AS BIGINT) * 1000000
-           AS thr
-  FROM c)
-SELECT d.doc_id, d.source, CAST(e AS INT) AS epoch
-FROM documents d
-JOIN plan p USING (source),
-     UNNEST(generate_series(0, p.epochs)) AS g(e)
-WHERE e < p.epochs OR ({bucket}) % 1000000 < p.thr
-"""
-
-
-X26_SQL = _x26_sql()
-
-
 def x27_hll_daily_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-path benchmark entry: per-day HLL partials over events
     rolled up to one global distinct-user estimate
@@ -1150,10 +760,6 @@ def x27_hll_daily_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
 X27_SQL = "SELECT approx_count_distinct(user_id) AS approx_distinct FROM events"
 
 
-# Bench-only composites: timed in bench.py with their DuckDB denominator
-# and oracle-checked in the pytest harness, but outside the driver's
-# 50-entry registry window.  x27 is timing-only (approximate estimates
-# differ per engine by design).
 def q32b_percentile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q32's exact percentiles via the DISTRIBUTED-histogram operator
     (operators/stats.py:percentile_cont_by_group) — the scale path for
@@ -1208,18 +814,6 @@ def q32b_percentile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("median_price"),
     )
-
-
-# x22 is the full-pipeline composite (curation → chunk → pack) — timed
-# and oracle-checked in the pytest harness, but outside the driver's
-# 50-entry registry window.  x27 is timing-only (approximate estimates
-# differ per engine by design).  q32b is the registered q32's
-# scale-path twin — same oracle, different physical strategy.
-BENCH_ONLY: dict[str, Q] = {
-    "x22_training_shards": Q(x22_training_shards, X22_SQL),
-    "x27_hll_daily_uniques": Q(x27_hll_daily_uniques, X27_SQL),
-    "q32b_percentile_hist": Q(q32b_percentile_hist, Q32_SQL),
-}
 
 
 def x17_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1329,66 +923,6 @@ SELECT span, COUNT(*) AS n_docs FROM g GROUP BY span HAVING COUNT(*) >= 2
 """
 
 
-def x30_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end boilerplate removal: build the strip-list
-    (``boilerplate_spans``, 40-char spans in ≥2 docs) and subtract it
-    from every document via the canonical lexicographic replace fold
-    (``strip_boilerplate``).  The oracle re-derives the same list and
-    fold with DuckDB ``list_reduce``/``replace`` — string-identical
-    output, so the whole broadcast-attach + fold plumbing is
-    value-checked.  pytest-oracle (registry window full)."""
-    from jurimetria_etl_spark.operators import spans as SP
-
-    docs = _t(spark, sf_dir, "documents")
-    bp = SP.boilerplate_spans(docs, span_len=40, min_df=2)
-    return SP.strip_boilerplate(docs, bp)
-
-
-X30_SQL = """
-WITH g AS (
-  SELECT DISTINCT doc_id, substring(text, i, 40) AS span
-  FROM documents,
-       LATERAL (SELECT unnest(generate_series(1, length(text) - 39)) AS i)
-),
-bp AS (SELECT span FROM g GROUP BY span HAVING COUNT(*) >= 2),
-strip AS (SELECT COALESCE(list_sort(list(span)), []) AS spans FROM bp)
-SELECT d.doc_id,
-       list_reduce(list_prepend(d.text, s.spans),
-                   (acc, x) -> replace(acc, x, '')) AS clean_text
-FROM documents d CROSS JOIN strip s
-"""
-
-
-def x31_cross_corpus_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus duplicate spans (``duplicate_spans_against``) with the
-    documents table split even/odd as the two corpora — the span-level
-    decontamination / incremental-ingest shape, value-checked against the
-    brute-force cross L-gram join.  pytest-oracle (registry window
-    full)."""
-    from jurimetria_etl_spark.operators import spans as SP
-
-    docs = _t(spark, sf_dir, "documents")
-    even = docs.where(F.col("doc_id") % 2 == 0)
-    odd = docs.where(F.col("doc_id") % 2 == 1)
-    return SP.duplicate_spans_against(even, odd, span_len=40, k=8, max_fp_df=None)
-
-
-X31_SQL = """
-WITH gl AS (
-  SELECT DISTINCT doc_id, substring(text, i, 40) AS span
-  FROM documents,
-       LATERAL (SELECT unnest(generate_series(1, length(text) - 39)) AS i)
-  WHERE doc_id % 2 = 0),
-gr AS (
-  SELECT DISTINCT doc_id, substring(text, i, 40) AS span
-  FROM documents,
-       LATERAL (SELECT unnest(generate_series(1, length(text) - 39)) AS i)
-  WHERE doc_id % 2 = 1)
-SELECT gl.doc_id AS left_id, gr.doc_id AS right_id, gl.span AS span
-FROM gl JOIN gr ON gl.span = gr.span
-"""
-
-
 def _lined_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents fixture is single-line word salad; line-level dedup
     needs a MULTI-line corpus with genuinely shared lines.  Derive one
@@ -1444,41 +978,6 @@ l AS (
     SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM lined)
   WHERE length(trim(line)) >= 10)
 SELECT line, COUNT(*) AS n_docs FROM l GROUP BY line HAVING COUNT(*) >= 2
-"""
-
-
-def x33_strip_duplicate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The application half: remove every ≥min_df line from every
-    document (``strip_duplicate_lines`` — broadcast line-set Arrow scan),
-    value-checked against a DuckDB re-derivation that anti-joins the
-    exploded lines and re-joins survivors in original order.
-    pytest-oracle (registry window full)."""
-    from jurimetria_etl_spark.operators import spans as SP
-
-    docs = _lined_docs(spark, sf_dir)
-    lines = SP.duplicate_lines(docs, min_df=2)
-    return SP.strip_duplicate_lines(docs, lines)
-
-
-X33_SQL = f"""
-WITH {_LINED_SQL_CTE},
-l AS (
-  SELECT DISTINCT doc_id, line FROM (
-    SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM lined)
-  WHERE length(trim(line)) >= 10),
-dup AS (SELECT line FROM l GROUP BY line HAVING COUNT(*) >= 2),
-exploded AS (
-  SELECT doc_id, ls[i] AS line, i AS ord
-  FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM lined),
-       LATERAL (SELECT unnest(generate_series(1, len(ls))) AS i)),
-kept AS (
-  SELECT e.doc_id, e.line, e.ord
-  FROM exploded e ANTI JOIN dup d ON e.line = d.line)
-SELECT li.doc_id,
-       COALESCE(k.clean_text, '') AS clean_text
-FROM lined li LEFT JOIN (
-  SELECT doc_id, string_agg(line, chr(10) ORDER BY ord) AS clean_text
-  FROM kept GROUP BY doc_id) k USING (doc_id)
 """
 
 
@@ -1873,29 +1372,6 @@ WHERE r.rk <= 10
 """
 
 
-def x39b_top_frac_per_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fraction form of x39: best 20% of each source by length."""
-    from jurimetria_etl_spark.operators import sampling as SM
-
-    docs = _t(spark, sf_dir, "documents")
-    return SM.top_k_per_domain(
-        docs, "source", "n_chars", fraction=0.2, id_col="doc_id"
-    ).select("doc_id", "source", "n_chars")
-
-
-X39B_SQL = """
-WITH ranked AS (
-  SELECT doc_id,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY n_chars DESC, doc_id) AS rk,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM documents)
-SELECT d.doc_id, d.source, d.n_chars
-FROM documents d JOIN ranked r USING (doc_id)
-WHERE r.rk <= CAST(ceil(r.n * 0.2) AS INT)
-"""
-
-
 # Round-8: hashed-linear quality classifier apply (operators/classify.py)
 # — the fastText-style corpus-wide scoring pass.  FIXED deterministic
 # weights (training is driver-side and engine-specific; the 100-TB path
@@ -2081,135 +1557,3 @@ SELECT query_id, vec_id, cos_sim, rank FROM (
   FROM scored)
 WHERE rank <= 5
 """
-
-
-# 20 entries, every one oracle-carrying.  Kept as functions + pytest
-# coverage but not registered: x09_lang_id / x10_quality / x11_token_stats
-# (merged into x09_text_profile), x13_ann_lsh (approximate by design;
-# recall pinned in tests — the deterministic LSH *join* is registered as
-# x13_cosine_join instead).
-EXTENSIONS: dict[str, Q] = {
-    "x01_dedup_docs": Q(x01_dedup_docs, X01_SQL),
-    "x05_minhash_near_dups": Q(x05_minhash_near_dups, X05_SQL),
-    "x08_simhash_near_dups": Q(x08_simhash_near_dups, _x08_sql(48, 12, 3)),
-    # Mid-round-8 rotation: x36/x37 (SemDeDup, hybrid retrieval) admitted;
-    # x06's n-gram Jaccard exact join rotates to the pytest-oracle file —
-    # its shingle/candidate machinery stays registered via x05 (same
-    # join shape, minhash-banded) and the x06 DuckDB comparison continues
-    # in tests/test_deregistered_queries.py.
-    "x36_semdedup": Q(x36_semdedup, X36_SQL),
-    "x37_hybrid_search": Q(x37_hybrid_search, X37_SQL),
-    # Round-12 rotation (q26 → pytest-oracle): the composed at-scale
-    # retrieval path — persisted ANN store → probe → RRF fusion — gets
-    # its driver-gate row (r11 verdict task 2).  Full probe makes x37's
-    # exact oracle apply verbatim; the plan underneath is the store
-    # form (replay fold + static cell pruning + broadcast probe-cell
-    # join).  q26's session-window semantics keep the identical DuckDB
-    # comparison in tests/test_deregistered_queries.py, the streaming
-    # session-window axis stays driver-covered by q33 + test_streaming.
-    "x37b_hybrid_search_ann": Q(x37b_hybrid_search_ann, X37_SQL),
-    "x09_text_profile": Q(x09_text_profile, X09_PROFILE_SQL),
-    "x13_cosine_join": Q(x13_cosine_join, _x13_join_sql()),
-    # Round-6: the AUTO-SCALED similarity join (default n_planes=None
-    # path) — the registered corpus now executes the scale-safe LSH plan
-    # the round-5 verdict asked for; x12's exact all-pairs baseline
-    # rotated to pytest-oracle (its cosine math is re-exercised by the
-    # x13/x13b re-score stage and by q23, which oracles x14).
-    "x13b_cosine_join_scaled": Q(
-        x13b_cosine_join_scaled, _x13_join_sql(n_planes=2)
-    ),
-    # Round-11 rotation (x14 → pytest-oracle): the dense-retrieval
-    # driver row moves from the session-built IVF probe to the PERSISTED
-    # incremental store (r10 verdict task 2) — same full-probe ≡
-    # brute-force identity as its oracle, now additionally exercising
-    # append/replay-fold/load/static-prune.  x14's single-probe path is
-    # the same scoring kernel; its Q23 comparison continues in
-    # tests/test_deregistered_queries.py.
-    "x41_ann_store_topk": Q(x41_ann_store_topk, X41_SQL),
-    # Round-6: cross-document duplicate-span detection (the biggest
-    # missing LLM-curation capability per the round-5 verdict).
-    "x28_duplicate_spans": Q(x28_duplicate_spans, X28_SQL),
-    # Round-8: line-level dedup gets its engine-vs-engine oracle (the r7
-    # verdict's top missing check); admitted by rotating q15/q24 out.
-    "x32_duplicate_lines": Q(x32_duplicate_lines, X32_SQL),
-    # Round-13 rotation (x15 → pytest-oracle): the one-row per-gate
-    # curation funnel audit — the composite the whole curation stack
-    # funnels through (recomposes the x09/x10 profile fragments and
-    # x25's overlap shape) and the pre-commit drop-rate check a 100-TB
-    # run fires before every full pass — gets the driver-gate row (r12
-    # verdict task 4).  x15's single-op Arrow boundary stays exercised
-    # by x18's pipeline and the x16/x17 pytest-oracles, and keeps the
-    # identical DuckDB comparison in tests/test_deregistered_queries.py.
-    "x43_curation_funnel": Q(x43_curation_funnel, X43_SQL),
-    "x18_near_dup_clusters": Q(x18_near_dup_clusters, X18_SQL),
-    "x20_pack_shards": Q(x20_pack_shards, X20_SQL),
-    # Round-4 rotation: driver-grade rows for the curation-stage operators
-    # (q11/q16 rotated out — q16 rides q17_setops' tagged union, q11 keeps
-    # its pytest-oracle row in test_deregistered_queries.py).
-    "x23_pii_scrub": Q(x23_pii_scrub, X23_SQL),
-    "x25_decontaminate": Q(x25_decontaminate, X25_SQL),
-    # Round-9 rotation (t03/t09 → pytest-oracle): the two r8 axes that
-    # lacked driver-gate rows — Bloom-prefiltered incremental dedup and
-    # BM25 keyword search (r8 verdict task 4).
-    "x34_bloom_incremental_dedup": Q(x34_bloom_incremental_dedup, X34_SQL),
-    "x35_bm25_search": Q(x35_bm25_search, X35_SQL),
-    # Round-10 rotation (t14/t16 → pytest-oracle, plans/tpch.py): the
-    # dataset-assembly (leakage-guarded train/eval split) and
-    # model-quality (hashed-linear classifier apply) axes — the last two
-    # capabilities without driver-verified rows (r9 verdict task 2).
-    "x38_split_guarded": Q(x38_split_guarded, X38_SQL),
-    "x40_classifier_scores": Q(x40_classifier_scores, X40_SQL),
-}
-
-# Round-5 rotation: the minhash/simhash intermediate stages rotated out to
-# admit the correlated-subquery composites t08–t10; their composites
-# (x05/x08) stay registered, and the standalone forms keep the same DuckDB
-# comparison in tests/test_deregistered_queries.py.
-EXT_DEREGISTERED: dict[str, Q] = {
-    # Never registered (window full, r12): the seeded training-order
-    # shuffle (x20 keeps the packing prefix sum registered).
-    "x42_shuffled_shards": Q(x42_shuffled_shards, X42_SQL),
-    # Round-13 rotation out (to admit x43_curation_funnel): the media-
-    # metadata single-op Arrow boundary — x18's registered pipeline
-    # exercises the same mapInPandas plumbing; identical DuckDB
-    # comparison continues in tests/test_deregistered_queries.py.
-    "x15_media_metadata": Q(x15_media_metadata, X15_SQL),
-    # Round-11 rotation out (to admit x41_ann_store_topk): the
-    # session-built IVF full-probe row — x41 registers the identical
-    # probe math over the persisted store; the standalone form keeps
-    # the same Q23 brute-force comparison in
-    # tests/test_deregistered_queries.py.
-    "x14_ann_ivf": Q(x14_ann_ivf, Q23_SQL),
-    "x03_minhash": Q(x03_minhash, _x03_sql(8)),
-    "x04_minhash_candidates": Q(x04_minhash_candidates, _x04_sql(8, 4)),
-    "x07_simhash": Q(x07_simhash, _x07_sql(48)),
-    # Round-6 rotation: x12's guarded exact all-pairs baseline moves here
-    # (to admit x13b_cosine_join_scaled) — same DuckDB comparison at
-    # sf0.001 in test_deregistered_queries.py.
-    "x12_cosine_pairs": Q(x12_cosine_pairs, X12_SQL),
-    # Never registered (window full): the boilerplate strip-list
-    # aggregate companion of x28 and its application to the corpus.
-    "x29_boilerplate_spans": Q(x29_boilerplate_spans, X29_SQL),
-    "x30_strip_boilerplate": Q(x30_strip_boilerplate, X30_SQL),
-    "x31_cross_corpus_spans": Q(x31_cross_corpus_spans, X31_SQL),
-    # Round-7 rotation (to admit t16/t17/t20): two floor-dominated
-    # single-op forms — E5 keeps x15 (the Arrow mapInPandas boundary) in
-    # the driver window, E4 keeps x09; the frame-sample explode and the
-    # Karp-Rabin fold keep the identical DuckDB comparison here and stay
-    # on the bench.
-    "x16_frame_sample": Q(x16_frame_sample, X16_SQL),
-    "x17_rolling_fingerprint": Q(x17_rolling_fingerprint, X17_SQL),
-    # Never registered (window full): the strip application half of the
-    # registered x32_duplicate_lines.
-    "x33_strip_duplicate_lines": Q(x33_strip_duplicate_lines, X33_SQL),
-    # Mid-round-8 rotation out (to admit x36/x37): the n-gram Jaccard
-    # exact join — x05 keeps the shingle/candidate join shape registered.
-    "x06_ngram_jaccard": Q(x06_ngram_jaccard, X06_SQL),
-    # Round-8 dataset-assembly forms: domain-balanced top-k/fraction
-    # selection (operators/sampling.py).  Their sibling x38 (and x40)
-    # moved into the driver window in round 10; x39/x39b's rank +
-    # semi-join-back plan family stays driver-covered through x38's
-    # split machinery and the q13 window-rank row.
-    "x39_top_per_domain": Q(x39_top_per_domain, X39_SQL),
-    "x39b_top_frac_per_domain": Q(x39b_top_frac_per_domain, X39B_SQL),
-}

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from jurimetria_etl_spark.plans.corpus import Q, _fact, _t, dsum
+from jurimetria_etl_spark.plans.corpus import _fact, _t, dsum
 
 
 def _davg(col, alias: str, prec: int = 28, scale: int = 8):
@@ -234,7 +234,6 @@ GROUP BY c_custkey, c_name, c_acctbal, n_name
 ORDER BY revenue DESC, c_custkey
 LIMIT 20
 """
-
 
 
 def t05_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1289,66 +1288,3 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07
   AND l_quantity < 24
 """
-
-
-# The driver-registered t-series (merged into the 50-entry window by
-# plans/corpus.full_registry).
-TPCH: dict[str, Q] = {
-    "t01_pricing_summary": Q(t01_pricing_summary, T01_SQL),
-    "t02_shipping_priority": Q(t02_shipping_priority, T02_SQL),
-    "t04_returned_items": Q(t04_returned_items, T04_SQL),
-    "t05_order_priority": Q(t05_order_priority, T05_SQL),
-    "t08_small_qty_revenue": Q(t08_small_qty_revenue, T08_SQL),
-    "t10_idle_rich_customers": Q(t10_idle_rich_customers, T10_SQL),
-    "t11_big_orders": Q(t11_big_orders, T11_SQL),
-    "t12_waiting_suppliers": Q(t12_waiting_suppliers, T12_SQL),
-    "t13_min_cost_supplier": Q(t13_min_cost_supplier, T13_SQL),
-    # Round-6: disjunctive predicate pushdown across a join (Q19).
-    # (Its round-6 sibling t14 rotated out in round 10 — see TPCH_EXTRA.)
-    "t15_disjunctive_pricing": Q(t15_disjunctive_pricing, T15_SQL),
-    # Round-7 rotation (q22/x16/x17 → pytest-oracle): the tie-keeping
-    # argmax join-back determinism trap (Q15) the r6 verdict asked into
-    # the driver gate, plus the deepest join plan in the corpus, Q8's
-    # 8-table market share.  (t16, admitted alongside, rotated out in
-    # round 10 — see TPCH_EXTRA.)
-    "t17_top_supplier": Q(t17_top_supplier, T17_SQL),
-    "t20_market_share": Q(t20_market_share, T20_SQL),
-    # Round-8 rotation (q15/q24 → pytest-oracle): Q9 product-profit —
-    # the join-order stress sibling of t20 and the second-deepest plan
-    # in the corpus — moves into the driver gate (r7 verdict task 6).
-    "t21_product_profit": Q(t21_product_profit, T21_SQL),
-}
-
-# Outside the driver's 50-entry window: pytest-oracle + bench coverage.
-TPCH_EXTRA: dict[str, Q] = {
-    "t06_late_shipments": Q(t06_late_shipments, T06_SQL),
-    "t07_promo_revenue": Q(t07_promo_revenue, T07_SQL),
-    # Round-9 rotation (to admit x34/x35 — the only r8 axes without
-    # driver-gate rows): two floor-dominated shapes whose plan families
-    # stay driver-covered by siblings — t03's multi-join+agg (Q5) by the
-    # deeper t20/t21, t09's conditional-pct aggregate (Q14) by
-    # q10_agg_conditional; both keep the identical DuckDB comparison in
-    # tests/test_deregistered_queries.py and stay on the bench.
-    "t03_local_supplier_volume": Q(t03_local_supplier_volume, T03_SQL),
-    "t09_promotion_suppliers": Q(t09_promotion_suppliers, T09_SQL),
-    # Round-6 widening: distinct-count + NOT-IN exclusion (Q16),
-    # bilateral paired-predicate volume (Q7).  t16/t17 moved into the
-    # driver window in round 7.
-    "t18_supplier_cnt_by_part": Q(t18_supplier_cnt_by_part, T18_SQL),
-    "t19_nation_volume": Q(t19_nation_volume, T19_SQL),
-    # Round-7: Q6 revenue change — with t21 (driver-registered since r8)
-    # the corpus covers ALL 22 canonical TPC-H plans.
-    "t22_revenue_change": Q(t22_revenue_change, T22_SQL),
-    # Round-10 rotation (to admit x38/x40 — the dataset-assembly and
-    # model-quality axes, the last two capabilities without driver-gate
-    # rows, r9 verdict task 2): two floor-dominated shapes whose plan
-    # families stay driver-covered by siblings — t14's
-    # COUNT-over-outer-join distribution (Q13) by t13's nested-subquery
-    # join-agg stack, t16's distinct-count + NOT-IN exclusion (Q16) by
-    # t18's identical shape (t18 carries the same broadcast-ANTI +
-    # distinct-agg plan, pinned in test_bench_plan_corpus.py).  Both keep
-    # the identical DuckDB comparison in tests/test_deregistered_queries
-    # .py and stay on the bench.
-    "t14_customer_distribution": Q(t14_customer_distribution, T14_SQL),
-    "t16_important_parts": Q(t16_important_parts, T16_SQL),
-}

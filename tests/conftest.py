@@ -15,6 +15,25 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def duck():
+    """DuckDB over the sf0.001 fixture tables — the oracle engine of the
+    value comparisons."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in (
+        "region nation customer supplier part orders lineitem events "
+        "documents embeddings"
+    ).split():
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
+        )
+    yield con
+    con.close()
+
+
 def stage_drop(df, dir_path: str, name: str, mtime: float) -> None:
     """Stage one single-file parquet 'drop' into a streaming source dir
     with a pinned mtime — the file source orders micro-batches by

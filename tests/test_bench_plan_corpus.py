@@ -7,9 +7,9 @@ new shuffle) fails CI instead of waiting for a judge's manual audit.
 
 Expectations were pinned from the audited round-4/5 plans (PLAN_AUDIT.md):
   - CartesianProduct: never, anywhere.
-  - BroadcastNestedLoopJoin: only the three intended 1-row broadcast
-    attaches (q23 probe vector, t10 global scalar avg, x14 probe row) —
-    a constant single-row side, which is a plan *feature*, not a blowup.
+  - BroadcastNestedLoopJoin: only the intended constant-side attaches
+    pinned per query below (e.g. t10's global scalar avg, x14's probe
+    row) — a constant small side is a plan *feature*, not a blowup.
   - Python nodes: only x15's Arrow mapInPandas (multimodal metadata);
     every reference-shape and TPC-H-shape query stays 100% JVM-side.
   - Exchange count: pinned exactly per query.  Exchanges are the unit of
@@ -21,6 +21,8 @@ Expectations were pinned from the audited round-4/5 plans (PLAN_AUDIT.md):
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 import sys
 
@@ -280,7 +282,7 @@ def _unpartitioned_windows(plan: str) -> int:
 @pytest.fixture(scope="module")
 def registry():
     from jurimetria_etl_spark import memo
-    from jurimetria_etl_spark.plans.corpus import all_queries
+    from jurimetria_etl_spark.plans.registry import REGISTRY
 
     # The exchange pins below are for the COLD plan.  Other test modules
     # sharing this session may have populated the session memo (persisted
@@ -288,14 +290,23 @@ def registry():
     # InMemoryRelation and would make the pins order-dependent — start
     # from a known cache state instead.
     memo.clear()
-    # Same merge bench.py uses: deregistered forms stay on the bench, so
-    # their plan contracts stay pinned too.
-    return all_queries()
+    return REGISTRY
 
 
 def test_every_bench_query_has_a_pinned_expectation():
     # a new bench query must come with a plan contract
     assert set(HEADLINE) == set(EXPECT)
+
+
+def test_headline_order_is_pinned():
+    # bench.py times the 58 headline queries in this order, and later
+    # queries find the session memos earlier ones built, so the order is
+    # part of the measurement.  The digest is of json.dumps(HEADLINE).
+    assert len(HEADLINE) == 58
+    digest = hashlib.sha256(json.dumps(HEADLINE).encode()).hexdigest()
+    assert digest == (
+        "27685e2fb719e446701b1932bba2f35ca52eb1816d704a289e39459a68bc92b7"
+    )
 
 
 @pytest.mark.parametrize("name", sorted(EXPECT))

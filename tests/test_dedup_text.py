@@ -57,6 +57,38 @@ def test_minhash_near_duplicates_finds_planted_pair(spark):
     assert pairs[0]["jaccard"] > 0.8
 
 
+def test_minhash_candidate_pairs_matches_duckdb(spark, duck):
+    """The LSH candidate join (k=8, bands=4×2, 3-gram shingles) on the
+    documents table against a DuckDB re-derivation: the same md5 shingle
+    hashes, permutation minima and band keys, self-joined on (band, bkey)."""
+    from jurimetria_etl_spark.plans.extensions import (
+        _BASE_HASHES,
+        _minhash_sigs_sql,
+        h60,
+        shingles_sql,
+    )
+    from jurimetria_etl_spark.sources.fixtures import load_fixture
+
+    sql = f"""
+WITH sh AS (SELECT doc_id, {shingles_sql(3)} AS shingles FROM documents),
+hs AS (SELECT doc_id, {_BASE_HASHES} AS base FROM sh),
+sig AS (SELECT doc_id, [{_minhash_sigs_sql(8)}] AS sig FROM hs),
+banded AS (
+  SELECT doc_id, b,
+         {h60("array_to_string(sig[b*2+1 : b*2+2], ',')")} AS bkey
+  FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b) bs
+)
+SELECT DISTINCT l.doc_id AS left_id, r.doc_id AS right_id
+FROM banded l JOIN banded r
+  ON l.b = r.b AND l.bkey = r.bkey AND l.doc_id < r.doc_id
+"""
+    docs = load_fixture(spark, SF, "documents")
+    got = D.minhash_candidate_pairs(docs, "doc_id", "text", k=8, bands=4, n=3)
+    want = duck.sql(sql).fetchall()
+    assert want
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+
+
 def test_ngram_jaccard_exact_value(spark):
     # shingle sets: {a b c, b c d} vs {a b c}; jaccard = 1/2
     df = _docs(spark, [(1, "a b c d"), (2, "a b c")])

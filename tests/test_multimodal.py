@@ -63,6 +63,29 @@ def test_sample_frames_shape(spark, media_df):
         assert len(idxs) <= 4
 
 
+def test_sample_frames_match_duckdb_byte_slices(spark, duck):
+    """Frames of every fixture document against DuckDB's slices of the
+    same text.  DuckDB has no BLOB substring, so the oracle slices
+    characters and then encodes: byte-exact only on ASCII text (pinned in
+    tests/test_tpch.py::test_documents_are_ascii)."""
+    from pyspark.sql import functions as F
+
+    sql = """
+SELECT 'mem://doc/' || doc_id AS src,
+       CAST(i AS INT) AS frame_idx,
+       hex(encode(substring(text, CAST(i * 256 + 1 AS BIGINT), 256))) AS frame_hex
+FROM documents,
+     UNNEST(generate_series(
+       0, least(4, greatest(1, octet_length(encode(text)) // 256)) - 1)) AS t(i)
+"""
+    blobs = attach_text_as_binary(load_fixture(spark, SF, "documents"))
+    frames = sample_frames(blobs, every_n_bytes=256, max_frames=4)
+    got = frames.select("src", "frame_idx", F.hex("frame").alias("frame_hex"))
+    want = duck.sql(sql).fetchall()
+    assert want
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+
+
 def test_read_binary_files(spark, tmp_path):
     (tmp_path / "a.bin").write_bytes(b"hello world")
     (tmp_path / "b.bin").write_bytes(b"spark")

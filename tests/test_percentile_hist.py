@@ -124,7 +124,7 @@ def test_multi_column_group_matches_per_group_native(spark):
             assert got[(r["g1"], r["g2"], p)] == r["qs"][i]
 
 
-from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import HealthCheck, example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 _VALS = st.lists(
@@ -152,6 +152,8 @@ _VALS = st.lists(
     st.floats(min_value=0.0, max_value=1.0, allow_nan=False),
     min_size=1, max_size=4, unique=True,
 ))
+# both ranks of p=1e-5 land on -61: Spark returns the value itself
+@example(va=[None], vb=[0.0] * 9 + [-61.0, -61.0], ps=[1e-05])
 def test_property_bit_identical_to_native(spark, va, vb, ps):
     """Hypothesis: for ANY mix of continuous values, planted ties, and
     NULLs across two groups, and ANY percentile list, the histogram form

@@ -9,7 +9,16 @@ from __future__ import annotations
 
 import pytest
 
-from jurimetria_etl_spark.plans.corpus import CORPUS, q02_filter_eq, q05_join_inner
+from jurimetria_etl_spark.plans.corpus import (
+    q01_scan_project,
+    q02_filter_eq,
+    q04_join_dim_coalesce,
+    q05_join_inner,
+    q08_agg_hour,
+    q12_grouping,
+    q15_topk,
+)
+from jurimetria_etl_spark.plans.registry import REGISTRY
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,7 +38,7 @@ def test_filter_pushed_to_parquet(spark):
 
 def test_projection_prunes_scan(spark):
     # q01 projects 4 of 11 lineitem columns; the scan must not read the rest
-    plan = _physical(CORPUS["q01_scan_project"].spark(spark, SF))
+    plan = _physical(q01_scan_project(spark, SF))
     scan = plan[plan.index("ReadSchema") :].splitlines()[0]
     assert "l_extendedprice" in scan and "l_discount" in scan
     assert "l_shipdate" not in scan and "l_comment" not in scan
@@ -37,20 +46,18 @@ def test_projection_prunes_scan(spark):
 
 def test_topk_is_take_ordered(spark):
     # orderBy(desc).limit(k) must NOT materialize a global sort
-    from jurimetria_etl_spark.plans.corpus import CORPUS_DEREGISTERED
-
-    plan = _physical(CORPUS_DEREGISTERED["q15_topk"].spark(spark, SF))
+    plan = _physical(q15_topk(spark, SF))
     assert "TakeOrderedAndProject" in plan
 
 
 def test_agg_is_partial_then_final(spark):
     # map-side combine: two HashAggregates around one exchange
-    plan = _physical(CORPUS["q08_agg_hour"].spark(spark, SF))
+    plan = _physical(q08_agg_hour(spark, SF))
     assert plan.count("HashAggregate") >= 2
 
 
 def test_dim_join_broadcasts(spark):
-    plan = _physical(CORPUS["q04_join_dim_coalesce"].spark(spark, SF))
+    plan = _physical(q04_join_dim_coalesce(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -58,12 +65,14 @@ def test_dim_join_broadcasts(spark):
 def test_no_python_udfs_in_corpus(spark):
     # every corpus query is whole-stage-codegen-able: no BatchEvalPython
     # (row-at-a-time UDF) or ArrowEvalPython nodes anywhere
-    for name, q in CORPUS.items():
+    for name, q in REGISTRY.items():
+        if not (q.gate and name.startswith("q")):
+            continue
         plan = _optimized(q.spark(spark, SF))
         assert "PythonUDF" not in plan, f"{name} fell off the JVM fast path"
 
 
-@pytest.mark.parametrize("fn", [q05_join_inner, lambda s, d: CORPUS["q06_join_star"].spark(s, d)])
+@pytest.mark.parametrize("fn", [q05_join_inner, lambda s, d: REGISTRY["q06_join_star"].spark(s, d)])
 def test_fact_joins_avoid_nested_loop(spark, fn):
     plan = _physical(fn(spark, SF))
     assert "NestedLoop" not in plan and "Cartesian" not in plan
@@ -140,7 +149,7 @@ def test_grouping_variants_scan_fact_once(spark):
     # q12 derives rollup/cube/grouping-sets from ONE base aggregation:
     # exactly one scan of lineitem and no Expand operator (which would
     # multiply every input row by the number of grouping sets pre-agg)
-    plan = _physical(CORPUS["q12_grouping"].spark(spark, SF))
+    plan = _physical(q12_grouping(spark, SF))
     assert plan.count("Scan parquet") == 1
     assert "Expand" not in plan
 

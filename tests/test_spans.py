@@ -196,6 +196,34 @@ def test_cross_corpus_spans_requires_both_sides(spark):
     assert duplicate_spans_against(left, right, span_len=40, k=8).count() == 0
 
 
+def test_cross_corpus_spans_match_duckdb_on_documents_table(spark, duck):
+    """The documents table split even/odd as the two corpora, uncapped,
+    against DuckDB's brute-force cross 40-gram join."""
+    from pyspark.sql import functions as F
+
+    from jurimetria_etl_spark.operators.spans import duplicate_spans_against
+    from jurimetria_etl_spark.sources.fixtures import load_fixture
+
+    sql = """
+WITH g AS (
+  SELECT DISTINCT doc_id, substring(text, i, 40) AS span
+  FROM documents,
+       LATERAL (SELECT unnest(generate_series(1, length(text) - 39)) AS i))
+SELECT l.doc_id AS left_id, r.doc_id AS right_id, l.span AS span
+FROM g l JOIN g r ON l.span = r.span
+WHERE l.doc_id % 2 = 0 AND r.doc_id % 2 = 1
+"""
+    docs = load_fixture(spark, "/root/testdata/sf0.001", "documents")
+    even = docs.where(F.col("doc_id") % 2 == 0)
+    odd = docs.where(F.col("doc_id") % 2 == 1)
+    got = duplicate_spans_against(even, odd, span_len=40, k=8, max_fp_df=None)
+    want = duck.sql(sql).fetchall()
+    assert want
+    assert sorted(
+        map(tuple, got.select("left_id", "right_id", "span").collect())
+    ) == sorted(want)
+
+
 def test_remove_span_contaminated_gate(spark):
     """The span-level decontamination gate drops exactly the documents
     sharing a verbatim >=span_len span with the benchmark, keeps the

@@ -70,6 +70,31 @@ def test_stream_equals_batch(spark, events_dir, agg_fn):
     assert len(got) > 0
 
 
+def test_session_window_counts_match_gaps_and_islands_sql(spark, duck):
+    """Batch session windows (10-minute gap) against the classic
+    gaps-and-islands SQL: a lag break flag and its running sum number the
+    sessions per user."""
+    sql = """
+WITH o AS (
+  SELECT user_id, ts, event_id,
+         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
+                   > INTERVAL 10 MINUTE THEN 1 ELSE 0 END AS brk
+  FROM events),
+s AS (
+  SELECT user_id, ts,
+         sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                        ROWS UNBOUNDED PRECEDING) AS sess
+  FROM o)
+SELECT min(ts) AS w_start, max(ts) + INTERVAL 10 MINUTE AS w_end,
+       user_id, count(*) AS cnt
+FROM s GROUP BY user_id, sess
+"""
+    got = session_window_counts(load_fixture(spark, SF, "events"), gap="10 minutes")
+    want = duck.sql(sql).fetchall()
+    assert want
+    assert _canon(got) == sorted(want)
+
+
 def test_watermark_drops_late_rows(spark, tmp_path):
     """A row arriving in a later micro-batch, older than the watermark
     behind the stream's max event time, is excluded from its window."""

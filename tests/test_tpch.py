@@ -5,7 +5,11 @@ from __future__ import annotations
 
 import duckdb
 
-from jurimetria_etl_spark.plans.tpch import TPCH, TPCH_EXTRA
+from jurimetria_etl_spark.plans.registry import REGISTRY
+from jurimetria_etl_spark.plans.tpch import (
+    t02_shipping_priority,
+    t03_local_supplier_volume,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -15,28 +19,30 @@ def _physical(df) -> str:
 
 
 def test_all_tpch_queries_return_rows(spark):
-    for name, q in TPCH.items():
+    for name, q in REGISTRY.items():
+        if not (q.gate and name.startswith("t")):
+            continue
         assert q.spark(spark, SF).count() > 0, f"{name} degenerate (0 rows)"
 
 
 def test_q3_topk_and_broadcast(spark):
-    plan = _physical(TPCH["t02_shipping_priority"].spark(spark, SF))
+    plan = _physical(t02_shipping_priority(spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan
 
 
 def test_q5_all_dims_broadcast(spark):
     # six-table join: only the orders⨝lineitem spine may shuffle
-    # (t03 rotated to TPCH_EXTRA in r9; the plan pin stays)
-    plan = _physical(TPCH_EXTRA["t03_local_supplier_volume"].spark(spark, SF))
+    plan = _physical(t03_local_supplier_volume(spark, SF))
     assert plan.count("BroadcastHashJoin") >= 3
     assert "NestedLoop" not in plan and "Cartesian" not in plan
 
 
 def test_documents_are_ascii():
-    # The x16_frame_sample oracle slices text chars then encodes; that is
-    # byte-exact ONLY for ASCII corpora — pin the fixture property it
-    # depends on so a fixture change fails loudly here, not as a hash diff.
+    # test_multimodal.py's frame-sample oracle slices text chars then
+    # encodes; that is byte-exact ONLY for ASCII corpora — pin the fixture
+    # property it depends on so a fixture change fails loudly here, not as
+    # a row diff there.
     for sf in ("sf0.001", "sf0.01"):
         n = duckdb.sql(
             f"SELECT count(*) FROM '/root/testdata/{sf}/documents.parquet' "

@@ -226,15 +226,14 @@ def summarize(plan: str) -> list[str]:
 
 
 def main(sf_dir: str) -> None:
-    from jurimetria_etl_spark.plans.corpus import all_queries
+    from jurimetria_etl_spark.plans.registry import REGISTRY
     from jurimetria_etl_spark.session import get_spark
 
     spark = get_spark("plan-audit")
-    registry = all_queries()
     print("# Physical-plan audit\n")
     print(f"Generated against `{sf_dir}` — `python tools/plan_audit.py`.\n")
     for name, intent in AUDITED:
-        df = registry[name].spark(spark, sf_dir)
+        df = REGISTRY[name].spark(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         print(f"## {name}\n")
         print(f"*Intent:* {intent}\n")

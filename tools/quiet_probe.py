@@ -58,10 +58,10 @@ def main() -> None:
 
     sys.path.insert(0, args.repo)
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from jurimetria_etl_spark.plans.corpus import all_queries
+    from jurimetria_etl_spark.plans.registry import REGISTRY
     from jurimetria_etl_spark.session import get_spark
 
-    fn = all_queries()[args.query].spark
+    fn = REGISTRY[args.query].spark
     spark = get_spark("quiet_probe")
     spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").count()
     spark.sparkContext.setJobDescription(

@@ -122,12 +122,9 @@ def main() -> None:
             raise SystemExit(f"missing {d}; run tools/gen_testdata.py first")
 
     from jurimetria_etl_spark.memo import session_memo
-    from jurimetria_etl_spark.plans.corpus import all_queries
+    from jurimetria_etl_spark.plans.registry import REGISTRY
     from jurimetria_etl_spark.session import get_spark
 
-    # deregistered forms included: rotation in/out of the driver window
-    # must never change what this tool can measure
-    registry = all_queries()
     spark = get_spark("scale-bench")
 
     # x13 contrast pair: the registry x13 form pins FIXED n_planes=4 (16
@@ -417,7 +414,7 @@ def main() -> None:
         if stale:
             print(f"dropped stale rows: {stale}", flush=True)
     for name in names:
-        fn = extra[name] if name in extra else registry[name].spark
+        fn = extra[name] if name in extra else REGISTRY[name].spark
         row: dict[str, float] = {}
         for label, d in dirs.items():
             try:

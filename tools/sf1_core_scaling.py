@@ -65,10 +65,9 @@ def main() -> None:
     ap.add_argument("--queries", nargs="*", default=TOP_SF1)
     args = ap.parse_args()
 
-    from jurimetria_etl_spark.plans.corpus import all_queries
+    from jurimetria_etl_spark.plans.registry import REGISTRY
     from jurimetria_etl_spark.session import get_spark
 
-    reg = all_queries()
     spark = get_spark("sf1_core_scaling")
     cpus = spark.sparkContext.defaultParallelism
     spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").count()
@@ -83,7 +82,7 @@ def main() -> None:
         "errors": {},
     }
     for name in args.queries:
-        fn = reg[name].spark
+        fn = REGISTRY[name].spark
         spark.sparkContext.setJobDescription(f"sf1_scaling:{name}:{cpus}c")
         try:
             fn(spark, args.sf_dir).write.format("noop").mode(
