@@ -52,13 +52,14 @@ embedding operators); IVF is the standard inverted-file ANN layout
 
 from __future__ import annotations
 
+import functools
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from jurimetria_etl_spark import storefs
 from jurimetria_etl_spark.operators.similarity import (
     _dot,
     _nearest_cells,
@@ -83,9 +84,10 @@ def write_ann_centroids(
     centroids: list[tuple[int, list[float]]],
     quantize: bool | None = None,
 ) -> None:
-    """Persist the store's centroid set at the store root (atomic
-    same-filesystem replace, the manifest-publish posture).  ``_``
-    prefix keeps it out of Spark's parquet listing.
+    """Persist the store's centroid set in ``store_dir`` (a store root or
+    a generation dir) through ``storefs.write_json`` — the manifest's own
+    atomic small-file write.  ``_`` prefix keeps it out of Spark's
+    parquet listing.
 
     ``quantize`` records the generation's STORAGE POSTURE in the same
     sidecar (r13 ADVICE): within-generation appends share one schema —
@@ -93,101 +95,60 @@ def write_ann_centroids(
     ``quantize=True`` append into a float generation must be a contract
     error, not silently-NULL columns.  ``None`` writes the legacy
     list-only form (posture unknown — pre-r14 stores keep validating)."""
-    os.makedirs(store_dir, exist_ok=True)
-    path = os.path.join(store_dir, _CENTROIDS_FILE)
-    tmp = path + f".tmp_{uuid.uuid4().hex[:8]}"
     cents = [[int(cid), list(map(float, v))] for cid, v in centroids]
-    payload = (
+    storefs.write_json(
+        os.path.join(store_dir, _CENTROIDS_FILE),
         cents
         if quantize is None
-        else {"centroids": cents, "quantize": bool(quantize)}
+        else {"centroids": cents, "quantize": bool(quantize)},
     )
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
 
 
 def _load_centroids_file(
     path: str,
 ) -> tuple[list[tuple[int, list[float]]], bool | None] | None:
-    """Parse the sidecar → (centroids, quantize posture).  Legacy files
-    are a bare centroid list (posture ``None``); r14+ files wrap it in
-    ``{"centroids": ..., "quantize": ...}``."""
-    try:
-        with open(path, encoding="utf-8") as f:
-            raw = json.load(f)
-    except FileNotFoundError:
-        return None
+    """The sidecar at ``path`` → (centroids, quantize posture), ``None``
+    when there is none."""
+    raw = storefs.read_bytes(path)
+    return None if raw is None else _parse_centroids(raw)
+
+
+# Probe paths resolve the SAME store every call (a retrieval service
+# probes one generation thousands of times between recluster events);
+# re-parsing the centroid JSON per probe is pure driver latency (r12
+# verdict task 1).  The memo is keyed by the sidecar's BYTES, which are
+# read every call like the manifest: equal bytes parse to equal
+# centroids, so a hit can never serve stale geometry — stricter than a
+# (mtime, size) signature, which two rewrites within one timestamp tick
+# could share.
+@functools.lru_cache(maxsize=64)
+def _parse_centroids(
+    raw: bytes,
+) -> tuple[list[tuple[int, list[float]]], bool | None]:
+    """Legacy sidecars are a bare centroid list (posture ``None``); r14+
+    ones wrap it in ``{"centroids": ..., "quantize": ...}``."""
+    parsed = json.loads(raw)
     quantize: bool | None = None
-    if isinstance(raw, dict):
-        quantize = raw.get("quantize")
-        raw = raw["centroids"]
+    if isinstance(parsed, dict):
+        quantize = parsed.get("quantize")
+        parsed = parsed["centroids"]
     return (
-        [(int(cid), [float(x) for x in vec]) for cid, vec in raw],
+        [(int(cid), [float(x) for x in vec]) for cid, vec in parsed],
         quantize,
     )
 
 
-def _stat_sig(path: str) -> tuple[int, int] | None:
-    """(mtime_ns, size) freshness signature, None for a missing file —
-    both the manifest and the centroid sidecar are published with
-    ``os.replace`` of a freshly-written temp file, so any generation
-    change moves the signature."""
-    try:
-        st = os.stat(path)
-    except (FileNotFoundError, NotADirectoryError):
-        return None
-    return (st.st_mtime_ns, st.st_size)
-
-
-# resolve memo: store_dir → (data_dir, sidecar path, sidecar sig,
-# centroids, quantize posture).  Probe paths resolve the SAME store
-# every call (a retrieval service probes one generation thousands of
-# times between recluster events); re-parsing the centroid JSON per
-# probe is pure driver latency.  The manifest is still READ every call
-# (it is a ~16-byte file — reading it is the unambiguous generation
-# identity, where an mtime signature could collide across two rapid
-# swaps on a coarse-timestamp filesystem); the memo skips only the
-# sidecar parse, invalidated by the resolved directory changing
-# (recluster/compaction publish NEW version dirs), the sidecar file's
-# stat changing (first append creates it via atomic replace), or — when
-# the cached sidecar was the store-ROOT fallback — a higher-priority
-# data-dir sidecar appearing under the same generation (r13 ADVICE: a
-# hit that kept serving the root copy would silently invert the lookup
-# priority).  (r12 verdict task 1.)
-_RESOLVE_CACHE: dict[str, tuple] = {}
-
-
 def _resolve(
     store_dir: str,
-) -> tuple[str, list[tuple[int, list[float]]], bool | None]:
-    """(data_dir, centroids, quantize posture) — see resolve_ann_store."""
-    from jurimetria_etl_spark.sinks.maintenance import store_data_dir
-
-    data_dir = store_data_dir(store_dir)
-    preferred = os.path.join(data_dir, _CENTROIDS_FILE)
-    hit = _RESOLVE_CACHE.get(store_dir)
-    if (
-        hit is not None
-        and hit[0] == data_dir
-        and _stat_sig(hit[1]) == hit[2]
-        # root-fallback hits stay valid only while the preferred
-        # data-dir sidecar is still absent
-        and (hit[1] == preferred or _stat_sig(preferred) is None)
-    ):
-        return data_dir, hit[3], hit[4]
-    for path in (preferred, os.path.join(store_dir, _CENTROIDS_FILE)):
-        sig = _stat_sig(path)
-        loaded = _load_centroids_file(path)
+) -> tuple[str, str, list[tuple[int, list[float]]], bool | None]:
+    """(data_dir, the dir its sidecar lives in, centroids, quantize
+    posture) — see resolve_ann_store.  The generation's embedded
+    sidecar wins over the store-root fallback."""
+    data_dir = storefs.store_data_dir(store_dir)
+    for sidecar_dir in (data_dir, store_dir):
+        loaded = _load_centroids_file(os.path.join(sidecar_dir, _CENTROIDS_FILE))
         if loaded is not None:
-            cents, quantize = loaded
-            if len(_RESOLVE_CACHE) >= 64:  # bound driver memory
-                _RESOLVE_CACHE.pop(next(iter(_RESOLVE_CACHE)))
-            _RESOLVE_CACHE[store_dir] = (data_dir, path, sig, cents, quantize)
-            return data_dir, cents, quantize
-    _RESOLVE_CACHE.pop(store_dir, None)
+            return data_dir, sidecar_dir, *loaded
     raise ValueError(
         f"ann store at {store_dir!r} has no {_CENTROIDS_FILE} — "
         "append_ann_store writes it on first append; pass centroids "
@@ -212,10 +173,10 @@ def resolve_ann_store(
     with the embedded sidecar, data dir and geometry come from the SAME
     manifest read.
 
-    The centroid-JSON parse is memoized per resolved generation (see
-    ``_RESOLVE_CACHE``); the manifest itself is read every call, so a
-    generation swap can never serve stale geometry."""
-    data_dir, cents, _ = _resolve(store_dir)
+    The centroid-JSON parse is memoized on the sidecar's bytes (see
+    ``_parse_centroids``); the manifest and the sidecar are read every
+    call, so a generation swap can never serve stale geometry."""
+    data_dir, _, cents, _ = _resolve(store_dir)
     return data_dir, cents
 
 
@@ -224,29 +185,6 @@ def read_ann_centroids(store_dir: str) -> list[tuple[int, list[float]]]:
     when the store is versioned, root file otherwise) — raises if the
     store has none (a pre-append or foreign directory)."""
     return resolve_ann_store(store_dir)[1]
-
-
-def _sniff_store_columns(data_dir: str) -> set[str] | None:
-    """Column names of the generation's data files — ONE parquet footer
-    read (pyarrow, no Spark job) plus any hive partition-dir keys on the
-    walked path.  ``None`` when the generation holds no data files yet
-    (a sidecar-only store)."""
-    import pyarrow.parquet as pq
-
-    for root, dirs, files in os.walk(data_dir):
-        dirs.sort()
-        for fname in sorted(files):
-            if not fname.endswith(".parquet") or fname.startswith(("_", ".")):
-                continue
-            cols = set(
-                pq.ParquetFile(os.path.join(root, fname)).schema_arrow.names
-            )
-            rel = os.path.relpath(root, data_dir)
-            for seg in rel.split(os.sep):
-                if "=" in seg:
-                    cols.add(seg.split("=", 1)[0])
-            return cols
-    return None
 
 
 def _check_generation(
@@ -274,7 +212,7 @@ def _check_generation(
     generation and durably records the wrong contract.  Only an empty
     generation, or one whose files agree, adopts the flag."""
     try:
-        _, stored, stored_q = _resolve(store_dir)
+        data_dir, sidecar_dir, stored, stored_q = _resolve(store_dir)
     except ValueError:
         write_ann_centroids(store_dir, centroids, quantize=quantize)
         return
@@ -290,8 +228,7 @@ def _check_generation(
     if stored_q is None:
         # legacy store (pre-posture sidecar): validate the claimed flag
         # against the data files before adopting it into the contract
-        data_dir = _RESOLVE_CACHE[store_dir][0]
-        cols = _sniff_store_columns(data_dir)
+        cols = storefs.parquet_columns(data_dir)
         if cols is not None:
             actual_q = "q" in cols and vec_col not in cols
             if bool(quantize) != actual_q:
@@ -305,7 +242,6 @@ def _check_generation(
         # adopt the (now schema-verified, or empty-store) posture,
         # written WHERE the resolved sidecar lives (the data dir on a
         # versioned store — a root write there would be shadowed)
-        sidecar_dir = os.path.dirname(_RESOLVE_CACHE[store_dir][1])
         write_ann_centroids(sidecar_dir, centroids, quantize=quantize)
         return
     if bool(quantize) != stored_q:
@@ -364,13 +300,10 @@ def append_ann_store(
     second schema into the generation).  Resolves the store manifest
     per call, so appends land in the generation a between-batch
     compaction published."""
-    from jurimetria_etl_spark.sinks.maintenance import (
-        require_cell_partitioned,
-        store_data_dir,
-    )
+    from jurimetria_etl_spark.sinks.maintenance import require_cell_partitioned
 
     _check_generation(store_dir, centroids, quantize=quantize, vec_col=vec_col)
-    data_dir = store_data_dir(store_dir)
+    data_dir = storefs.store_data_dir(store_dir)
     # refuse to corrupt a legacy flat layout with hive dirs (r14 ADVICE;
     # same guard as the streaming semdedup append)
     require_cell_partitioned(data_dir, "ivf_cell", "append_ann_store")
@@ -413,13 +346,8 @@ def load_ann_store(
     e.g. switching ``quantize``) changes the schema under an unchanging
     path, and a cached schema would silently NULL the missing columns
     instead of erroring."""
-    from jurimetria_etl_spark.sinks.maintenance import (
-        _VERSIONS,
-        store_data_dir,
-    )
-
-    target = data_dir or store_data_dir(store_dir)
-    cacheable = f"{os.sep}{_VERSIONS}{os.sep}" in target
+    target = data_dir or storefs.store_data_dir(store_dir)
+    cacheable = f"/{storefs._VERSIONS}/" in target
     schema = _SCHEMA_CACHE.get(target) if cacheable else None
     if schema is None:
         df = spark.read.parquet(target)

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jurimetria_etl_spark import storefs
 from jurimetria_etl_spark.operators.dedup import hash60, word_shingles
 
 
@@ -397,17 +398,12 @@ def build_benchmark_store(
     DIFFERENT probe set, and silently mixing widths would gate against
     the wrong keys.  A new benchmark version is a rebuild (overwrite) —
     run it in a maintenance window like every bare-parquet store swap;
-    the meta rename is atomic, the parquet overwrite is not.
+    the meta write is atomic (``storefs.write_json``), the parquet
+    overwrite is not.
 
     Returns the meta dict ({n, spans, span_len, span_k, n_shingles})."""
-    import json
-    import os
-    import uuid
-
     shingles = benchmark_shingle_set(bench, text_col, n)
-    shingles.write.mode("overwrite").parquet(
-        os.path.join(store_dir, "shingles")
-    )
+    shingles.write.mode("overwrite").parquet(f"{store_dir}/shingles")
     if spans:
         from jurimetria_etl_spark.operators.spans import (
             winnowed_fingerprints,
@@ -415,24 +411,16 @@ def build_benchmark_store(
 
         winnowed_fingerprints(
             bench, span_len, span_k, id_col, text_col
-        ).write.mode("overwrite").parquet(os.path.join(store_dir, "span_fps"))
+        ).write.mode("overwrite").parquet(f"{store_dir}/span_fps")
     spark = bench.sparkSession
     meta = {
         "n": int(n),
         "spans": bool(spans),
         "span_len": int(span_len) if spans else None,
         "span_k": int(span_k) if spans else None,
-        "n_shingles": spark.read.parquet(
-            os.path.join(store_dir, "shingles")
-        ).count(),
+        "n_shingles": spark.read.parquet(f"{store_dir}/shingles").count(),
     }
-    path = os.path.join(store_dir, _BENCH_META)
-    tmp = path + f".tmp_{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(meta, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, path)
+    storefs.write_json(f"{store_dir}/{_BENCH_META}", meta)
     return meta
 
 
@@ -449,18 +437,12 @@ def load_benchmark_store(
     ``None`` accepts whatever the store was built with.  Requesting the
     span axis (``span_len``/``span_k``) from a shingle-only store
     raises too."""
-    import json
-    import os
-
-    path = os.path.join(store_dir, _BENCH_META)
-    try:
-        with open(path, encoding="utf-8") as f:
-            meta = json.load(f)
-    except FileNotFoundError:
+    meta = storefs.read_json(f"{store_dir}/{_BENCH_META}")
+    if meta is None:
         raise ValueError(
             f"benchmark store at {store_dir!r} has no {_BENCH_META} — "
             "build it with build_benchmark_store"
-        ) from None
+        )
     if n is not None and int(n) != meta["n"]:
         raise ValueError(
             f"benchmark store was built with n={meta['n']}, "
@@ -483,9 +465,9 @@ def load_benchmark_store(
             f"benchmark store spans were winnowed at k={meta['span_k']}, "
             f"requested {span_k} — rebuild the store"
         )
-    shingles = spark.read.parquet(os.path.join(store_dir, "shingles"))
+    shingles = spark.read.parquet(f"{store_dir}/shingles")
     span_fps = (
-        spark.read.parquet(os.path.join(store_dir, "span_fps"))
+        spark.read.parquet(f"{store_dir}/span_fps")
         if meta.get("spans")
         else None
     )

@@ -37,11 +37,14 @@ are textbook (Robertson–Spärck Jones / Okapi), public knowledge.
 
 from __future__ import annotations
 
-import os
+import io
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from jurimetria_etl_spark import storefs
+from jurimetria_etl_spark.storefs import store_data_dir
 
 # Unicode letter/number classes, NOT [^a-z0-9]: the reference's corpus
 # is Brazilian judicial Portuguese (jurimetria_pipeline.py:163-179 —
@@ -361,11 +364,9 @@ def append_text_index(
     store (first appended before the sidecars existed) never starts
     writing them mid-life — a partial sidecar would silently
     undercount — and keeps the derive-at-load plan."""
-    from jurimetria_etl_spark.sinks.maintenance import store_data_dir
-
     # Sidecars only on stores that have had them from birth: fresh
     # store (no doc_lens yet) or a store whose stats sidecar exists.
-    sidecar = os.path.isdir(f"{index_dir}/stats") or not os.path.isdir(
+    sidecar = storefs.is_dir(f"{index_dir}/stats") or not storefs.is_dir(
         f"{index_dir}/doc_lens"
     )
     staged = _staged(docs, id_col, text_col, fold_accents)
@@ -464,47 +465,45 @@ def materialize_stop_list(
     flavor falls back to its own load-time aggregate instead of
     silently reusing a list derived from the wrong n_docs.
 
-    Returns {n_stop_terms, max_df_ratio, strict_stats, version}."""
-    import json
-    import uuid
+    The list is collected once (bounded and broadcast by construction)
+    and published through ``storefs.publish_generation``, whose row-count
+    check verifies the written list against it; a failed check leaves
+    the previous list and its ``_STOPLIST.json`` in place.
 
-    from jurimetria_etl_spark.sinks.maintenance import (
-        _VERSIONS,
-        _publish,
-    )
-
+    Returns {n_stop_terms, max_df_ratio, strict_stats} plus the
+    generation report (version, or the failed check's reason)."""
     idx = load_text_index(spark, index_dir, strict_stats=strict_stats)
     dfs = idx.postings.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
-    stop = (
-        dfs.join(F.broadcast(idx.stats))
+    terms = [
+        (r.term,)
+        for r in dfs.join(F.broadcast(idx.stats))
         .where(F.col("__df") > F.col("n_docs") * F.lit(max_df_ratio))
         .select("term")
-    )
+        .collect()
+    ]
     store = f"{index_dir}/stop_list"
-    version = uuid.uuid4().hex[:12]
-    vdir = os.path.join(store, _VERSIONS, version)
-    stop.coalesce(1).write.mode("overwrite").parquet(vdir)
-    _publish(store, version)
-    meta_path = os.path.join(store, _STOPLIST_META)
-    tmp = meta_path + f".tmp_{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(
-            {
-                "max_df_ratio": float(max_df_ratio),
-                "strict_stats": bool(strict_stats),
-            },
-            f,
-        )
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, meta_path)
-    n = spark.read.parquet(vdir).count()
-    return {
-        "n_stop_terms": n,
-        "max_df_ratio": float(max_df_ratio),
-        "strict_stats": bool(strict_stats),
-        "version": version,
-    }
+    gen = storefs.publish_generation(
+        spark,
+        store,
+        store_data_dir(store),
+        lambda vdir: spark.createDataFrame(terms, "term string")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(vdir),
+        len(terms),
+        "stop terms",
+    )
+    meta = {"max_df_ratio": float(max_df_ratio), "strict_stats": bool(strict_stats)}
+    if gen["verified"]:
+        storefs.write_json(f"{store}/{_STOPLIST_META}", meta)
+    return {"n_stop_terms": gen.get("rows"), **meta, **gen}
+
+
+def read_stop_list_meta(index_dir: str) -> dict | None:
+    """The published stop-list's identity (``_STOPLIST.json``:
+    ``max_df_ratio``, ``strict_stats``), or ``None`` when the index has
+    no materialized list."""
+    return storefs.read_json(f"{index_dir}/stop_list/{_STOPLIST_META}")
 
 
 def _read_stop_list(
@@ -517,22 +516,12 @@ def _read_stop_list(
     ADVICE); the caller falls back to the load-time aggregate.  A
     legacy meta without the flag reads as non-strict, which is what
     every pre-flag list was computed with."""
-    import json
-
-    from jurimetria_etl_spark.sinks.maintenance import store_data_dir
-
-    store = f"{index_dir}/stop_list"
-    meta_path = os.path.join(store, _STOPLIST_META)
-    try:
-        with open(meta_path, encoding="utf-8") as f:
-            meta = json.load(f)
-    except FileNotFoundError:
-        return None
-    if meta.get("max_df_ratio") != float(max_df_ratio):
+    meta = read_stop_list_meta(index_dir)
+    if meta is None or meta.get("max_df_ratio") != float(max_df_ratio):
         return None
     if bool(meta.get("strict_stats", False)) != bool(strict_stats):
         return None
-    return spark.read.parquet(store_data_dir(store))
+    return spark.read.parquet(store_data_dir(f"{index_dir}/stop_list"))
 
 
 def load_text_index(
@@ -565,8 +554,6 @@ def load_text_index(
     semi-join is the identity — it exists purely to keep idf/length
     normalization exact in the crash-to-replay window, at the cost of
     one postings-side doc_id dedup + join per load."""
-    from jurimetria_etl_spark.sinks.maintenance import store_data_dir
-
     postings = (
         spark.read.parquet(store_data_dir(f"{index_dir}/postings"))
         .groupBy("term", "doc_id")
@@ -651,31 +638,23 @@ def _read_stats_sidecar(index_dir: str) -> tuple[int, int] | None:
     when the store has no sidecars (legacy / pre-r16) or the term_df
     twin is missing (a partial sidecar must not be trusted).  The
     frame is tiny by construction — one row per appended batch — and
-    is read with pyarrow directly: no Spark job in the load path."""
-    from jurimetria_etl_spark.sinks.maintenance import store_data_dir
-
+    is read with pyarrow from its ``storefs`` bytes: no Spark job in the
+    load path."""
     stats_dir = store_data_dir(f"{index_dir}/stats")
-    if not os.path.isdir(stats_dir) or not os.path.isdir(
+    if not storefs.is_dir(stats_dir) or not storefs.is_dir(
         store_data_dir(f"{index_dir}/term_df")
     ):
         return None
     import pyarrow.parquet as pq
 
-    seen: dict[str, tuple[int, int]] = {}
-    found = False
-    for root, _dirs, files in os.walk(stats_dir):
-        for name in files:
-            if not name.endswith(".parquet"):
-                continue
-            found = True
-            tbl = pq.read_table(os.path.join(root, name))
-            for row in tbl.to_pylist():
-                seen[row["batch_key"]] = (
-                    int(row["n_docs"]),
-                    int(row["sum_dl"]),
-                )
-    if not found:
+    files = [rel for rel, _ in storefs.walk(stats_dir) if rel.endswith(".parquet")]
+    if not files:
         return None
+    seen: dict[str, tuple[int, int]] = {}
+    for rel in files:
+        raw = storefs.read_bytes(f"{stats_dir}/{rel}")
+        for row in pq.read_table(io.BytesIO(raw)).to_pylist():
+            seen[row["batch_key"]] = (int(row["n_docs"]), int(row["sum_dl"]))
     return (
         sum(v[0] for v in seen.values()),
         sum(v[1] for v in seen.values()),

@@ -26,6 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jurimetria_etl_spark import storefs
 from jurimetria_etl_spark.functions.temporal import SP_TZ
 from jurimetria_etl_spark.operators.filters import date_range_null_pass
 
@@ -534,20 +535,14 @@ _Q32_SELECTION_MIN_BYTES = 32 * 1024 * 1024
 
 def _input_bytes(df: DataFrame) -> int:
     """Total bytes of a frame's input files (pure metadata — the
-    ``widen_partitions`` posture).  0 for non-file sources, which
-    routes them to the native strategy (they are small literal frames
-    in tests)."""
-    import os as _os
-    from urllib.parse import urlparse
+    ``widen_partitions`` posture), sized on whatever Hadoop FileSystem
+    Spark read them from.  A non-file frame has no input files and
+    reads 0, which routes it to the native strategy (the small literal
+    frames of tests).  ``inputFiles()`` are URI strings, so they are
+    unquoted back to the raw paths a Hadoop ``Path`` takes."""
+    from urllib.parse import unquote
 
-    try:
-        total = 0
-        for f in df.inputFiles():
-            p = urlparse(f).path or f
-            total += _os.path.getsize(p)
-        return total
-    except Exception:
-        return 0
+    return sum(storefs.size(unquote(f)) for f in df.inputFiles())
 
 
 def q32_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,7 +10,6 @@ from jurimetria_etl_spark.sinks.maintenance import (  # noqa: F401
     recluster_semdedup_store,
     split_cell,
     split_semdedup_cell,
-    store_prune,
 )
 from jurimetria_etl_spark.sinks.writers import (  # noqa: F401
     persist,
@@ -18,3 +17,4 @@ from jurimetria_etl_spark.sinks.writers import (  # noqa: F401
     write_csv,
     write_parquet,
 )
+from jurimetria_etl_spark.storefs import store_prune  # noqa: F401

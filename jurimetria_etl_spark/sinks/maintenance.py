@@ -12,15 +12,16 @@ files: size the output file count from the CURRENT bytes on disk, rewrite
 via one round-robin repartition (or per-partition for hive layouts), then
 swap directories.  The swap is two renames — NOT atomic: a reader racing
 the swap can see a missing directory.  For stores with concurrent
-readers, use the MANIFESTED-STORE api below instead: data lives in
-version directories under ``<store>/_versions/<hex>/`` and a single
-``<store>/_MANIFEST`` file names the current one; publishing a new
-version is ONE ``os.replace`` (atomic on POSIX), and old version
-directories are retained until an explicit ``store_prune`` — a reader
-that resolved the previous version keeps a fully-intact directory for as
-long as the pruning grace lasts.  The underscore prefixes mean Spark's
-file listing ignores the internals, so a legacy plain-directory reader
-pointed at the store root still sees exactly the legacy root files.
+readers, use the MANIFESTED-STORE api below instead: every new version
+goes through ``storefs.publish_generation`` (a fresh
+``<store>/_versions/<hex>/`` dir, verified, then named by the
+``<store>/_MANIFEST`` publish — atomic per the target table in
+``storefs``'s docstring), and old version directories are retained until
+an explicit ``store_prune`` — a reader that resolved the previous
+version keeps a fully-intact directory for as long as the pruning grace
+lasts.  The underscore prefixes mean Spark's file listing ignores the
+internals, so a legacy plain-directory reader pointed at the store root
+still sees exactly the legacy root files.
 
 Compaction never deletes data it has not verified: the rewritten tree's
 row count must equal the source's or the swap is abandoned (original
@@ -42,24 +43,18 @@ from __future__ import annotations
 
 import math
 import os
-import re
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def dir_stats(path: str) -> tuple[int, int]:
-    """(n_data_files, total_bytes) for a local parquet dir tree.
-    Local-FS walk; on HDFS/S3 swap in the Hadoop FileSystem listing —
-    the compaction logic above it is unchanged."""
-    n, total = 0, 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                n += 1
-                total += os.path.getsize(os.path.join(root, f))
-    return n, total
+from jurimetria_etl_spark import storefs
+from jurimetria_etl_spark.storefs import (
+    _VERSIONS,
+    dir_stats,
+    publish_generation,
+    store_data_dir,
+    store_prune,
+)
 
 
 def compact_parquet(
@@ -102,7 +97,7 @@ def compact_parquet(
     src_rows = _rows_in(spark, path)
     new_rows = _rows_in(spark, tmp)
     if new_rows != src_rows:
-        shutil.rmtree(tmp, ignore_errors=True)
+        storefs.remove(tmp)
         return {
             "files_before": files_before,
             "files_after": files_before,
@@ -112,9 +107,9 @@ def compact_parquet(
             "reason": f"rewrite rows {new_rows} != source rows {src_rows}",
         }
     old = f"{path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    storefs.rename(path, old)
+    storefs.rename(tmp, path)
+    storefs.remove(old)
     files_after, _ = dir_stats(path)
     return {
         "files_before": files_before,
@@ -146,29 +141,6 @@ def _rows_in(spark: SparkSession, path: str) -> int:
 
 # ───────────────────── manifested store (atomic swap) ──────────────────────
 
-_MANIFEST = "_MANIFEST"
-_VERSIONS = "_versions"
-
-
-def _manifest_file(store: str) -> str:
-    return os.path.join(store, _MANIFEST)
-
-
-def store_data_dir(store: str) -> str:
-    """Resolve the directory readers should scan.
-
-    Manifested store → the version directory the ``_MANIFEST`` names.
-    Plain directory (no manifest) → the directory itself, so every
-    consumer can resolve through this unconditionally and legacy stores
-    keep working unchanged."""
-    mf = _manifest_file(store)
-    try:
-        with open(mf, encoding="utf-8") as f:
-            version = f.read().strip()
-    except FileNotFoundError:
-        return store
-    return os.path.join(store, _VERSIONS, version)
-
 
 def require_cell_partitioned(data_dir: str, partition_col: str, op: str) -> None:
     """Refuse to mix a hive-partitioned write into a legacy FLAT store
@@ -180,14 +152,11 @@ def require_cell_partitioned(data_dir: str, partition_col: str, op: str) -> None
     partitioned append so the migration error is caught while the store
     is still intact.  A missing or empty data dir (fresh store) passes;
     a dir holding only ``partition_col=…`` subdirs passes."""
-    try:
-        names = os.listdir(data_dir)
-    except (FileNotFoundError, NotADirectoryError):
-        return
+    entries = storefs.listing(data_dir)
     flat = [
-        f
-        for f in names
-        if f.endswith(".parquet") and os.path.isfile(os.path.join(data_dir, f))
+        name
+        for name, is_dir, _ in entries
+        if name.endswith(".parquet") and not is_dir
     ]
     if flat:
         raise ValueError(
@@ -204,16 +173,7 @@ def require_cell_partitioned(data_dir: str, partition_col: str, op: str) -> None
     # corruptible: the appended {partition_col}= dirs would land next to
     # the foreign ones and the mixed tree fails the same way (e.g. an
     # ann_store_dir pointed at a sem_cluster-partitioned semdedup store)
-    foreign = sorted(
-        {
-            n.split("=", 1)[0]
-            for n in names
-            if "=" in n
-            and not n.startswith(("_", "."))
-            and os.path.isdir(os.path.join(data_dir, n))
-        }
-        - {partition_col}
-    )
+    foreign = sorted(_partition_cols(entries) - {partition_col})
     if foreign:
         raise ValueError(
             f"{op}: store data dir {data_dir!r} is hive-partitioned by "
@@ -222,33 +182,6 @@ def require_cell_partitioned(data_dir: str, partition_col: str, op: str) -> None
             f"{partition_col}=… directories next to it would corrupt "
             "the tree"
         )
-
-
-def _publish(store: str, version: str) -> None:
-    """Atomically point the manifest at ``version`` — one ``os.replace``
-    of a same-filesystem temp file, so a reader sees either the old or
-    the new manifest in full, never a torn or missing one."""
-    os.makedirs(store, exist_ok=True)
-    tmp = _manifest_file(store) + f".tmp_{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        f.write(version + "\n")
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _manifest_file(store))
-
-
-def _copy_sidecars(src_dir: str, dst_dir: str) -> None:
-    """Copy ``_*.json`` generation-sidecar files (geometry contracts,
-    not data) from one generation directory into another.  Spark's file
-    listing ignores the ``_`` prefix, so sidecars ride version dirs for
-    free; parquet/data files are never touched."""
-    if not os.path.isdir(src_dir):
-        return
-    for name in os.listdir(src_dir):
-        if name.startswith("_") and name.endswith(".json"):
-            full = os.path.join(src_dir, name)
-            if os.path.isfile(full):
-                shutil.copy2(full, os.path.join(dst_dir, name))
 
 
 def compact_store(
@@ -280,36 +213,23 @@ def compact_store(
             "skipped": True,
         }
     n_out = max(1, math.ceil(total / target_file_bytes))
-    version = uuid.uuid4().hex[:12]
-    vdir = os.path.join(store, _VERSIONS, version)
-    _rewrite(spark.read.parquet(src), vdir, n_out, partition_cols)
-    src_rows = _rows_in(spark, src)
-    new_rows = _rows_in(spark, vdir)
-    if new_rows != src_rows:
-        shutil.rmtree(vdir, ignore_errors=True)
-        return {
-            "files_before": files_before,
-            "files_after": files_before,
-            "bytes": total,
-            "skipped": True,
-            "verified": False,
-            "reason": f"rewrite rows {new_rows} != source rows {src_rows}",
-        }
-    # Propagate generation-sidecar metadata (e.g. the ANN store's
-    # embedded ``_CENTROIDS.json``) from the source generation into the
-    # new one BEFORE the publish: compaction preserves geometry, and a
-    # version dir without its sidecar would fall back to the store-root
-    # copy — re-opening the recluster race this embedding closes.
-    _copy_sidecars(src, vdir)
-    _publish(store, version)
-    files_after, _ = dir_stats(vdir)
+    gen = publish_generation(
+        spark,
+        store,
+        src,
+        lambda vdir: _rewrite(spark.read.parquet(src), vdir, n_out, partition_cols),
+        _rows_in(spark, src),
+    )
+    files_after = (
+        dir_stats(os.path.join(store, _VERSIONS, gen["version"]))[0]
+        if gen["verified"]
+        else files_before
+    )
     return {
         "files_before": files_before,
         "files_after": files_after,
         "bytes": total,
-        "skipped": False,
-        "verified": True,
-        "version": version,
+        **gen,
     }
 
 
@@ -320,19 +240,18 @@ def _infer_partition_cols(data_dir: str) -> list[str] | None:
     ANN layouts) flat would silently destroy every consumer's partition
     pruning (r14).  Only the repo's store layouts are in scope: one
     partition level, one column."""
-    cols = set()
-    try:
-        entries = os.listdir(data_dir)
-    except (FileNotFoundError, NotADirectoryError):
-        return None
-    for name in entries:
-        if name.startswith(("_", ".")):
-            continue
-        if "=" in name and os.path.isdir(os.path.join(data_dir, name)):
-            cols.add(name.split("=", 1)[0])
-    if len(cols) == 1:
-        return [next(iter(cols))]
-    return None
+    cols = _partition_cols(storefs.listing(data_dir))
+    return sorted(cols) if len(cols) == 1 else None
+
+
+def _partition_cols(entries: list[tuple[str, bool, int]]) -> set[str]:
+    """Hive partition columns named by a ``storefs.listing``'s visible
+    ``col=value`` directories."""
+    return {
+        name.split("=", 1)[0]
+        for name, is_dir, _ in entries
+        if is_dir and "=" in name and not name.startswith(("_", "."))
+    }
 
 
 def maintain_stores(
@@ -360,7 +279,10 @@ def maintain_stores(
     enforced by the maintenance entry point instead of operator memory.
     The refresh report rides the postings store's entry under
     ``stop_list``."""
-    import json
+    from jurimetria_etl_spark.operators.search import (
+        materialize_stop_list,
+        read_stop_list_meta,
+    )
 
     reports: dict[str, dict] = {}
     for store in stores:
@@ -382,11 +304,7 @@ def maintain_stores(
             # footer sniff — no Spark job — and the upgrade compacts
             # even a single-file store (the rewrite's purpose is the
             # layout, not the file count).
-            from jurimetria_etl_spark.operators.ann_store import (
-                _sniff_store_columns,
-            )
-
-            sniffed = _sniff_store_columns(data_dir)
+            sniffed = storefs.parquet_columns(data_dir)
             cell_cols = [
                 c
                 for c in ("sem_cluster", "ivf_cell")
@@ -406,24 +324,15 @@ def maintain_stores(
         if upgraded and not report.get("skipped"):
             report["layout_upgraded"] = part_cols[0]
         report["pruned"] = len(pruned)
-        if os.path.basename(os.path.normpath(store)) == "postings":
-            index_dir = os.path.dirname(os.path.normpath(store))
-            meta_path = os.path.join(
-                index_dir, "stop_list", "_STOPLIST.json"
+        index_dir, name = os.path.split(store.rstrip("/"))
+        meta = read_stop_list_meta(index_dir) if name == "postings" else None
+        if meta is not None:
+            report["stop_list"] = materialize_stop_list(
+                spark,
+                index_dir,
+                max_df_ratio=float(meta["max_df_ratio"]),
+                strict_stats=bool(meta.get("strict_stats", False)),
             )
-            if os.path.exists(meta_path):
-                from jurimetria_etl_spark.operators.search import (
-                    materialize_stop_list,
-                )
-
-                with open(meta_path, encoding="utf-8") as f:
-                    meta = json.load(f)
-                report["stop_list"] = materialize_stop_list(
-                    spark,
-                    index_dir,
-                    max_df_ratio=float(meta["max_df_ratio"]),
-                    strict_stats=bool(meta.get("strict_stats", False)),
-                )
         reports[store] = report
     return reports
 
@@ -484,26 +393,14 @@ def recluster_semdedup_store(
     )
     _, total = dir_stats(src)
     n_out = max(1, math.ceil(total / target_file_bytes))
-    version = uuid.uuid4().hex[:12]
-    vdir = os.path.join(store, _VERSIONS, version)
-    _rewrite(reassigned, vdir, n_out, ["sem_cluster"])
-    src_rows = _rows_in(spark, src)
-    new_rows = _rows_in(spark, vdir)
-    if new_rows != src_rows:
-        shutil.rmtree(vdir, ignore_errors=True)
-        return {
-            "skipped": True,
-            "verified": False,
-            "reason": f"rewrite rows {new_rows} != source rows {src_rows}",
-        }
-    _publish(store, version)
-    return {
-        "skipped": False,
-        "verified": True,
-        "version": version,
-        "rows": new_rows,
-        "n_clusters": len(new_centroids),
-    }
+    gen = publish_generation(
+        spark,
+        store,
+        src,
+        lambda vdir: _rewrite(reassigned, vdir, n_out, ["sem_cluster"]),
+        _rows_in(spark, src),
+    )
+    return {**gen, "n_clusters": len(new_centroids)} if gen["verified"] else gen
 
 
 def recluster_ann_store(
@@ -595,77 +492,22 @@ def recluster_ann_store(
     )
     _, total = dir_stats(src)
     n_out = max(1, math.ceil(total / target_file_bytes))
-    version = uuid.uuid4().hex[:12]
-    vdir = os.path.join(store, _VERSIONS, version)
-    _rewrite(reassigned, vdir, n_out, ["ivf_cell"])
-    src_rows = folded.count()
-    new_rows = _rows_in(spark, vdir)
-    if new_rows != src_rows:
-        shutil.rmtree(vdir, ignore_errors=True)
-        return {
-            "skipped": True,
-            "verified": False,
-            "reason": f"rewrite rows {new_rows} != folded source rows {src_rows}",
-        }
-    # Embed the generation's geometry INSIDE its version dir BEFORE the
-    # publish — the manifest swap then flips data+centroids atomically
-    # for resolve_ann_store readers.
-    write_ann_centroids(vdir, new_centroids, quantize=quantized)
-    _publish(store, version)
+
+    def write(vdir: str) -> None:
+        _rewrite(reassigned, vdir, n_out, ["ivf_cell"])
+        # the generation's geometry rides INSIDE its version dir: the
+        # manifest publish flips data+centroids atomically for
+        # resolve_ann_store readers
+        write_ann_centroids(vdir, new_centroids, quantize=quantized)
+
+    gen = publish_generation(
+        spark, store, src, write, folded.count(), "folded source rows"
+    )
+    if not gen["verified"]:
+        return gen
     # legacy-root fallback copy, posture included
     write_ann_centroids(store, new_centroids, quantize=quantized)
-    return {
-        "skipped": False,
-        "verified": True,
-        "version": version,
-        "rows": new_rows,
-        "n_cells": len(new_centroids),
-        "quantized": quantized,
-    }
-
-
-def _link_tree_except(
-    src: str, dst: str, skip_top: set[str], skip_rel_dirs: set[str]
-) -> None:
-    """Hardlink ``src``'s data tree into ``dst``, skipping ``skip_top``
-    top-level names, any ``_``/``.``-prefixed entry (manifest internals,
-    sidecars, temp files — Spark's listing ignores them anyway), and any
-    relative directory in ``skip_rel_dirs``.  Hardlinks make a new
-    generation's untouched partitions FREE (same-filesystem inode
-    shares; parquet files are immutable, and ``store_prune`` unlinking
-    an old version never breaks the links).  Falls back to copy when
-    the filesystem refuses the link."""
-    for root, dirs, files in os.walk(src):
-        rel = os.path.relpath(root, src)
-        rel = "" if rel == "." else rel
-        if rel == "":
-            dirs[:] = [
-                d
-                for d in dirs
-                if d not in skip_top
-                and not d.startswith(("_", "."))
-                and d not in skip_rel_dirs
-            ]
-        else:
-            dirs[:] = [
-                d
-                for d in dirs
-                if not d.startswith(("_", "."))
-                and os.path.join(rel, d) not in skip_rel_dirs
-            ]
-        for name in files:
-            if name.startswith(("_", ".")):
-                continue
-            if rel == "" and name in skip_top:
-                continue
-            out_dir = os.path.join(dst, rel) if rel else dst
-            os.makedirs(out_dir, exist_ok=True)
-            s = os.path.join(root, name)
-            d = os.path.join(out_dir, name)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
+    return {**gen, "n_cells": len(new_centroids), "quantized": quantized}
 
 
 def split_cell(
@@ -762,51 +604,67 @@ def split_cell(
     reassigned = _assign_cells(work, sub_cents, vec_col, assign).select(
         F.col("sem_cluster").alias("ivf_cell"), id_col, *payload
     )
-    version = uuid.uuid4().hex[:12]
-    vdir = os.path.join(store, _VERSIONS, version)
-    os.makedirs(vdir, exist_ok=True)
-    _link_tree_except(
+    untouched = total_raw - hot_raw_n
+    gen = _publish_split(
+        spark,
+        store,
         src,
-        vdir,
-        skip_top={_MANIFEST},
-        skip_rel_dirs={_VERSIONS, f"ivf_cell={int(cell_id)}"},
+        "ivf_cell",
+        cell_id,
+        reassigned,
+        untouched + hot_n,
+        f"expected (untouched {untouched} + folded hot {hot_n})",
+        target_file_bytes,
+        lambda vdir: write_ann_centroids(vdir, new_centroids, quantize=quantized),
     )
-    hot_bytes = dir_stats(os.path.join(src, f"ivf_cell={int(cell_id)}"))[1]
-    n_out = max(1, math.ceil(hot_bytes / target_file_bytes))
-    (
-        reassigned.repartition(n_out, "ivf_cell")
-        .write.mode("append")
-        .partitionBy("ivf_cell")
-        .parquet(vdir)
-    )
-    expected = (total_raw - hot_raw_n) + hot_n
-    new_rows = _rows_in(spark, vdir)
-    if new_rows != expected:
-        shutil.rmtree(vdir, ignore_errors=True)
-        return {
-            "skipped": True,
-            "verified": False,
-            "reason": (
-                f"rewrite rows {new_rows} != expected {expected} "
-                f"(untouched {total_raw - hot_raw_n} + folded hot {hot_n})"
-            ),
-        }
-    _copy_sidecars(src, vdir)
-    write_ann_centroids(vdir, new_centroids, quantize=quantized)
-    _publish(store, version)
+    if not gen["verified"]:
+        return gen
     # legacy-root fallback copy, posture included
     write_ann_centroids(store, new_centroids, quantize=quantized)
     return {
-        "skipped": False,
-        "verified": True,
-        "version": version,
+        **gen,
         "split_cell": int(cell_id),
         "new_cells": [cid for cid, _ in sub_cents],
         "rows_moved": hot_n,
-        "rows": new_rows,
         "n_cells": len(new_centroids),
         "quantized": quantized,
     }
+
+
+def _publish_split(
+    spark: SparkSession,
+    store: str,
+    src: str,
+    cell_col: str,
+    cell_id: int,
+    reassigned: DataFrame,
+    expected_rows: int,
+    what: str,
+    target_file_bytes: int,
+    write_sidecars=None,
+) -> dict:
+    """A cell split's generation, through ``publish_generation``: every
+    other cell's partition is placed by ``storefs.link_tree`` (hardlinks
+    on local disk — cost proportional to the hot cell, not the store),
+    the hot cell's re-assigned rows are appended under their new cells,
+    and ``write_sidecars(vdir)`` embeds any new geometry before the
+    count check and the publish."""
+    hot = f"{cell_col}={int(cell_id)}"
+    hot_bytes = dir_stats(os.path.join(src, hot))[1]
+    n_out = max(1, math.ceil(hot_bytes / target_file_bytes))
+
+    def write(vdir: str) -> None:
+        storefs.link_tree(src, vdir, skip=frozenset({hot}))
+        (
+            reassigned.repartition(n_out, cell_col)
+            .write.mode("append")
+            .partitionBy(cell_col)
+            .parquet(vdir)
+        )
+        if write_sidecars is not None:
+            write_sidecars(vdir)
+
+    return publish_generation(spark, store, src, write, expected_rows, what)
 
 
 def split_semdedup_cell(
@@ -863,7 +721,6 @@ def split_semdedup_cell(
             f"centroid set (cells: {sorted(by_id)})"
         )
     src = store_data_dir(store)
-    hot_dir = os.path.join(src, f"sem_cluster={int(cell_id)}")
     try:
         require_cell_partitioned(src, "sem_cluster", "split_semdedup_cell")
     except ValueError as e:
@@ -871,7 +728,7 @@ def split_semdedup_cell(
             f"{e} — flat files mix cells, so a bounded split cannot "
             "hardlink untouched cells"
         ) from None
-    if not os.path.isdir(hot_dir):
+    if not storefs.is_dir(os.path.join(src, f"sem_cluster={int(cell_id)}")):
         raise ValueError(
             f"split_semdedup_cell: store at {src!r} has no "
             f"sem_cluster={int(cell_id)} partition — the cell is empty "
@@ -906,41 +763,24 @@ def split_semdedup_cell(
     reassigned = build_semdedup_store(
         hot, sub_cents, id_col, vec_col, assign
     )
-    version = uuid.uuid4().hex[:12]
-    vdir = os.path.join(store, _VERSIONS, version)
-    os.makedirs(vdir, exist_ok=True)
-    _link_tree_except(
+    gen = _publish_split(
+        spark,
+        store,
         src,
-        vdir,
-        skip_top={_MANIFEST},
-        skip_rel_dirs={_VERSIONS, f"sem_cluster={int(cell_id)}"},
+        "sem_cluster",
+        cell_id,
+        reassigned,
+        total_raw,
+        "source rows",
+        target_file_bytes,
     )
-    hot_bytes = dir_stats(hot_dir)[1]
-    n_out = max(1, math.ceil(hot_bytes / target_file_bytes))
-    (
-        reassigned.repartition(n_out, "sem_cluster")
-        .write.mode("append")
-        .partitionBy("sem_cluster")
-        .parquet(vdir)
-    )
-    new_rows = _rows_in(spark, vdir)
-    if new_rows != total_raw:
-        shutil.rmtree(vdir, ignore_errors=True)
-        return {
-            "skipped": True,
-            "verified": False,
-            "reason": f"rewrite rows {new_rows} != source rows {total_raw}",
-        }
-    _copy_sidecars(src, vdir)
-    _publish(store, version)
+    if not gen["verified"]:
+        return gen
     return {
-        "skipped": False,
-        "verified": True,
-        "version": version,
+        **gen,
         "split_cell": int(cell_id),
         "new_cells": [cid for cid, _ in sub_cents],
         "rows_moved": hot_n,
-        "rows": new_rows,
         "n_clusters": len(new_centroids),
         "new_centroids": new_centroids,
     }
@@ -1159,44 +999,3 @@ def maintain_semdedup_store(
         "splits": splits,
         "new_centroids": cents,
     }
-
-
-def store_prune(store: str) -> list[str]:
-    """Delete every non-current generation: old version directories and —
-    once a manifest exists — the legacy root files a plain-dir upgrade
-    left behind, INCLUDING hive-style ``col=value`` root subdirectories
-    (once a manifest exists those are by construction a pre-compaction
-    generation, and leaving them would both leak disk unboundedly and
-    keep legacy-path readers on stale data forever).  ONLY hive-style
-    names are reclaimed: a co-located directory that is not a ``k=v``
-    partition dir (manual exports, notes, foreign data) is never a
-    legacy generation and is left untouched.  Call AFTER the reader
-    grace period; the current version, the manifest, and everything
-    ``_``-prefixed are never touched.  Returns removed paths."""
-    mf = _manifest_file(store)
-    if not os.path.exists(mf):
-        return []
-    current = store_data_dir(store)
-    removed: list[str] = []
-    vroot = os.path.join(store, _VERSIONS)
-    if os.path.isdir(vroot):
-        for name in os.listdir(vroot):
-            full = os.path.join(vroot, name)
-            if os.path.abspath(full) != os.path.abspath(current):
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(full)
-    for name in os.listdir(store):
-        full = os.path.join(store, name)
-        if name.startswith("_"):
-            continue  # manifest, _versions, _SUCCESS-style markers
-        if os.path.isdir(full):
-            # Reclaim ONLY hive-style `k=v` dirs — the pre-manifest
-            # partition layout.  Anything else co-located in the store
-            # root is foreign data, not a legacy generation.
-            if re.fullmatch(r"[^=]+=.*", name):
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(full)
-        elif name.endswith(".parquet") or name.endswith(".crc"):
-            os.remove(full)
-            removed.append(full)
-    return removed

@@ -32,6 +32,7 @@ from jurimetria_etl_spark.operators.dedup import (
     fingerprint,
     minhash_dedup_incremental,
 )
+from jurimetria_etl_spark.storefs import store_data_dir
 
 DOCS_SCHEMA = "doc_id long, source string, lang string, text string"
 
@@ -58,8 +59,6 @@ def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     compacted into the manifested layout (sinks/maintenance.py), each
     micro-batch re-resolves the CURRENT version — which is what makes
     between-batch compaction safe for this stream."""
-    from jurimetria_etl_spark.sinks.maintenance import store_data_dir
-
     path = store_data_dir(path)
     # the PUBLIC base class — catches both classic (captured) and Spark
     # Connect implementations
@@ -91,8 +90,6 @@ def _append_audit(
 ) -> None:
     """One funnel row per micro-batch, appended to the audit log
     (manifest-resolved like every other store append)."""
-    from jurimetria_etl_spark.sinks.maintenance import store_data_dir
-
     spark.createDataFrame(
         [(int(batch_id), int(n_in), int(n_gated), int(n_fresh), int(n_kept))],
         _AUDIT_SCHEMA,
@@ -119,8 +116,6 @@ def load_curation_audit(spark: SparkSession, audit_dir: str) -> DataFrame:
     Operational contract: swap gate assets only between streams (stop,
     rebuild, restart with a fresh checkpoint), exactly as the store
     maintenance contracts require."""
-    from jurimetria_etl_spark.sinks.maintenance import store_data_dir
-
     df = spark.read.schema(_AUDIT_SCHEMA).parquet(store_data_dir(audit_dir))
     return df.groupBy("batch_id").agg(
         *[
@@ -482,16 +477,12 @@ def curate_document_stream(
                 # the fp store, appended to the log first so a retry
                 # sees a non-empty log and does not backfill twice
                 # (bit_or fold makes a double append harmless anyway).
-                from jurimetria_etl_spark.sinks.maintenance import (
-                    store_data_dir as _sdd,
-                )
-
                 seed = bloom_build(
                     fp_store, "fp",
                     expected_items=bloom_capacity, fpp=bloom_fpp,
                 )
                 seed.words.write.mode("append").parquet(
-                    _sdd(bloom_store_dir)
+                    store_data_dir(bloom_store_dir)
                 )
                 bloom = seed
         if bloom is not None:
@@ -582,8 +573,6 @@ def curate_document_stream(
         # Appends resolve the store manifests too (no-op for plain dirs):
         # re-resolving per batch means a between-batch compaction's new
         # version receives every later append.
-        from jurimetria_etl_spark.sinks.maintenance import store_data_dir
-
         survivors.write.mode("append").parquet(store_data_dir(corpus_dir))
         build_near_dup_store(survivors, id_col, text_col, k, bands, n).write.mode(
             "append"

@@ -28,7 +28,8 @@ from jurimetria_etl_spark.operators.ann_store import (
     append_ann_store,
     read_ann_centroids,
 )
-from jurimetria_etl_spark.sinks.maintenance import split_cell, store_data_dir
+from jurimetria_etl_spark.sinks.maintenance import split_cell
+from jurimetria_etl_spark.storefs import store_data_dir
 
 DIM = 4
 # two far-apart cells; cell 1 holds two separable sub-clusters (A ~ +3

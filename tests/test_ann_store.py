@@ -28,10 +28,8 @@ from jurimetria_etl_spark.operators.similarity import (
     cosine_topk_batch,
     ivf_index,
 )
-from jurimetria_etl_spark.sinks.maintenance import (
-    recluster_ann_store,
-    store_data_dir,
-)
+from jurimetria_etl_spark.sinks.maintenance import recluster_ann_store
+from jurimetria_etl_spark.storefs import store_data_dir
 
 DIM = 16
 N_CELLS = 8
@@ -312,7 +310,7 @@ def test_recluster_rejects_foreign_directory(spark, tmp_path):
         recluster_ann_store(spark, d, CENTROIDS)
 
 
-def test_read_centroids_missing_raises(tmp_path):
+def test_read_centroids_missing_raises(spark, tmp_path):
     os.makedirs(str(tmp_path / "empty"), exist_ok=True)
     with pytest.raises(ValueError, match="_CENTROIDS"):
         read_ann_centroids(str(tmp_path / "empty"))
@@ -557,10 +555,7 @@ def test_resolve_memo_prefers_fresh_data_dir_sidecar(spark, tmp_path):
         resolve_ann_store,
         write_ann_centroids,
     )
-    from jurimetria_etl_spark.sinks.maintenance import (
-        _VERSIONS,
-        _publish,
-    )
+    from jurimetria_etl_spark.storefs import _VERSIONS, _publish
 
     d = str(tmp_path / "prio")
     version = "gen000000001"

@@ -9,7 +9,8 @@ import time
 
 from pyspark.sql import functions as F
 
-from jurimetria_etl_spark.sinks.maintenance import compact_parquet, dir_stats
+from jurimetria_etl_spark.sinks.maintenance import compact_parquet
+from jurimetria_etl_spark.storefs import dir_stats
 from jurimetria_etl_spark.sources.fixtures import load_fixture
 from jurimetria_etl_spark.streaming.curation import (
     curate_document_stream,
@@ -75,11 +76,8 @@ def test_manifested_compaction_between_stream_runs(spark, tmp_path):
     keep deduplicating correctly, and land appends in the current
     version.  Prune afterwards reclaims the legacy generation without
     touching the appended state."""
-    from jurimetria_etl_spark.sinks.maintenance import (
-        compact_store,
-        store_data_dir,
-        store_prune,
-    )
+    from jurimetria_etl_spark.sinks.maintenance import compact_store
+    from jurimetria_etl_spark.storefs import store_data_dir, store_prune
 
     docs = load_fixture(spark, SF, "documents").select(
         "doc_id", "source", "lang", "text"

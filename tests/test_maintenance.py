@@ -8,7 +8,8 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from jurimetria_etl_spark.sinks.maintenance import compact_parquet, dir_stats
+from jurimetria_etl_spark.sinks.maintenance import compact_parquet
+from jurimetria_etl_spark.storefs import dir_stats
 
 
 def _multiset(df):
@@ -107,8 +108,8 @@ def test_manifested_store_atomic_swap_keeps_racing_reader_alive(
     reader that resolved the OLD version before the swap keeps a fully
     intact directory until an explicit prune, while new resolutions see
     the compacted version with the same rows."""
-    from jurimetria_etl_spark.sinks.maintenance import (
-        compact_store,
+    from jurimetria_etl_spark.sinks.maintenance import compact_store
+    from jurimetria_etl_spark.storefs import (
         dir_stats,
         store_data_dir,
         store_prune,
@@ -158,7 +159,7 @@ def test_manifested_store_atomic_swap_keeps_racing_reader_alive(
 
 
 def test_store_prune_noop_on_plain_dir(spark, tmp_path):
-    from jurimetria_etl_spark.sinks.maintenance import store_prune
+    from jurimetria_etl_spark.storefs import store_prune
 
     out = str(tmp_path / "plain")
     spark.range(10).write.parquet(out)
@@ -173,9 +174,9 @@ def test_orphan_version_dir_crash_recovery(spark, tmp_path):
     prune must reclaim the orphan."""
     import os
 
-    from jurimetria_etl_spark.sinks.maintenance import (
+    from jurimetria_etl_spark.sinks.maintenance import compact_store
+    from jurimetria_etl_spark.storefs import (
         _VERSIONS,
-        compact_store,
         store_data_dir,
         store_prune,
     )
@@ -216,10 +217,8 @@ def test_maintain_stores_prunes_previous_generation_only(spark, tmp_path):
     previous generation never lose files mid-scan."""
     import os
 
-    from jurimetria_etl_spark.sinks.maintenance import (
-        maintain_stores,
-        store_data_dir,
-    )
+    from jurimetria_etl_spark.sinks.maintenance import maintain_stores
+    from jurimetria_etl_spark.storefs import store_data_dir
 
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
@@ -263,11 +262,8 @@ def test_store_prune_reclaims_legacy_hive_partition_dirs(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from jurimetria_etl_spark.sinks.maintenance import (
-        compact_store,
-        store_data_dir,
-        store_prune,
-    )
+    from jurimetria_etl_spark.sinks.maintenance import compact_store
+    from jurimetria_etl_spark.storefs import store_data_dir, store_prune
 
     store = str(tmp_path / "hive_store")
     df = spark.range(40).withColumn("part", (F.col("id") % 4).cast("string"))
@@ -299,10 +295,8 @@ def test_store_prune_spares_foreign_non_hive_dirs(spark, tmp_path):
     legacy generation and must survive a maintenance pass untouched."""
     import os
 
-    from jurimetria_etl_spark.sinks.maintenance import (
-        compact_store,
-        store_prune,
-    )
+    from jurimetria_etl_spark.sinks.maintenance import compact_store
+    from jurimetria_etl_spark.storefs import store_prune
 
     store = str(tmp_path / "mixed_store")
     df = spark.range(10)
@@ -327,10 +321,8 @@ def test_maintain_stores_preserves_hive_layout(spark, tmp_path):
     it, so partition pruning survives blind scheduling."""
     import os
 
-    from jurimetria_etl_spark.sinks.maintenance import (
-        maintain_stores,
-        store_data_dir,
-    )
+    from jurimetria_etl_spark.sinks.maintenance import maintain_stores
+    from jurimetria_etl_spark.storefs import store_data_dir
 
     s = str(tmp_path / "cellstore")
     for lo in (0, 30):
@@ -358,7 +350,7 @@ def test_maintain_stores_preserves_hive_layout(spark, tmp_path):
     )[1].split("]", 1)[0]
 
 
-def test_require_cell_partitioned_guards_both_layout_hazards(tmp_path):
+def test_require_cell_partitioned_guards_both_layout_hazards(spark, tmp_path):
     """r15 review findings: the flat-store refusal must name the
     COMPLETE remedy (min_files_to_compact=1 — the default-2 call the
     old message prescribed silently no-ops on a single-file store), and

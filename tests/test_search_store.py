@@ -79,7 +79,7 @@ def test_strict_stats_excludes_orphaned_doc_lens(spark, tmp_path):
     postings-backed docs only in both worlds."""
     import shutil
 
-    from jurimetria_etl_spark.sinks.maintenance import store_data_dir
+    from jurimetria_etl_spark.storefs import store_data_dir
 
     idx_dir = str(tmp_path / "tindex")
     append_text_index(_docs(spark, BATCH0), idx_dir)
@@ -366,7 +366,7 @@ def test_stream_maintains_text_index(spark, tmp_path):
     """curate_document_stream(text_index_dir=): keyword search over the
     streamed corpus equals a from-scratch index of the landed corpus —
     and a document dropped by dedup is never indexed."""
-    from jurimetria_etl_spark.sinks.maintenance import store_data_dir
+    from jurimetria_etl_spark.storefs import store_data_dir
 
     rows0 = [(0, "unique alpha document about spark shuffles")]
     rows1 = [

@@ -17,11 +17,8 @@ from jurimetria_etl_spark.operators.semdedup import (
     build_semdedup_store,
     semdedup_incremental,
 )
-from jurimetria_etl_spark.sinks.maintenance import (
-    recluster_semdedup_store,
-    store_data_dir,
-    store_prune,
-)
+from jurimetria_etl_spark.sinks.maintenance import recluster_semdedup_store
+from jurimetria_etl_spark.storefs import store_data_dir, store_prune
 
 DIM = 6
 RNG = np.random.default_rng(9)

@@ -24,10 +24,8 @@ from jurimetria_etl_spark.operators.semdedup import (
     build_semdedup_store,
     semdedup_incremental,
 )
-from jurimetria_etl_spark.sinks.maintenance import (
-    split_semdedup_cell,
-    store_data_dir,
-)
+from jurimetria_etl_spark.sinks.maintenance import split_semdedup_cell
+from jurimetria_etl_spark.storefs import store_data_dir
 
 DIM = 4
 CENTROIDS = [(0, [10.0, 0.0, 0.0, 0.0]), (1, [0.0, 10.0, 0.0, 0.0])]

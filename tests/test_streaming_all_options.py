@@ -13,7 +13,7 @@ import time
 import numpy as np
 
 from jurimetria_etl_spark.operators.search import bm25_search, load_text_index
-from jurimetria_etl_spark.sinks.maintenance import store_data_dir
+from jurimetria_etl_spark.storefs import store_data_dir
 from jurimetria_etl_spark.streaming.curation import curate_document_stream
 
 DIM = 6

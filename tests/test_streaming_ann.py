@@ -20,7 +20,7 @@ from jurimetria_etl_spark.operators.ann_store import (
     load_ann_store,
     read_ann_centroids,
 )
-from jurimetria_etl_spark.sinks.maintenance import store_data_dir
+from jurimetria_etl_spark.storefs import store_data_dir
 from jurimetria_etl_spark.streaming.curation import curate_document_stream
 from tests.conftest import stage_drop as _drop
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import time
 
-from jurimetria_etl_spark.sinks.maintenance import store_data_dir
+from jurimetria_etl_spark.storefs import store_data_dir
 from jurimetria_etl_spark.streaming.curation import (
     _append_audit,
     curate_document_stream,

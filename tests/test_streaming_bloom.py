@@ -16,7 +16,7 @@ from jurimetria_etl_spark.operators.bloom import (
     bloom_from_words,
     bloom_might_contain,
 )
-from jurimetria_etl_spark.sinks.maintenance import store_data_dir
+from jurimetria_etl_spark.storefs import store_data_dir
 from jurimetria_etl_spark.streaming.curation import (
     curate_document_stream,
     read_documents_stream,

@@ -11,7 +11,7 @@ import time
 from pyspark.sql import functions as F
 
 from jurimetria_etl_spark.operators.classify import linear_quality_score
-from jurimetria_etl_spark.sinks.maintenance import store_data_dir
+from jurimetria_etl_spark.storefs import store_data_dir
 from jurimetria_etl_spark.streaming.curation import (
     curate_document_stream,
     read_documents_stream,

@@ -21,7 +21,7 @@ from jurimetria_etl_spark.operators.decontaminate import (
     load_benchmark_store,
     remove_contaminated,
 )
-from jurimetria_etl_spark.sinks.maintenance import store_data_dir
+from jurimetria_etl_spark.storefs import store_data_dir
 from jurimetria_etl_spark.streaming.curation import (
     curate_document_stream,
     read_documents_stream,

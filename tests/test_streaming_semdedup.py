@@ -10,7 +10,7 @@ import time
 import numpy as np
 import pytest
 
-from jurimetria_etl_spark.sinks.maintenance import store_data_dir
+from jurimetria_etl_spark.storefs import store_data_dir
 from jurimetria_etl_spark.streaming.curation import curate_document_stream
 from tests.conftest import stage_drop as _drop
 

@@ -12,7 +12,7 @@ from jurimetria_etl_spark.operators.spans import (
     duplicate_spans_against,
     winnowed_fingerprints,
 )
-from jurimetria_etl_spark.sinks.maintenance import store_data_dir
+from jurimetria_etl_spark.storefs import store_data_dir
 from jurimetria_etl_spark.streaming.curation import (
     curate_document_stream,
     read_documents_stream,
