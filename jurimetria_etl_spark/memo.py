@@ -21,17 +21,40 @@ to the SparkContext's JVM objects.
   are unpersisted and store directories removed; the next call rebuilds.
 - **cap.** Only where keys come from data: the oldest of the builder's
   entries is released first.
+
+Every cached relation the library makes has one of three lifetimes, and
+this module is the only one that releases a cached relation:
+
+=============  ====================================  ==========================
+lifetime       how                                   released
+=============  ====================================  ==========================
+session        ``.persist()`` inside a               ``clear()``, cap, or a new
+               ``@session_memo`` builder             SparkContext
+call           ``with pinned(df):``                  when the block exits,
+                                                     raised or not
+returned plan  nothing cached; a count-gated frame   with the plan: Spark's
+               is ``localCheckpoint()``-ed, so the   ContextCleaner drops the
+               count and the join read one copy      checkpoint after a JVM
+                                                     garbage collection finds
+                                                     the plan unreferenced
+=============  ====================================  ==========================
+
+A ``persist()``-ed frame is never freed by garbage collection: the
+CacheManager holds it until ``unpersist()``.  So no returned plan may
+depend on one; a lazy plan that reads a shared subtree twice relies on
+Spark's exchange reuse instead.
 """
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import inspect
 import threading
 from collections.abc import Callable
 from typing import Any
 
-from pyspark import SparkContext
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 # (context token, session, builder, builder key) -> (value, release)
@@ -109,3 +132,19 @@ def clear() -> None:
     with _LOCK:
         for entry in list(_ENTRIES):
             _drop(entry, live=entry[0] == live)
+
+
+@contextlib.contextmanager
+def pinned(df: DataFrame):
+    """Cache ``df`` for the body of a ``with`` block and release it when
+    the block exits, raised or not: a call-scoped working set that
+    several actions of one call read.  A frame whose plan is already
+    cached (a session artifact) is used as it is and left cached."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist()
+    try:
+        yield df
+    finally:
+        if owned:
+            df.unpersist()

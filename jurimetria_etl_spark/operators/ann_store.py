@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from jurimetria_etl_spark import storefs
+from jurimetria_etl_spark.memo import session_memo
 from jurimetria_etl_spark.operators.similarity import (
     _dot,
     _nearest_cells,
@@ -71,9 +72,13 @@ from jurimetria_etl_spark.operators.similarity import (
 
 _CENTROIDS_FILE = "_CENTROIDS.json"
 
-# load_ann_store schema memo: generation data_dir → StructType (see the
-# function docstring for why per-generation memoization is sound).
-_SCHEMA_CACHE: dict[str, object] = {}
+
+# load_ann_store's schema of a versioned generation directory (see its
+# docstring for why per-generation memoization is sound); capped because
+# the keys come from data.
+@session_memo(cap=64)
+def _generation_schema(spark: SparkSession, data_dir: str):
+    return spark.read.parquet(data_dir).schema
 
 
 # ── centroid persistence (the generation contract, made checkable) ────────
@@ -347,16 +352,12 @@ def load_ann_store(
     path, and a cached schema would silently NULL the missing columns
     instead of erroring."""
     target = data_dir or storefs.store_data_dir(store_dir)
-    cacheable = f"/{storefs._VERSIONS}/" in target
-    schema = _SCHEMA_CACHE.get(target) if cacheable else None
-    if schema is None:
-        df = spark.read.parquet(target)
-        if cacheable:
-            if len(_SCHEMA_CACHE) >= 64:  # bound driver memory
-                _SCHEMA_CACHE.pop(next(iter(_SCHEMA_CACHE)))
-            _SCHEMA_CACHE[target] = df.schema
+    if f"/{storefs._VERSIONS}/" in target:
+        df = spark.read.schema(_generation_schema(spark, target)).parquet(
+            target
+        )
     else:
-        df = spark.read.schema(schema).parquet(target)
+        df = spark.read.parquet(target)
     if "q" in df.columns and vec_col not in df.columns:
         df = dequantize_embeddings_int8(df, vec_col=vec_col).drop(
             "q", "q_scale"

@@ -67,63 +67,20 @@ def contaminated_predicate(
     )
 
 
-# Probe sets maybe_broadcast_probe persisted for its gating count, FIFO.
-# Bounded so a long-running service calling gates/audits repeatedly (the
-# per-batch streaming decontam loop, a funnel re-run per ingest) cannot
-# accumulate cached RDDs for the session's lifetime (r13 ADVICE): adding
-# past the cap unpersists the oldest — a still-lazy query over an evicted
-# set simply recomputes its (benchmark-sized) lineage.  That recompute is
-# why the probe source must be DETERMINISTIC (r14 ADVICE): eviction (or
-# release_probe_sets) can land between the gating count and a consuming
-# join's execution, so a non-deterministic bench_set — a fresh random
-# sample, a re-read of a mutating table — could be gated on one
-# materialization and joined on another.  Callers with an inherently
-# non-deterministic source should pin it first
-# (``bench_set.localCheckpoint()`` severs the lineage) before gating.
-_PROBE_PERSIST_CAP = 4
-_PROBE_PERSISTS: list[DataFrame] = []
-
-
-def release_probe_sets() -> int:
-    """Unpersist every probe set the broadcast gate is still holding —
-    deterministic cleanup for services that want executor memory back
-    NOW rather than at FIFO eviction.  Returns how many were released."""
-    n = len(_PROBE_PERSISTS)
-    while _PROBE_PERSISTS:
-        _PROBE_PERSISTS.pop().unpersist(blocking=False)
-    return n
-
-
 def maybe_broadcast_probe(
     bench_set: DataFrame, broadcast_max_rows: int | None
 ):
     """The benchmark-probe broadcast posture, shared by every consumer:
     ``None`` broadcasts unconditionally (external eval suites — MBs by
-    construction); a row threshold persists + counts the set, hints the
-    broadcast only at-or-under it, and above it leaves the join to AQE's
-    runtime stats instead of forcing an executor-OOM broadcast (the
-    ``spans._survivor_semi_filter`` posture).
-
-    The persist (which also lets the consuming join reuse the counted
-    set) is LIFECYCLE-BOUNDED: at most ``_PROBE_PERSIST_CAP`` gated sets
-    stay cached, oldest-evicted — repeated gate/audit calls in one
-    session can no longer grow executor storage without bound — and
-    ``release_probe_sets()`` drops them all on demand.
-
-    CONTRACT: ``bench_set`` must be a deterministic plan.  An evicted
-    (or released) set that a still-lazy consumer re-executes recomputes
-    its lineage from source; a non-deterministic source (fresh random
-    sample, re-read of a mutating table) would then be gated on one
-    materialization and joined on another.  Pin such a source with
-    ``bench_set.localCheckpoint()`` before gating."""
+    construction); a row threshold checkpoints + counts the set, hints
+    the broadcast only at-or-under it, and above it leaves the join to
+    AQE's runtime stats instead of forcing an executor-OOM broadcast
+    (the ``spans._survivor_semi_filter`` posture).  The count and the
+    consuming join read one ``localCheckpoint``, freed with the plan
+    that uses it."""
     if broadcast_max_rows is None:
         return F.broadcast(bench_set)
-    from pyspark import StorageLevel
-
-    bench_set = bench_set.persist(StorageLevel.MEMORY_AND_DISK)
-    _PROBE_PERSISTS.append(bench_set)
-    while len(_PROBE_PERSISTS) > _PROBE_PERSIST_CAP:
-        _PROBE_PERSISTS.pop(0).unpersist(blocking=False)
+    bench_set = bench_set.localCheckpoint()
     if bench_set.count() <= broadcast_max_rows:
         return F.broadcast(bench_set)
     return bench_set
@@ -156,7 +113,7 @@ def flag_contamination(
     use (eval suites are thousands of documents, the set is MBs).  When
     the "benchmark" side scales with the corpus (train/eval SPLITS of
     the corpus itself — ``sampling.split_leakage_guarded``), pass a row
-    threshold: the set is persisted and counted, the broadcast hint
+    threshold: the set is checkpointed and counted, the broadcast hint
     applies only at-or-under the threshold, and above it AQE plans a
     shuffle join instead of forcing an executor-OOM broadcast (same
     size-gate posture as ``spans._survivor_semi_filter``).

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jurimetria_etl_spark.memo import pinned
+
 
 def widen_partitions(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition up to cluster width before a CPU-dense narrow stage.
@@ -636,22 +638,21 @@ def near_dup_clusters(
             rows, f"id {id_type}, {cluster_col} {id_type}"
         )
     # Over-bound path: the pair plan is referenced twice below (both
-    # union branches), so persist it for the edge materialization only.
-    pairs = pairs.persist()
-    edges = (
-        pairs.select(
-            F.col(left_col).alias("__src"), F.col(right_col).alias("__dst")
-        )
-        .unionByName(
+    # union branches), so pin it for the edge materialization only.
+    with pinned(pairs):
+        edges = (
             pairs.select(
-                F.col(right_col).alias("__src"),
-                F.col(left_col).alias("__dst"),
+                F.col(left_col).alias("__src"), F.col(right_col).alias("__dst")
             )
+            .unionByName(
+                pairs.select(
+                    F.col(right_col).alias("__src"),
+                    F.col(left_col).alias("__dst"),
+                )
+            )
+            .distinct()
+            .localCheckpoint()
         )
-        .distinct()
-        .localCheckpoint()
-    )
-    pairs.unpersist()  # edges are materialized; the pair cache is done
     labels = (
         edges.select(F.col("__src").alias("__id"))
         .distinct()

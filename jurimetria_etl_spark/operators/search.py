@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from jurimetria_etl_spark import storefs
+from jurimetria_etl_spark.memo import pinned
 from jurimetria_etl_spark.storefs import store_data_dir
 
 # Unicode letter/number classes, NOT [^a-z0-9]: the reference's corpus
@@ -369,63 +370,61 @@ def append_text_index(
     sidecar = storefs.is_dir(f"{index_dir}/stats") or not storefs.is_dir(
         f"{index_dir}/doc_lens"
     )
+    # Every action of the append reads the tokenized batch (doc_lens,
+    # postings, and on a sidecar store the stats collect and term_df):
+    # pin it for the append so the tokenize runs once per batch, not
+    # per action, and is released even when a store write fails.
     staged = _staged(docs, id_col, text_col, fold_accents)
-    if sidecar:
-        # four actions consume the tokenized batch (doc_lens, stats
-        # collect, term_df, postings) — persist it for the append's
-        # duration so the tokenize runs once per batch, not per action
-        staged = staged.persist()
-    idx = _index_from_staged(staged)
-    batch = None
-    if sidecar:
-        row = idx.doc_lens.agg(
-            F.min(F.col("doc_id").cast("string")).alias("mn"),
-            F.max(F.col("doc_id").cast("string")).alias("mx"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
-        ).collect()[0]
-        if row["n_docs"] > 0:
-            # deterministic content-derived batch identity: identical
-            # for a replay, distinct across doc-disjoint batches (the
-            # min doc_id belongs to exactly one batch)
-            batch = (
-                f"{row['mn']}|{row['mx']}|{row['n_docs']}|{row['sum_dl']}",
-                int(row["n_docs"]),
-                int(row["sum_dl"]),
-            )
-    # doc_lens first: a crash in between leaves length-only docs that
-    # cannot match any query term, and the retry restores postings;
-    # postings-first would let a term match a doc whose dl is missing
-    # and NULL-poison its score.  The orphaned doc_lens rows are NOT
-    # fully harmless in the window before the replay lands: they
-    # inflate n_docs and avgdl (idf and length normalization shift for
-    # every query) — scores stay well-defined, ranks can move.
-    # ``load_text_index(strict_stats=True)`` excludes orphans at a
-    # per-load semi-join cost when exactness in that window matters.
-    # Sidecars land between doc_lens and postings: a crash anywhere in
-    # the sequence leaves the same orphan window the two-write order
-    # always had (stats counted, postings pending), and the replay's
-    # byte-identical rows restore consistency under the folds.
-    idx.doc_lens.write.mode("append").parquet(
-        store_data_dir(f"{index_dir}/doc_lens")
-    )
-    if batch is not None:
-        key, n_docs, sum_dl = batch
-        spark = docs.sparkSession
-        spark.createDataFrame(
-            [(key, n_docs, sum_dl)],
-            "batch_key string, n_docs bigint, sum_dl bigint",
-        ).write.mode("append").parquet(store_data_dir(f"{index_dir}/stats"))
-        idx.postings.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df")
-        ).select(F.lit(key).alias("batch_key"), "term", "df").write.mode(
-            "append"
-        ).parquet(store_data_dir(f"{index_dir}/term_df"))
-    idx.postings.write.mode("append").parquet(
-        store_data_dir(f"{index_dir}/postings")
-    )
-    if sidecar:
-        staged.unpersist()
+    with pinned(staged):
+        idx = _index_from_staged(staged)
+        batch = None
+        if sidecar:
+            row = idx.doc_lens.agg(
+                F.min(F.col("doc_id").cast("string")).alias("mn"),
+                F.max(F.col("doc_id").cast("string")).alias("mx"),
+                F.count(F.lit(1)).alias("n_docs"),
+                F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("sum_dl"),
+            ).collect()[0]
+            if row["n_docs"] > 0:
+                # deterministic content-derived batch identity: identical
+                # for a replay, distinct across doc-disjoint batches (the
+                # min doc_id belongs to exactly one batch)
+                batch = (
+                    f"{row['mn']}|{row['mx']}|{row['n_docs']}|{row['sum_dl']}",
+                    int(row["n_docs"]),
+                    int(row["sum_dl"]),
+                )
+        # doc_lens first: a crash in between leaves length-only docs that
+        # cannot match any query term, and the retry restores postings;
+        # postings-first would let a term match a doc whose dl is missing
+        # and NULL-poison its score.  The orphaned doc_lens rows are NOT
+        # fully harmless in the window before the replay lands: they
+        # inflate n_docs and avgdl (idf and length normalization shift for
+        # every query) — scores stay well-defined, ranks can move.
+        # ``load_text_index(strict_stats=True)`` excludes orphans at a
+        # per-load semi-join cost when exactness in that window matters.
+        # Sidecars land between doc_lens and postings: a crash anywhere in
+        # the sequence leaves the same orphan window the two-write order
+        # always had (stats counted, postings pending), and the replay's
+        # byte-identical rows restore consistency under the folds.
+        idx.doc_lens.write.mode("append").parquet(
+            store_data_dir(f"{index_dir}/doc_lens")
+        )
+        if batch is not None:
+            key, n_docs, sum_dl = batch
+            spark = docs.sparkSession
+            spark.createDataFrame(
+                [(key, n_docs, sum_dl)],
+                "batch_key string, n_docs bigint, sum_dl bigint",
+            ).write.mode("append").parquet(store_data_dir(f"{index_dir}/stats"))
+            idx.postings.groupBy("term").agg(
+                F.count(F.lit(1)).alias("df")
+            ).select(F.lit(key).alias("batch_key"), "term", "df").write.mode(
+                "append"
+            ).parquet(store_data_dir(f"{index_dir}/term_df"))
+        idx.postings.write.mode("append").parquet(
+            store_data_dir(f"{index_dir}/postings")
+        )
 
 
 _STOPLIST_META = "_STOPLIST.json"

@@ -695,17 +695,17 @@ def mine_hard_negatives_with_yield(
     n_zero_yield, avg_negatives) — a block of zero-yield anchors under
     one label is the dominant-label signal (raise ``k`` or pre-thin).
 
-    The mined frame is persisted here: it is consumed by both returned
-    frames (and is ≤ anchors × m NARROW rows — ids, label strings, one
-    double — never corpus-sized), so the knn_join lineage runs once,
-    not once per output.  Callers are responsible for
-    ``mined.unpersist()`` when done; at 100 TB, write ``mined`` to a
+    The mined frame is checkpointed here (``localCheckpoint``): it is
+    consumed by both returned frames (and is ≤ anchors × m NARROW rows
+    — ids, label strings, one double — never corpus-sized), so the
+    knn_join lineage runs once, not once per output, and the checkpoint
+    is freed with the returned frames.  At 100 TB, write ``mined`` to a
     scratch dir instead and derive the audit from the re-read
     (curate_corpus's ``intermediate_dir`` pattern)."""
     mined = mine_hard_negatives(
         embeddings, label_col, k=k, m=m,
         id_col=id_col, vec_col=vec_col, dim=dim, **knn_kwargs,
-    ).persist()
+    ).localCheckpoint()
     per_anchor = hard_negative_yield(
         embeddings, mined, label_col, id_col=id_col
     )

@@ -68,8 +68,8 @@ from pyspark.sql import functions as F
 # span-family call (r8 verdict note #3 — x28/x29/x32 cold roughly
 # doubled at fixture scale).
 #
-# MANUAL gate (broadcast_max_rows=<int>): persist + count the survivor
-# frame and hint under the threshold — the portability path for
+# MANUAL gate (broadcast_max_rows=<int>): localCheckpoint + count the
+# survivor frame and hint under the threshold — the portability path for
 # AQE-disabled sessions or thresholds pinned below the useful size.
 # 2M 8-byte keys is ~32 MB in a LongHashedRelation — comfortably
 # inside any executor.
@@ -85,13 +85,11 @@ def _survivor_semi_filter(
     """Semi-filter ``frame`` on ``key ∈ surviving.__h``.  ``None`` is
     the zero-extra-job AQE posture; an int is the manual size-gated
     broadcast hint (module comment above) — there ``surviving`` is
-    persisted so its pass-1 aggregation runs once (count + join build),
-    released by the ContextCleaner when the plan is unreferenced."""
+    checkpointed so the count and the join build read one pass-1
+    aggregation; the checkpoint is freed with the returned plan."""
     if broadcast_max_rows is None:
         return frame.join(surviving, key == F.col("__h"), "left_semi")
-    from pyspark import StorageLevel
-
-    surviving = surviving.persist(StorageLevel.MEMORY_AND_DISK)
+    surviving = surviving.localCheckpoint()
     n = surviving.count()
     build = (
         F.broadcast(surviving) if n <= broadcast_max_rows else surviving
@@ -237,13 +235,10 @@ def duplicate_spans(
         if max_fp_df is not None:
             counted = counted.where(F.col("__df") <= max_fp_df)
         cand_docs = counted.select(id_col).distinct()
-    # The candidate-id list is referenced from both verify branches below
-    # (hash pre-pass + exact aggregation); persist it so the candidacy
-    # pipeline — the winnow fold and its windowed count — is computed
-    # once, not replanted per branch.  8-byte ids, bounded by doc count.
-    from pyspark import StorageLevel
-
-    cand_docs = cand_docs.persist(StorageLevel.MEMORY_AND_DISK)
+    # Both verify branches below (hash pre-pass + exact aggregation)
+    # read the candidate-id list through ``grams``; they plan identical
+    # exchanges under it, and exchange reuse runs the candidacy pipeline
+    # — the winnow fold and its windowed count — once.
     grams = lgram_set(
         df.join(cand_docs, id_col, "left_semi"), span_len, id_col, text_col
     )
@@ -340,17 +335,11 @@ def duplicate_spans_against(
     explode is recomputed once per side for the hash pass (narrow —
     cheaper than the shuffle it replaces).
 
-    The three BOUNDED frames referenced from multiple plan branches —
-    the per-side candidate-id lists and the shared-hash set (all
-    output-bounded under the stop-fingerprint posture) — are persisted
-    (MEMORY_AND_DISK) so each is computed once instead of replayed per
-    branch; without that, every reference would replant the whole
-    winnow+candidacy subplan (Catalyst reuses exchanges, not arbitrary
-    subtrees — the same reason ``duplicate_spans``' inline path uses one
-    windowed count instead of a semi-join-back).  Corpus-sized frames
-    are never cached; the persisted frames are released by Spark's
-    ContextCleaner once the returned plan is unreferenced (no explicit
-    unpersist hook an operator function could safely own)."""
+    The BOUNDED frames referenced from several plan branches — the
+    per-side candidate-id lists and the shared-hash set — are built
+    once and referenced, so their exchanges are identical and exchange
+    reuse computes each once.  Nothing is cached; the int gate's
+    checkpoint is freed with the returned plan."""
     from jurimetria_etl_spark.operators.dedup import widen_partitions
 
     # The winnow fold and gram explode are CPU-dense narrow stages: when
@@ -391,20 +380,8 @@ def duplicate_spans_against(
     if max_fp_df is not None:
         shared = shared.where(F.col("__df") <= max_fp_df)
     shared = shared.select("fp")
-    from pyspark import StorageLevel
-
-    cand_l = (
-        lf.join(shared, "fp", "left_semi")
-        .select(id_col)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cand_r = (
-        rf.join(shared, "fp", "left_semi")
-        .select(id_col)
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    cand_l = lf.join(shared, "fp", "left_semi").select(id_col).distinct()
+    cand_r = rf.join(shared, "fp", "left_semi").select(id_col).distinct()
     grams_l = lgram_set(
         left.join(cand_l, id_col, "left_semi"), span_len, id_col, text_col
     ).select(F.col(id_col).alias("left_id"), F.col("span").alias("__ls"))
@@ -417,20 +394,19 @@ def duplicate_spans_against(
     # the second broadcast.
     hl = grams_l.select(F.xxhash64(F.col("__ls")).alias("__h")).distinct()
     hr = grams_r.select(F.xxhash64(F.col("__rs")).alias("__h")).distinct()
-    shared_h = hl.join(hr, "__h", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    shared_h = hl.join(hr, "__h", "left_semi")
     # Size-gated like every survivor set (module comment at
     # SURVIVOR_BROADCAST_MAX_ROWS): on densely overlapping corpora — two
     # crawls of the same sites — the intersection approaches the smaller
     # side's whole distinct-gram set, where a forced broadcast is an OOM
     # and AQE's shuffle join is the graceful path.  Default (None): no
-    # count job, AQE decides from the persisted frame's runtime bytes;
-    # manual int gate: one count serves both joins.  Either way the
-    # persist makes the two sides identical subplans.
+    # count job, AQE decides from the runtime bytes and the two joins
+    # reuse one exchange; manual int gate: one checkpoint serves the
+    # count and both joins.
     if broadcast_max_rows is None:
         build = shared_h
     else:
+        shared_h = shared_h.localCheckpoint()
         n_shared = shared_h.count()
         build = (
             F.broadcast(shared_h)

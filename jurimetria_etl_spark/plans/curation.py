@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jurimetria_etl_spark.memo import pinned
 from jurimetria_etl_spark.operators import dedup as D
 from jurimetria_etl_spark.operators import text as X
 
@@ -291,35 +292,6 @@ def curate_corpus(
 
     exact = D.dedup_by_fingerprint(gated, text_col, id_col)
 
-    if intermediate_dir is not None:
-        # The at-scale form of the multi-action problem below: WRITE the
-        # deduped corpus once and re-read it — every later action (pair
-        # count, label-prop rounds, final join-back) scans the compact
-        # parquet instead of re-running the gates or holding a
-        # corpus-sized cache.  This is the production pattern SCALE.md
-        # documents; the cache path below remains for callers without a
-        # scratch location.  Honored on BOTH dedup paths: the
-        # non-transitive plan is single-action, but a caller passing a
-        # scratch dir asked for the gates to run once regardless (they
-        # would otherwise re-run in the near-dup signature subplan AND
-        # the final anti-join probe side of the same action).
-        exact.write.mode("overwrite").parquet(intermediate_dir)
-        exact = docs.sparkSession.read.parquet(intermediate_dir)
-    elif transitive:
-        # The clustering path is multi-action (pair count + union-find
-        # collect / label-prop rounds, then the final join-back), so the
-        # gates+fingerprint plan above would re-execute once per action.
-        # Persist the deduped corpus across them — memory-and-disk, the
-        # same intermediate a production pipeline would write out anyway.
-        exact = exact.persist()
-    near_pairs = D.minhash_near_duplicates(
-        exact,
-        id_col,
-        text_col,
-        threshold=near_dup_threshold,
-        k=minhash_k,
-        bands=minhash_bands,
-    )
     def _sem(stage_out: DataFrame) -> DataFrame:
         # semantic (embedding) dedup LAST: text-identical and
         # text-near-dup rows are already gone, so the per-cluster scan
@@ -343,24 +315,50 @@ def curate_corpus(
             n_clusters=semdedup_n_clusters,
         )
 
-    if transitive:
-        kept = _sem(D.dedup_keep_one_per_cluster(exact, near_pairs, id_col))
-        if intermediate_dir is None:
-            # The clustering's eager actions (pair count + union-find
-            # collect / label-prop rounds) have consumed the cache by the
-            # time dedup_keep_one_per_cluster returns — release it instead
-            # of pinning the deduped corpus in executor memory for the
-            # rest of the application.  The caller's final action
-            # recomputes the gates+fingerprint lineage once; at 100 TB
-            # that rescan is cheap, a corpus-sized resident cache is not
-            # (pass intermediate_dir to avoid both).
-            exact.unpersist()
-        return kept
-    losers = near_pairs.select(F.col("right_id").alias(id_col)).distinct()
-    # No broadcast hint: on a heavily duplicated corpus the loser-id set is
-    # corpus-sized — let AQE decide from the runtime size (the same policy
-    # assign_near_dup_clusters documents in operators/dedup.py).
-    return _sem(exact.join(losers, id_col, "left_anti"))
+    def _near_dedup(exact: DataFrame) -> DataFrame:
+        near_pairs = D.minhash_near_duplicates(
+            exact,
+            id_col,
+            text_col,
+            threshold=near_dup_threshold,
+            k=minhash_k,
+            bands=minhash_bands,
+        )
+        if transitive:
+            return _sem(D.dedup_keep_one_per_cluster(exact, near_pairs, id_col))
+        losers = near_pairs.select(F.col("right_id").alias(id_col)).distinct()
+        # No broadcast hint: on a heavily duplicated corpus the loser-id set is
+        # corpus-sized — let AQE decide from the runtime size (the same policy
+        # assign_near_dup_clusters documents in operators/dedup.py).
+        return _sem(exact.join(losers, id_col, "left_anti"))
+
+    if intermediate_dir is not None:
+        # The at-scale form of the multi-action problem below: WRITE the
+        # deduped corpus once and re-read it — every later action (pair
+        # count, label-prop rounds, final join-back) scans the compact
+        # parquet instead of re-running the gates or holding a
+        # corpus-sized cache.  This is the production pattern SCALE.md
+        # documents; the pinned path below remains for callers without a
+        # scratch location.  Honored on BOTH dedup paths: the
+        # non-transitive plan is single-action, but a caller passing a
+        # scratch dir asked for the gates to run once regardless (they
+        # would otherwise re-run in the near-dup signature subplan AND
+        # the final anti-join probe side of the same action).
+        exact.write.mode("overwrite").parquet(intermediate_dir)
+        exact = docs.sparkSession.read.parquet(intermediate_dir)
+    elif transitive:
+        # The clustering path is multi-action (pair count + union-find
+        # collect / label-prop rounds, then the final join-back), so the
+        # gates+fingerprint plan above would re-execute once per action.
+        # Pin the deduped corpus across those eager actions only: they
+        # have consumed it by the time dedup_keep_one_per_cluster
+        # returns, and the caller's final action recomputes the
+        # gates+fingerprint lineage once — at 100 TB that rescan is
+        # cheap, a corpus-sized resident cache is not (pass
+        # intermediate_dir to avoid both).
+        with pinned(exact):
+            return _near_dedup(exact)
+    return _near_dedup(exact)
 
 
 def curation_report(

@@ -49,6 +49,18 @@ def stage_drop(df, dir_path: str, name: str, mtime: float) -> None:
     shutil.rmtree(staging, ignore_errors=True)
 
 
+def cached_relations(spark) -> set[int]:
+    """Ids of the cached RDDs that only ``unpersist()`` releases: the
+    persisted frames.  Local checkpoints are left out: Spark's
+    ContextCleaner releases one after a JVM garbage collection finds no
+    plan referencing it."""
+    return {
+        rdd_id
+        for rdd_id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items()
+        if not rdd.rdd().isLocallyCheckpointed()
+    }
+
+
 # ───────────────────────── fast test profile (r16) ─────────────────────────
 #
 # The full suite (649 tests) runs ~55 min on local[32] — past the external

@@ -132,7 +132,7 @@ EXPECT: dict[str, tuple[int, int, int, int]] = {
     "x22_training_shards": (0, 0, 4, 1),
     # x28 (r7 hash pre-pass; r9 AQE-gated survivor semi-join): widen →
     # winnow fps (narrow) → windowed fp count → candidate-doc semi-join
-    # (persisted cand ids) → long-keyed xxhash64(span) count (the
+    # (cand ids, exchange-reused) → long-keyed xxhash64(span) count (the
     # survivor set — r9: no persist/count job; AQE converts the
     # semi-join from runtime bytes) → span-keyed group + in-group pair
     # expansion.  r8's pin was 28: the persisted survivor subtree

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from jurimetria_etl_spark.operators import dedup as D
 from jurimetria_etl_spark.plans.curation import curate_corpus, curation_report
+from tests.conftest import cached_relations
 
 SF = "/root/testdata/sf0.001"
 
@@ -708,29 +709,22 @@ def test_funnel_span_axis_joins_hit_set_not_report(spark):
 
 
 def test_probe_persist_lifecycle_is_bounded(spark):
-    """r13 ADVICE: the broadcast gate's persisted probe sets must not
-    accumulate for the session's lifetime — FIFO-bounded at the cap,
-    and release_probe_sets() drops them all."""
+    """The broadcast gate's counted probe sets live as long as the
+    plans that use them: repeated gate/audit calls in one session do
+    not accumulate cached relations."""
     from jurimetria_etl_spark.operators.decontaminate import (
-        _PROBE_PERSIST_CAP,
-        _PROBE_PERSISTS,
         maybe_broadcast_probe,
-        release_probe_sets,
     )
 
-    release_probe_sets()
-    frames = []
-    for i in range(_PROBE_PERSIST_CAP + 2):
-        df = spark.range(10 + i).withColumnRenamed("id", "__bench_sh")
-        frames.append(df)
-        maybe_broadcast_probe(df, broadcast_max_rows=5)
-    assert len(_PROBE_PERSISTS) == _PROBE_PERSIST_CAP
-    # the evicted (oldest) sets are no longer cached; the newest are
-    assert frames[0].storageLevel.useMemory is False
-    assert frames[-1].storageLevel.useMemory is True
-    assert release_probe_sets() == _PROBE_PERSIST_CAP
-    assert not _PROBE_PERSISTS
-    assert frames[-1].storageLevel.useMemory is False
-    # the None posture never persists (unconditional broadcast hint)
-    out = maybe_broadcast_probe(spark.range(3), None)
-    assert not _PROBE_PERSISTS and out is not None
+    before = cached_relations(spark)
+    probes = [
+        maybe_broadcast_probe(
+            spark.range(10 + i).withColumnRenamed("id", "__bench_sh"),
+            broadcast_max_rows=5,
+        )
+        for i in range(6)
+    ]
+    assert [p.count() for p in probes] == [10 + i for i in range(6)]
+    # the None posture never caches (unconditional broadcast hint)
+    assert maybe_broadcast_probe(spark.range(3), None).count() == 3
+    assert cached_relations(spark) - before == set()

@@ -243,20 +243,17 @@ def test_mining_composite_returns_yield_summary(spark):
     emb = _emb(spark, rows)
     kw = dict(k=6, m=3, dim=DIM, n_planes=2, n_tables=8)
     mined, summary = mine_hard_negatives_with_yield(emb, "label", **kw)
-    try:
-        srows = {r["anchor_label"]: r for r in summary.collect()}
-        assert set(srows) == {"A", "B"}
-        assert srows["A"]["n_anchors"] == 20
-        assert srows["A"]["n_zero_yield"] >= 15  # the dominant label
-        assert srows["B"]["n_anchors"] == 2
-        # avg_negatives is consistent with the mined frame itself
-        mined_rows = mined.collect()
-        n_a = sum(1 for r in mined_rows if r["anchor_label"] == "A")
-        assert srows["A"]["avg_negatives"] == round(n_a / 20, 6)
-        # and the mined frame is the standalone operator's output
-        want = sorted(
-            map(tuple, mine_hard_negatives(emb, "label", **kw).collect())
-        )
-        assert sorted(map(tuple, mined_rows)) == want
-    finally:
-        mined.unpersist()
+    srows = {r["anchor_label"]: r for r in summary.collect()}
+    assert set(srows) == {"A", "B"}
+    assert srows["A"]["n_anchors"] == 20
+    assert srows["A"]["n_zero_yield"] >= 15  # the dominant label
+    assert srows["B"]["n_anchors"] == 2
+    # avg_negatives is consistent with the mined frame itself
+    mined_rows = mined.collect()
+    n_a = sum(1 for r in mined_rows if r["anchor_label"] == "A")
+    assert srows["A"]["avg_negatives"] == round(n_a / 20, 6)
+    # and the mined frame is the standalone operator's output
+    want = sorted(
+        map(tuple, mine_hard_negatives(emb, "label", **kw).collect())
+    )
+    assert sorted(map(tuple, mined_rows)) == want

@@ -5,6 +5,7 @@ everything.  Stub builders and tiny frames only — no store is built."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import tempfile
@@ -17,6 +18,7 @@ import pytest
 from pyspark import StorageLevel
 
 from jurimetria_etl_spark import memo
+from tests.conftest import cached_relations
 
 ROOT = Path(__file__).resolve().parents[1]
 
@@ -128,3 +130,79 @@ def test_application_id_is_read_only_by_the_memo():
         if re.search(r"\bapplicationId\b", p.read_text(encoding="utf-8"))
     ]
     assert hits == [os.path.join("jurimetria_etl_spark", "memo.py")]
+
+
+def test_pinned_releases_when_the_body_raises(spark):
+    df = spark.range(7)
+    with pytest.raises(RuntimeError, match="write failed"):
+        with memo.pinned(df):
+            assert df.storageLevel != StorageLevel.NONE
+            raise RuntimeError("write failed")
+    assert df.storageLevel == StorageLevel.NONE
+
+
+def test_pinned_leaves_a_cached_plan_cached(spark):
+    """A pinned frame whose plan a session artifact already caches must
+    not release that artifact on exit."""
+
+    @memo.session_memo
+    def artifact(spark):
+        return spark.range(9).persist()
+
+    art = artifact(spark)
+    with memo.pinned(spark.range(9)) as df:
+        assert df.count() == 9
+    assert art.storageLevel != StorageLevel.NONE
+
+
+def _is_session_memo(decorator: ast.expr) -> bool:
+    target = decorator.func if isinstance(decorator, ast.Call) else decorator
+    name = getattr(target, "id", None) or getattr(target, "attr", None)
+    return name == "session_memo"
+
+
+def _cache_calls(tree: ast.AST, memoized: bool = False):
+    """(method, line, inside a @session_memo builder) of every
+    ``.persist(`` / ``.cache(`` / ``.unpersist(`` call."""
+    if isinstance(tree, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        memoized = memoized or any(
+            _is_session_memo(d) for d in tree.decorator_list
+        )
+    if (
+        isinstance(tree, ast.Call)
+        and isinstance(tree.func, ast.Attribute)
+        and tree.func.attr in ("persist", "cache", "unpersist")
+    ):
+        yield tree.func.attr, tree.lineno, memoized
+    for child in ast.iter_child_nodes(tree):
+        yield from _cache_calls(child, memoized)
+
+
+def test_only_the_memo_decides_when_a_cached_relation_lives():
+    """Session artifacts persist inside @session_memo builders, call
+    scopes go through memo.pinned, and nothing else caches or releases
+    a relation."""
+    memo_py = os.path.join("jurimetria_etl_spark", "memo.py")
+    stray = [
+        f"{p.relative_to(ROOT)}:{line} .{attr}("
+        for base in ("jurimetria_etl_spark", "tools")
+        for p in sorted((ROOT / base).rglob("*.py"))
+        if str(p.relative_to(ROOT)) != memo_py
+        for attr, line, memoized in _cache_calls(
+            ast.parse(p.read_text(encoding="utf-8"))
+        )
+        if attr == "unpersist" or not memoized
+    ]
+    assert stray == []
+
+
+@pytest.mark.parametrize("name", ["x28_duplicate_spans", "x38_split_guarded"])
+def test_query_leaves_nothing_cached(spark, name):
+    """The span query and the count-gated split query leave no cached
+    relation behind."""
+    from jurimetria_etl_spark.plans.registry import REGISTRY
+    from tests.test_curation import SF
+
+    before = cached_relations(spark)
+    assert REGISTRY[name].spark(spark, SF).count() > 0
+    assert cached_relations(spark) - before == set()

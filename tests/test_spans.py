@@ -15,6 +15,7 @@ from jurimetria_etl_spark.operators.spans import (
     lgram_set,
     winnowed_fingerprints,
 )
+from tests.conftest import cached_relations
 
 
 def _docs(spark, rows):
@@ -335,16 +336,34 @@ def test_cross_corpus_verify_join_is_hash_prefiltered(spark):
     whose span hash appears on BOTH sides shuffle as strings."""
     from jurimetria_etl_spark.operators.spans import duplicate_spans_against
 
-    left = _docs(spark, [(0, "padding text here. " + BOILER + " tail.")])
-    right = _docs(spark, [(9, "other corpus intro " + BOILER + " outro.")])
-    plan = (
-        duplicate_spans_against(left, right, span_len=40, k=8)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    lt = "padding text here. " + BOILER + " tail."
+    rt = "other corpus intro " + BOILER + " outro."
+    df = duplicate_spans_against(
+        _docs(spark, [(0, lt)]), _docs(spark, [(9, rt)]), span_len=40, k=8
     )
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "hashpartitioning(__h" in plan  # long-keyed intersection
-    assert plan.count("InMemoryTableScan") >= 2  # bounded frames cached once
+    got = sorted(map(tuple, df.collect()))
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in final  # shared subtrees computed once
+    grams = [{t[i : i + 40] for i in range(len(t) - 39)} for t in (lt, rt)]
+    assert got == sorted((0, 9, s) for s in grams[0] & grams[1])
+    assert len(got) == 11  # ' ' + BOILER + ' ' is 50 chars
+
+
+@pytest.mark.parametrize("gate", [None, 0])
+@pytest.mark.parametrize("op", ["duplicate_spans", "duplicate_spans_against"])
+def test_span_plans_leave_nothing_cached(spark, planted, op, gate):
+    """Neither the lazy default nor the count-gated (int) posture
+    leaves a cached relation behind: a long-running stream calls these
+    once per micro-batch."""
+    from jurimetria_etl_spark.operators import spans
+
+    before = cached_relations(spark)
+    args = (planted,) if op == "duplicate_spans" else (planted, planted)
+    df = getattr(spans, op)(*args, span_len=40, k=8, broadcast_max_rows=gate)
+    assert df.count() > 0
+    assert cached_relations(spark) - before == set()
 
 
 def test_remove_span_contaminated_is_uncapped_by_default(spark):

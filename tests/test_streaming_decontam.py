@@ -26,6 +26,7 @@ from jurimetria_etl_spark.streaming.curation import (
     curate_document_stream,
     read_documents_stream,
 )
+from tests.conftest import cached_relations
 from tests.conftest import stage_drop as _drop
 
 # benchmark: two eval items
@@ -162,7 +163,8 @@ def test_stream_decontam_spans_drops_verbatim_leak(spark, tmp_path):
     """The span axis: a doc sharing an exact 40-char span with the
     benchmark is dropped even when the shingle-ratio gate passes it
     (min_ratio pinned above its overlap), using the store's persisted
-    span fingerprints + the benchmark frame for span verification."""
+    span fingerprints + the benchmark frame for span verification.
+    The per-batch span gate leaves no cached relation behind."""
     leak = BENCH[0][1][:40]  # verbatim 40-char prefix of an eval item
     rows0 = [(20, leak + " then entirely different continuation text here")]
     rows1 = [(21, "totally clean document with zero benchmark overlap")]
@@ -178,6 +180,7 @@ def test_stream_decontam_spans_drops_verbatim_leak(spark, tmp_path):
     assert meta["spans"] is True
 
     corpus = str(tmp_path / "corpus_spans")
+    before = cached_relations(spark)
     q = curate_document_stream(
         read_documents_stream(spark, flat),
         corpus,
@@ -193,6 +196,7 @@ def test_stream_decontam_spans_drops_verbatim_leak(spark, tmp_path):
         span_k=8,
     )
     assert q.awaitTermination(120)
+    assert cached_relations(spark) - before == set()
     landed = {
         r.doc_id for r in spark.read.parquet(store_data_dir(corpus)).collect()
     }

@@ -132,7 +132,6 @@ def probe_x29(spark, sf_dir: str) -> dict:
         docs.select(F.explode(span_hashes).alias("h"))
         .groupBy("h")
         .agg(F.count("*").alias("c"))
-        .persist()
     )
     cuts = [2, 3, 5, 10, 25, 100]
     row = hc.agg(
@@ -142,7 +141,6 @@ def probe_x29(spark, sf_dir: str) -> dict:
             for m in cuts
         ],
     ).first()
-    hc.unpersist()
 
     lines_expr = F.filter(
         F.array_distinct(F.split(F.col("text"), "\n")),
@@ -156,7 +154,6 @@ def probe_x29(spark, sf_dir: str) -> dict:
         )
         .groupBy("h")
         .agg(F.count("*").alias("c"))
-        .persist()
     )
     lrow = lc.agg(
         F.count("*").alias("total"),
@@ -165,7 +162,6 @@ def probe_x29(spark, sf_dir: str) -> dict:
             for m in cuts
         ],
     ).first()
-    lc.unpersist()
     return {
         "n_docs": n_docs,
         "broadcast_gate_rows": SURVIVOR_BROADCAST_MAX_ROWS,

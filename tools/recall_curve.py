@@ -25,6 +25,7 @@ N_PROBES = [1, 2, 4, 8]
 
 
 def main(sf_dir: str) -> None:
+    from jurimetria_etl_spark.memo import pinned
     from jurimetria_etl_spark.operators.similarity import (
         ann_ivf_topk_indexed,
         cosine_topk,
@@ -42,29 +43,26 @@ def main(sf_dir: str) -> None:
         for p in probes
     }
     indexed, centroids = ivf_index(emb, n_cells=N_CELLS)
-    indexed = indexed.persist()
-    indexed.count()
-
-    rows = []
-    for np_ in N_PROBES:
-        hits = tot = 0
-        for p in probes:
-            got = {
-                r.vec_id
-                for r in ann_ivf_topk_indexed(
-                    indexed, centroids, probe_id=p, k=K, n_probe=np_
-                ).collect()
-            }
-            hits += len(got & truth[p])
-            tot += K
-        rows.append(
-            {
-                "n_probe": np_,
-                "recall_at_5": round(hits / tot, 3),
-                "scan_fraction": round(np_ / N_CELLS, 3),
-            }
-        )
-    indexed.unpersist()
+    with pinned(indexed):
+        rows = []
+        for np_ in N_PROBES:
+            hits = tot = 0
+            for p in probes:
+                got = {
+                    r.vec_id
+                    for r in ann_ivf_topk_indexed(
+                        indexed, centroids, probe_id=p, k=K, n_probe=np_
+                    ).collect()
+                }
+                hits += len(got & truth[p])
+                tot += K
+            rows.append(
+                {
+                    "n_probe": np_,
+                    "recall_at_5": round(hits / tot, 3),
+                    "scan_fraction": round(np_ / N_CELLS, 3),
+                }
+            )
 
     print(f"| n_probe (of {N_CELLS} cells) | recall@{K} | corpus scored |")
     print("|---|---|---|")
