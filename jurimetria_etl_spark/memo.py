@@ -32,9 +32,9 @@ session        ``.persist()`` inside a               ``clear()``, cap, or a new
                ``@session_memo`` builder             SparkContext
 call           ``with pinned(df):``                  when the block exits,
                                                      raised or not
-returned plan  nothing cached; a count-gated frame   with the plan: Spark's
-               is ``localCheckpoint()``-ed, so the   ContextCleaner drops the
-               count and the join read one copy      checkpoint after a JVM
+returned plan  nothing cached; a frame materialized  with the plan: Spark's
+               while the plan is built is a          ContextCleaner drops the
+               ``localCheckpoint``                   checkpoint after a JVM
                                                      garbage collection finds
                                                      the plan unreferenced
 =============  ====================================  ==========================

@@ -17,9 +17,8 @@ has no built-in. This module re-expresses it Spark-first:
   persists as parquet, and merges with a further ``bit_or`` (Bloom
   filters of identical geometry OR together losslessly, so per-shard
   builds union for free).
-- **Probe** (``bloom_might_contain``): two modes behind one size-gated
-  switch, the same posture as the span survivor sets
-  (operators/spans.py ``_survivor_semi_filter``):
+- **Probe** (``bloom_might_contain``): two modes behind one switch on
+  the filter's declared bit count:
 
   * *dense* (filters ≤ ``dense_max_bits``, default 2²⁷ bits = 16 MB):
     the word frame is compacted to ONE row holding the full

@@ -43,49 +43,6 @@ def benchmark_shingle_set(
     )
 
 
-def overlap_ratio_col(overlap_cnt, n_shingles):
-    """``overlap_cnt / n_shingles`` rounded to 6 (NULL when the document
-    has no shingles) — shared by ``flag_contamination`` and the curation
-    funnel so the two can never round differently."""
-    return F.round(
-        overlap_cnt / F.nullif(n_shingles, F.lit(0)).cast("double"), 6
-    )
-
-
-def contaminated_predicate(
-    overlap_cnt, overlap_ratio, min_overlap: int, min_overlap_ratio: float
-):
-    """THE contamination predicate — ``overlap ≥ min_overlap`` AND
-    ``ratio ≥ min_overlap_ratio``, with shingle-less documents clean.
-    Single source of truth for ``flag_contamination`` and
-    ``plans.curation.curation_funnel``: a threshold or rounding change
-    lands in both the gate and the audit that mirrors it (r12 ADVICE —
-    previously held together only by tests)."""
-    return F.coalesce(
-        (overlap_cnt >= min_overlap) & (overlap_ratio >= min_overlap_ratio),
-        F.lit(False),
-    )
-
-
-def maybe_broadcast_probe(
-    bench_set: DataFrame, broadcast_max_rows: int | None
-):
-    """The benchmark-probe broadcast posture, shared by every consumer:
-    ``None`` broadcasts unconditionally (external eval suites — MBs by
-    construction); a row threshold checkpoints + counts the set, hints
-    the broadcast only at-or-under it, and above it leaves the join to
-    AQE's runtime stats instead of forcing an executor-OOM broadcast
-    (the ``spans._survivor_semi_filter`` posture).  The count and the
-    consuming join read one ``localCheckpoint``, freed with the plan
-    that uses it."""
-    if broadcast_max_rows is None:
-        return F.broadcast(bench_set)
-    bench_set = bench_set.localCheckpoint()
-    if bench_set.count() <= broadcast_max_rows:
-        return F.broadcast(bench_set)
-    return bench_set
-
-
 def flag_contamination(
     docs: DataFrame,
     bench: DataFrame | None,
@@ -94,7 +51,6 @@ def flag_contamination(
     n: int = 5,
     min_overlap: int = 1,
     min_overlap_ratio: float = 0.0,
-    broadcast_max_rows: int | None = None,
     bench_set: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document contamination metrics against the benchmark:
@@ -108,15 +64,12 @@ def flag_contamination(
     Left join from docs so every document gets a row (overlap 0 when
     nothing matches).
 
-    ``broadcast_max_rows``: ``None`` (default) broadcasts the benchmark
-    shingle set unconditionally — correct for the EXTERNAL-benchmark
-    use (eval suites are thousands of documents, the set is MBs).  When
-    the "benchmark" side scales with the corpus (train/eval SPLITS of
-    the corpus itself — ``sampling.split_leakage_guarded``), pass a row
-    threshold: the set is checkpointed and counted, the broadcast hint
-    applies only at-or-under the threshold, and above it AQE plans a
-    shuffle join instead of forcing an executor-OOM broadcast (same
-    size-gate posture as ``spans._survivor_semi_filter``).
+    The benchmark shingle set is broadcast unconditionally: an EXTERNAL
+    benchmark is small by construction (eval suites are thousands of
+    documents, the set is MBs).  A probe side that scales with the
+    corpus — a train/eval split of the corpus itself — goes through
+    ``_flag_against`` un-hinted instead, and AQE sizes the join from
+    runtime bytes (``sampling.split_leakage_guarded``).
 
     ``bench_set``: an already-reduced distinct-shingle-hash frame
     (``benchmark_shingle_set``'s output, or a persisted benchmark
@@ -136,7 +89,28 @@ def flag_contamination(
                 "the same n (build_benchmark_store)"
             )
         bench_set = benchmark_shingle_set(bench, text_col, n)
-    bench_set = maybe_broadcast_probe(bench_set, broadcast_max_rows)
+    return _flag_against(
+        docs, F.broadcast(bench_set), id_col, text_col, n,
+        min_overlap, min_overlap_ratio,
+    )
+
+
+def _flag_against(
+    docs: DataFrame,
+    bench_set: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    min_overlap: int,
+    min_overlap_ratio: float,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """``flag_contamination``'s body against a ready distinct-shingle
+    probe set (column ``__bench_sh``), hinted or not as the caller
+    decides: the join strategy is the probe's, the output the same.
+    ``carry`` columns of ``docs`` (per-document constants) ride through
+    the explode as grouping keys and reach the output.
+    """
     # ONE pass over docs: shingle once, carry the per-doc shingle count
     # through an explode_outer (zero-shingle and NULL-text docs keep one
     # NULL row, so every document still gets an output row), LEFT join
@@ -148,30 +122,34 @@ def flag_contamination(
     doc_sh = (
         docs.select(
             F.col(id_col),
+            *carry,
             _shingle_hashes(text_col, n).alias("__shs"),
         )
         .select(
             id_col,
+            *carry,
             F.size("__shs").cast("bigint").alias("n_shingles"),
             F.explode_outer("__shs").alias("__sh"),
         )
     )
+    cnt, ratio = F.col("overlap_cnt"), F.col("overlap_ratio")
     out = (
         doc_sh.join(bench_set, doc_sh["__sh"] == bench_set["__bench_sh"], "left")
-        .groupBy(id_col, "n_shingles")
+        .groupBy(id_col, *carry, "n_shingles")
         .agg(F.count("__bench_sh").alias("overlap_cnt"))
         .withColumn(
             "overlap_ratio",
-            overlap_ratio_col(F.col("overlap_cnt"), F.col("n_shingles")),
+            F.round(
+                cnt / F.nullif(F.col("n_shingles"), F.lit(0)).cast("double"),
+                6,
+            ),
         )
     )
+    # shingle-less documents (NULL ratio) are clean
     return out.withColumn(
         "contaminated",
-        contaminated_predicate(
-            F.col("overlap_cnt"),
-            F.col("overlap_ratio"),
-            min_overlap,
-            min_overlap_ratio,
+        F.coalesce(
+            (cnt >= min_overlap) & (ratio >= min_overlap_ratio), F.lit(False)
         ),
     )
 

@@ -312,7 +312,6 @@ def split_leakage_guarded(
     min_overlap: int = 1,
     min_overlap_ratio: float = 0.0,
     split_col: str = "split",
-    broadcast_max_rows: int = 5_000_000,
 ) -> DataFrame:
     """Train/eval split with an n-gram leakage guard: train documents
     sharing ≥ ``min_overlap`` word-``n``-gram shingles (and ≥
@@ -322,14 +321,15 @@ def split_leakage_guarded(
     duplicated content.  Output: all ``docs`` columns + ``split_col`` ∈
     {train, eval, quarantine}.
 
-    Scale: the split label is a narrow expression; the guard reuses
-    ``decontaminate.flag_contamination`` with a SIZE-GATED eval shingle
-    set — unlike an external benchmark, the eval side here is a fixed
-    FRACTION of the corpus, so its shingle set grows with the data and
-    must not be unconditionally broadcast (at 100 TB an 0.1% split is
-    still ~100 GB of text).  Under ``broadcast_max_rows`` distinct
-    shingle hashes the probe is a map-side broadcast join; above it AQE
-    plans a shuffle join on the 8-byte hash keys.
+    Scale: the split label is a narrow expression; the guard runs
+    ``decontaminate.flag_contamination``'s one-pass probe with an
+    UN-HINTED eval shingle set — unlike an external benchmark, the eval
+    side here is a fixed FRACTION of the corpus, so its shingle set
+    grows with the data and must not be forced into a broadcast (at
+    100 TB an 0.1% split is still ~100 GB of text).  AQE sizes the join
+    from the set's runtime bytes: a map-side broadcast join while it
+    fits, a shuffle join on the 8-byte hash keys beyond.  Building the
+    plan runs no Spark job.
     """
     from jurimetria_etl_spark.operators import decontaminate as DC
 
@@ -337,15 +337,14 @@ def split_leakage_guarded(
     train = labeled.where(F.col(split_col) == "train")
     ev = labeled.where(F.col(split_col) == "eval")
     leaked = (
-        DC.flag_contamination(
+        DC._flag_against(
             train,
-            ev,
-            id_col=id_col,
-            text_col=text_col,
-            n=n,
-            min_overlap=min_overlap,
-            min_overlap_ratio=min_overlap_ratio,
-            broadcast_max_rows=broadcast_max_rows,
+            DC.benchmark_shingle_set(ev, text_col, n),
+            id_col,
+            text_col,
+            n,
+            min_overlap,
+            min_overlap_ratio,
         )
         .where("contaminated")
         .select(F.col(id_col).alias("__leaked_id"))

@@ -53,48 +53,13 @@ from pyspark.sql import functions as F
 # The hash-survivor sets of the two-pass ops below are OUTPUT-bounded,
 # not constant-bounded: at a permissive min_df (the default 2) on a
 # densely templated corpus the ≥min_df set is a large fraction of the
-# corpus' distinct grams — multi-GB at 100-TB scale.  An unconditional
-# ``F.broadcast()`` hint overrides ``autoBroadcastJoinThreshold`` and
-# Spark's 8 GB broadcast ceiling is a hard failure, so the survivor
-# join must never force a broadcast on faith.
-#
-# DEFAULT posture (broadcast_max_rows=None): no hint, no extra job —
-# the survivor frame is a pass-1 AGGREGATE, so its exact runtime size
-# sits at an AQE stage boundary and AQE converts the semi-join to a
-# broadcast when the measured bytes fit (session.py enables AQE with a
-# 32 MB threshold).  That is the same decision the manual gate made,
-# taken from better evidence (actual bytes, not a row-count proxy) and
-# for free: the r8 manual persist+count cost a dedicated Spark job per
-# span-family call (r8 verdict note #3 — x28/x29/x32 cold roughly
-# doubled at fixture scale).
-#
-# MANUAL gate (broadcast_max_rows=<int>): localCheckpoint + count the
-# survivor frame and hint under the threshold — the portability path for
-# AQE-disabled sessions or thresholds pinned below the useful size.
-# 2M 8-byte keys is ~32 MB in a LongHashedRelation — comfortably
-# inside any executor.
-SURVIVOR_BROADCAST_MAX_ROWS = 2_000_000
-
-
-def _survivor_semi_filter(
-    frame: DataFrame,
-    key: Column,
-    surviving: DataFrame,
-    broadcast_max_rows: int | None,
-) -> DataFrame:
-    """Semi-filter ``frame`` on ``key ∈ surviving.__h``.  ``None`` is
-    the zero-extra-job AQE posture; an int is the manual size-gated
-    broadcast hint (module comment above) — there ``surviving`` is
-    checkpointed so the count and the join build read one pass-1
-    aggregation; the checkpoint is freed with the returned plan."""
-    if broadcast_max_rows is None:
-        return frame.join(surviving, key == F.col("__h"), "left_semi")
-    surviving = surviving.localCheckpoint()
-    n = surviving.count()
-    build = (
-        F.broadcast(surviving) if n <= broadcast_max_rows else surviving
-    )
-    return frame.join(build, key == F.col("__h"), "left_semi")
+# corpus' distinct grams — multi-GB at 100-TB scale.  An ``F.broadcast()``
+# hint overrides ``autoBroadcastJoinThreshold`` and Spark's 8 GB
+# broadcast ceiling is a hard failure, so these semi-joins carry no
+# hint: each survivor frame is a pass-1 AGGREGATE, its exact runtime
+# size sits at an AQE stage boundary, and AQE converts the semi-join to
+# a broadcast when the measured bytes fit (session.py enables AQE with a
+# 32 MB threshold) — no count job, no materialization at build time.
 
 
 def _lgram_array(text_col: Column, length: int) -> Column:
@@ -181,7 +146,6 @@ def duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     fps: DataFrame | None = None,
-    broadcast_max_rows: int | None = None,
 ) -> DataFrame:
     """All ``span_len``-char spans shared by ≥2 distinct documents:
     (left_id, right_id, span) with left_id < right_id, one row per
@@ -248,11 +212,10 @@ def duplicate_spans(
     # fraction → 1, measured 1.0 on the generated word-salad fixture,
     # _scale/occupancy.json §x28_spans) the span-keyed exchange would be
     # corpus-wide in 40-char strings.  Count per 8-byte xxhash64(span)
-    # first (long-keyed exchange), broadcast the ≥2 survivors —
-    # output-bounded under a sensible max_fp_df — back as a SIZE-GATED
-    # broadcast semi-filter (``_survivor_semi_filter``: the hint only
-    # under ``broadcast_max_rows``, else an AQE-planned shuffle join),
-    # and only grams whose hash is genuinely shared shuffle as strings.
+    # first (long-keyed exchange), semi-filter the grams on the ≥2
+    # survivors — output-bounded under a sensible max_fp_df; un-hinted,
+    # so AQE sizes the join (module comment) — and only grams whose
+    # hash is genuinely shared shuffle as strings.
     # A collision only ADDS a gram to the superset; the exact
     # ≥2-distinct-ids check below removes it.
     surviving = (
@@ -262,8 +225,8 @@ def duplicate_spans(
         .where(F.col("__c") >= 2)
         .select("__h")
     )
-    grams = _survivor_semi_filter(
-        grams, F.xxhash64(F.col("span")), surviving, broadcast_max_rows
+    grams = grams.join(
+        surviving, F.xxhash64(F.col("span")) == F.col("__h"), "left_semi"
     )
     # Verify = ONE span-keyed aggregation, not a gram self-join: a
     # self-join would plant the grams subplan (winnow + candidacy + gram
@@ -299,7 +262,6 @@ def duplicate_spans_against(
     text_col: str = "text",
     left_fps: DataFrame | None = None,
     right_fps: DataFrame | None = None,
-    broadcast_max_rows: int | None = None,
 ) -> DataFrame:
     """Cross-corpus duplicate spans: every ``span_len``-char span present
     in a ``left`` document AND a ``right`` document, as
@@ -328,7 +290,8 @@ def duplicate_spans_against(
     intersected first (exchanges carry longs only), the intersection —
     bounded by the SMALLER side's distinct grams, i.e. benchmark-sized in
     the decontamination use and batch-sized in the incremental use — is
-    broadcast back as a semi-filter, and only rows whose hash appears on
+    joined back as a semi-filter that AQE broadcasts when its runtime
+    bytes fit (module comment), and only rows whose hash appears on
     both sides reach the final exact string-equality join.  A collision
     can only let a non-matching gram THROUGH the filter (removed by the
     exact join), never drop a match, so the answer is unchanged; the gram
@@ -338,8 +301,7 @@ def duplicate_spans_against(
     The BOUNDED frames referenced from several plan branches — the
     per-side candidate-id lists and the shared-hash set — are built
     once and referenced, so their exchanges are identical and exchange
-    reuse computes each once.  Nothing is cached; the int gate's
-    checkpoint is freed with the returned plan."""
+    reuse computes each once.  Nothing is cached."""
     from jurimetria_etl_spark.operators.dedup import widen_partitions
 
     # The winnow fold and gram explode are CPU-dense narrow stages: when
@@ -388,38 +350,25 @@ def duplicate_spans_against(
     grams_r = lgram_set(
         right.join(cand_r, id_col, "left_semi"), span_len, id_col, text_col
     ).select(F.col(id_col).alias("right_id"), F.col("span").alias("__rs"))
-    # Hash phase: 8-byte exchanges + broadcast intersection (docstring).
-    # hl/hr are built from the SAME grams_l/grams_r objects so the two
-    # broadcast sides are identical subplans and ReuseExchange dedupes
-    # the second broadcast.
+    # Hash phase: 8-byte exchanges + the intersection semi-filter
+    # (docstring).  hl/hr are built from the SAME grams_l/grams_r
+    # objects, so the two joins' build sides are identical subplans and
+    # ReuseExchange dedupes the second exchange.
     hl = grams_l.select(F.xxhash64(F.col("__ls")).alias("__h")).distinct()
     hr = grams_r.select(F.xxhash64(F.col("__rs")).alias("__h")).distinct()
     shared_h = hl.join(hr, "__h", "left_semi")
-    # Size-gated like every survivor set (module comment at
-    # SURVIVOR_BROADCAST_MAX_ROWS): on densely overlapping corpora — two
-    # crawls of the same sites — the intersection approaches the smaller
-    # side's whole distinct-gram set, where a forced broadcast is an OOM
-    # and AQE's shuffle join is the graceful path.  Default (None): no
-    # count job, AQE decides from the runtime bytes and the two joins
-    # reuse one exchange; manual int gate: one checkpoint serves the
-    # count and both joins.
-    if broadcast_max_rows is None:
-        build = shared_h
-    else:
-        shared_h = shared_h.localCheckpoint()
-        n_shared = shared_h.count()
-        build = (
-            F.broadcast(shared_h)
-            if n_shared <= broadcast_max_rows
-            else shared_h
-        )
+    # Un-hinted like every survivor set (module comment): on densely
+    # overlapping corpora — two crawls of the same sites — the
+    # intersection approaches the smaller side's whole distinct-gram set,
+    # where a forced broadcast is an OOM and AQE's shuffle join is the
+    # graceful path.
     kept_l = grams_l.join(
-        build,
+        shared_h,
         F.xxhash64(F.col("__ls")) == F.col("__h"),
         "left_semi",
     )
     kept_r = grams_r.join(
-        build,
+        shared_h,
         F.xxhash64(F.col("__rs")) == F.col("__h"),
         "left_semi",
     )
@@ -751,7 +700,6 @@ def boilerplate_spans(
     min_df: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_max_rows: int | None = None,
 ) -> DataFrame:
     """Corpus-level boilerplate table: (span, n_docs) for every
     ``span_len``-char span occurring in ≥ ``min_df`` distinct documents
@@ -769,12 +717,11 @@ def boilerplate_spans(
     - **Pass 2** re-derives the grams (narrow recompute — cheaper than
       shuffling them) and keeps only rows whose hash is in the surviving
       set.  At a strip-list-appropriate ``min_df`` the set is strip-list
-      sized and rides a broadcast semi-filter; the hint is SIZE-GATED on
-      the survivor count (``broadcast_max_rows``) because at ``min_df=2``
-      on a dense corpus the set is output-sized — above the gate the
-      hint drops and AQE plans a shuffle join instead of forcing a
-      multi-GB broadcast.  The final span-keyed aggregation shuffles
-      only actual boilerplate occurrences either way.
+      sized and AQE broadcasts the semi-filter; at ``min_df=2`` on a
+      dense corpus the set is output-sized and AQE plans a shuffle join
+      instead (un-hinted — module comment).  The final span-keyed
+      aggregation shuffles only actual boilerplate occurrences either
+      way.
 
     Exact despite hashing: a 64-bit collision can only ADD a span to the
     survivor superset (hash df ≥ span df), never drop one, and the final
@@ -795,8 +742,8 @@ def boilerplate_spans(
     )
     grams = lgram_set(df, span_len, id_col, text_col)
     return (
-        _survivor_semi_filter(
-            grams, F.xxhash64(F.col("span")), surviving, broadcast_max_rows
+        grams.join(
+            surviving, F.xxhash64(F.col("span")) == F.col("__h"), "left_semi"
         )
         .groupBy("span")
         .agg(F.count("*").alias("n_docs"))
@@ -810,7 +757,6 @@ def duplicate_lines(
     min_line_chars: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_max_rows: int | None = None,
 ) -> DataFrame:
     """Corpus-level duplicated-LINE table: (line, n_docs) for every line
     (newline-delimited, length ≥ ``min_line_chars`` after trim) occurring
@@ -823,9 +769,8 @@ def duplicate_lines(
     Same HASH-KEYED two-pass plan as ``boilerplate_spans`` (a line is
     just a variable-length span): the corpus-wide exchange carries 8-byte
     ``xxhash64(line)`` longs, line text resolves behind the ≥min_df
-    survivor semi-filter (broadcast hint size-gated on
-    ``broadcast_max_rows``, AQE shuffle join above it — see
-    ``_survivor_semi_filter``), and an exact per-line recount makes
+    survivor semi-filter (un-hinted: AQE picks broadcast or shuffle from
+    the survivor set's runtime bytes), and an exact per-line recount makes
     collisions invisible.  ``min_line_chars`` keeps trivial short lines
     ("", "-", "ok") out of the table — they would dominate the survivor
     set while carrying no curation signal.
@@ -855,8 +800,8 @@ def duplicate_lines(
         .select("__h")
     )
     return (
-        _survivor_semi_filter(
-            exploded, F.xxhash64(F.col("line")), surviving, broadcast_max_rows
+        exploded.join(
+            surviving, F.xxhash64(F.col("line")) == F.col("__h"), "left_semi"
         )
         .groupBy("line")
         .agg(F.count("*").alias("n_docs"))

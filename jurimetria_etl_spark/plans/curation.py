@@ -483,7 +483,6 @@ def curation_funnel(
     decontam_spans: bool = False,
     span_len: int = 40,
     span_k: int = 8,
-    broadcast_max_rows: int | None = None,
 ) -> DataFrame:
     """ONE-ROW curation audit: how many documents pass each gate
     ``curate_corpus`` would apply, counted INDEPENDENTLY per gate (which
@@ -499,15 +498,14 @@ def curation_funnel(
 
     The flags come from ``curation_gate_flags`` — the SAME Column
     expressions ``curate_corpus``'s gate conjoins — and the
-    contamination flag evaluates ``contaminated_predicate`` /
-    ``overlap_ratio_col`` (operators/decontaminate.py), the SAME
-    predicate ``flag_contamination`` applies, so the audit cannot drift
-    from the pipeline.  ``decontam_spans=True`` (requires ``benchmark``,
-    exactly as in ``curate_corpus``) adds the exact-span gate's flag via
-    ``flag_span_contamination`` — with it the audit covers every
-    pre-dedup gate the pipeline applies; without it the span gate is
-    outside the audit and ``n_eligible`` counts only the shingle-side
-    conjunction.
+    contamination flag is ``flag_contamination``'s own one-pass body
+    (operators/decontaminate.py ``_flag_against``), so the audit cannot
+    drift from the pipeline.  ``decontam_spans=True`` (requires
+    ``benchmark``, exactly as in ``curate_corpus``) adds the exact-span
+    gate's flag via ``flag_span_contamination`` — with it the audit
+    covers every pre-dedup gate the pipeline applies; without it the
+    span gate is outside the audit and ``n_eligible`` counts only the
+    shingle-side conjunction.
 
     Scale: gates are scan-fused flag expressions; with a ``benchmark``
     the contamination flag carries the flags through the shingle
@@ -518,16 +516,14 @@ def curation_funnel(
     one global aggregate.  The span axis, when enabled, adds the same
     second fingerprint scan the pipeline's span gate costs, reduced to
     the DISTINCT contaminated-id set before it meets the funnel — the
-    per-document side joins that (contamination-sized) probe map-side
-    under the broadcast gate / AQE rather than exchanging a corpus-
-    sized report frame (r13 task 4).  The benchmark probe set
-    broadcasts under ``maybe_broadcast_probe``'s shared posture —
-    ``broadcast_max_rows`` gates the hint exactly as in
-    ``flag_contamination`` (a store-backed "benchmark" can grow; an
-    ungated hint there is an executor-OOM at scale).  No per-document
-    output leaves the executors on the shingle path; on the span path
-    only the contaminated-id set does (plus, when that set outgrows
-    the gate, the one AQE-planned re-key the join then needs)."""
+    per-document side joins that (contamination-sized) probe as AQE
+    sizes it, map-side while it fits, rather than exchanging a corpus-
+    sized report frame (r13 task 4).  The benchmark probe set is
+    broadcast exactly as in ``flag_contamination`` (an external
+    benchmark is small by construction).  No per-document output
+    leaves the executors on the shingle path; on the span path only
+    the contaminated-id set does (plus, when AQE finds that set too
+    large to broadcast, the one re-key the join then needs)."""
     if decontam_spans and benchmark is None:
         raise ValueError(
             "decontam_spans requires the benchmark frame — span "
@@ -552,12 +548,9 @@ def curation_funnel(
     bench_span_fps = None
     if benchmark is not None or benchmark_store_dir is not None:
         from jurimetria_etl_spark.operators.decontaminate import (
-            _shingle_hashes,
+            _flag_against,
             benchmark_shingle_set,
-            contaminated_predicate,
             load_benchmark_store,
-            maybe_broadcast_probe,
-            overlap_ratio_col,
         )
 
         if benchmark_store_dir is not None:
@@ -574,41 +567,16 @@ def curation_funnel(
             bench_set = benchmark_shingle_set(
                 benchmark, text_col, decontam_ngram
             )
-        bench_set = maybe_broadcast_probe(bench_set, broadcast_max_rows)
-        # flag_contamination's one-pass shape with the gate flags carried
+        # flag_contamination's one pass with the gate flags carried
         # through the explode as grouping keys (per-doc constants): one
         # corpus scan computes flags AND overlap together.
-        doc_sh = flagged.select(
-            id_col,
-            *flag_names,
-            _shingle_hashes(text_col, decontam_ngram).alias("__shs"),
-        ).select(
-            id_col,
-            *flag_names,
-            F.size("__shs").cast("bigint").alias("__n_sh"),
-            F.explode_outer("__shs").alias("__sh"),
-        )
-        per_doc = (
-            doc_sh.join(
-                bench_set,
-                doc_sh["__sh"] == bench_set["__bench_sh"],
-                "left",
-            )
-            .groupBy(id_col, *flag_names, "__n_sh")
-            .agg(F.count("__bench_sh").alias("__ov"))
-        )
-        clean = ~contaminated_predicate(
-            F.col("__ov"),
-            overlap_ratio_col(F.col("__ov"), F.col("__n_sh")),
-            decontam_min_overlap,
-            decontam_min_ratio,
-        )
-        flagged = per_doc.withColumn("clean", clean)
+        flagged = _flag_against(
+            flagged, F.broadcast(bench_set), id_col, text_col,
+            decontam_ngram, decontam_min_overlap, decontam_min_ratio,
+            carry=tuple(flag_names),
+        ).withColumn("clean", ~F.col("contaminated"))
         flag_names = flag_names + ["clean"]
     if decontam_spans:
-        from jurimetria_etl_spark.operators.decontaminate import (
-            maybe_broadcast_probe as _maybe_bcast,
-        )
         from jurimetria_etl_spark.operators.spans import (
             duplicate_spans_against,
         )
@@ -618,10 +586,11 @@ def curation_funnel(
         # report — the report's docs.select(id) left join re-keyed a
         # full corpus-sized frame after the funnel's aggregate (r13
         # verdict task 4).  The distinct hit-id set is contamination-
-        # sized (usually tiny), so the probe joins map-side under the
-        # shared broadcast gate / AQE instead of exchanging per-document
-        # rows.  Same hit semantics as flag_span_contamination:
-        # contaminated ⇔ ≥1 verified shared span ⇔ id appears in hits.
+        # sized (usually tiny; un-hinted, since it scales with how
+        # contaminated the corpus is), so AQE joins it map-side instead
+        # of exchanging per-document rows.  Same hit semantics as
+        # flag_span_contamination: contaminated ⇔ ≥1 verified shared
+        # span ⇔ id appears in hits.
         span_hits = (
             duplicate_spans_against(
                 docs,
@@ -637,12 +606,6 @@ def curation_funnel(
             .distinct()
             .withColumn("__span_hit", F.lit(True))
         )
-        if broadcast_max_rows is not None:
-            # size-gated hint, exactly the bench-probe posture; with no
-            # gate the hit set is NOT benchmark-bounded (it scales with
-            # how contaminated the corpus is), so leave the un-gated
-            # case to AQE's runtime stats rather than forcing broadcast
-            span_hits = _maybe_bcast(span_hits, broadcast_max_rows)
         flagged = (
             flagged.join(span_hits, id_col, "left")
             .withColumn("span_clean", F.col("__span_hit").isNull())

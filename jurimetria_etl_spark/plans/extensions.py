@@ -26,9 +26,9 @@ TOKS = "string_split(trim(text), ' ')"
 # dropped — used by every oracle replicating word-count/stopword/lang-ID
 # metrics.  TOKS above remains the structural single-space split of the
 # shingle/fingerprint family.
-WS_TOKS = "list_filter(string_split_regex(trim(text), '\s+'), w -> w <> '')"
+WS_TOKS = r"list_filter(string_split_regex(trim(text), '\s+'), w -> w <> '')"
 WS_TOKS_LC = (
-    "list_filter(string_split_regex(trim(lower(text)), '\s+'), "
+    r"list_filter(string_split_regex(trim(lower(text)), '\s+'), "
     "w -> w <> '')"
 )
 
@@ -962,10 +962,11 @@ def x32_duplicate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     occurring in ≥2 distinct documents, with its document frequency —
     engine-vs-engine checked against DuckDB ``string_split``+``unnest``
     (the r7 verdict's top missing oracle).  The hash-keyed two-pass plan
-    (8-byte longs on the corpus-wide exchange, size-gated survivor
-    broadcast) is the part under test; the deterministic line-ification
-    (``_lined_docs``) plants section headers / a global footer so the
-    duplicate set is non-trivial on the single-line fixture."""
+    (8-byte longs on the corpus-wide exchange, an un-hinted survivor
+    semi-join that AQE sizes) is the part under test; the deterministic
+    line-ification (``_lined_docs``) plants section headers / a global
+    footer so the duplicate set is non-trivial on the single-line
+    fixture."""
     from jurimetria_etl_spark.operators import spans as SP
 
     return SP.duplicate_lines(_lined_docs(spark, sf_dir), min_df=2)

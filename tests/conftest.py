@@ -49,15 +49,16 @@ def stage_drop(df, dir_path: str, name: str, mtime: float) -> None:
     shutil.rmtree(staging, ignore_errors=True)
 
 
-def cached_relations(spark) -> set[int]:
+def cached_relations(spark, checkpoints: bool = False) -> set[int]:
     """Ids of the cached RDDs that only ``unpersist()`` releases: the
-    persisted frames.  Local checkpoints are left out: Spark's
-    ContextCleaner releases one after a JVM garbage collection finds no
-    plan referencing it."""
+    persisted frames.  Local checkpoints are left out unless
+    ``checkpoints``: Spark's ContextCleaner releases one after a JVM
+    garbage collection finds no plan referencing it, so only code that
+    makes none can assert on them."""
     return {
         rdd_id
         for rdd_id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items()
-        if not rdd.rdd().isLocallyCheckpointed()
+        if checkpoints or not rdd.rdd().isLocallyCheckpointed()
     }
 
 

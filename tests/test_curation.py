@@ -604,9 +604,9 @@ def test_curation_funnel_span_axis_and_broadcast_gate(spark):
     an ``n_span_clean`` axis mirroring the pipeline's exact-span gate,
     so ``n_eligible`` matches ``curate_corpus(decontam_spans=True)``'s
     pre-dedup survivors instead of over-counting; (2) the benchmark
-    probe broadcast honors ``broadcast_max_rows`` with the same
-    AQE-fallback posture as ``flag_contamination`` (shared
-    ``maybe_broadcast_probe``), with identical counts either way."""
+    probe keeps ``flag_contamination``'s explicit broadcast hint, while
+    the span axis's hit set is corpus-sized and un-hinted (AQE sizes
+    it), with identical counts either way."""
     from jurimetria_etl_spark.plans.curation import (
         curate_corpus,
         curation_funnel,
@@ -651,8 +651,8 @@ def test_curation_funnel_span_axis_and_broadcast_gate(spark):
     # silent over-count (same message class as curate_corpus)
     with pytest.raises(ValueError, match="decontam_spans"):
         curation_funnel(docs, decontam_spans=True)
-    # broadcast gate: above the threshold the explicit hint must drop so
-    # AQE decides; the one-row audit is identical either way
+    # with every automatic broadcast disabled only the benchmark probe's
+    # hint plans a BroadcastExchange; the one-row audit is identical
     keys = (
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.autoBroadcastJoinThreshold",
@@ -661,13 +661,13 @@ def test_curation_funnel_span_axis_and_broadcast_gate(spark):
     for k in keys:
         spark.conf.set(k, "-1")
     try:
-        hinted = curation_funnel(docs, benchmark=bench)
-        gated = curation_funnel(docs, benchmark=bench, broadcast_max_rows=0)
-        hp = hinted._jdf.queryExecution().executedPlan().toString()
-        gp = gated._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" in hp
-        assert "BroadcastExchange" not in gp
-        assert hinted.collect() == gated.collect()
+        shingles = curation_funnel(docs, benchmark=bench)
+        spans = curation_funnel(docs, **kw)
+        sp = shingles._jdf.queryExecution().executedPlan().toString()
+        pp = spans._jdf.queryExecution().executedPlan().toString()
+        assert sp.count("BroadcastExchange") == 1  # the benchmark probe
+        assert pp.count("BroadcastExchange") == 1  # span hits: no hint
+        assert spans.collect()[0].asDict() == funnel
     finally:
         for k, v in old.items():
             if v is None:
@@ -709,22 +709,25 @@ def test_funnel_span_axis_joins_hit_set_not_report(spark):
 
 
 def test_probe_persist_lifecycle_is_bounded(spark):
-    """The broadcast gate's counted probe sets live as long as the
-    plans that use them: repeated gate/audit calls in one session do
-    not accumulate cached relations."""
+    """Repeated gate and audit calls in one session leave no cached
+    relation behind, local checkpoints included: no probe set is
+    materialized while a plan is built."""
     from jurimetria_etl_spark.operators.decontaminate import (
-        maybe_broadcast_probe,
+        flag_contamination,
     )
+    from jurimetria_etl_spark.operators.sampling import split_leakage_guarded
+    from jurimetria_etl_spark.plans.curation import curation_funnel
 
-    before = cached_relations(spark)
-    probes = [
-        maybe_broadcast_probe(
-            spark.range(10 + i).withColumnRenamed("id", "__bench_sh"),
-            broadcast_max_rows=5,
-        )
-        for i in range(6)
-    ]
-    assert [p.count() for p in probes] == [10 + i for i in range(6)]
-    # the None posture never caches (unconditional broadcast hint)
-    assert maybe_broadcast_probe(spark.range(3), None).count() == 3
-    assert cached_relations(spark) - before == set()
+    docs = spark.createDataFrame(
+        [(i, f"w{i} shared words here and there {i}") for i in range(6)],
+        "doc_id bigint, text string",
+    )
+    bench = spark.createDataFrame(
+        [(900, "shared words here and there")], "doc_id bigint, text string"
+    )
+    before = cached_relations(spark, checkpoints=True)
+    for _ in range(3):
+        assert flag_contamination(docs, bench, n=3).count() == 6
+        assert split_leakage_guarded(docs, 0.5, n=3).count() == 6
+    assert curation_funnel(docs, benchmark=bench).count() == 1
+    assert cached_relations(spark, checkpoints=True) - before == set()

@@ -198,11 +198,12 @@ def test_only_the_memo_decides_when_a_cached_relation_lives():
 
 @pytest.mark.parametrize("name", ["x28_duplicate_spans", "x38_split_guarded"])
 def test_query_leaves_nothing_cached(spark, name):
-    """The span query and the count-gated split query leave no cached
-    relation behind."""
+    """The span query and the split query leave no cached relation
+    behind, local checkpoints included: neither materializes anything
+    while its plan is built."""
     from jurimetria_etl_spark.plans.registry import REGISTRY
     from tests.test_curation import SF
 
-    before = cached_relations(spark)
+    before = cached_relations(spark, checkpoints=True)
     assert REGISTRY[name].spark(spark, SF).count() > 0
-    assert cached_relations(spark) - before == set()
+    assert cached_relations(spark, checkpoints=True) - before == set()

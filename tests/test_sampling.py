@@ -177,9 +177,16 @@ def test_contamination_probe_scans_docs_once(spark, tmp_path):
 
 def test_contamination_size_gate_falls_back_to_shuffle(spark):
     """The guard's eval shingle set scales with the corpus (it is a split,
-    not an external benchmark) — above ``broadcast_max_rows`` the explicit
-    hint must drop so AQE plans a shuffle join; output identical."""
-    from jurimetria_etl_spark.operators.decontaminate import flag_contamination
+    not an external benchmark), so it carries no broadcast hint and AQE
+    sizes the join; an external benchmark's set keeps its explicit hint.
+    With every automatic broadcast disabled only the hint can plan a
+    BroadcastExchange; the un-hinted probe's output is identical."""
+    from jurimetria_etl_spark.operators.decontaminate import (
+        _flag_against,
+        benchmark_shingle_set,
+        flag_contamination,
+    )
+    from jurimetria_etl_spark.operators.sampling import split_leakage_guarded
 
     docs = spark.createDataFrame(
         [
@@ -200,18 +207,21 @@ def test_contamination_size_gate_falls_back_to_shuffle(spark):
         spark.conf.set(k, "-1")
     try:
         hinted = flag_contamination(docs, bench, n=3)
-        gated = flag_contamination(docs, bench, n=3, broadcast_max_rows=0)
-        hp = hinted._jdf.queryExecution().executedPlan().toString()
-        gp = gated._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" in hp  # default: external-benchmark hint
-        assert "BroadcastExchange" not in gp  # above the gate: AQE decides
-        assert sorted(map(tuple, hinted.collect())) == sorted(
-            map(tuple, gated.collect())
+        unhinted = _flag_against(
+            docs, benchmark_shingle_set(bench, n=3), "doc_id", "text", 3,
+            1, 0.0,
         )
-        # under the gate the hint comes back
-        under = flag_contamination(docs, bench, n=3, broadcast_max_rows=100)
-        up = under._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" in up
+        guarded = split_leakage_guarded(docs, 0.5, n=3)
+        hp = hinted._jdf.queryExecution().executedPlan().toString()
+        up = unhinted._jdf.queryExecution().executedPlan().toString()
+        gp = guarded._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" in hp  # external benchmark: hinted
+        assert "BroadcastExchange" not in up  # no hint: AQE decides
+        assert "BroadcastExchange" not in gp  # the split's eval side
+        assert sorted(map(tuple, hinted.collect())) == sorted(
+            map(tuple, unhinted.collect())
+        )
+        assert guarded.count() == 2
     finally:
         for k, v in old.items():
             if v is None:

@@ -351,19 +351,17 @@ def test_cross_corpus_verify_join_is_hash_prefiltered(spark):
     assert len(got) == 11  # ' ' + BOILER + ' ' is 50 chars
 
 
-@pytest.mark.parametrize("gate", [None, 0])
 @pytest.mark.parametrize("op", ["duplicate_spans", "duplicate_spans_against"])
-def test_span_plans_leave_nothing_cached(spark, planted, op, gate):
-    """Neither the lazy default nor the count-gated (int) posture
-    leaves a cached relation behind: a long-running stream calls these
-    once per micro-batch."""
+def test_span_plans_leave_nothing_cached(spark, planted, op):
+    """A span plan leaves no cached relation behind, local checkpoints
+    included: a long-running stream calls these once per micro-batch."""
     from jurimetria_etl_spark.operators import spans
 
-    before = cached_relations(spark)
+    before = cached_relations(spark, checkpoints=True)
     args = (planted,) if op == "duplicate_spans" else (planted, planted)
-    df = getattr(spans, op)(*args, span_len=40, k=8, broadcast_max_rows=gate)
+    df = getattr(spans, op)(*args, span_len=40, k=8)
     assert df.count() > 0
-    assert cached_relations(spark) - before == set()
+    assert cached_relations(spark, checkpoints=True) - before == set()
 
 
 def test_remove_span_contaminated_is_uncapped_by_default(spark):
@@ -703,19 +701,42 @@ def test_duplicate_lines_counts_docs_not_occurrences(spark):
 
 
 def test_survivor_broadcast_is_size_gated(spark, planted):
-    """r7 verdict weak: the ≥min_df survivor set must NOT ride an
-    unconditional F.broadcast — at min_df=2 on a dense corpus it is
-    output-sized and a forced multi-GB broadcast is an OOM.  The manual
-    gate (an int ``broadcast_max_rows``) hints only under the
-    threshold; above it the hint drops and AQE plans a shuffle join;
-    output is identical either way.  (r9: the DEFAULT is None — no
-    hint, no count job, AQE's runtime stats decide — covered by
-    test_survivor_default_has_no_count_job below.)"""
+    """r7 verdict weak: the ≥min_df survivor sets, and
+    duplicate_spans_against's hash intersection, are corpus-sized build
+    sides — at min_df=2 on a dense corpus a forced broadcast is a
+    multi-GB OOM — so they carry no hint and AQE sizes them from
+    runtime bytes.  With every automatic broadcast disabled no span-
+    family plan holds a BroadcastExchange; under the defaults AQE
+    broadcasts the small survivor set; the answers are the same."""
     from jurimetria_etl_spark.operators.spans import (
-        SURVIVOR_BROADCAST_MAX_ROWS,
         duplicate_lines,
+        duplicate_spans_against,
     )
 
+    docs = _docs(
+        spark,
+        [(0, NAV + "\nbody a. " + BOILER), (1, NAV + "\nbody b. " + BOILER)],
+    )
+
+    def build():
+        return {
+            "boilerplate_spans": boilerplate_spans(
+                planted, span_len=40, min_df=2
+            ),
+            "duplicate_lines": duplicate_lines(docs, min_df=2),
+            "duplicate_spans": duplicate_spans(planted, span_len=40, k=8),
+            "duplicate_spans_against": duplicate_spans_against(
+                planted, docs, span_len=40, k=8
+            ),
+        }
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    aqe = build()
+    want = {name: rows(df) for name, df in aqe.items()}
+    final = aqe["boilerplate_spans"]._jdf.queryExecution().executedPlan()
+    assert "BroadcastHashJoin" in final.toString()  # AQE's runtime choice
     keys = (
         "spark.sql.autoBroadcastJoinThreshold",
         "spark.sql.adaptive.autoBroadcastJoinThreshold",
@@ -726,76 +747,81 @@ def test_survivor_broadcast_is_size_gated(spark, planted):
     for k in keys:
         spark.conf.set(k, "-1")
     try:
-        hinted = boilerplate_spans(
-            planted, span_len=40, min_df=2,
-            broadcast_max_rows=SURVIVOR_BROADCAST_MAX_ROWS,
-        )
-        gated = boilerplate_spans(
-            planted, span_len=40, min_df=2, broadcast_max_rows=0
-        )
-        hp = hinted._jdf.queryExecution().executedPlan().toString()
-        gp = gated._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" in hp  # under the gate: hint applied
-        assert "BroadcastExchange" not in gp  # above the gate: no hint
-        assert sorted(map(tuple, hinted.collect())) == sorted(
-            map(tuple, gated.collect())
-        )
-
-        # same gate in the line family and the duplicate_spans pre-pass
-        docs = _docs(
-            spark,
-            [(0, NAV + "\nbody a. " + BOILER), (1, NAV + "\nbody b. " + BOILER)],
-        )
-        gl = duplicate_lines(docs, min_df=2, broadcast_max_rows=0)
-        assert "BroadcastExchange" not in (
-            gl._jdf.queryExecution().executedPlan().toString()
-        )
-        assert {r.line for r in gl.collect()} == {NAV}
-        gs = duplicate_spans(planted, span_len=40, k=8, broadcast_max_rows=0)
-        assert sorted(map(tuple, gs.collect())) == sorted(
-            map(tuple, _brute(spark, planted, 40))
-        )
+        for name, df in build().items():
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastExchange" not in plan, name
+            assert rows(df) == want[name], name
     finally:
         for k, v in old.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+    assert want["duplicate_spans"] == sorted(
+        map(tuple, _brute(spark, planted, 40))
+    )
+    assert [line for line, _ in want["duplicate_lines"]] == [NAV]
+    assert {r[:2] for r in want["duplicate_spans_against"]} == {
+        (0, 0), (0, 1), (1, 0), (1, 1)
+    }
 
 
 def test_survivor_default_has_no_count_job(spark, planted):
-    """r8 verdict note #3: the manual gate's persist+count charged a
-    dedicated Spark job per span-family call.  Default posture (None)
-    must build the plan LAZILY — zero jobs at construction — and match
-    the manual-gate output exactly (AQE decides broadcast vs shuffle
-    from the pass-1 aggregate's runtime bytes)."""
-    from jurimetria_etl_spark.operators.spans import (
-        SURVIVOR_BROADCAST_MAX_ROWS,
-        duplicate_lines,
+    """r8 verdict note #3: a persist+count at plan construction charged
+    a dedicated Spark job per call.  Every semi-join build side, corpus-
+    sized (no hint; AQE decides broadcast vs shuffle from the runtime
+    bytes) or an external benchmark's (an explicit broadcast hint), is
+    planned LAZILY: building these plans runs zero jobs."""
+    from jurimetria_etl_spark.operators.decontaminate import (
+        flag_contamination,
     )
+    from jurimetria_etl_spark.operators.sampling import split_leakage_guarded
+    from jurimetria_etl_spark.operators.spans import (
+        duplicate_lines,
+        duplicate_spans_against,
+    )
+    from jurimetria_etl_spark.plans.curation import curation_funnel
 
+    docs2 = _docs(
+        spark,
+        [(0, NAV + "\nbody a. " + BOILER), (1, NAV + "\nbody b. " + BOILER)],
+    )
+    bench = _docs(spark, [(9, "eval item: " + BOILER)])
     sc = spark.sparkContext
     group = "survivor-default-lazy"
     sc.setJobGroup(group, "construction must schedule no jobs")
     try:
-        dflt_spans = duplicate_spans(planted, span_len=40, k=8)
-        dflt_boiler = boilerplate_spans(planted, span_len=40, min_df=2)
-        docs2 = _docs(
-            spark,
-            [(0, NAV + "\nbody a. " + BOILER), (1, NAV + "\nbody b. " + BOILER)],
-        )
-        dflt_lines = duplicate_lines(docs2, min_df=2)
+        built = {
+            "duplicate_spans": duplicate_spans(planted, span_len=40, k=8),
+            "boilerplate_spans": boilerplate_spans(
+                planted, span_len=40, min_df=2
+            ),
+            "duplicate_lines": duplicate_lines(docs2, min_df=2),
+            "duplicate_spans_against": duplicate_spans_against(
+                planted, bench, span_len=40, k=8
+            ),
+            "flag_contamination": flag_contamination(planted, bench, n=3),
+            "split_leakage_guarded": split_leakage_guarded(planted, 0.5, n=3),
+            "curation_funnel": curation_funnel(
+                planted, benchmark=bench, decontam_spans=True, span_len=40
+            ),
+        }
     finally:
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         sc.setJobGroup("", "")
     assert jobs == [], f"plan construction ran jobs: {jobs}"
-    # value parity with the manual-gate path
-    manual = duplicate_spans(
-        planted, span_len=40, k=8,
-        broadcast_max_rows=SURVIVOR_BROADCAST_MAX_ROWS,
+    assert sorted(map(tuple, built["duplicate_spans"].collect())) == sorted(
+        map(tuple, _brute(spark, planted, 40))
     )
-    assert sorted(map(tuple, dflt_spans.collect())) == sorted(
-        map(tuple, manual.collect())
-    )
-    assert dflt_boiler.count() > 0
-    assert {r.line for r in dflt_lines.collect()} == {NAV}
+    assert built["boilerplate_spans"].count() > 0
+    assert {r.line for r in built["duplicate_lines"].collect()} == {NAV}
+    assert {
+        r.left_id for r in built["duplicate_spans_against"].collect()
+    } == {0, 1}
+    flags = {
+        r.doc_id: r.contaminated
+        for r in built["flag_contamination"].collect()
+    }
+    assert flags == {0: True, 1: True, 2: False, 3: False}
+    assert built["split_leakage_guarded"].count() == 4
+    assert built["curation_funnel"].collect()[0]["n_span_clean"] == 2

@@ -108,17 +108,14 @@ def probe_spans(spark, sf_dir: str) -> dict:
 
 def probe_x29(spark, sf_dir: str) -> dict:
     """x29/boilerplate_spans' scale knob is the SURVIVOR SET (distinct
-    ≥min_df span hashes): under ``SURVIVOR_BROADCAST_MAX_ROWS`` it rides
-    a broadcast semi-filter, above it the hint drops and AQE shuffles.
-    Measure survivor count vs min_df (spans and lines) on the generated
-    corpus so SCALE.md can state where the gate flips and what min_df a
-    100-TB run should start from."""
+    ≥min_df span hashes): its un-hinted semi-filter is broadcast by AQE
+    while its runtime bytes fit, shuffled beyond.  Measure survivor
+    count vs min_df (spans and lines) on the generated corpus so
+    SCALE.md can state the set's size and what min_df a 100-TB run
+    should start from."""
     from pyspark.sql import functions as F
 
-    from jurimetria_etl_spark.operators.spans import (
-        SURVIVOR_BROADCAST_MAX_ROWS,
-        _lgram_array,
-    )
+    from jurimetria_etl_spark.operators.spans import _lgram_array
     from jurimetria_etl_spark.sources.fixtures import load_fixture
 
     docs = load_fixture(spark, sf_dir, "documents")
@@ -164,7 +161,6 @@ def probe_x29(spark, sf_dir: str) -> dict:
     ).first()
     return {
         "n_docs": n_docs,
-        "broadcast_gate_rows": SURVIVOR_BROADCAST_MAX_ROWS,
         "span_hashes_total": int(row["total"]),
         "span_survivors_by_min_df": {
             str(m): int(row[f"ge{m}"]) for m in cuts

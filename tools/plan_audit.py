@@ -176,8 +176,8 @@ AUDITED = [
     (
         "x38_split_guarded",
         "split label is a narrow md5 expression; leakage probe joins "
-        "8-byte shingle hashes; eval set size-gated, quarantine left join "
-        "AQE-sized",
+        "8-byte shingle hashes; eval shingle set and quarantine left join "
+        "un-hinted, each sized by Spark (broadcast at fixture scale)",
     ),
     (
         "x39_top_per_domain",

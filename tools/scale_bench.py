@@ -59,8 +59,8 @@ HEAVY = [
     "x37_hybrid_search",
     # r8: leakage-guarded split — shingle explode + hash join + per-doc
     # count agg, all linear in corpus chars; the eval shingle set is a
-    # fixed FRACTION of the corpus (size-gated join, never a forced
-    # broadcast at scale).
+    # fixed FRACTION of the corpus (un-hinted join that AQE sizes, never
+    # a forced broadcast at scale).
     "x38_split_guarded",
     # r8: domain-balanced top-k — narrow rank window + semi-join back.
     "x39_top_per_domain",
