@@ -1,7 +1,9 @@
-"""Persisted incremental IVF ANN index store — the dense-retrieval
-axis's manifested-store form (the pattern of the fingerprint / minhash
-/ Bloom / SemDeDup / BM25-postings stores: parquet appends, fold on
-read, maintenance-time compaction under the manifest's atomic swap).
+"""Persisted incremental IVF ANN index store — the repo's one
+cell-partitioned vector store: dense retrieval probes it, and the
+streaming SemDeDup gate (``semdedup_incremental``) dedups each batch
+against it (the pattern of the fingerprint / minhash / Bloom /
+BM25-postings stores: parquet appends, fold on read, maintenance-time
+compaction under the manifest's atomic swap).
 
 Before this module the IVF index was session-built only
 (``similarity.ivf_index``): a user running continuous curation +
@@ -12,12 +14,16 @@ full-corpus re-index per run.  Here the index persists as
 - **appends** are per-batch: assign the batch to cells (a narrow
   literal-matrix map, no shuffle) and append only its rows;
 - **probes** read only their ``n_probe`` cells' partitions (the cell
-  IN-filter is a partition filter on the hive layout — the
-  ``ivf_write_partitioned`` argument, now incremental);
+  IN-filter is a partition filter on the hive layout — the layout
+  ``similarity.ivf_write_partitioned`` writes in one shot, here
+  appended per batch);
 - **maintenance** is the shared machinery: ``compact_store`` with
   ``partition_cols=["ivf_cell"]`` bounds file counts,
   ``recluster_ann_store`` (sinks/maintenance.py) swaps in a new
-  centroid geometry under the same row-count-verified atomic publish.
+  centroid geometry under the same row-count-verified atomic publish,
+  ``split_cell`` / ``maintain_ann_store`` split one hot cell.  After
+  any of them, ``read_ann_centroids(store)`` is the set to hand the
+  next append or SemDeDup batch.
 
 Generation contract: the CENTROID SET.  Rows assigned under one
 centroid set must never mix with another's, so the store persists its
@@ -271,8 +277,8 @@ def build_ann_store(
     assign: str = "auto",
 ) -> DataFrame:
     """Store rows for a batch: ``(ivf_cell, id, vector)`` — or
-    ``(ivf_cell, id, q, q_scale)`` when ``quantize`` — assigned with
-    the same kernel pair the SemDeDup store uses (``fold`` = pure-JVM
+    ``(ivf_cell, id, q, q_scale)`` when ``quantize`` — cells assigned
+    by ``semdedup_flags``' kernel pair (``fold`` = pure-JVM
     literal-matrix scoring, ``arrow`` = batched numpy matmul,
     output-identical; ``auto`` switches at ≥ 64 centroids).  A narrow
     map over the batch: no join, no shuffle."""
@@ -307,11 +313,13 @@ def append_ann_store(
     compaction published."""
     from jurimetria_etl_spark.sinks.maintenance import require_cell_partitioned
 
-    _check_generation(store_dir, centroids, quantize=quantize, vec_col=vec_col)
     data_dir = storefs.store_data_dir(store_dir)
-    # refuse to corrupt a legacy flat layout with hive dirs (r14 ADVICE;
-    # same guard as the streaming semdedup append)
+    # refuse to corrupt a legacy flat (or foreign-partitioned) layout
+    # with hive dirs — BEFORE the generation check, whose first-append
+    # branch records a _CENTROIDS.json that a refused append must not
+    # leave behind
     require_cell_partitioned(data_dir, "ivf_cell", "append_ann_store")
+    _check_generation(store_dir, centroids, quantize=quantize, vec_col=vec_col)
     build_ann_store(
         batch, centroids, id_col, vec_col, quantize, assign
     ).write.mode("append").partitionBy("ivf_cell").parquet(data_dir)

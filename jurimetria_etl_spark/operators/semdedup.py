@@ -275,7 +275,8 @@ def _assign_cells(
     assign: str = "auto",
 ) -> DataFrame:
     """Attach ``sem_cluster`` + ``__csim`` using the configured kernel
-    (shared by the batch and incremental paths)."""
+    (shared by the batch and incremental paths and the ANN store's
+    writers)."""
     if assign not in ("auto", "fold", "arrow"):
         raise ValueError(f"assign={assign!r}: auto | fold | arrow")
     use_arrow = assign == "arrow" or (assign == "auto" and len(centroids) >= 64)
@@ -292,25 +293,6 @@ def _assign_cells(
             F.col("__sc")["s"].alias("__csim"),
         )
         .drop("__sc")
-    )
-
-
-def build_semdedup_store(
-    survivors: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assign: str = "auto",
-) -> DataFrame:
-    """Store rows for kept vectors: (sem_cluster, id, vec).  Persist
-    partitioned BY ``sem_cluster`` so an incremental batch's scan reads
-    only the cells the batch actually touches (partition pruning — the
-    same layout argument as ``ivf_write_partitioned``).  Centroids are
-    part of the store's generation contract: rows assigned under one
-    centroid set must never mix with another's (re-cluster = rebuild),
-    exactly like the fixed-strip-list rule of the span stores."""
-    return _assign_cells(survivors, centroids, vec_col, assign).select(
-        "sem_cluster", F.col(id_col), F.col(vec_col)
     )
 
 
@@ -391,7 +373,6 @@ def semdedup_incremental(
     max_cluster_rows: int = 200_000,
     block: int = 1024,
     assign: str = "auto",
-    static_prune: bool = False,
 ) -> DataFrame:
     """Cross-batch SemDeDup: the batch rows kept against the persisted
     store AND each other.  A batch row is dropped iff cosine >= ``eps``
@@ -405,19 +386,17 @@ def semdedup_incremental(
     stored row (the at-least-once retry invariant the streaming
     curation's append ordering depends on).
 
-    Plan: assign the batch (narrow map), rank it (one window), union
-    with the store's matching cells (read partition-pruned when the
-    store is ``sem_cluster``-partitioned), one per-cell Arrow scan.
-    Only cells the batch touches are ever read or scanned.
+    ``store`` holds ``(ivf_cell, id, vector)`` rows: the IVF ANN store
+    layout (operators/ann_store.py), written by ``append_ann_store``
+    under the same ``centroids``.  Replayed duplicate rows need no fold
+    here: the scan takes a max over a cell's stored rows.
 
-    ``static_prune=True`` makes that pruning CONTRACTUAL instead of
-    dynamic-partition-pruning luck (the ann-store posture,
-    ``prune_cells``): the batch's cell set is collected (one bounded
-    action — ≤ len(centroids) ints over a narrow assignment of the
-    batch) and applied to the store as a literal ``isin``, which is a
-    partition filter by construction on the partitioned layout the
-    streaming writer produces.  Never changes the result — the
-    semi-join below keeps exactly the same cells either way."""
+    Plan: assign the batch (narrow map), rank it (one window), collect
+    the batch's cell set (one bounded action — ≤ len(centroids) ints),
+    read the store's matching cells through a literal ``ivf_cell``
+    ``isin`` (a partition filter by construction on the cell-partitioned
+    layout, the ANN probes' ``prune_cells`` posture), one per-cell Arrow
+    scan.  Only cells the batch touches are ever read or scanned."""
     b = _assign_cells(
         widen_partitions(batch), centroids, vec_col, assign
     )
@@ -432,30 +411,17 @@ def semdedup_incremental(
         F.lit(False).alias("__stored"),
     )
     # prune the store to the batch's cells before the union — at 100 TB
-    # the store is corpus-sized and a batch touches few cells.  On the
-    # static path the collected literal list IS the pruning (it is the
-    # same set the semi-join would keep), so the semi-join is dropped
-    # rather than layered on top — the r14 ADVICE double-compute: the
-    # collect is an action over the uncached assignment plan, so
-    # keeping the semi-join too would compute the batch's narrow
-    # assignment a third time every micro-batch.
-    if static_prune:
-        batch_cells = sorted(
-            int(r["sem_cluster"])
-            for r in b.select("sem_cluster").distinct().collect()
-        )
-        store = store.where(F.col("sem_cluster").isin(batch_cells))
-    else:
-        cells = b.select("sem_cluster").distinct()
-        store = store.join(F.broadcast(cells), "sem_cluster", "left_semi")
-    st = (
-        store.select(
-            F.col(id_col),
-            "sem_cluster",
-            F.col(vec_col),
-            F.lit(None).cast("int").alias("sem_rank"),
-            F.lit(True).alias("__stored"),
-        )
+    # the store is corpus-sized and a batch touches few cells
+    batch_cells = sorted(
+        int(r["sem_cluster"])
+        for r in b.select("sem_cluster").distinct().collect()
+    )
+    st = store.where(F.col("ivf_cell").isin(batch_cells)).select(
+        F.col(id_col),
+        F.col("ivf_cell").alias("sem_cluster"),
+        F.col(vec_col),
+        F.lit(None).cast("int").alias("sem_rank"),
+        F.lit(True).alias("__stored"),
     )
     id_type = batch.schema[id_col].dataType.simpleString()
     out_schema = (

@@ -965,7 +965,7 @@ def _nearest_cells(
         lambda c, i: F.struct(
             # clamped: a zero-norm vector must score 0.0 (not NULL) so
             # this fold and _assign_arrow's numpy matmul pick the SAME
-            # cell — the semdedup store/probe mode-equivalence contract
+            # cell — the ANN store/probe mode-equivalence contract
             F.round(cosine_sim_safe(vec_col, c), 9).alias("s"),
             F.element_at(cids, i + 1).alias("cid"),
         ),

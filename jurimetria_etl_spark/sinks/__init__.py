@@ -4,12 +4,9 @@ from jurimetria_etl_spark.sinks.maintenance import (  # noqa: F401
     compact_parquet,
     compact_store,
     maintain_ann_store,
-    maintain_semdedup_store,
     maintain_stores,
     recluster_ann_store,
-    recluster_semdedup_store,
     split_cell,
-    split_semdedup_cell,
 )
 from jurimetria_etl_spark.sinks.writers import (  # noqa: F401
     persist,

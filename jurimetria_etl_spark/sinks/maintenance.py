@@ -171,8 +171,9 @@ def require_cell_partitioned(data_dir: str, partition_col: str, op: str) -> None
         )
     # a store hive-partitioned by a DIFFERENT column is just as
     # corruptible: the appended {partition_col}= dirs would land next to
-    # the foreign ones and the mixed tree fails the same way (e.g. an
-    # ann_store_dir pointed at a sem_cluster-partitioned semdedup store)
+    # the foreign ones and the mixed tree fails the same way (e.g. a
+    # wrongly-aimed store dir, or a previous-generation
+    # sem_cluster-partitioned SemDeDup store)
     foreign = sorted(_partition_cols(entries) - {partition_col})
     if foreign:
         raise ValueError(
@@ -236,8 +237,8 @@ def compact_store(
 def _infer_partition_cols(data_dir: str) -> list[str] | None:
     """Infer a single-level hive partition column from the directory
     layout (``col=value`` subdirectories) so a maintenance rewrite
-    PRESERVES it — compacting a cell-partitioned store (the semdedup /
-    ANN layouts) flat would silently destroy every consumer's partition
+    PRESERVES it — compacting a cell-partitioned store (the ANN store
+    layout) flat would silently destroy every consumer's partition
     pruning (r14).  Only the repo's store layouts are in scope: one
     partition level, one column."""
     cols = _partition_cols(storefs.listing(data_dir))
@@ -288,30 +289,25 @@ def maintain_stores(
     for store in stores:
         pruned = store_prune(store) if prune_previous else []
         # preserve a hive layout through the rewrite: cell-partitioned
-        # stores (semdedup/ANN) passed through this generic pass must
-        # keep their partition pruning
+        # (ANN) stores passed through this generic pass must keep their
+        # partition pruning
         data_dir = store_data_dir(store)
         part_cols = _infer_partition_cols(data_dir)
         upgraded = False
         min_files = min_files_to_compact
         if part_cols is None:
             # opportunistic legacy-layout upgrade (r14 verdict task 5):
-            # a FLAT store whose rows carry a cell column (pre-r14
-            # semdedup/ANN layouts) is re-written cell-partitioned here,
-            # so split_semdedup_cell / split_cell / the partition-pruned
-            # probes work without the operator telling the caller to run
+            # a FLAT store whose rows carry the cell column (the pre-r14
+            # ANN layout) is re-written cell-partitioned here, so
+            # split_cell and the partition-pruned probes work without
+            # the operator telling the caller to run
             # compact_store(partition_cols=…) by hand.  One parquet
             # footer sniff — no Spark job — and the upgrade compacts
             # even a single-file store (the rewrite's purpose is the
             # layout, not the file count).
             sniffed = storefs.parquet_columns(data_dir)
-            cell_cols = [
-                c
-                for c in ("sem_cluster", "ivf_cell")
-                if sniffed is not None and c in sniffed
-            ]
-            if len(cell_cols) == 1:
-                part_cols = cell_cols
+            if sniffed is not None and "ivf_cell" in sniffed:
+                part_cols = ["ivf_cell"]
                 upgraded = True
                 min_files = 1
         report = compact_store(
@@ -335,72 +331,6 @@ def maintain_stores(
             )
         reports[store] = report
     return reports
-
-
-def recluster_semdedup_store(
-    spark: SparkSession,
-    store: str,
-    new_centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_file_bytes: int = 128 * 1024 * 1024,
-    assign: str = "auto",
-) -> dict:
-    """Re-cluster a SemDeDup store onto a NEW centroid set — the
-    maintenance remedy for geometry drift (operators/semdedup.py: the
-    centroid set is the store's generation contract, and
-    ``max_cluster_rows`` overflows advise "re-cluster" — this is the
-    operator that makes that advice actionable).
-
-    Reads the current generation's survivor (id, vector) rows,
-    re-assigns each to its nearest NEW centroid
-    (``build_semdedup_store``'s kernel), writes the re-assigned rows
-    into a fresh version directory partitioned by ``sem_cluster`` (so
-    incremental batches keep partition-pruned cell reads), verifies the
-    row count, and atomically publishes the manifest.  Readers that
-    resolved the old generation keep an intact directory — reclaim with
-    ``store_prune`` after the grace interval, the ``compact_store``
-    posture exactly.
-
-    The survivor SET is intentionally unchanged: which vectors were
-    kept was decided when they streamed in; re-clustering rebalances
-    the cells future batches scan against, it does not re-litigate
-    history.  Callers must hand the SAME ``new_centroids`` to
-    ``semdedup_incremental`` / ``curate_document_stream`` from the next
-    batch on (pass both atomically — a mixed-generation read is exactly
-    what the manifest swap prevents).  Derive the new set from the
-    store's own vectors with ``similarity.train_ivf_centroids`` (e.g.
-    ``n_clusters = rows // target_occupancy`` — the scaled-cells rule
-    SCALE.md measures).
-
-    Run inside the same maintenance window as ``compact_store``: an
-    append that resolved the OLD generation's path concurrently with
-    the swap lands in a directory the manifest no longer names (the
-    documented writer-vs-maintenance contract of every manifested
-    store — bare parquet has no transaction log)."""
-    from jurimetria_etl_spark.operators.semdedup import build_semdedup_store
-
-    src = store_data_dir(store)
-    cur = spark.read.parquet(src)
-    for col in (id_col, vec_col):
-        if col not in cur.columns:
-            raise ValueError(
-                f"recluster_semdedup_store: store at {src!r} has no "
-                f"{col!r} column — not a semdedup store?"
-            )
-    reassigned = build_semdedup_store(
-        cur.select(id_col, vec_col), new_centroids, id_col, vec_col, assign
-    )
-    _, total = dir_stats(src)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    gen = publish_generation(
-        spark,
-        store,
-        src,
-        lambda vdir: _rewrite(reassigned, vdir, n_out, ["sem_cluster"]),
-        _rows_in(spark, src),
-    )
-    return {**gen, "n_clusters": len(new_centroids)} if gen["verified"] else gen
 
 
 def recluster_ann_store(
@@ -451,8 +381,9 @@ def recluster_ann_store(
     indexed; re-clustering rebalances the cells probes scan against.
     Derive the new set from the store's own vectors with
     ``similarity.train_ivf_centroids`` (e.g. ``n_clusters = rows //
-    target_occupancy`` — the scaled-cells rule SCALE.md measures).
-    Pattern: ``recluster_semdedup_store`` above."""
+    target_occupancy`` — the scaled-cells rule SCALE.md measures),
+    and hand ``read_ann_centroids(store)`` to every later append or
+    ``semdedup_incremental`` batch."""
     from pyspark.sql import functions as F
 
     from jurimetria_etl_spark.operators.ann_store import write_ann_centroids
@@ -536,7 +467,10 @@ def split_cell(
     NEW sub-centroids, and rewritten.  The split cell's replay
     duplicates are folded while we're here (``load_ann_store``'s
     ``(ivf_cell, id)`` dedup made durable for that cell); other cells'
-    files are byte-identical.
+    files are byte-identical.  A FLAT store is refused before anything
+    is read (its files mix cells, so nothing can be hardlinked); the
+    error names the ``compact_store`` upgrade, and ``maintain_ann_store``
+    / ``maintain_stores`` run it for you.
 
     Geometry: the new centroid set drops ``cell_id`` and appends the k
     sub-centroids under FRESH ids (max existing id + 1..k) — occupancy
@@ -572,6 +506,13 @@ def split_cell(
             f"split_cell: cell {cell_id} not in the store's centroid set "
             f"(cells: {sorted(by_id)})"
         )
+    try:
+        require_cell_partitioned(src, "ivf_cell", "split_cell")
+    except ValueError as e:
+        raise ValueError(
+            f"{e} — flat files mix cells, so a bounded split cannot "
+            "hardlink untouched cells"
+        ) from None
     cur = spark.read.parquet(src)
     quantized = "q" in cur.columns and vec_col not in cur.columns
     hot_raw = cur.where(F.col("ivf_cell") == int(cell_id))
@@ -605,17 +546,32 @@ def split_cell(
         F.col("sem_cluster").alias("ivf_cell"), id_col, *payload
     )
     untouched = total_raw - hot_raw_n
-    gen = _publish_split(
+    hot = f"ivf_cell={int(cell_id)}"
+    n_out = max(
+        1, math.ceil(dir_stats(os.path.join(src, hot))[1] / target_file_bytes)
+    )
+
+    def write(vdir: str) -> None:
+        # every other cell's partition is placed by link_tree (hardlinks
+        # on local disk — cost ∝ the hot cell, not the store); the hot
+        # cell's rows land under their new cells, and the new geometry
+        # is embedded before the count check and the publish
+        storefs.link_tree(src, vdir, skip=frozenset({hot}))
+        (
+            reassigned.repartition(n_out, "ivf_cell")
+            .write.mode("append")
+            .partitionBy("ivf_cell")
+            .parquet(vdir)
+        )
+        write_ann_centroids(vdir, new_centroids, quantize=quantized)
+
+    gen = publish_generation(
         spark,
         store,
         src,
-        "ivf_cell",
-        cell_id,
-        reassigned,
+        write,
         untouched + hot_n,
         f"expected (untouched {untouched} + folded hot {hot_n})",
-        target_file_bytes,
-        lambda vdir: write_ann_centroids(vdir, new_centroids, quantize=quantized),
     )
     if not gen["verified"]:
         return gen
@@ -629,188 +585,6 @@ def split_cell(
         "n_cells": len(new_centroids),
         "quantized": quantized,
     }
-
-
-def _publish_split(
-    spark: SparkSession,
-    store: str,
-    src: str,
-    cell_col: str,
-    cell_id: int,
-    reassigned: DataFrame,
-    expected_rows: int,
-    what: str,
-    target_file_bytes: int,
-    write_sidecars=None,
-) -> dict:
-    """A cell split's generation, through ``publish_generation``: every
-    other cell's partition is placed by ``storefs.link_tree`` (hardlinks
-    on local disk — cost proportional to the hot cell, not the store),
-    the hot cell's re-assigned rows are appended under their new cells,
-    and ``write_sidecars(vdir)`` embeds any new geometry before the
-    count check and the publish."""
-    hot = f"{cell_col}={int(cell_id)}"
-    hot_bytes = dir_stats(os.path.join(src, hot))[1]
-    n_out = max(1, math.ceil(hot_bytes / target_file_bytes))
-
-    def write(vdir: str) -> None:
-        storefs.link_tree(src, vdir, skip=frozenset({hot}))
-        (
-            reassigned.repartition(n_out, cell_col)
-            .write.mode("append")
-            .partitionBy(cell_col)
-            .parquet(vdir)
-        )
-        if write_sidecars is not None:
-            write_sidecars(vdir)
-
-    return publish_generation(spark, store, src, write, expected_rows, what)
-
-
-def split_semdedup_cell(
-    spark: SparkSession,
-    store: str,
-    centroids: list[tuple[int, list[float]]],
-    cell_id: int,
-    k: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_iters: int = 5,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    assign: str = "auto",
-) -> dict:
-    """``split_cell``'s SemDeDup-store sibling: re-Lloyd one hot cell's
-    survivor vectors into ``k`` sub-cells under fresh ids, hardlink
-    every other cell's partition into a new generation, and publish —
-    the bounded remedy for a single drifted cell where
-    ``recluster_semdedup_store`` would rewrite the whole store.
-
-    The SemDeDup store has NO centroid sidecar — the caller owns the
-    set (the ``semdedup_incremental`` contract) — so the current set is
-    an argument and the split set comes back in the report
-    (``new_centroids``): hand exactly that list to every subsequent
-    ``semdedup_incremental`` / ``curate_document_stream`` call, the
-    same handoff ``recluster_semdedup_store`` documents.  Semantics are
-    recluster's accepted trade: the survivor SET is untouched, only
-    cell membership moves, so future near-dups of a survivor are caught
-    iff they assign to its (sub-)cell — on drifted-cell geometry the
-    sub-centroids are strictly closer to their rows than the stale
-    parent was.
-
-    Requires the CELL-PARTITIONED layout (the r14 streaming append /
-    ``recluster_semdedup_store`` rewrite); a flat store mixes cells in
-    shared files, so a bounded per-cell split is impossible — compact
-    with ``partition_cols=["sem_cluster"]`` once to upgrade.  Rows are
-    NOT folded (the store's multiset is the recluster posture); the
-    count check is exact."""
-    from pyspark.sql import functions as F
-
-    from jurimetria_etl_spark.operators.semdedup import (
-        build_semdedup_store,
-    )
-    from jurimetria_etl_spark.operators.similarity import (
-        train_ivf_centroids,
-    )
-
-    if k < 2:
-        raise ValueError(f"split_semdedup_cell: k={k} — a split needs k >= 2")
-    by_id = dict(centroids)
-    if int(cell_id) not in by_id:
-        raise ValueError(
-            f"split_semdedup_cell: cell {cell_id} not in the given "
-            f"centroid set (cells: {sorted(by_id)})"
-        )
-    src = store_data_dir(store)
-    try:
-        require_cell_partitioned(src, "sem_cluster", "split_semdedup_cell")
-    except ValueError as e:
-        raise ValueError(
-            f"{e} — flat files mix cells, so a bounded split cannot "
-            "hardlink untouched cells"
-        ) from None
-    if not storefs.is_dir(os.path.join(src, f"sem_cluster={int(cell_id)}")):
-        raise ValueError(
-            f"split_semdedup_cell: store at {src!r} has no "
-            f"sem_cluster={int(cell_id)} partition — the cell is empty "
-            "or the store is not sem_cluster-partitioned"
-        )
-    cur = spark.read.parquet(src)
-    for col in ("sem_cluster", id_col, vec_col):
-        if col not in cur.columns:
-            raise ValueError(
-                f"split_semdedup_cell: store at {src!r} has no {col!r} "
-                "column — not a semdedup store?"
-            )
-    total_raw = cur.count()
-    hot = cur.where(F.col("sem_cluster") == int(cell_id)).drop(
-        "sem_cluster"
-    )
-    hot_n = hot.count()
-    if hot_n < k:
-        raise ValueError(
-            f"split_semdedup_cell: cell {cell_id} holds {hot_n} rows — "
-            f"cannot split into k={k} sub-cells"
-        )
-    sub = train_ivf_centroids(
-        hot, n_cells=k, n_iters=n_iters, id_col=id_col, vec_col=vec_col
-    )
-    next_id = max(by_id) + 1
-    sub_cents = [(next_id + i, vec) for i, (_, vec) in enumerate(sub)]
-    new_centroids = sorted(
-        [(cid, vec) for cid, vec in centroids if cid != int(cell_id)]
-        + sub_cents
-    )
-    reassigned = build_semdedup_store(
-        hot, sub_cents, id_col, vec_col, assign
-    )
-    gen = _publish_split(
-        spark,
-        store,
-        src,
-        "sem_cluster",
-        cell_id,
-        reassigned,
-        total_raw,
-        "source rows",
-        target_file_bytes,
-    )
-    if not gen["verified"]:
-        return gen
-    return {
-        **gen,
-        "split_cell": int(cell_id),
-        "new_cells": [cid for cid, _ in sub_cents],
-        "rows_moved": hot_n,
-        "n_clusters": len(new_centroids),
-        "new_centroids": new_centroids,
-    }
-
-
-def _select_hot_cells(
-    occ: dict[int, int],
-    occupancy_factor: float,
-    k: int,
-    max_splits: int,
-) -> tuple[int, list[tuple[int, int]]]:
-    """The shared occupancy-drift rule for both store-maintenance passes
-    (``maintain_ann_store`` / ``maintain_semdedup_store``): a cell is
-    hot when it holds more than ``occupancy_factor`` × the LOWER-median
-    cell's rows — with few cells the upper median is dragged up by the
-    hot cell itself (a 2-cell store could never flag), and at many cells
-    the two are indistinguishable, so bias toward detection — and big
-    enough to split (≥ ``2*k`` rows).  Hottest first, at most
-    ``max_splits`` per pass.  Returns (median, [(cell_id, n_rows)])."""
-    counts = sorted(occ.values())
-    median = counts[(len(counts) - 1) // 2] if counts else 0
-    hot = sorted(
-        (
-            (cid, n)
-            for cid, n in occ.items()
-            if median > 0 and n > occupancy_factor * median and n >= 2 * k
-        ),
-        key=lambda cn: (-cn[1], cn[0]),
-    )[:max_splits]
-    return median, hot
 
 
 def maintain_ann_store(
@@ -829,9 +603,10 @@ def maintain_ann_store(
     ``maintain_stores``'s posture specialized to the cell layout:
     prune the generations the previous pass left, compact WITH
     ``partition_cols=["ivf_cell"]`` (the generic entry point's
-    unpartitioned rewrite would destroy the probe-pruning layout), then
+    unpartitioned rewrite would destroy the probe-pruning layout; a
+    legacy FLAT store is upgraded here, single-file or not), then
     apply the occupancy-drift policy: any cell holding more than
-    ``occupancy_factor`` × the median cell's distinct rows (and big
+    ``occupancy_factor`` × the lower-median cell's distinct rows (and big
     enough to split) is ``split_cell``-ed into ``k`` sub-cells, hottest
     first, at most ``max_splits`` per pass.  Each split is its own
     verified atomic generation publish, so a crash between splits
@@ -854,14 +629,34 @@ def maintain_ann_store(
         spark,
         store,
         target_file_bytes=target_file_bytes,
-        min_files_to_compact=min_files_to_compact,
+        # a flat legacy store is upgraded whatever its file count: the
+        # rewrite's purpose is the layout split_cell needs
+        min_files_to_compact=(
+            1
+            if _infer_partition_cols(store_data_dir(store)) is None
+            else min_files_to_compact
+        ),
         partition_cols=["ivf_cell"],
     )
     occ = {
         int(r["ivf_cell"]): int(r["n_rows"])
         for r in ann_store_occupancy(spark, store, id_col=id_col).collect()
     }
-    median, hot = _select_hot_cells(occ, occupancy_factor, k, max_splits)
+    # hot: more than occupancy_factor × the LOWER-median cell's rows —
+    # with few cells the upper median is dragged up by the hot cell
+    # itself (a 2-cell store could never flag), and at many cells the
+    # two are indistinguishable, so bias toward detection — and big
+    # enough to split (≥ 2k rows); hottest first
+    counts = sorted(occ.values())
+    median = counts[(len(counts) - 1) // 2] if counts else 0
+    hot = sorted(
+        (
+            (cid, n)
+            for cid, n in occ.items()
+            if median > 0 and n > occupancy_factor * median and n >= 2 * k
+        ),
+        key=lambda cn: (-cn[1], cn[0]),
+    )[:max_splits]
     splits = [
         split_cell(
             spark,
@@ -880,122 +675,4 @@ def maintain_ann_store(
         "occupancy_median": median,
         "n_cells": len(occ),
         "splits": splits,
-    }
-
-
-def maintain_semdedup_store(
-    spark: SparkSession,
-    store: str,
-    centroids: list[tuple[int, list[float]]],
-    occupancy_factor: float = 4.0,
-    max_splits: int = 4,
-    k: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files_to_compact: int = 2,
-    prune_previous: bool = True,
-    assign: str = "auto",
-) -> dict:
-    """``maintain_ann_store``'s SemDeDup sibling (r14 verdict task 7):
-    one maintenance-window pass — prune the previous pass's
-    generations, compact WITH ``partition_cols=["sem_cluster"]`` (a
-    legacy FLAT store is upgraded here, single-file or not), then apply
-    the same occupancy policy: any cell holding more than
-    ``occupancy_factor`` × the lower-median cell's rows (and ≥ ``2*k``
-    rows) is ``split_semdedup_cell``-ed, hottest first, at most
-    ``max_splits`` per pass, each split its own verified atomic
-    generation.  A balanced store splits nothing — idempotent-cheap,
-    schedulable blindly.
-
-    The one structural difference from the ANN pass: the SemDeDup store
-    has no centroid sidecar — the set is CALLER-OWNED (the
-    ``semdedup_incremental`` contract) — so the current set is an
-    argument, successive splits chain through each report's
-    ``new_centroids``, and the final set comes back under
-    ``new_centroids``: hand exactly that list to every subsequent
-    ``semdedup_incremental`` / ``curate_document_stream`` call (the
-    ``recluster_semdedup_store`` handoff).  Occupancy counts the row
-    MULTISET per cell (this store is not replay-folded — the recluster
-    posture), one partition-parallel count keyed on the partition
-    column.
-
-    Returns {pruned, compaction, occupancy_median, n_cells,
-    splits: [per-split reports], new_centroids}."""
-    from pyspark.sql import functions as F
-
-    pruned = store_prune(store) if prune_previous else []
-    min_files = min_files_to_compact
-    if _infer_partition_cols(store_data_dir(store)) is None:
-        # flat legacy layout: the compaction's purpose is the upgrade,
-        # not the file count — never skip it (maintain_stores posture)
-        min_files = 1
-    compaction = compact_store(
-        spark,
-        store,
-        target_file_bytes=target_file_bytes,
-        min_files_to_compact=min_files,
-        partition_cols=["sem_cluster"],
-    )
-    cents = [(int(c), [float(x) for x in v]) for c, v in centroids]
-    src = store_data_dir(store)
-    if dir_stats(src)[0] == 0:
-        return {
-            "pruned": len(pruned),
-            "compaction": compaction,
-            "occupancy_median": 0,
-            "n_cells": 0,
-            "splits": [],
-            "new_centroids": cents,
-        }
-    if _infer_partition_cols(src) is None:
-        # the upgrade compaction did not land (e.g. its row-count
-        # verification failed against a racing append) — the store is
-        # still flat and split_semdedup_cell would raise out of this
-        # "schedulable blindly" pass; report and let the next window
-        # retry instead
-        return {
-            "pruned": len(pruned),
-            "compaction": compaction,
-            "occupancy_median": 0,
-            "n_cells": 0,
-            "splits": [],
-            "splits_skipped_reason": (
-                "store is not sem_cluster-partitioned (upgrade "
-                "compaction skipped or failed verification)"
-            ),
-            "new_centroids": cents,
-        }
-    occ = {
-        int(r["sem_cluster"]): int(r["n"])
-        for r in spark.read.parquet(src)
-        .groupBy("sem_cluster")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    median, hot = _select_hot_cells(occ, occupancy_factor, k, max_splits)
-    splits: list[dict] = []
-    for cid, _n in hot:
-        rep = split_semdedup_cell(
-            spark,
-            store,
-            cents,
-            cid,
-            k=k,
-            id_col=id_col,
-            vec_col=vec_col,
-            target_file_bytes=target_file_bytes,
-            assign=assign,
-        )
-        splits.append(rep)
-        if rep.get("verified"):
-            # chain: the next split runs under the published geometry
-            cents = rep["new_centroids"]
-    return {
-        "pruned": len(pruned),
-        "compaction": compaction,
-        "occupancy_median": median,
-        "n_cells": len(occ),
-        "splits": splits,
-        "new_centroids": cents,
     }

@@ -1,14 +1,15 @@
 """The store filesystem layer: the on-disk store format and every store
 file read or write, over ``org.apache.hadoop.fs.FileSystem``.
 
-The incremental stores (ANN, BM25 postings and sidecars, SemDeDup, span,
-bloom, benchmark probe, curation corpus) are parquet trees plus small
-``_``-prefixed files that Spark's file listing ignores.  This module is
-the one place that knows that format and the one place that touches
-those files.  It reaches them through the Hadoop FileSystem of the
-active SparkContext (the ``sources/landing.py:_landing_layouts``
-posture), so a store behaves the same on a plain path, ``file:``,
-``viewfs:`` or ``hdfs:`` — whatever Spark itself reads and writes.
+The incremental stores (ANN — the SemDeDup gate's store too — BM25
+postings and sidecars, span, bloom, benchmark probe, curation corpus)
+are parquet trees plus small ``_``-prefixed files that Spark's file
+listing ignores.  This module is the one place that knows that format
+and the one place that touches those files.  It reaches them through
+the Hadoop FileSystem of the active SparkContext (the
+``sources/landing.py:_landing_layouts`` posture), so a store behaves
+the same on a plain path, ``file:``, ``viewfs:`` or ``hdfs:`` —
+whatever Spark itself reads and writes.
 
 Store format:
 

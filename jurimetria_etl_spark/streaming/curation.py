@@ -238,15 +238,19 @@ def curate_document_stream(
     ``semdedup_store_dir`` (optional, requires ``semdedup_centroids``
     and a ``vec_col`` embedding column on the stream) additionally
     deduplicates each batch SEMANTICALLY against every kept vector so
-    far (``semdedup_incremental``, operators/semdedup.py): the store
-    holds (cell, id, vector) for survivors, batches scan only the cells
-    they touch, and same-id store matches are excluded so the
-    at-least-once replay invariant matches the minhash store's.  The
-    centroid set is part of the store's generation contract —
-    re-clustering means a new store, the fixed-list rule again.  Store
-    append rides between the signature and fingerprint appends (it
-    filters future batches, so it must land only after the corpus
-    holds the doc).
+    far (``semdedup_incremental``, operators/semdedup.py): the store is
+    an IVF ANN store (operators/ann_store.py) holding (ivf_cell, id,
+    vector) for survivors, batches scan only the cells they touch, and
+    same-id store matches are excluded so the at-least-once replay
+    invariant matches the minhash store's.  The centroid set is the
+    store's generation contract: ``append_ann_store`` verifies it per
+    batch against the store's ``_CENTROIDS.json``; re-clustering or a
+    cell split goes through ``recluster_ann_store`` / ``split_cell`` /
+    ``maintain_ann_store`` in a maintenance window, and the next stream
+    takes ``read_ann_centroids(semdedup_store_dir)``.  Store append
+    rides between the signature and fingerprint appends (it filters
+    future batches, so it must land only after the corpus holds the
+    doc).
 
     ``classifier=(weights, bias)`` (optional) applies the hashed-linear
     quality gate (operators/classify.py) to each micro-batch AFTER the
@@ -331,11 +335,15 @@ def curate_document_stream(
     ``available_now=True`` drains everything currently in the source then
     stops — the backfill/test mode; ``False`` runs continuously.
     """
-    if ann_store_dir is not None and ann_centroids is None:
-        raise ValueError(
-            "ann_store_dir requires ann_centroids — the centroid set is "
-            "the store's generation contract"
-        )
+    for store_dir, cents, name in (
+        (ann_store_dir, ann_centroids, "ann"),
+        (semdedup_store_dir, semdedup_centroids, "semdedup"),
+    ):
+        if store_dir is not None and cents is None:
+            raise ValueError(
+                f"{name}_store_dir requires {name}_centroids — the "
+                "centroid set is the store's generation contract"
+            )
     if decontam_spans and benchmark is None:
         raise ValueError(
             "decontam_spans requires the benchmark frame — span "
@@ -512,11 +520,6 @@ def curate_document_stream(
                 semdedup_incremental,
             )
 
-            if semdedup_centroids is None:
-                raise ValueError(
-                    "semdedup_store_dir requires semdedup_centroids — "
-                    "the centroid set is the store's generation contract"
-                )
             if vec_col not in batch_df.columns:
                 raise ValueError(
                     f"semdedup_store_dir requires a {vec_col!r} column "
@@ -531,7 +534,7 @@ def curate_document_stream(
             sem_store = _read_or_empty(
                 spark,
                 semdedup_store_dir,
-                f"sem_cluster int, {id_col} {id_t}, {vec_col} {vec_t}",
+                f"ivf_cell int, {id_col} {id_t}, {vec_col} {vec_t}",
             )
             survivors = semdedup_incremental(
                 survivors,
@@ -540,10 +543,6 @@ def curate_document_stream(
                 eps=semdedup_eps,
                 id_col=id_col,
                 vec_col=vec_col,
-                # the store is cell-partitioned (the append below) —
-                # make the cell read a partition filter by contract,
-                # not DPP luck
-                static_prune=True,
             )
         # One deterministic materialization: everything below appends
         # pieces of `survivors`; recomputing it per sink would re-run the
@@ -578,35 +577,19 @@ def curate_document_stream(
             "append"
         ).parquet(store_data_dir(sig_store_dir))
         if semdedup_store_dir is not None:
-            from jurimetria_etl_spark.operators.semdedup import (
-                build_semdedup_store,
+            # partitioned BY CELL, centroids verified against the store's
+            # generation, a flat or foreign-partitioned store refused
+            # before anything is written (append_ann_store's contract)
+            from jurimetria_etl_spark.operators.ann_store import (
+                append_ann_store,
             )
 
-            # partitioned BY CELL — the layout build_semdedup_store's
-            # contract names (r14: previously appended flat, which made
-            # the "incremental scan reads only the batch's cells" claim
-            # DPP luck instead of a partition filter; the ann store's
-            # append posture, applied here).  Pre-r14 flat stores are
-            # REFUSED before the write (r14 ADVICE): a hive append next
-            # to flat files would corrupt the tree silently and surface
-            # later in an unrelated read — the guard turns it into an
-            # upgrade instruction while the store is still intact.
-            from jurimetria_etl_spark.sinks.maintenance import (
-                require_cell_partitioned,
-            )
-
-            require_cell_partitioned(
-                store_data_dir(semdedup_store_dir),
-                "sem_cluster",
-                "curate_document_stream semdedup append",
-            )
-            build_semdedup_store(
+            append_ann_store(
                 survivors.select(id_col, vec_col),
+                semdedup_store_dir,
                 semdedup_centroids,
-                id_col,
-                vec_col,
-            ).write.mode("append").partitionBy("sem_cluster").parquet(
-                store_data_dir(semdedup_store_dir)
+                id_col=id_col,
+                vec_col=vec_col,
             )
         if span_fp_store_dir is not None:
             # BEFORE the fp append, like every other store: the fp store

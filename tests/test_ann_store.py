@@ -303,6 +303,28 @@ def test_recluster_quantized_store_stays_quantized(spark, tmp_path):
     assert len(got) == K
 
 
+def test_refused_append_records_no_generation(spark, tmp_path):
+    """A layout refusal must leave the directory as it found it: no
+    ``_CENTROIDS.json`` (a stray generation there would later reject
+    the correct centroids) and no ``ivf_cell=`` dirs — for a legacy
+    flat store and for a store partitioned by another column."""
+    from pyspark.sql import functions as F
+
+    flat = str(tmp_path / "flat")
+    _emb(spark, BATCH0).coalesce(1).write.parquet(flat)
+    foreign = str(tmp_path / "foreign")
+    _emb(spark, BATCH0).withColumn("label", F.lit(1)).write.partitionBy(
+        "label"
+    ).parquet(foreign)
+    for d, match in ((flat, "compact_store"), (foreign, "hive-partitioned")):
+        before = sorted(os.listdir(d))
+        with pytest.raises(ValueError, match=match):
+            append_ann_store(_emb(spark, BATCH1), d, CENTROIDS)
+        assert sorted(os.listdir(d)) == before
+        with pytest.raises(ValueError, match="_CENTROIDS"):
+            read_ann_centroids(d)
+
+
 def test_recluster_rejects_foreign_directory(spark, tmp_path):
     d = str(tmp_path / "not_ann")
     _emb(spark, BATCH0).write.parquet(d)

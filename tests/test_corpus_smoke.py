@@ -45,9 +45,12 @@ def test_corpus_query_runs(spark, name):
 
 
 def test_entry_contract(spark):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     import __spark_entry__ as e
     from jurimetria_etl_spark.plans.corpus import full_registry
 

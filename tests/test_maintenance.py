@@ -355,19 +355,19 @@ def test_require_cell_partitioned_guards_both_layout_hazards(spark, tmp_path):
     COMPLETE remedy (min_files_to_compact=1 — the default-2 call the
     old message prescribed silently no-ops on a single-file store), and
     a store hive-partitioned by a DIFFERENT column must be refused too
-    (e.g. an ann_store_dir pointed at a sem_cluster-partitioned
-    semdedup store would otherwise corrupt the tree)."""
+    (e.g. an ANN store dir aimed at a store partitioned by another
+    column would otherwise corrupt the tree)."""
     import pytest
 
     from jurimetria_etl_spark.sinks.maintenance import (
         require_cell_partitioned,
     )
 
-    d = tmp_path / "cellstore" / "sem_cluster=1"
+    d = tmp_path / "cellstore" / "cell=1"
     d.mkdir(parents=True)
     (d / "part-0.parquet").write_bytes(b"x")
     # matching column: passes
-    require_cell_partitioned(str(tmp_path / "cellstore"), "sem_cluster", "op")
+    require_cell_partitioned(str(tmp_path / "cellstore"), "cell", "op")
     # foreign column: refused before the write
     with pytest.raises(ValueError, match="hive-partitioned by"):
         require_cell_partitioned(str(tmp_path / "cellstore"), "ivf_cell", "op")
@@ -376,6 +376,6 @@ def test_require_cell_partitioned_guards_both_layout_hazards(spark, tmp_path):
     flat.mkdir()
     (flat / "part-0.parquet").write_bytes(b"x")
     with pytest.raises(ValueError, match="min_files_to_compact=1"):
-        require_cell_partitioned(str(flat), "sem_cluster", "op")
+        require_cell_partitioned(str(flat), "ivf_cell", "op")
     # missing dir (fresh store): passes
-    require_cell_partitioned(str(tmp_path / "nope"), "sem_cluster", "op")
+    require_cell_partitioned(str(tmp_path / "nope"), "ivf_cell", "op")

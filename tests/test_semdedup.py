@@ -220,14 +220,12 @@ def test_auto_assignment_switches_to_arrow(spark):
 
 
 def test_incremental_empty_store_equals_batch(spark):
-    from jurimetria_etl_spark.operators.semdedup import (
-        build_semdedup_store,
-        semdedup_incremental,
-    )
+    from jurimetria_etl_spark.operators.ann_store import build_ann_store
+    from jurimetria_etl_spark.operators.semdedup import semdedup_incremental
 
     df, X = _mk(spark)
     cents = [(k, [float(v) for v in X[k * 7]]) for k in range(4)]
-    empty = build_semdedup_store(df.limit(0), cents)
+    empty = build_ann_store(df.limit(0), cents)
     for eps in (0.9, 0.5):
         inc = {
             r["vec_id"]
@@ -243,18 +241,16 @@ def test_incremental_empty_store_equals_batch(spark):
 def test_incremental_cross_batch_kills_near_dups(spark):
     import numpy as np
 
-    from jurimetria_etl_spark.operators.semdedup import (
-        build_semdedup_store,
-        semdedup_incremental,
-    )
+    from jurimetria_etl_spark.operators.ann_store import build_ann_store
+    from jurimetria_etl_spark.operators.semdedup import semdedup_incremental
 
     df, X = _mk(spark, n=60, planted_dups=0)
     cents = [(k, [float(v) for v in X[k * 9]]) for k in range(3)]
     b1 = df.where("vec_id < 40")
     s1 = semdedup_incremental(
-        b1, build_semdedup_store(b1.limit(0), cents), cents, eps=0.99
+        b1, build_ann_store(b1.limit(0), cents), cents, eps=0.99
     )
-    store = build_semdedup_store(s1, cents)
+    store = build_ann_store(s1, cents)
     kept_ids = [r["vec_id"] for r in s1.limit(3).collect()]
     # batch 2: near-dups of batch-1 survivors + genuinely new vectors
     rows = []
@@ -275,10 +271,8 @@ def test_incremental_batch_internal_rule(spark):
     ∃-earlier rule as the batch form (two planted dups of each other)."""
     import numpy as np
 
-    from jurimetria_etl_spark.operators.semdedup import (
-        build_semdedup_store,
-        semdedup_incremental,
-    )
+    from jurimetria_etl_spark.operators.ann_store import build_ann_store
+    from jurimetria_etl_spark.operators.semdedup import semdedup_incremental
 
     rng = np.random.default_rng(11)
     v = rng.normal(size=DIM)
@@ -292,7 +286,7 @@ def test_incremental_batch_internal_rule(spark):
     out = {
         r["vec_id"]
         for r in semdedup_incremental(
-            df, build_semdedup_store(df.limit(0), cents), cents, eps=0.99
+            df, build_ann_store(df.limit(0), cents), cents, eps=0.99
         ).collect()
     }
     assert 3 in out

@@ -1,7 +1,9 @@
 """Streaming × SemDeDup integration: curate_document_stream with a
 semdedup_store_dir must drop later-batch documents that are SEMANTIC
 near-dups (by embedding) of earlier survivors, keep novel ones, and
-keep the store consistent (one row per kept doc, assigned cells)."""
+keep the store consistent: an IVF ANN store (operators/ann_store.py)
+with one row per kept doc, assigned cells and the recorded centroid
+generation."""
 
 from __future__ import annotations
 
@@ -10,6 +12,11 @@ import time
 import numpy as np
 import pytest
 
+from jurimetria_etl_spark.operators.ann_store import (
+    build_ann_store,
+    load_ann_store,
+    read_ann_centroids,
+)
 from jurimetria_etl_spark.storefs import store_data_dir
 from jurimetria_etl_spark.streaming.curation import curate_document_stream
 from tests.conftest import stage_drop as _drop
@@ -77,25 +84,37 @@ def ran(spark, tmp_path_factory):
         semdedup_eps=0.99,
     )
     assert q.awaitTermination(180)
-    return dirs
+    return dirs, cents
 
 
 def test_semantic_near_dup_dies_novel_survives(spark, ran):
+    dirs, _ = ran
     ids = {
         r.doc_id
-        for r in spark.read.parquet(store_data_dir(ran["corpus"])).collect()
+        for r in spark.read.parquet(store_data_dir(dirs["corpus"])).collect()
     }
     assert {0, 1, 2, 11} <= ids
     assert 10 not in ids  # semantic near-dup of doc 0, different text
 
 
 def test_store_holds_one_assigned_row_per_survivor(spark, ran):
-    store = spark.read.parquet(store_data_dir(ran["sem"]))
+    import os
+
+    dirs, cents = ran
+    store = spark.read.parquet(store_data_dir(dirs["sem"]))
     rows = store.collect()
     ids = sorted(r.doc_id for r in rows)
     assert ids == [0, 1, 2, 11]
-    assert all(r.sem_cluster is not None for r in rows)
+    assert all(r.ivf_cell is not None for r in rows)
     assert all(len(r.embedding) == DIM for r in rows)
+    # the ANN store format: cell-partitioned, with the stream's
+    # centroids recorded as the store's generation
+    assert all(
+        e.startswith("ivf_cell=")
+        for e in os.listdir(store_data_dir(dirs["sem"]))
+        if not e.startswith(("_", "."))
+    )
+    assert read_ann_centroids(dirs["sem"]) == cents
 
 
 def test_missing_centroids_fails_loudly(spark, tmp_path):
@@ -105,25 +124,23 @@ def test_missing_centroids_fails_loudly(spark, tmp_path):
         n: str(tmp_path / f"{n}2")
         for n in ("corpus", "fps", "sigs", "ckpt", "sem")
     }
-    q = curate_document_stream(
-        _read_stream(spark, flat),
-        dirs["corpus"], dirs["fps"], dirs["sigs"], dirs["ckpt"],
-        semdedup_store_dir=dirs["sem"],
-        semdedup_centroids=None,
-    )
-    with pytest.raises(Exception, match="semdedup_centroids"):
-        q.awaitTermination(180)
-        q.processAllAvailable()
+    # refused when the stream is built, before any batch runs
+    with pytest.raises(ValueError, match="semdedup_centroids"):
+        curate_document_stream(
+            _read_stream(spark, flat),
+            dirs["corpus"], dirs["fps"], dirs["sigs"], dirs["ckpt"],
+            semdedup_store_dir=dirs["sem"],
+            semdedup_centroids=None,
+        )
 
 
 def test_legacy_flat_store_is_refused_before_corruption(spark, tmp_path):
-    """r14 ADVICE: a pre-r14 FLAT semdedup store must be refused with
-    the compact_store upgrade hint BEFORE the partitioned append writes
-    hive dirs next to the flat files — the corrupting write used to
-    succeed and surface later in an unrelated-looking read."""
+    """r14 ADVICE: a FLAT store must be refused with the compact_store
+    upgrade hint BEFORE the partitioned append writes hive dirs next to
+    the flat files — the corrupting write used to succeed and surface
+    later in an unrelated-looking read.  The refused append records no
+    centroid generation either."""
     import os
-
-    from jurimetria_etl_spark.operators.semdedup import build_semdedup_store
 
     flat = str(tmp_path / "flat_legacy")
     _drop(_docs(spark, BATCH0), flat, "000", time.time() - 3600)
@@ -135,7 +152,7 @@ def test_legacy_flat_store_is_refused_before_corruption(spark, tmp_path):
         (k, [float(x) for x in RNG.normal(size=DIM)]) for k in range(2)
     ]
     # seed the store in the legacy FLAT layout (no partitionBy)
-    build_semdedup_store(
+    build_ann_store(
         _docs(spark, [(99, "seed doc", V[7])]).select("doc_id", "embedding"),
         cents,
         "doc_id",
@@ -152,9 +169,12 @@ def test_legacy_flat_store_is_refused_before_corruption(spark, tmp_path):
         q.awaitTermination(180)
         q.processAllAvailable()
     q.stop()
-    # the guard fired BEFORE the write: no hive dirs landed in the tree
+    # the guard fired BEFORE the write: no hive dirs and no generation
+    # sidecar landed in the tree
     assert not [
-        e for e in os.listdir(dirs["sem"]) if e.startswith("sem_cluster=")
+        e
+        for e in os.listdir(dirs["sem"])
+        if e.startswith("ivf_cell=") or e == "_CENTROIDS.json"
     ]
     # and the flat store still reads
     assert spark.read.parquet(dirs["sem"]).count() == 1
@@ -201,3 +221,10 @@ def test_double_embeddings_and_store_schema_round_trip(spark, tmp_path):
         for r in spark.read.parquet(store_data_dir(dirs["corpus"])).collect()
     }
     assert ids == {0, 1, 2, 11}  # doc 10 still dies at the semantic stage
+    # the store round-trips the live batch's types through the ANN
+    # store's own reader
+    stored = load_ann_store(spark, dirs["sem"], id_col="doc_id")
+    assert stored.schema["embedding"].dataType.simpleString() == (
+        "array<double>"
+    )
+    assert sorted(r.doc_id for r in stored.collect()) == [0, 1, 2, 11]

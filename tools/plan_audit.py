@@ -12,10 +12,11 @@ headline plan still has the intended shape.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 AUDITED = [
     ("q01_scan_project", "projection prunes the scan to 4 columns"),

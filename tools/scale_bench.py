@@ -334,9 +334,9 @@ def main() -> None:
         )
 
     # r14: the PERSISTED-semdedup-store probe posture — a small batch
-    # gated against a corpus-sized cell-partitioned store with
-    # static_prune=True (the contractual partition filter the r14
-    # streaming writer + semdedup_incremental change added).  Cells ∝
+    # gated against a corpus-sized cell-partitioned store through the
+    # literal ivf_cell partition filter semdedup_incremental applies
+    # (the store is the IVF ANN store the stream appends).  Cells ∝
     # corpus at ~125 occupancy, so the batch touches a bounded number
     # of cells and the pruned scan reads ~constant rows across 10×
     # data — ann_store_scaled_cells' claim, on the dedup-gate store.
@@ -345,7 +345,7 @@ def main() -> None:
     def _semdedup_store(spark, sf_dir):
         import tempfile as _tf
 
-        from jurimetria_etl_spark.operators.semdedup import build_semdedup_store
+        from jurimetria_etl_spark.operators.ann_store import append_ann_store
         from jurimetria_etl_spark.operators.similarity import (
             train_ivf_centroids,
         )
@@ -357,9 +357,7 @@ def main() -> None:
             emb, n_cells=n_cells, n_iters=2
         )
         d = _tf.mkdtemp(prefix="sem_store_scale_")
-        build_semdedup_store(emb, cents).write.mode(
-            "append"
-        ).partitionBy("sem_cluster").parquet(d)
+        append_ann_store(emb.select("vec_id", "embedding"), d, cents)
         return d, cents
 
     def semdedup_store_probe(spark, sf_dir):
@@ -374,9 +372,7 @@ def main() -> None:
         batch = emb.where(F.col("vec_id").isin(list(range(8)))).select(
             (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
         )
-        return semdedup_incremental(
-            batch, store, cents, eps=0.999, static_prune=True
-        )
+        return semdedup_incremental(batch, store, cents, eps=0.999)
 
     extra: dict = {
         "knn_join_top5": knn_join_top5,
