@@ -1,9 +1,9 @@
-"""SemDeDup store re-clustering maintenance (r8 verdict task 5):
-``recluster_semdedup_store`` must re-assign every stored survivor
-vector to the NEW centroid geometry under an atomic manifest swap —
-survivor set unchanged, cells rebalanced, old generation intact for
-in-flight readers, and subsequent incremental batches behaving exactly
-as against a store built on the new geometry from scratch."""
+"""SemDeDup store re-clustering: the SemDeDup store is an IVF ANN store,
+so ``recluster_ann_store`` must re-assign every stored survivor vector
+to the NEW centroid geometry under an atomic manifest swap — survivor
+set unchanged, cells rebalanced, old generation intact for in-flight
+readers, and subsequent incremental batches behaving exactly as against
+a store built on the new geometry from scratch."""
 
 from __future__ import annotations
 
@@ -11,13 +11,15 @@ import os
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from jurimetria_etl_spark.operators.semdedup import (
-    build_semdedup_store,
-    semdedup_incremental,
+from jurimetria_etl_spark.operators.ann_store import (
+    append_ann_store,
+    build_ann_store,
+    load_ann_store,
+    read_ann_centroids,
 )
-from jurimetria_etl_spark.sinks.maintenance import recluster_semdedup_store
+from jurimetria_etl_spark.operators.semdedup import semdedup_incremental
+from jurimetria_etl_spark.sinks.maintenance import recluster_ann_store
 from jurimetria_etl_spark.storefs import store_data_dir, store_prune
 
 DIM = 6
@@ -43,28 +45,27 @@ def _emb(spark, rows):
 
 @pytest.fixture()
 def grown_store(spark, tmp_path):
-    """A store whose rows were assigned under the skewed OLD geometry."""
+    """A store whose rows were appended under the skewed OLD geometry."""
     store = str(tmp_path / "sem_store")
     rows = [(i, v) for i, v in enumerate(GROUP_A + GROUP_B)]
-    build_semdedup_store(
-        _emb(spark, rows), OLD_CENTROIDS
-    ).write.mode("append").parquet(store_data_dir(store))
+    append_ann_store(_emb(spark, rows), store, OLD_CENTROIDS)
     return store, rows
 
 
 def test_recluster_reassigns_and_swaps_atomically(spark, grown_store):
     store, rows = grown_store
-    before = spark.read.parquet(store_data_dir(store))
+    before = load_ann_store(spark, store)
     # the drift premise: under OLD geometry no row sits in a B-located
     # cell (both centroids are A-side), so occupancy is skewed
-    assert before.select("sem_cluster").distinct().count() <= 2
+    assert before.select("ivf_cell").distinct().count() <= 2
 
     legacy_dir = store_data_dir(store)
-    report = recluster_semdedup_store(spark, store, NEW_CENTROIDS)
+    report = recluster_ann_store(spark, store, NEW_CENTROIDS)
     assert report["verified"] and not report["skipped"]
     assert report["rows"] == len(rows)
+    assert read_ann_centroids(store) == NEW_CENTROIDS
 
-    after = spark.read.parquet(store_data_dir(store))
+    after = load_ann_store(spark, store)
     # survivor SET unchanged: same (id, vector) rows
     a = sorted(
         (r["vec_id"], tuple(round(x, 5) for x in r["embedding"]))
@@ -77,15 +78,13 @@ def test_recluster_reassigns_and_swaps_atomically(spark, grown_store):
     assert a == b
     # every row's cell matches a fresh assignment under NEW geometry
     want = {
-        r["vec_id"]: r["sem_cluster"]
-        for r in build_semdedup_store(
-            _emb(spark, rows), NEW_CENTROIDS
-        ).collect()
+        r["vec_id"]: r["ivf_cell"]
+        for r in build_ann_store(_emb(spark, rows), NEW_CENTROIDS).collect()
     }
-    got = {r["vec_id"]: r["sem_cluster"] for r in after.collect()}
+    got = {r["vec_id"]: r["ivf_cell"] for r in after.collect()}
     assert got == want
     # the two true groups now occupy distinct cells (occupancy healed)
-    assert after.select("sem_cluster").distinct().count() == 2
+    assert after.select("ivf_cell").distinct().count() == 2
     # reader safety: the legacy generation is intact until pruned
     assert os.path.isdir(legacy_dir)
     assert spark.read.parquet(legacy_dir).count() == len(rows)
@@ -101,8 +100,8 @@ def test_incremental_after_recluster_equals_fresh_geometry(
     geometry from scratch — the incremental ≡ batch contract carried
     across a geometry change."""
     store, rows = grown_store
-    recluster_semdedup_store(spark, store, NEW_CENTROIDS)
-    reclustered = spark.read.parquet(store_data_dir(store))
+    recluster_ann_store(spark, store, NEW_CENTROIDS)
+    reclustered = load_ann_store(spark, store)
 
     batch = _emb(
         spark,
@@ -120,17 +119,8 @@ def test_incremental_after_recluster_equals_fresh_geometry(
     via_recluster = semdedup_incremental(
         batch, reclustered, NEW_CENTROIDS, eps=0.95
     )
-    fresh = build_semdedup_store(_emb(spark, rows), NEW_CENTROIDS)
+    fresh = build_ann_store(_emb(spark, rows), NEW_CENTROIDS)
     via_fresh = semdedup_incremental(batch, fresh, NEW_CENTROIDS, eps=0.95)
     got = sorted(r["vec_id"] for r in via_recluster.collect())
     assert got == sorted(r["vec_id"] for r in via_fresh.collect())
     assert got == [102]
-
-
-def test_recluster_guards_non_semdedup_store(spark, tmp_path):
-    store = str(tmp_path / "not_sem")
-    spark.range(3).select(
-        F.col("id").alias("fp")
-    ).write.parquet(store_data_dir(store))
-    with pytest.raises(ValueError, match="not a semdedup store"):
-        recluster_semdedup_store(spark, store, NEW_CENTROIDS)
