@@ -14,9 +14,7 @@ full-corpus re-index per run.  Here the index persists as
 - **appends** are per-batch: assign the batch to cells (a narrow
   literal-matrix map, no shuffle) and append only its rows;
 - **probes** read only their ``n_probe`` cells' partitions (the cell
-  IN-filter is a partition filter on the hive layout — the layout
-  ``similarity.ivf_write_partitioned`` writes in one shot, here
-  appended per batch);
+  IN-filter is a partition filter on the hive layout);
 - **maintenance** is the shared machinery: ``compact_store`` with
   ``partition_cols=["ivf_cell"]`` bounds file counts,
   ``recluster_ann_store`` (sinks/maintenance.py) swaps in a new
@@ -75,6 +73,7 @@ from jurimetria_etl_spark.operators.similarity import (
     dequantize_embeddings_int8,
     quantize_embeddings_int8,
 )
+from jurimetria_etl_spark.session import local_frame
 
 _CENTROIDS_FILE = "_CENTROIDS.json"
 
@@ -567,8 +566,10 @@ def ann_ivf_topk_store_batch(
     a non-deterministic probe frame can't produce join-side cells
     outside the prune union, the r11 ADVICE invariant, now held by
     construction): cells rank via ``_nearest_cells_py`` (tie-parity
-    with the in-plan fold pinned in tests) and ship as literal
-    ``(id, vector, cell)`` rows.  ``probe_schema`` (DDL, list input
+    with the in-plan fold pinned in tests) and ship as a local relation
+    of ``(id, vector, cell)`` rows (``session.local_frame``: planned as a
+    ``LocalTableScan``, so a request starts no Python worker).
+    ``probe_schema`` (DDL, list input
     only) pins the id/vector types — match the store's vector element
     type (e.g. ``array<float>``) so scoring arithmetic is unchanged;
     default ``<probe_id_col> bigint, <probe_vec_col> array<double>``."""
@@ -593,7 +594,8 @@ def ann_ivf_topk_store_batch(
         cs = _nearest_cells_py([float(x) for x in vec], centroids, n_probe)
         union.update(cs)
         exploded.extend((qid, vec, c) for c in cs)
-    probe_cells = spark.createDataFrame(
+    probe_cells = local_frame(
+        spark,
         exploded,
         StructType(
             list(base_schema.fields)

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from jurimetria_etl_spark import storefs
 from jurimetria_etl_spark.memo import pinned
+from jurimetria_etl_spark.session import local_frame
 from jurimetria_etl_spark.storefs import store_data_dir
 
 # Unicode letter/number classes, NOT [^a-z0-9]: the reference's corpus
@@ -413,7 +414,8 @@ def append_text_index(
         if batch is not None:
             key, n_docs, sum_dl = batch
             spark = docs.sparkSession
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(key, n_docs, sum_dl)],
                 "batch_key string, n_docs bigint, sum_dl bigint",
             ).write.mode("append").parquet(store_data_dir(f"{index_dir}/stats"))
@@ -485,7 +487,7 @@ def materialize_stop_list(
         spark,
         store,
         store_data_dir(store),
-        lambda vdir: spark.createDataFrame(terms, "term string")
+        lambda vdir: local_frame(spark, terms, "term string")
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(vdir),

@@ -12,9 +12,9 @@ Two paths:
 - ``cosine_similarity_join`` — all-pairs similarity join via bucketed
   (LSH-banded) join (for batch similarity-join workloads); verified by the
   exact ``cosine_pairs_exact`` baseline.
-- ``ivf_index`` / ``ann_ivf_topk`` / ``ann_ivf_topk_pruned`` — IVF coarse
-  quantization; the partitioned layout turns cell pruning into partition
-  pruning.
+- ``ivf_index`` / ``ann_ivf_topk`` — session-built IVF coarse
+  quantization; its persisted, cell-partitioned form (cell pruning as
+  partition pruning) is the ANN store, ``operators/ann_store.py``.
 """
 
 from __future__ import annotations
@@ -1114,60 +1114,6 @@ def _nearest_cells_py(
         reverse=True,
     )
     return [cid for _, cid in ranked[:n]]
-
-
-def ivf_write_partitioned(
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Materialize the IVF index as a cell-partitioned parquet layout —
-    the 100 TB form of the index: one directory per cell, so a probe's
-    cell IN-filter becomes PARTITION PRUNING (the scan lists only
-    ``n_probe`` directories instead of reading any of the rest).
-
-    Returns the centroids (persist them alongside the layout in practice).
-    """
-    indexed, centroids = ivf_index(embeddings, n_cells, id_col, vec_col)
-    indexed.write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
-    return centroids
-
-
-def ann_ivf_topk_pruned(
-    spark,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
-    probe_vec: list[float],
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Probe a cell-partitioned IVF layout: the ``ivf_cell IN (...)``
-    predicate is a partition filter — Spark never opens files outside the
-    probed cells (assert ``PartitionFilters`` in the scan; plan-tested).
-    Semantically identical to ``ann_ivf_topk`` at the same n_probe."""
-    cells = _nearest_cells_py(probe_vec, centroids, n_probe)
-    corpus = spark.read.parquet(path).where(F.col("ivf_cell").isin(cells))
-    if exclude_id is not None:
-        corpus = corpus.where(F.col(id_col) != exclude_id)
-    # The probe norm is a constant — computed driver-side (same sequential
-    # sum order as the JVM fold, so doubles match bit-for-bit) instead of
-    # re-folding |probe| for every corpus row.
-    import numpy as np
-
-    pn = max(math.sqrt(sum(x * x for x in probe_vec)), 1e-300)
-    sim = _dot(F.col(vec_col), F.lit(np.asarray(probe_vec, dtype="float64"))) / (
-        _norm(F.col(vec_col)) * F.lit(pn)
-    )
-    return (
-        corpus.select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 def ann_ivf_topk(

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jurimetria_etl_spark.session import local_frame
+
 
 def basic_stats(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """A3 — per-column summary statistics.
@@ -242,7 +244,7 @@ def percentile_cont_selection(
             StructField("__rhi", LongType()),
         ]
     )
-    tdf = spark.createDataFrame(targets, tschema)
+    tdf = local_frame(spark, targets, tschema)
     tpairs = [(mi, pi) for mi, c in enumerate(cols) for pi in range(len(specs[c]))]
     # column order in wrow is (blo, bhi) per target — match it
     wschema = StructType(
@@ -256,7 +258,7 @@ def percentile_cont_selection(
             )
         ]
     )
-    wdf = spark.createDataFrame(wide_rows, wschema)
+    wdf = local_frame(spark, wide_rows, wschema)
     base = df.select(
         *groups,
         *[F.col(c).cast("double").alias(f"__v_{mi}") for mi, c in enumerate(cols)],
@@ -373,7 +375,7 @@ def percentile_cont_selection(
                 StructField("p", DoubleType()),
             ]
         )
-        ndf = spark.createDataFrame(null_rows, nschema).withColumn(
+        ndf = local_frame(spark, null_rows, nschema).withColumn(
             "val", F.lit(None).cast("double")
         )
         result = result.unionByName(ndf)
@@ -456,9 +458,7 @@ def percentile_cont_by_group(
         .withColumn("__lo", F.col("__hi") - F.col("__c") + 1)
         .withColumn("__n", F.sum("__c").over(w_all))
     )
-    pdf = spark.createDataFrame(
-        [(float(p),) for p in percentiles], "p double"
-    )
+    pdf = local_frame(spark, [(float(p),) for p in percentiles], "p double")
     j = (
         cum.crossJoin(F.broadcast(pdf))
         .withColumn("__t", F.col("p") * (F.col("__n") - 1))

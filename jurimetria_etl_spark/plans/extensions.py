@@ -19,6 +19,7 @@ from jurimetria_etl_spark.operators import dedup as D
 from jurimetria_etl_spark.operators import similarity as S
 from jurimetria_etl_spark.operators import text as X
 from jurimetria_etl_spark.plans.corpus import _t
+from jurimetria_etl_spark.session import local_frame
 
 # ── SQL fragment builders (DuckDB dialect) ─────────────────────────────────
 TOKS = "string_split(trim(text), ' ')"
@@ -1051,8 +1052,8 @@ def x35_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from jurimetria_etl_spark.sources.fixtures import load_fixture
 
     docs = load_fixture(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
-        _X35_QUERIES, "query_id int, query_text string"
+    queries = local_frame(
+        spark, _X35_QUERIES, "query_id int, query_text string"
     )
     return bm25_search_docs(docs, queries, k=10)
 
@@ -1117,11 +1118,11 @@ def x37_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_fixture(spark, sf_dir, "documents")
     embeds = load_fixture(spark, sf_dir, "embeddings")
-    tq = spark.createDataFrame(_X35_QUERIES, "query_id int, query_text string")
+    tq = local_frame(spark, _X35_QUERIES, "query_id int, query_text string")
     pq = (
         embeds.join(
-            spark.createDataFrame(
-                [(i, i) for i in (1, 2, 3, 4)], "query_id int, pv bigint"
+            local_frame(
+                spark, [(i, i) for i in (1, 2, 3, 4)], "query_id int, pv bigint"
             ),
             F.col("vec_id") == F.col("pv"),
         )
@@ -1151,7 +1152,7 @@ def x37b_hybrid_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming_ann.py."""
     from jurimetria_etl_spark.operators.search import hybrid_search
 
-    tq = spark.createDataFrame(_X35_QUERIES, "query_id int, query_text string")
+    tq = local_frame(spark, _X35_QUERIES, "query_id int, query_text string")
     pq = _ann_probe_rows(spark, sf_dir, (1, 2, 3, 4))
     d, cents = _ann_store_dir(spark, sf_dir, n_cells=16)
     ti = _text_index_dir(spark, sf_dir)

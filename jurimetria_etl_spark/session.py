@@ -11,13 +11,25 @@ Design notes (SURVEY.md §4, §7):
 - ``spark.sql.shuffle.partitions`` defaults to the local core count (the
   driver harness runs local[N]); on a real cluster this is overridden by AQE's
   coalescing with ``initialPartitionNum`` headroom.
+
+Driver-held rows (a request's keyword queries and probe cells, a
+collected stop list, percentile targets, an audit row, an empty frame)
+become DataFrames through ``local_frame`` and nowhere else.  The list
+form, ``spark.createDataFrame(rows, schema)``, ships the rows through
+``parallelize`` into a ``PythonRDD`` and ``applySchemaToPythonRDD``:
+every literal frame runs a ``defaultParallelism``-wide stage of
+Python-worker tasks, whatever its size.  ``local_frame`` runs the same driver-side checks and conversions as
+the list form, then hands Spark an Arrow table, which plans as a
+``LocalRelation`` (``LocalTableScan``): no Python worker, and the
+optimizer knows the relation's exact size.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -95,3 +107,71 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: StructType | str
+) -> DataFrame:
+    """``rows`` (tuples or Rows, positional to ``schema``; a DDL string
+    or a ``StructType``) as an Arrow-backed local relation.
+
+    Each row passes ``createDataFrame``'s own type verifier (an int32
+    overflow, a wrong type or a NULL in a non-nullable field raises as
+    it does there) and its own ``toInternal`` conversion, so a naive
+    ``datetime`` reads as process-local time exactly as the list form
+    reads it.  The internal values (epoch micros, epoch days, tuples
+    for structs) are built straight into arrays of the target Arrow
+    types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _create_converter, _make_type_verifier
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify, convert = _make_type_verifier(schema), _create_converter(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(convert(row)))
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*internal)) if internal else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def python_fed_scans(df: DataFrame) -> int:
+    """Number of ``Scan ExistingRDD`` leaves in ``df``'s physical plan
+    whose RDD lineage runs through a ``PythonRDD``: list-built literal
+    frames, each a stage of Python-worker tasks when it runs.  A
+    checkpoint prints the same node name over JVM-held blocks, so the
+    plan string alone cannot tell the two apart.  The walk enters
+    adaptive plans, query stages, reused exchanges, subqueries and
+    cached relations."""
+
+    def walk(plan):
+        yield plan
+        name = plan.getClass().getSimpleName()
+        inner = [
+            seq.apply(i)
+            for seq in (plan.children(), plan.subqueries())
+            for i in range(seq.size())
+        ]
+        if name == "AdaptiveSparkPlanExec":
+            inner.append(plan.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            inner.append(plan.plan())
+        elif name.startswith("Reused"):
+            inner.append(plan.child())
+        elif name == "InMemoryTableScanExec":
+            inner.append(plan.relation().cachedPlan())
+        for child in inner:
+            yield from walk(child)
+
+    return sum(
+        node.getClass().getSimpleName() == "RDDScanExec"
+        and "PythonRDD" in node.rdd().toDebugString()
+        for node in walk(df._jdf.queryExecution().executedPlan())
+    )

@@ -203,10 +203,19 @@ def compact_store(
     manifested store on first compaction (legacy root files stay behind
     for legacy readers until pruned — Spark ignores the ``_``-prefixed
     internals, so those readers see exactly what they saw before the
-    upgrade)."""
+    upgrade).
+
+    A partitioned rewrite writes one file per partition, so a store
+    already in the ``partition_cols`` layout with no partition holding
+    more than one file is compact whatever its file count (a
+    cell-partitioned store holds at least one file per cell)."""
     src = store_data_dir(store)
-    files_before, total = dir_stats(src)
-    if files_before < min_files_to_compact:
+    files = [(rel, n) for rel, n in storefs.walk(src) if rel.endswith(".parquet")]
+    files_before, total = len(files), sum(n for _, n in files)
+    if files_before < min_files_to_compact or (
+        partition_cols
+        and _one_file_per_partition([rel for rel, _ in files], partition_cols)
+    ):
         return {
             "files_before": files_before,
             "files_after": files_before,
@@ -232,6 +241,16 @@ def compact_store(
         "bytes": total,
         **gen,
     }
+
+
+def _one_file_per_partition(files: list[str], partition_cols: list[str]) -> bool:
+    """Every data file (path relative to the data dir) sits alone in a
+    ``col=value`` directory chain naming exactly ``partition_cols``."""
+    dirs = [os.path.dirname(rel) for rel in files]
+    return len(set(dirs)) == len(dirs) and all(
+        [part.split("=", 1)[0] for part in d.split("/")] == list(partition_cols)
+        for d in dirs
+    )
 
 
 def _infer_partition_cols(data_dir: str) -> list[str] | None:

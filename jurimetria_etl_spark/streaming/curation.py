@@ -32,6 +32,7 @@ from jurimetria_etl_spark.operators.dedup import (
     fingerprint,
     minhash_dedup_incremental,
 )
+from jurimetria_etl_spark.session import local_frame
 from jurimetria_etl_spark.storefs import store_data_dir
 
 DOCS_SCHEMA = "doc_id long, source string, lang string, text string"
@@ -70,7 +71,7 @@ def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
         return df
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         raise
 
 
@@ -90,7 +91,8 @@ def _append_audit(
 ) -> None:
     """One funnel row per micro-batch, appended to the audit log
     (manifest-resolved like every other store append)."""
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(batch_id), int(n_in), int(n_gated), int(n_fresh), int(n_kept))],
         _AUDIT_SCHEMA,
     ).coalesce(1).write.mode("append").parquet(store_data_dir(audit_dir))

@@ -44,23 +44,24 @@ def test_every_vector_gets_a_cell(spark, emb):
 
 
 def test_partitioned_layout_prunes_and_matches(spark, emb, tmp_path):
-    """The cell-partitioned parquet layout: probing reads ONLY the probed
+    """The cell-partitioned ANN store: probing reads ONLY the probed
     cells' directories (PartitionFilters in the scan) and returns the same
     top-k as the in-memory IVF at the same n_probe."""
-    from jurimetria_etl_spark.operators.similarity import (
-        ann_ivf_topk_pruned,
-        ivf_write_partitioned,
+    from jurimetria_etl_spark.operators.ann_store import (
+        ann_ivf_topk_store,
+        append_ann_store,
     )
 
-    path = str(tmp_path / "ivf_layout")
-    centroids = ivf_write_partitioned(emb, path, n_cells=8)
+    path = str(tmp_path / "ivf_store")
+    _, centroids = ivf_index(emb, n_cells=8)
+    append_ann_store(emb.select("vec_id", "embedding"), path, centroids)
     probe_vec = [
         float(v)
         for v in emb.where("vec_id = 1").first()["embedding"]
     ]
 
-    pruned = ann_ivf_topk_pruned(
-        spark, path, centroids, probe_vec, k=5, n_probe=3, exclude_id=1
+    pruned = ann_ivf_topk_store(
+        spark, path, probe_vec, k=5, n_probe=3, exclude_id=1
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "ivf_cell" in plan.split(

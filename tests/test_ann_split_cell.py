@@ -26,6 +26,7 @@ from jurimetria_etl_spark.operators.ann_store import (
     ann_ivf_topk_store,
     ann_store_occupancy,
     append_ann_store,
+    load_ann_store,
     read_ann_centroids,
 )
 from jurimetria_etl_spark.sinks.maintenance import split_cell
@@ -195,3 +196,36 @@ def test_maintain_ann_store_splits_hot_cell_only(spark, tmp_path):
     assert _topk(spark, d, n_probe=3, k=8) == before_full
     # the pass pruned the pre-maintenance generations
     assert rep2["pruned"] >= 1
+
+
+def test_maintain_ann_store_skips_a_compact_balanced_store(spark, tmp_path):
+    """A cell-partitioned store holds one file per cell after its first
+    compaction; later passes on the balanced store find it compact and
+    publish nothing."""
+    from jurimetria_etl_spark.sinks.maintenance import maintain_ann_store
+
+    cents = [(c, [10.0 if i == c else 0.0 for i in range(DIM)]) for c in range(4)]
+    rows = [
+        (10 * c + i, [float(x) for x in np.array(v) + RNG.normal(0, 0.05, DIM)])
+        for c, v in cents
+        for i in range(10)
+    ]
+    d = str(tmp_path / "balanced")
+    append_ann_store(_emb(spark, rows[::2]), d, cents)
+    append_ann_store(_emb(spark, rows[1::2]), d, cents)
+
+    first = maintain_ann_store(spark, d)
+    assert first["compaction"]["verified"] and not first["compaction"]["skipped"]
+    assert first["compaction"]["files_after"] == 4
+    data_dir = store_data_dir(d)
+    versions = sorted(os.listdir(os.path.join(d, "_versions")))
+    for _ in range(2):
+        again = maintain_ann_store(spark, d)
+        assert again["compaction"]["skipped"] is True
+        assert "version" not in again["compaction"]
+        assert again["splits"] == []
+        assert store_data_dir(d) == data_dir
+    assert sorted(os.listdir(os.path.join(d, "_versions"))) == versions
+    assert sorted(r["vec_id"] for r in load_ann_store(spark, d).collect()) == list(
+        range(40)
+    )

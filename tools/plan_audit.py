@@ -201,7 +201,7 @@ AUDITED = [
 ]
 
 
-def summarize(plan: str) -> list[str]:
+def summarize(plan: str, python_scans: int = 0) -> list[str]:
     out = []
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     nonempty = [p for p in pushed if p.strip()]
@@ -219,8 +219,13 @@ def summarize(plan: str) -> list[str]:
     out.append(f"Exchange: {plan.count('Exchange')}")
     out.append(f"HashAggregate: {plan.count('HashAggregate')}")
     out.append(f"TakeOrderedAndProject: {plan.count('TakeOrderedAndProject')}")
-    py = plan.count("BatchEvalPython") + plan.count("ArrowEvalPython") + plan.count(
-        "MapInPandas"
+    # python_scans: the Python-fed Scan ExistingRDD leaves
+    # (session.python_fed_scans), list-built literal frames
+    py = (
+        plan.count("BatchEvalPython")
+        + plan.count("ArrowEvalPython")
+        + plan.count("MapInPandas")
+        + python_scans
     )
     out.append(f"python nodes: {py}")
     return out
@@ -228,7 +233,7 @@ def summarize(plan: str) -> list[str]:
 
 def main(sf_dir: str) -> None:
     from jurimetria_etl_spark.plans.registry import REGISTRY
-    from jurimetria_etl_spark.session import get_spark
+    from jurimetria_etl_spark.session import get_spark, python_fed_scans
 
     spark = get_spark("plan-audit")
     print("# Physical-plan audit\n")
@@ -238,7 +243,8 @@ def main(sf_dir: str) -> None:
         plan = df._jdf.queryExecution().executedPlan().toString()
         print(f"## {name}\n")
         print(f"*Intent:* {intent}\n")
-        print("Summary: " + " · ".join(summarize(plan)) + "\n")
+        summary = summarize(plan, python_fed_scans(df))
+        print("Summary: " + " · ".join(summary) + "\n")
         # Head-trim for readability, but NEVER trim away a scan: every
         # FileScan line beyond the head is appended verbatim, so a
         # section whose intent claims a scan property (PartitionFilters
