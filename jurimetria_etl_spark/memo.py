@@ -2,7 +2,7 @@
 
 Retrieval and dedup queries read artifacts that a production corpus
 builds once at ingest and then serves every query from: simhash and LSH
-signatures, the IVF index, the persisted ANN and BM25 stores, fixture
+signatures, the persisted ANN (IVF) and BM25 stores, fixture
 readers, and the literal plane and centroid matrices.  Charging each
 query that build would misprice the steady state, so a session pays it
 on first use and reuses the result afterwards.  The reuse is explicit

@@ -5,7 +5,6 @@ sees one logical plan end-to-end.
 """
 
 from jurimetria_etl_spark.operators.ann_store import (  # noqa: F401
-    ann_ivf_topk_batch,
     ann_ivf_topk_store,
     ann_ivf_topk_store_batch,
     ann_store_occupancy,

@@ -5,11 +5,8 @@ against it (the pattern of the fingerprint / minhash / Bloom /
 BM25-postings stores: parquet appends, fold on read, maintenance-time
 compaction under the manifest's atomic swap).
 
-Before this module the IVF index was session-built only
-(``similarity.ivf_index``): a user running continuous curation +
-retrieval re-assigned the whole corpus every session — at 100 TB a
-full-corpus re-index per run.  Here the index persists as
-``(ivf_cell, id, vector)`` rows partitioned BY CELL, so
+The index persists as ``(ivf_cell, id, vector)`` rows partitioned BY
+CELL, so
 
 - **appends** are per-batch: assign the batch to cells (a narrow
   literal-matrix map, no shuffle) and append only its rows;
@@ -60,16 +57,17 @@ import functools
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from jurimetria_etl_spark import storefs
 from jurimetria_etl_spark.memo import session_memo
 from jurimetria_etl_spark.operators.similarity import (
     _dot,
-    _nearest_cells,
     _nearest_cells_py,
     _norm,
+    _probe_side,
+    _two_level_topk,
     dequantize_embeddings_int8,
     quantize_embeddings_int8,
 )
@@ -273,17 +271,16 @@ def build_ann_store(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quantize: bool = False,
-    assign: str = "auto",
 ) -> DataFrame:
     """Store rows for a batch: ``(ivf_cell, id, vector)`` — or
     ``(ivf_cell, id, q, q_scale)`` when ``quantize`` — cells assigned
-    by ``semdedup_flags``' kernel pair (``fold`` = pure-JVM
-    literal-matrix scoring, ``arrow`` = batched numpy matmul,
-    output-identical; ``auto`` switches at ≥ 64 centroids).  A narrow
-    map over the batch: no join, no shuffle."""
+    by ``semdedup_flags``' kernel (``semdedup._assign_cells``:
+    pure-JVM literal-matrix scoring below 64 centroids, an
+    output-identical batched numpy matmul from 64 on).  A narrow map
+    over the batch: no join, no shuffle."""
     from jurimetria_etl_spark.operators.semdedup import _assign_cells
 
-    assigned = _assign_cells(vectors, centroids, vec_col, assign)
+    assigned = _assign_cells(vectors, centroids, vec_col)
     rows = assigned.select(
         F.col("sem_cluster").alias("ivf_cell"), F.col(id_col), F.col(vec_col)
     )
@@ -301,7 +298,6 @@ def append_ann_store(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     quantize: bool = False,
-    assign: str = "auto",
 ) -> None:
     """Append one batch's index rows, partitioned by ``ivf_cell`` so
     probes partition-prune to their cells.  First append records the
@@ -320,7 +316,7 @@ def append_ann_store(
     require_cell_partitioned(data_dir, "ivf_cell", "append_ann_store")
     _check_generation(store_dir, centroids, quantize=quantize, vec_col=vec_col)
     build_ann_store(
-        batch, centroids, id_col, vec_col, quantize, assign
+        batch, centroids, id_col, vec_col, quantize
     ).write.mode("append").partitionBy("ivf_cell").parquet(data_dir)
 
 
@@ -436,105 +432,6 @@ def ann_ivf_topk_store(
     )
 
 
-def ann_ivf_topk_batch(
-    indexed: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    probes: DataFrame,
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "ivf_cell",
-    probe_id_col: str = "query_id",
-    probe_vec_col: str = "probe",
-    round_to: int | None = 6,
-    prune_cells: list[int] | None = None,
-    probe_cells: DataFrame | None = None,
-) -> DataFrame:
-    """Batch ANN top-k over any cell-indexed frame (``load_ann_store``
-    output or ``ivf_index``'s): (query_id, id, cos_sim, rank), rank
-    1..k per probe — ``cosine_topk_batch``'s output contract with a
-    sublinear scan: each probe scores only its ``n_probe`` cells.
-
-    Plan: the (tiny) probe frame gets its cell list from the same
-    centroid-literal fold the store's writer used, explodes to
-    (query, cell) rows, and broadcast-joins the corpus ON CELL — an
-    equi-join, so only rows in SOME probe's cells are ever scored, and
-    on the partitioned store layout the cells the join needs are the
-    partitions the scan reads.  Scoring and the two-level top-k
-    (per-(query, scan-partition) pre-rank, then the per-query final
-    window over ≤ |partitions|·k survivors) are ``cosine_topk_batch``'s
-    exactly — the global-window trap does not return at scale.
-
-    Partition pruning on a persisted store: the equi-join alone prunes
-    only if dynamic partition pruning fires through the load's fold —
-    runtime-dependent, not contractual.  ``prune_cells`` (the union of
-    the probes' cells, driver-computed) adds a STATIC ``isin`` filter
-    on ``cell_col`` that is a partition filter by construction —
-    ``ann_ivf_topk_store_batch`` passes it for you and the scan
-    contract is pinned in tests/test_ann_store.py, not assumed.  It
-    never changes the result: the join keeps a (probe, row) pair only
-    when the row's cell is in THAT probe's list ⊆ the union.
-
-    ``probe_cells`` (optional): an already-exploded ``(probe_id_col,
-    probe_vec_col, cell_col)`` frame — ``ann_ivf_topk_store_batch``
-    builds it driver-side from the probe batch, replacing the in-plan
-    centroid-literal fold with literal rows (same cells by the
-    ``_nearest_cells_py`` ≡ ``_nearest_cells`` tie-rounding parity).
-    When given, ``probes`` is ignored."""
-    if prune_cells is not None:
-        indexed = indexed.where(F.col(cell_col).isin(prune_cells))
-    if probe_cells is not None:
-        p = F.broadcast(
-            probe_cells.select(
-                F.col(probe_id_col).alias("__qid"),
-                F.col(probe_vec_col).alias("__p"),
-                _norm(F.col(probe_vec_col)).alias("__pn"),
-                F.col(cell_col),
-            )
-        )
-    else:
-        p = F.broadcast(
-            probes.select(
-                F.col(probe_id_col).alias("__qid"),
-                F.col(probe_vec_col).alias("__p"),
-                _norm(F.col(probe_vec_col)).alias("__pn"),
-                F.explode(
-                    _nearest_cells(
-                        F.col(probe_vec_col), centroids, n_probe
-                    ).getField("cid")
-                ).alias(cell_col),
-            )
-        )
-    sim = _dot(F.col(vec_col), F.col("__p")) / (
-        _norm(F.col(vec_col)) * F.col("__pn")
-    )
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    lw = Window.partitionBy("__qid", "__pid").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        indexed.join(p, cell_col)
-        .select(
-            F.col("__qid"),
-            F.col(id_col),
-            sim.alias("cos_sim"),
-            F.spark_partition_id().alias("__pid"),
-        )
-        .withColumn("__lrk", F.row_number().over(lw))
-        .where(F.col("__lrk") <= k)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(probe_id_col), id_col, "cos_sim", "rank"
-        )
-    )
-
-
 def ann_ivf_topk_store_batch(
     spark: SparkSession,
     store_dir: str,
@@ -549,30 +446,37 @@ def ann_ivf_topk_store_batch(
     round_to: int | None = 6,
     probe_schema: str | None = None,
 ) -> DataFrame:
-    """Batch top-k over the PERSISTED index with contractual partition
-    pruning: rank each probe's cells driver-side (|probes| × n_cells ×
-    dim flops, the same bounded driver work as the single-probe path)
-    and hand ``ann_ivf_topk_batch`` the union as a static ``isin`` — the
-    scan reads exactly the probed cells' partitions regardless of
-    whether dynamic partition pruning fires.  ``centroids=None`` reads
-    the store's own ``_CENTROIDS.json`` atomically with the data dir
+    """Batch top-k over the persisted index: (query_id, id, cos_sim,
+    rank), rank 1..k per probe — ``cosine_topk_batch``'s output
+    contract with a sublinear scan: each probe scores only its
+    ``n_probe`` cells.  ``centroids=None`` reads the store's own
+    ``_CENTROIDS.json`` atomically with the data dir
     (``resolve_ann_store`` — one manifest read covers both).
+
+    Plan: each probe's cells are ranked driver-side (|probes| × n_cells
+    × dim flops, the same bounded driver work as the single-probe
+    path), and the union is a static ``isin`` on ``ivf_cell`` — a
+    partition filter by construction, so the scan reads exactly the
+    probed cells' partitions whether or not dynamic partition pruning
+    fires.  The probes explode to (query, cell) rows that broadcast-join
+    the loaded store ON CELL — an equi-join, so a (probe, row) pair
+    exists only when the row's cell is in THAT probe's list.  Scoring
+    and ranking are ``cosine_topk_batch``'s two-level top-k.
 
     ``probes`` is either a 2-column DataFrame or a plain list of
     ``(probe_id, vector)`` pairs — the native shape of a retrieval
     service's request batch, which skips the collect round-trip a
-    DataFrame probe costs per call (r12 verdict task 1).  Either way
-    the join side is BUILT FROM the driver-held rows (one evaluation —
-    a non-deterministic probe frame can't produce join-side cells
-    outside the prune union, the r11 ADVICE invariant, now held by
-    construction): cells rank via ``_nearest_cells_py`` (tie-parity
-    with the in-plan fold pinned in tests) and ship as a local relation
-    of ``(id, vector, cell)`` rows (``session.local_frame``: planned as a
+    DataFrame probe costs per call.  Either way the join side is BUILT
+    FROM the driver-held rows (one evaluation — a non-deterministic
+    probe frame can't produce join-side cells outside the prune union):
+    cells rank via ``_nearest_cells_py`` (tie-parity with the writer's
+    in-plan fold pinned in tests) and ship as a local relation of
+    ``(id, vector, cell)`` rows (``session.local_frame``: planned as a
     ``LocalTableScan``, so a request starts no Python worker).
-    ``probe_schema`` (DDL, list input
-    only) pins the id/vector types — match the store's vector element
-    type (e.g. ``array<float>``) so scoring arithmetic is unchanged;
-    default ``<probe_id_col> bigint, <probe_vec_col> array<double>``."""
+    ``probe_schema`` (DDL, list input only) pins the id/vector types —
+    match the store's vector element type (e.g. ``array<float>``) so
+    scoring arithmetic is unchanged; default ``<probe_id_col> bigint,
+    <probe_vec_col> array<double>``."""
     data_dir = None
     if centroids is None:
         data_dir, centroids = resolve_ann_store(store_dir)
@@ -604,18 +508,10 @@ def ann_ivf_topk_store_batch(
     )
     indexed = load_ann_store(
         spark, store_dir, id_col, vec_col, data_dir=data_dir
+    ).where(F.col("ivf_cell").isin(sorted(union)))
+    p = _probe_side(
+        probe_cells, probe_id_col, probe_vec_col, F.col("ivf_cell")
     )
-    return ann_ivf_topk_batch(
-        indexed,
-        centroids,
-        None,
-        k=k,
-        n_probe=n_probe,
-        id_col=id_col,
-        vec_col=vec_col,
-        probe_id_col=probe_id_col,
-        probe_vec_col=probe_vec_col,
-        round_to=round_to,
-        prune_cells=sorted(union),
-        probe_cells=probe_cells,
+    return _two_level_topk(
+        indexed.join(p, "ivf_cell"), k, id_col, vec_col, probe_id_col, round_to
     )

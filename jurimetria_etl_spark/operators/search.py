@@ -722,7 +722,6 @@ def hybrid_search(
     text_col: str = "text",
     vec_id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ann_index: DataFrame | None = None,
     ann_centroids: list[tuple[int, list[float]]] | None = None,
     ann_n_probe: int = 4,
     ann_store_dir: str | None = None,
@@ -738,24 +737,17 @@ def hybrid_search(
     shared doc/vec id space.
 
     Dense side: the exact broadcast baseline (``cosine_topk_batch``) by
-    default.  At corpus scale pass ``ann_index`` + ``ann_centroids`` —
-    a cell-indexed frame (``load_ann_store``'s output for the persisted
-    store, or ``ivf_index``'s) — and the dense ranks come from
-    ``ann_ivf_topk_batch`` at ``ann_n_probe`` cells per query instead:
-    the scan is sublinear (each probe scores only its cells, partition-
-    pruned on the hive store layout) and the fusion contract is
-    unchanged — it only consumes (query, id, rank).  Pass ``embeddings=
-    None`` in that mode; the recall/n_probe trade is the one
-    tests/test_ann_store.py pins.
-
-    ``ann_store_dir`` is the PERSISTED-store form of the same swap (the
-    composed at-scale retrieval path: store → partial probe → RRF): the
-    dense list comes from ``ann_ivf_topk_store_batch``, which resolves
-    the store's data dir and centroid generation in ONE manifest read
-    and prunes the scan with the probes' static cell union — partition
-    pruning by construction, not DPP luck.  Takes precedence over
-    ``ann_index``; ``ann_centroids=None`` then reads the store's own
-    generation sidecar.  In this mode ``probe_queries`` may also be a
+    default.  At corpus scale pass ``ann_store_dir`` (the composed
+    at-scale retrieval path: ANN store → partial probe → RRF) and the
+    dense ranks come from ``ann_ivf_topk_store_batch`` at
+    ``ann_n_probe`` cells per query instead: it resolves the store's
+    data dir and centroid generation in ONE manifest read and prunes
+    the scan with the probes' static cell union — partition pruning by
+    construction, not DPP luck.  The fusion contract is unchanged — it
+    only consumes (query, id, rank).  Pass ``embeddings=None`` in that
+    mode; ``ann_centroids=None`` reads the store's own generation
+    sidecar, and the recall/n_probe trade is the one
+    tests/test_ann_store.py pins.  ``probe_queries`` may also be a
     plain list of ``(query_id, vector)`` pairs — the native shape of a
     request batch, skipping the per-call collect a DataFrame costs —
     with ``probe_schema`` (DDL) pinning the id/vector types (see
@@ -825,26 +817,6 @@ def hybrid_search(
             id_col=vec_id_col,
             vec_col=vec_col,
             probe_schema=probe_schema,
-        )
-    elif ann_index is not None:
-        if ann_centroids is None:
-            raise ValueError(
-                "hybrid_search: ann_index requires ann_centroids — the "
-                "index's generation contract (read_ann_centroids for a "
-                "persisted store)"
-            )
-        from jurimetria_etl_spark.operators.ann_store import (
-            ann_ivf_topk_batch,
-        )
-
-        dense = ann_ivf_topk_batch(
-            ann_index,
-            ann_centroids,
-            probe_queries,
-            k=k_each,
-            n_probe=ann_n_probe,
-            id_col=vec_id_col,
-            vec_col=vec_col,
         )
     else:
         dense = cosine_topk_batch(

@@ -35,7 +35,8 @@ from pyspark.sql import functions as F
 from jurimetria_etl_spark.operators.dedup import widen_partitions
 from jurimetria_etl_spark.operators.similarity import (
     _nearest_cells,
-    cosine_sim_safe,
+    cosine_sim,
+    seed_centroids,
     train_ivf_centroids,
 )
 
@@ -165,7 +166,6 @@ def semdedup_flags(
     centroids: list[tuple[int, list[float]]] | None = None,
     max_cluster_rows: int = 200_000,
     block: int = 1024,
-    assign: str = "auto",
 ) -> DataFrame:
     """Cluster + rank + within-cluster prior-similarity scan.
 
@@ -183,11 +183,10 @@ def semdedup_flags(
       deterministic lowest-id seed assignment.  The centroid matrix is
       a literal, so assignment AND the centroid-similarity rank key
       are one narrow map — no join, no shuffle beyond the rank window.
-      ``assign`` picks the scoring kernel: ``fold`` is the pure-JVM
-      Catalyst fold (zero python nodes), ``arrow`` the batched numpy
-      matmul (output-identical; wins when n_clusters × dim is large
-      because the fold is interpreted per element), ``auto`` switches
-      to arrow at ≥ 64 centroids.
+      The scoring kernel is the pure-JVM Catalyst fold (zero python
+      nodes) below 64 centroids and the output-identical batched numpy
+      matmul from 64 on, where the per-element interpreted fold loses
+      (``_assign_cells``).
     * ``cluster_col='label'`` (given clustering): centroids are the
       per-cluster mean vectors, broadcast-joined back (n_clusters
       rows).
@@ -202,20 +201,14 @@ def semdedup_flags(
                 embeddings, n_clusters, train_iters, id_col, vec_col
             )
         if centroids is None:
-            seeds = (
-                embeddings.select(id_col, vec_col)
-                .orderBy(id_col)
-                .limit(n_clusters)
-                .collect()
-            )
-            centroids = [(i, list(r[vec_col])) for i, r in enumerate(seeds)]
-        ranked_in = _assign_cells(embeddings, centroids, vec_col, assign)
+            centroids = seed_centroids(embeddings, n_clusters, id_col, vec_col)
+        ranked_in = _assign_cells(embeddings, centroids, vec_col)
     else:
         cents = cluster_means(embeddings, cluster_col, vec_col)
         ranked_in = (
             embeddings.join(F.broadcast(cents), cluster_col)
             .withColumn(
-                "__csim", cosine_sim_safe(F.col(vec_col), F.col("centroid"))
+                "__csim", cosine_sim(F.col(vec_col), F.col("centroid"))
             )
             .withColumnRenamed(cluster_col, "sem_cluster")
             .drop("centroid")
@@ -272,17 +265,14 @@ def _assign_cells(
     embeddings: DataFrame,
     centroids: list[tuple[int, list[float]]],
     vec_col: str,
-    assign: str = "auto",
 ) -> DataFrame:
-    """Attach ``sem_cluster`` + ``__csim`` using the configured kernel
-    (shared by the batch and incremental paths and the ANN store's
-    writers)."""
-    if assign not in ("auto", "fold", "arrow"):
-        raise ValueError(f"assign={assign!r}: auto | fold | arrow")
-    use_arrow = assign == "arrow" or (assign == "auto" and len(centroids) >= 64)
+    """Attach ``sem_cluster`` + ``__csim`` (shared by the batch and
+    incremental paths and the ANN store's writers).  The kernel follows
+    the centroid count: the JVM fold below 64 centroids, the Arrow
+    matmul from 64 on — output-identical, ties included."""
     scored = (
         _assign_arrow(vec_col, centroids)
-        if use_arrow
+        if len(centroids) >= 64
         else _nearest_cells(F.col(vec_col), centroids, 1)[0]
     )
     return (
@@ -372,7 +362,6 @@ def semdedup_incremental(
     vec_col: str = "embedding",
     max_cluster_rows: int = 200_000,
     block: int = 1024,
-    assign: str = "auto",
 ) -> DataFrame:
     """Cross-batch SemDeDup: the batch rows kept against the persisted
     store AND each other.  A batch row is dropped iff cosine >= ``eps``
@@ -395,11 +384,9 @@ def semdedup_incremental(
     the batch's cell set (one bounded action — ≤ len(centroids) ints),
     read the store's matching cells through a literal ``ivf_cell``
     ``isin`` (a partition filter by construction on the cell-partitioned
-    layout, the ANN probes' ``prune_cells`` posture), one per-cell Arrow
+    layout, as in the ANN store's probes), one per-cell Arrow
     scan.  Only cells the batch touches are ever read or scanned."""
-    b = _assign_cells(
-        widen_partitions(batch), centroids, vec_col, assign
-    )
+    b = _assign_cells(widen_partitions(batch), centroids, vec_col)
     w = Window.partitionBy("sem_cluster").orderBy(
         F.col("__csim").asc(), F.col(id_col).asc()
     )

@@ -1,20 +1,22 @@
 """Similarity search over embedding columns (SURVEY §2.12 E3).
 
-Two paths:
-- ``cosine_topk`` — brute-force: broadcast the probe vector, compute the dot
-  product as a JVM-side sequential fold (``aggregate`` over ``zip_with``),
-  top-k via orderBy+limit (TakeOrderedAndProject).  O(N·d) with zero Python;
-  the correctness baseline and fine up to ~10⁸ rows per probe on a cluster.
-- ``lsh_bucket_topk`` — scale path: random-hyperplane LSH signatures bucket
-  the corpus; probes only score their own bucket(s), turning the scan into a
-  bucket-pruned join.  Hyperplanes are derived deterministically from a seed
-  so signatures are reproducible across runs/executors.
+- ``cosine_topk`` / ``cosine_topk_batch`` — exact brute force: broadcast
+  the probe vector(s), compute the dot product as a JVM-side sequential
+  fold (``aggregate`` over ``zip_with``), keep the top k.  O(N·d) with
+  zero Python; the correctness baseline and fine up to ~10⁸ rows per
+  probe on a cluster.  ``cosine_topk_pandas`` and
+  ``cosine_topk_quantized`` are its wide-vector and int8 forms.
+- ``lsh_bucket_topk`` / ``knn_join`` — scale path: random-hyperplane LSH
+  signatures bucket the corpus; probes only score their own bucket(s),
+  turning the scan into a bucket-pruned join.  Hyperplanes are derived
+  deterministically from a seed so signatures are reproducible across
+  runs/executors.
 - ``cosine_similarity_join`` — all-pairs similarity join via bucketed
   (LSH-banded) join (for batch similarity-join workloads); verified by the
   exact ``cosine_pairs_exact`` baseline.
-- ``ivf_index`` / ``ann_ivf_topk`` — session-built IVF coarse
-  quantization; its persisted, cell-partitioned form (cell pruning as
-  partition pruning) is the ANN store, ``operators/ann_store.py``.
+- ``seed_centroids`` / ``train_ivf_centroids`` — IVF coarse-quantizer
+  geometry.  The index they feed, with cell pruning as partition
+  pruning, is the ANN store (``operators/ann_store.py``).
 """
 
 from __future__ import annotations
@@ -53,12 +55,6 @@ def _norm(a: Column) -> Column:
 
 def cosine_sim(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-# Historical alias: the clamp now lives in _norm itself, so the "safe"
-# form IS the default — kept for callers (semdedup) that name the
-# degenerate-row contract explicitly.
-cosine_sim_safe = cosine_sim
 
 
 def cosine_topk(
@@ -152,6 +148,69 @@ def cosine_topk_pandas(
     )
 
 
+def _probe_side(
+    probes: DataFrame, probe_id_col: str, probe_vec_col: str, *extra: Column
+) -> DataFrame:
+    """The broadcast probe frame of a batch top-k: ``(__qid, __p, __pn,
+    *extra)``, the probe norm staged per probe (never per comparison)."""
+    return F.broadcast(
+        probes.select(
+            F.col(probe_id_col).alias("__qid"),
+            F.col(probe_vec_col).alias("__p"),
+            _norm(F.col(probe_vec_col)).alias("__pn"),
+            *extra,
+        )
+    )
+
+
+def _two_level_topk(
+    pairs: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    probe_id_col: str,
+    round_to: int | None,
+) -> DataFrame:
+    """Score (corpus row, probe) pairs — ``pairs`` carries ``id_col``,
+    ``vec_col`` and ``_probe_side``'s columns — and keep the top k per
+    probe: ``(probe_id_col, id_col, cos_sim, rank)``, score rounded and
+    id tie-broken.
+
+    A window partitioned only by query would sort the ENTIRE scored
+    corpus in |probes| single tasks (the global-window trap,
+    sampling.py:14).  Level 1 keeps k per (query, scan partition) — the
+    exchange spreads over |probes|·|partitions| buckets and ships a
+    narrow 4-column row; level 2 ranks the ≤ |partitions|·k survivors
+    per query.  Exact: every global top-k row is its scan partition's
+    top-≤k row."""
+    sim = _dot(F.col(vec_col), F.col("__p")) / (
+        _norm(F.col(vec_col)) * F.col("__pn")
+    )
+    if round_to is not None:
+        sim = F.round(sim, round_to)
+    lw = Window.partitionBy("__qid", "__pid").orderBy(
+        F.col("cos_sim").desc(), F.col(id_col)
+    )
+    w = Window.partitionBy("__qid").orderBy(
+        F.col("cos_sim").desc(), F.col(id_col)
+    )
+    return (
+        pairs.select(
+            F.col("__qid"),
+            F.col(id_col),
+            sim.alias("cos_sim"),
+            F.spark_partition_id().alias("__pid"),
+        )
+        .withColumn("__lrk", F.row_number().over(lw))
+        .where(F.col("__lrk") <= k)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            F.col("__qid").alias(probe_id_col), id_col, "cos_sim", "rank"
+        )
+    )
+
+
 def cosine_topk_batch(
     embeddings: DataFrame,
     probes: DataFrame,
@@ -169,54 +228,16 @@ def cosine_topk_batch(
     The probe frame is broadcast with pre-staged norms, so the corpus
     makes ONE narrow pass scoring all probes (a broadcast nested-loop
     by construction — candidate volume is |probes| x |corpus|, which is
-    the definition of exact batch scoring); ranking windows the scored
-    frame per query.  This is the exact BASELINE: it is linear in the
-    corpus per probe and correct for any k.  For large probe batches
-    against 100 TB use the bucketed paths (``knn_join`` /
-    ``ann_ivf_topk_indexed``) — same output contract, sublinear probes,
-    recall < 1."""
-    p = F.broadcast(
-        probes.select(
-            F.col(probe_id_col).alias("__qid"),
-            F.col(probe_vec_col).alias("__p"),
-            _norm(F.col(probe_vec_col)).alias("__pn"),
-        )
+    the definition of exact batch scoring); ranking is the two-level
+    top-k (``_two_level_topk``).  This is the exact BASELINE: it is
+    linear in the corpus per probe and correct for any k.  For large
+    probe batches against 100 TB use ``knn_join`` or the ANN store's
+    ``ann_store.ann_ivf_topk_store_batch`` — same output contract,
+    sublinear probes, recall < 1."""
+    pairs = widen_partitions(embeddings).crossJoin(
+        _probe_side(probes, probe_id_col, probe_vec_col)
     )
-    sim = _dot(F.col(vec_col), F.col("__p")) / (
-        _norm(F.col(vec_col)) * F.col("__pn")
-    )
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    # Two-level top-k: a window partitioned only by query would sort the
-    # ENTIRE scored corpus in |probes| single tasks (the global-window
-    # trap, sampling.py:14).  Level 1 keeps k per (query, scan
-    # partition) — the exchange spreads over |probes|·|partitions|
-    # buckets and ships a narrow 4-column row; level 2 ranks the
-    # ≤ |partitions|·k survivors per query.  Exact: every global top-k
-    # row is its scan partition's top-≤k row.
-    lw = Window.partitionBy("__qid", "__pid").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    w = Window.partitionBy("__qid").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
-    return (
-        widen_partitions(embeddings)
-        .crossJoin(p)
-        .select(
-            F.col("__qid"),
-            F.col(id_col),
-            sim.alias("cos_sim"),
-            F.spark_partition_id().alias("__pid"),
-        )
-        .withColumn("__lrk", F.row_number().over(lw))
-        .where(F.col("__lrk") <= k)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("__qid").alias(probe_id_col), id_col, "cos_sim", "rank"
-        )
-    )
+    return _two_level_topk(pairs, k, id_col, vec_col, probe_id_col, round_to)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -966,7 +987,7 @@ def _nearest_cells(
             # clamped: a zero-norm vector must score 0.0 (not NULL) so
             # this fold and _assign_arrow's numpy matmul pick the SAME
             # cell — the ANN store/probe mode-equivalence contract
-            F.round(cosine_sim_safe(vec_col, c), 9).alias("s"),
+            F.round(cosine_sim(vec_col, c), 9).alias("s"),
             F.element_at(cids, i + 1).alias("cid"),
         ),
     )
@@ -974,41 +995,25 @@ def _nearest_cells(
     return F.slice(ranked, 1, n).cast("array<struct<s:double,cid:int>>")
 
 
-def ivf_index(
+def seed_centroids(
     embeddings: DataFrame,
     n_cells: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cell_col: str = "ivf_cell",
-    centroids: list[tuple[int, list[float]]] | None = None,
-) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
-    """IVF (inverted-file) coarse quantization: pick ``n_cells`` seed
-    vectors deterministically (the lowest ids — a fixed sample in lieu of
-    k-means) unless trained ``centroids`` are passed (see
-    ``train_ivf_centroids``), then assign every vector to its nearest
-    centroid.
-
-    Returns (indexed DataFrame with a ``cell_col`` int column, centroids).
-    The centroid list is tiny (n_cells × dim floats) and folded into the
-    plan as literals — the assignment is a narrow map over the corpus, no
-    shuffle, no UDF.  At 100 TB: compute once at ingest, then
-    ``partitionBy(cell_col)`` on write so each probe reads only its cells'
-    files (partition pruning).  The corpus is widened to cluster
-    parallelism before the (CPU-dense) centroid scoring.
-    """
-    embeddings = widen_partitions(embeddings)
-    if centroids is None:
-        seeds = (
-            embeddings.select(id_col, vec_col)
-            .orderBy(id_col)
-            .limit(n_cells)
-            .collect()
-        )
-        centroids = [(i, list(r[vec_col])) for i, r in enumerate(seeds)]
-    assigned = embeddings.withColumn(
-        cell_col, _nearest_cells(F.col(vec_col), centroids, 1)[0]["cid"]
+) -> list[tuple[int, list[float]]]:
+    """The deterministic IVF seed geometry: the ``n_cells`` lowest-id
+    vectors as centroids ``0..n_cells-1`` (a fixed sample in lieu of
+    k-means; ``train_ivf_centroids`` refines it).  One ``limit``
+    collect; the frame is used as given — widen it first only if it
+    is scored afterwards (``widen_partitions`` keys off the SOURCE
+    file count, so a second widen cannot see the first)."""
+    seeds = (
+        embeddings.select(id_col, vec_col)
+        .orderBy(id_col)
+        .limit(n_cells)
+        .collect()
     )
-    return assigned, centroids
+    return [(i, list(r[vec_col])) for i, r in enumerate(seeds)]
 
 
 def train_ivf_centroids(
@@ -1019,7 +1024,8 @@ def train_ivf_centroids(
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Lloyd's k-means for IVF centroids, DataFrame-native: start from the
-    deterministic lowest-id seeds, then iterate (assign → per-cell mean).
+    deterministic lowest-id seeds (``seed_centroids``), then iterate
+    (assign → per-cell mean).
 
     Per iteration: assignment is the same narrow literal-matrix scoring the
     query path uses (no shuffle), and the recentering shuffles
@@ -1035,17 +1041,7 @@ def train_ivf_centroids(
     persist alongside the layout, not as a reproducible pure function.
     """
     embeddings = widen_partitions(embeddings)
-    # Seed selection inline (not via ivf_index, which would widen a second
-    # time — widen_partitions keys off the SOURCE file count, so it cannot
-    # see that this frame is already wide) — same deterministic lowest-id
-    # seeds.
-    seeds = (
-        embeddings.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(n_cells)
-        .collect()
-    )
-    centroids = [(i, list(r[vec_col])) for i, r in enumerate(seeds)]
+    centroids = seed_centroids(embeddings, n_cells, id_col, vec_col)
     for _ in range(n_iters):
         assigned = embeddings.withColumn(
             "__cell", _nearest_cells(F.col(vec_col), centroids, 1)[0]["cid"]
@@ -1082,8 +1078,8 @@ def _round_half_up(x: float, digits: int = 9) -> float:
     which is also Python's ``repr``) with HALF_UP, while Python's builtin
     ``round`` is half-EVEN — on dyadic ties (e.g. m/2^k landing exactly
     on a 5 at the target digit) the two differ, so a driver-side ranking
-    that must agree with a Catalyst ``F.round`` ranking (the ANN static
-    prune union vs the join's per-probe cells) must round THIS way.
+    that must agree with a Catalyst ``F.round`` ranking (a probe's cells
+    vs the cells the store's writer assigned) must round THIS way.
     Parity is property-pinned in tests/test_ann_store.py."""
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -1095,9 +1091,9 @@ def _nearest_cells_py(
     vec: list[float], centroids: list[tuple[int, list[float]]], n: int
 ) -> list[int]:
     """Driver-side nearest-cell ranking for a single probe vector (mirrors
-    ``_nearest_cells`` — including its HALF_UP rounding, so the static
-    prune union and the join's ranking can never disagree on a tie;
-    n_cells × dim flops — trivial)."""
+    ``_nearest_cells`` — including its HALF_UP rounding, so a probe and
+    the store's writer can never disagree on a tie; n_cells × dim
+    flops — trivial)."""
 
     def cos(a: list[float], b: list[float]) -> float:
         # clamped like _norm / the numpy kernels: zero-norm scores 0.0
@@ -1114,67 +1110,6 @@ def _nearest_cells_py(
         reverse=True,
     )
     return [cid for _, cid in ranked[:n]]
-
-
-def ann_ivf_topk(
-    embeddings: DataFrame,
-    probe_id: int,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k via IVF: score only the vectors living in the
-    ``n_probe`` cells nearest the probe vector — an ``n_probe/n_cells``
-    fraction of the corpus instead of all of it.
-
-    Plan: centroid assignment (narrow) → IN-filter on the probe's cell list
-    (pushable to a cell-partitioned layout as partition pruning) → exact
-    cosine on survivors → TakeOrderedAndProject.  With ``n_probe ==
-    n_cells`` the result is exactly brute-force ``cosine_topk`` (the
-    property the tests pin); shrinking ``n_probe`` trades recall for a
-    proportional scan cut.
-    """
-    indexed, centroids = ivf_index(embeddings, n_cells, id_col, vec_col)
-    return ann_ivf_topk_indexed(
-        indexed, centroids, probe_id, k, n_probe, id_col, vec_col
-    )
-
-
-def ann_ivf_topk_indexed(
-    indexed: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    probe_id: int,
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "ivf_cell",
-) -> DataFrame:
-    """Probe a prebuilt IVF index (the output of ``ivf_index``): the
-    build-once / probe-many path — persist or materialize ``indexed`` at
-    ingest and amortize the centroid assignment across every probe."""
-    probe = F.broadcast(
-        indexed.where(F.col(id_col) == probe_id).select(
-            F.col(vec_col).alias("__p"),
-            _norm(F.col(vec_col)).alias("__pn"),
-            _nearest_cells(F.col(vec_col), centroids, n_probe)
-            .getField("cid")
-            .alias("__pcells"),
-        )
-    )
-    sim = _dot(F.col(vec_col), F.col("__p")) / (
-        _norm(F.col(vec_col)) * F.col("__pn")
-    )
-    return (
-        indexed.where(F.col(id_col) != probe_id)
-        .crossJoin(probe)
-        .where(F.array_contains(F.col("__pcells"), F.col(cell_col)))
-        .select(F.col(id_col), F.round(sim, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 # ─────────────────────── int8 embedding quantization ───────────────────────

@@ -327,26 +327,19 @@ WHERE round({_COS_AB}, 6) >= {threshold}
 """
 
 
-# An ANN index is built once at ingest and probed many times: rebuilding
-# the centroid assignment (a seeds collect + a narrow scoring pass) per
-# probe would charge every query the ingest cost.  The persisted frame is
-# the ~N-row indexed corpus; centroids are n_cells × dim floats.
-@session_memo
-def _ivf_indexed(spark: SparkSession, sf_dir: str, n_cells: int = 16):
-    indexed, centroids = S.ivf_index(_t(spark, sf_dir, "embeddings"), n_cells)
-    return indexed.persist(), centroids
-
-
 def x14_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k registered at FULL probe (n_probe == n_cells), where IVF
-    is provably identical to brute force (similarity.py documents the
-    equality) — that identity is the oracle (the Q23 brute-force SQL).
-    Partial-probe recall and the cell-pruning behavior are pinned in
-    tests/test_ann_ivf.py.  The index is built once per session via
-    ``_ivf_indexed`` and probed here."""
-    indexed, centroids = _ivf_indexed(spark, sf_dir, n_cells=16)
-    return S.ann_ivf_topk_indexed(
-        indexed, centroids, probe_id=1, k=5, n_probe=16
+    is provably identical to brute force — that identity is the oracle
+    (the Q23 brute-force SQL).  It probes x41's session-built ANN store
+    (``_ann_store_dir``, 16 lowest-id seed cells) with vec_id 1's
+    vector, excluding the probe itself.  Partial-probe recall and the
+    cell-pruning behavior are pinned in tests/test_ann_ivf.py."""
+    from jurimetria_etl_spark.operators.ann_store import ann_ivf_topk_store
+
+    d, cents = _ann_store_dir(spark, sf_dir, n_cells=16)
+    [(_, probe_vec)] = _ann_probe_rows(spark, sf_dir, (1,))
+    return ann_ivf_topk_store(
+        spark, d, probe_vec, k=5, n_probe=16, centroids=cents, exclude_id=1
     )
 
 
@@ -1429,19 +1422,9 @@ def _ann_store_dir(spark: SparkSession, sf_dir: str, n_cells: int = 16):
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    # deterministic centroids: the lowest-id seed vectors (ivf_index's
-    # in-lieu-of-kmeans rule), so the store generation is a pure
-    # function of the fixture
-    seeds = (
-        emb.select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(n_cells)
-        .collect()
-    )
-    cents = [
-        (i, [float(x) for x in r["embedding"]])
-        for i, r in enumerate(seeds)
-    ]
+    # deterministic centroids (the lowest-id seed vectors), so the store
+    # generation is a pure function of the fixture
+    cents = S.seed_centroids(emb, n_cells)
     d = tempfile.mkdtemp(prefix="ann_store_x41_")
     b0 = emb.where(F.col("vec_id") % 2 == 0)
     b1 = emb.where(F.col("vec_id") % 2 == 1)

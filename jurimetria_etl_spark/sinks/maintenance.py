@@ -359,7 +359,6 @@ def recluster_ann_store(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     target_file_bytes: int = 128 * 1024 * 1024,
-    assign: str = "auto",
 ) -> dict:
     """Re-cluster a persisted IVF ANN store onto a NEW centroid set — the
     maintenance remedy ``operators/ann_store.py``'s generation contract
@@ -437,7 +436,7 @@ def recluster_ann_store(
     # through on a quantized store — re-assignment only moves rows between
     # cells, it never touches the payload.
     payload = ["q", "q_scale"] if quantized else [vec_col]
-    reassigned = _assign_cells(work, new_centroids, vec_col, assign).select(
+    reassigned = _assign_cells(work, new_centroids, vec_col).select(
         F.col("sem_cluster").alias("ivf_cell"), id_col, *payload
     )
     _, total = dir_stats(src)
@@ -469,7 +468,6 @@ def split_cell(
     vec_col: str = "embedding",
     n_iters: int = 5,
     target_file_bytes: int = 128 * 1024 * 1024,
-    assign: str = "auto",
 ) -> dict:
     """Targeted IVF cell split: re-Lloyd ONLY the hot cell's vectors
     into ``k`` sub-cells and publish the result as a new generation —
@@ -561,7 +559,7 @@ def split_cell(
     )
     # restricted assignment: nearest of the k sub-centroids only
     payload = ["q", "q_scale"] if quantized else [vec_col]
-    reassigned = _assign_cells(work, sub_cents, vec_col, assign).select(
+    reassigned = _assign_cells(work, sub_cents, vec_col).select(
         F.col("sem_cluster").alias("ivf_cell"), id_col, *payload
     )
     untouched = total_raw - hot_raw_n

@@ -23,23 +23,39 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from jurimetria_etl_spark.operators.ann_store import (
+    ann_ivf_topk_store,
+    append_ann_store,
+)
 from jurimetria_etl_spark.operators.similarity import (
-    ann_ivf_topk_indexed,
     cosine_topk,
-    ivf_index,
+    seed_centroids,
 )
 
 K = 5
 N_CELLS = 8
 
 
-def _recall(spark, emb, probes, n_probe, truth, indexed, cents) -> float:
+def _store(emb, path) -> list[tuple[int, list[float]]]:
+    """Append ``emb`` to an ANN store at ``path`` under its lowest-id
+    seed centroids; returns the centroids."""
+    cents = seed_centroids(emb, n_cells=N_CELLS)
+    append_ann_store(emb.select("vec_id", "embedding"), path, cents)
+    return cents
+
+
+def _recall(spark, emb, probes, n_probe, truth, path, cents) -> float:
+    vecs = {
+        r.vec_id: list(r.embedding)
+        for r in emb.where(emb.vec_id.isin(probes)).collect()
+    }
     hits = tot = 0
     for p in probes:
         got = {
             r.vec_id
-            for r in ann_ivf_topk_indexed(
-                indexed, cents, probe_id=p, k=K, n_probe=n_probe
+            for r in ann_ivf_topk_store(
+                spark, path, vecs[p], k=K, n_probe=n_probe,
+                centroids=cents, exclude_id=p,
             ).collect()
         }
         hits += len(got & truth[p])
@@ -62,21 +78,17 @@ def clustered(spark):
     emb.unpersist()
 
 
-def test_ivf_recall_curve_on_clustered_data(spark, clustered):
+def test_ivf_recall_curve_on_clustered_data(spark, clustered, tmp_path):
     probes = [3, 200, 500, 777, 1000, 1250, 1499]
     truth = {
         p: {r.vec_id for r in cosine_topk(clustered, probe_id=p, k=K).collect()}
         for p in probes
     }
-    indexed, cents = ivf_index(clustered, n_cells=N_CELLS)
-    indexed = indexed.persist()
-    indexed.count()
-    try:
-        r1 = _recall(spark, clustered, probes, 1, truth, indexed, cents)
-        r4 = _recall(spark, clustered, probes, 4, truth, indexed, cents)
-        r8 = _recall(spark, clustered, probes, 8, truth, indexed, cents)
-    finally:
-        indexed.unpersist()
+    path = str(tmp_path / "clustered")
+    cents = _store(clustered, path)
+    r1 = _recall(spark, clustered, probes, 1, truth, path, cents)
+    r4 = _recall(spark, clustered, probes, 4, truth, path, cents)
+    r8 = _recall(spark, clustered, probes, 8, truth, path, cents)
     # half-cell probe near-lossless on clustered data; single-cell probe
     # (1/8 of the corpus scored) still recovers most neighbors; full probe
     # exact; curve monotone.
@@ -86,22 +98,20 @@ def test_ivf_recall_curve_on_clustered_data(spark, clustered):
     assert r1 <= r4 <= r8
 
 
-def test_ivf_tracks_isotropic_floor_on_fixture(spark):
+def test_ivf_tracks_isotropic_floor_on_fixture(spark, tmp_path):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").persist()
-    n = emb.count()
-    probes = [i * (n // 6) for i in range(6)]
-    truth = {
-        p: {r.vec_id for r in cosine_topk(emb, probe_id=p, k=K).collect()}
-        for p in probes
-    }
-    indexed, cents = ivf_index(emb, n_cells=N_CELLS)
-    indexed = indexed.persist()
-    indexed.count()
     try:
-        r4 = _recall(spark, emb, probes, 4, truth, indexed, cents)
-        r8 = _recall(spark, emb, probes, 8, truth, indexed, cents)
+        n = emb.count()
+        probes = [i * (n // 6) for i in range(6)]
+        truth = {
+            p: {r.vec_id for r in cosine_topk(emb, probe_id=p, k=K).collect()}
+            for p in probes
+        }
+        path = str(tmp_path / "fixture")
+        cents = _store(emb, path)
+        r4 = _recall(spark, emb, probes, 4, truth, path, cents)
+        r8 = _recall(spark, emb, probes, 8, truth, path, cents)
     finally:
-        indexed.unpersist()
         emb.unpersist()
     # scan fraction 0.5 -> recall must not fall below ~the floor (slack
     # for cell-size imbalance on 200 rows); full probe is exact.

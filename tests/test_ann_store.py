@@ -1,5 +1,6 @@
 """Persisted incremental IVF ANN store (operators/ann_store.py):
-batched appends must equal a session-built index (incremental ≡ batch),
+batched appends must equal a one-shot build of the union (incremental ≡
+batch),
 replays must fold away (at-least-once idempotence), the centroid-set
 generation guard must reject foreign geometry, probes over the loaded
 index must hit the exact baseline at full probe and a recall floor at
@@ -16,17 +17,16 @@ import numpy as np
 import pytest
 
 from jurimetria_etl_spark.operators.ann_store import (
-    ann_ivf_topk_batch,
     ann_ivf_topk_store,
     ann_ivf_topk_store_batch,
     append_ann_store,
+    build_ann_store,
     load_ann_store,
     read_ann_centroids,
 )
 from jurimetria_etl_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_batch,
-    ivf_index,
 )
 from jurimetria_etl_spark.sinks.maintenance import recluster_ann_store
 from jurimetria_etl_spark.storefs import store_data_dir
@@ -99,34 +99,34 @@ def test_generation_mismatch_raises(spark, tmp_path):
 
 
 def test_incremental_equals_session_built(spark, tmp_path):
-    """Two appends + load ≡ ivf_index over the union under the same
-    centroids: identical (cell, id) assignment, and probe-for-probe
-    identical batch top-k at every n_probe."""
+    """Two appends + load ≡ one append of the union under the same
+    centroids: identical (cell, id) assignment (also against the
+    in-memory ``build_ann_store`` rows), and probe-for-probe identical
+    batch top-k at every n_probe."""
     d = _store(spark, tmp_path)
-    loaded = load_ann_store(spark, d)
-    session, _ = ivf_index(
-        _emb(spark, ROWS), n_cells=N_CELLS, centroids=CENTROIDS
+    one_shot = str(tmp_path / "one_shot")
+    append_ann_store(_emb(spark, ROWS), one_shot, CENTROIDS)
+    built = build_ann_store(_emb(spark, ROWS), CENTROIDS)
+    want_cells = sorted(
+        (r["ivf_cell"], r["vec_id"]) for r in built.collect()
     )
-    assert sorted(
-        (r["ivf_cell"], r["vec_id"]) for r in loaded.collect()
-    ) == sorted((r["ivf_cell"], r["vec_id"]) for r in session.collect())
+    for store in (d, one_shot):
+        assert sorted(
+            (r["ivf_cell"], r["vec_id"])
+            for r in load_ann_store(spark, store).collect()
+        ) == want_cells
     probes = _probes(spark, PROBE_IDS)
     for n_probe in (1, 4, N_CELLS):
-        got = sorted(
-            map(
-                tuple,
-                ann_ivf_topk_batch(
-                    loaded, CENTROIDS, probes, k=K, n_probe=n_probe
-                ).collect(),
+        got, want = (
+            sorted(
+                map(
+                    tuple,
+                    ann_ivf_topk_store_batch(
+                        spark, store, probes, k=K, n_probe=n_probe
+                    ).collect(),
+                )
             )
-        )
-        want = sorted(
-            map(
-                tuple,
-                ann_ivf_topk_batch(
-                    session, CENTROIDS, probes, k=K, n_probe=n_probe
-                ).collect(),
-            )
+            for store in (d, one_shot)
         )
         assert got == want and got
 
@@ -218,7 +218,7 @@ def test_single_probe_plan_partition_prunes(spark, tmp_path):
 
 
 def test_batch_probe_plan_partition_prunes(spark, tmp_path):
-    """The batch path's static prune_cells isin must likewise surface as
+    """The batch path's static cell-union isin must likewise surface as
     a partition filter — contractual pruning, not DPP luck (VERDICT r10:
     the one unverified ann_store claim)."""
     d = _store(spark, tmp_path)

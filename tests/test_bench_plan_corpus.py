@@ -117,7 +117,11 @@ EXPECT: dict[str, tuple[int, int, int, int]] = {
     # minus the precomputed-banded-frame reuse (signatures derived inline
     # on both sides of the self-join, deduped by ReuseExchange).
     "x13b_cosine_join_scaled": (0, 0, 6, 3),
-    "x14_ann_ivf": (1, 0, 3, 0),  # 1-row probe attach (intended)
+    # x14: one probe of the ANN store — cell-pruned hive scan →
+    # (ivf_cell, id) replay fold (the 1 exchange) → cosine against the
+    # literal probe vector → TakeOrderedAndProject.  No probe attach
+    # join (was (1, 0, 3, 0): the session-built index's 1-row BNLJ).
+    "x14_ann_ivf": (0, 0, 1, 0),
     # x41 (r11): batch probe over the PERSISTED ANN store — cell-pruned
     # scan (static isin over the hive layout) → (ivf_cell, id) replay
     # fold (1 agg exchange) → broadcast probe-cell equi-join (the BHJ)
@@ -343,7 +347,7 @@ def test_bench_plan_shape(spark, registry, name):
 
 
 @pytest.mark.parametrize(
-    "name", ["x41_ann_store_topk", "x37b_hybrid_search_ann"]
+    "name", ["x14_ann_ivf", "x41_ann_store_topk", "x37b_hybrid_search_ann"]
 )
 def test_ann_store_scan_cell_pruned_in_fused_plan(spark, registry, name):
     """The probes' static cell union must reach the ANN-store scan as a

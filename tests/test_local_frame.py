@@ -136,11 +136,13 @@ def _create_dataframe_calls(tree: ast.AST, func: str | None = None):
 
 
 def test_only_local_frame_builds_frames_from_python_rows():
-    """``local_frame`` is the library's one ``createDataFrame`` call; the
-    municipios dimension's pandas frame already travels as Arrow."""
+    """``local_frame`` is the library's and the tools' one
+    ``createDataFrame`` call; the municipios dimension's pandas frame
+    already travels as Arrow."""
     calls = sorted(
         (str(p.relative_to(ROOT)), func)
-        for p in sorted((ROOT / "jurimetria_etl_spark").rglob("*.py"))
+        for base in ("jurimetria_etl_spark", "tools")
+        for p in sorted((ROOT / base).rglob("*.py"))
         for func, _ in _create_dataframe_calls(
             ast.parse(p.read_text(encoding="utf-8"))
         )

@@ -196,14 +196,25 @@ def test_only_the_memo_decides_when_a_cached_relation_lives():
     assert stray == []
 
 
-@pytest.mark.parametrize("name", ["x28_duplicate_spans", "x38_split_guarded"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "x28_duplicate_spans",
+        "x38_split_guarded",
+        "x14_ann_ivf",
+        "x41_ann_store_topk",
+    ],
+)
 def test_query_leaves_nothing_cached(spark, name):
-    """The span query and the split query leave no cached relation
-    behind, local checkpoints included: neither materializes anything
-    while its plan is built."""
+    """The span query, the split query and the two ANN-store probes
+    leave no cached relation behind, local checkpoints included: none
+    materializes anything while its plan is built, and the store the
+    probes share lives on disk.  The memo is cleared first, so a
+    session artifact an earlier test built cannot hide in ``before``."""
     from jurimetria_etl_spark.plans.registry import REGISTRY
     from tests.test_curation import SF
 
+    memo.clear()
     before = cached_relations(spark, checkpoints=True)
     assert REGISTRY[name].spark(spark, SF).count() > 0
     assert cached_relations(spark, checkpoints=True) - before == set()

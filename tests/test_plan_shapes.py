@@ -134,14 +134,34 @@ def test_lsh_cosine_join_is_hash_join_on_buckets(spark):
     assert "Join" in plan
 
 
-def test_ivf_probe_filters_cells_before_scoring(spark):
-    """x14: the cell IN-filter must appear below the final cosine scoring
-    (the pruning that maps to partition pruning on a cell-partitioned
-    layout)."""
-    from jurimetria_etl_spark.operators.similarity import ann_ivf_topk
+def test_ivf_probe_filters_cells_before_scoring(spark, tmp_path):
+    """x14: the probe's cells reach the ANN store's scan as a partition
+    filter — only those cells' directories are read, below the final
+    cosine scoring."""
+    import re
 
-    plan = _physical(ann_ivf_topk(_emb(spark), probe_id=1, k=5, n_cells=4, n_probe=2))
-    assert "array_contains" in plan
+    from jurimetria_etl_spark.operators.ann_store import (
+        ann_ivf_topk_store,
+        append_ann_store,
+    )
+    from jurimetria_etl_spark.operators.similarity import (
+        _nearest_cells_py,
+        seed_centroids,
+    )
+
+    emb = _emb(spark)
+    cents = seed_centroids(emb, n_cells=4)
+    path = str(tmp_path / "ivf")
+    append_ann_store(emb, path, cents)
+    probe = [float(x) for x in emb.where("vec_id = 1").first()["embedding"]]
+    plan = _physical(
+        ann_ivf_topk_store(spark, path, probe, k=5, n_probe=2, exclude_id=1)
+    )
+    [pf] = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+    [listed] = re.findall(r"ivf_cell#\d+ IN \(([^)]*)\)", pf)
+    assert sorted(int(c) for c in listed.split(",")) == sorted(
+        _nearest_cells_py(probe, cents, 2)
+    ), pf
     assert "TakeOrderedAndProject" in plan
 
 

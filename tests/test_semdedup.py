@@ -174,25 +174,27 @@ def test_plan_contract(spark):
 
 def test_arrow_assignment_matches_fold(spark):
     """The two assignment kernels must be output-identical — including
-    on planted exact ties (duplicate centroid vectors)."""
+    on planted exact ties (duplicate centroid vectors), which both
+    resolve to the HIGHER cid."""
+    from pyspark.sql import functions as F
+
+    from jurimetria_etl_spark.operators.semdedup import _assign_arrow
+    from jurimetria_etl_spark.operators.similarity import _nearest_cells
+
     df, X = _mk(spark, n=80, planted_dups=0)
     cents = [(k, [float(v) for v in X[k * 3]]) for k in range(5)]
     cents.append((5, cents[2][1]))  # exact duplicate centroid: tie case
-    a = semdedup_flags(df, eps=0.6, centroids=cents, assign="fold")
-    b = semdedup_flags(df, eps=0.6, centroids=cents, assign="arrow")
-    rows_a = sorted(
-        (r["vec_id"], r["sem_cluster"], r["sem_rank"], r["sem_kept"])
-        for r in a.collect()
+    out = df.select(
+        "vec_id",
+        _nearest_cells(F.col("embedding"), cents, 1)[0].alias("fold"),
+        _assign_arrow("embedding", cents).alias("arrow"),
+    ).collect()
+    assert [r["fold"]["cid"] for r in out] == [r["arrow"]["cid"] for r in out]
+    assert all(
+        abs(r["fold"]["s"] - r["arrow"]["s"]) <= 1e-8 for r in out
     )
-    rows_b = sorted(
-        (r["vec_id"], r["sem_cluster"], r["sem_rank"], r["sem_kept"])
-        for r in b.collect()
-    )
-    assert rows_a == rows_b
-    # the tie must resolve to the HIGHER cid in both
-    assert all(c != 2 for _, c, _, _ in rows_a if c in (2, 5)) or any(
-        c == 5 for _, c, _, _ in rows_a
-    )
+    cids = {r["fold"]["cid"] for r in out}
+    assert 5 in cids and 2 not in cids  # the tie went to the higher cid
 
 
 def test_auto_assignment_switches_to_arrow(spark):
@@ -206,7 +208,7 @@ def test_auto_assignment_switches_to_arrow(spark):
     )
     assert "ArrowEvalPython" in plan  # vectorized, not row-at-a-time
     assert "BatchEvalPython" not in plan
-    few = [(k, [float(v) for v in X[k]]) for k in range(4)]
+    few = [(k, [float(v) for v in X[k]]) for k in range(16)]
     plan2 = (
         semdedup_flags(df, eps=0.5, centroids=few)
         ._jdf.queryExecution()
@@ -298,7 +300,10 @@ def test_zero_norm_rows_assign_identically_in_fold_and_arrow(spark):
     against every centroid in BOTH kernels, so the fold and arrow modes
     pick the same cell and the same rank key — a store built with one
     kernel stays probe-compatible with the other."""
-    from jurimetria_etl_spark.operators.semdedup import _assign_cells
+    from pyspark.sql import functions as F
+
+    from jurimetria_etl_spark.operators.semdedup import _assign_arrow
+    from jurimetria_etl_spark.operators.similarity import _nearest_cells
 
     emb = spark.createDataFrame(
         [
@@ -309,14 +314,17 @@ def test_zero_norm_rows_assign_identically_in_fold_and_arrow(spark):
         "vec_id long, embedding array<double>",
     )
     cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
-    got = {}
-    for mode in ("fold", "arrow"):
-        got[mode] = sorted(
-            (r.vec_id, r.sem_cluster, r["__csim"])
-            for r in _assign_cells(emb, cents, "embedding", mode)
-            .select("vec_id", "sem_cluster", "__csim")
-            .collect()
+    kernels = {
+        "fold": _nearest_cells(F.col("embedding"), cents, 1)[0],
+        "arrow": _assign_arrow("embedding", cents),
+    }
+    got = {
+        mode: sorted(
+            (r.vec_id, r.sc["cid"], r.sc["s"])
+            for r in emb.select("vec_id", kernel.alias("sc")).collect()
         )
+        for mode, kernel in kernels.items()
+    }
     assert got["fold"] == got["arrow"]
     zero = [t for t in got["fold"] if t[0] == 0][0]
     assert zero[2] == 0.0 and zero[1] == 1  # sim 0.0, ties to higher cid

@@ -2,9 +2,9 @@
 ``curate_document_stream(ann_store_dir=…)`` must index exactly the
 survivors (stream ≡ sequential-batch value pin), serve probes over the
 curated corpus, and fail loudly without centroids; and
-``hybrid_search(ann_index=…)`` must equal the exact dense baseline at
-full probe (the at-scale swap is an argument, not prose — VERDICT r10
-task 2)."""
+``hybrid_search(ann_store_dir=…)`` must equal the exact dense baseline
+at full probe (the at-scale swap is an argument, not prose — VERDICT
+r10 task 2)."""
 
 from __future__ import annotations
 
@@ -232,8 +232,8 @@ def test_recluster_between_streams_then_resume(spark, tmp_path):
 
 
 def test_hybrid_search_ann_swap_equals_exact_at_full_probe(spark, ran):
-    """hybrid_search(ann_index=…): with n_probe == n_cells the ANN dense
-    side is exactly cosine_topk_batch, so the fused output must be
+    """hybrid_search(ann_store_dir=…): with n_probe == n_cells the ANN
+    dense side is exactly cosine_topk_batch, so the fused output must be
     row-identical to the default path over the same corpus."""
     from jurimetria_etl_spark.operators.search import hybrid_search
 
@@ -258,22 +258,13 @@ def test_hybrid_search_ann_swap_equals_exact_at_full_probe(spark, ran):
         pq,
         k_each=3,
         topk=3,
-        ann_index=load_ann_store(
-            spark, ran["ann"], id_col="doc_id"
-        ).withColumnRenamed("doc_id", "vec_id"),
-        ann_centroids=read_ann_centroids(ran["ann"]),
+        vec_id_col="doc_id",
+        ann_store_dir=ran["ann"],
         ann_n_probe=len(CENTS),
     )
     assert sorted(map(tuple, swapped.collect())) == sorted(
         map(tuple, exact.collect())
     )
-    with pytest.raises(ValueError, match="ann_centroids"):
-        hybrid_search(
-            docs, None, tq, pq,
-            ann_index=load_ann_store(
-                spark, ran["ann"], id_col="doc_id"
-            ).withColumnRenamed("doc_id", "vec_id"),
-        )
 
 
 

@@ -3,9 +3,12 @@ entry on Spark and its oracle_sql() on DuckDB over the same sf dir, compare
 row count, column names, and an order-insensitive value hash (doubles
 rounded 1e-9, timestamps as UTC epoch micros).
 
-Also writes HASH_BISECT.json: per query, per column, each side's canonical
-value hash, the Python types observed, and the engine-declared column type
-(Spark dtype / DuckDB type).  When a driver run disagrees with this local
+Also writes HASH_BISECT.json under the system temp directory
+(``tempfile.gettempdir()``; the path is printed before the final
+``N/M passed`` line), so a run leaves the checkout clean: per query,
+per column, each side's canonical value hash, the Python types
+observed, and the engine-declared column type (Spark dtype / DuckDB
+type).  When a driver run disagrees with this local
 replica (r13: x43's DuckDB HUGEINT sums hashed differently in the driver's
 canonicalizer), the artifact points at the exact column — look for a
 ``suspect_types`` entry (HUGEINT/DECIMAL/UHUGEINT oracle columns) or a
@@ -23,6 +26,7 @@ import json
 import math
 import os
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -216,9 +220,7 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
             print(f"FAIL {name}: {'; '.join(problems)}")
         else:
             print(f"ok   {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
-    out_path = os.path.abspath(
-        os.path.join(os.path.dirname(__file__), "..", "HASH_BISECT.json")
-    )
+    out_path = os.path.join(tempfile.gettempdir(), "HASH_BISECT.json")
     if only and os.path.exists(out_path):
         # partial run: merge into the existing artifact instead of clobbering
         with open(out_path) as f:
@@ -229,6 +231,7 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
             bisect = merged
     with open(out_path, "w") as f:
         json.dump({"sf_dir": sf_dir, "queries": bisect}, f, indent=1, sort_keys=True)
+    print(f"hash bisect: {out_path}")
     print(f"\n{len(queries) - len(failures)}/{len(queries)} passed")
     return 1 if failures else 0
 

@@ -34,9 +34,10 @@ AUDITED = [
     ("x13_cosine_join", "equi-join on (table,bucket); no cartesian"),
     (
         "x14_ann_ivf",
-        "cell filter below scoring; TakeOrderedAndProject; the single "
-        "nested-loop is the 1-row broadcast probe attach (constant side — "
-        "intended)",
+        "single probe of the ANN store: the cell isin reaches the hive "
+        "scan as PartitionFilters; (cell,id) replay fold above it; the "
+        "probe vector is a literal, so no probe attach join; "
+        "TakeOrderedAndProject",
     ),
     ("x23_pii_scrub", "narrow regexp chain fused into the scan; no shuffle"),
     (

@@ -1,10 +1,11 @@
 """Measure the IVF ANN recall/cost trade-off (VERDICT r4 item 5).
 
-For each n_probe in {1,2,4,8} (n_cells=8): build the IVF index once,
-probe a fixed set of vectors, and compare the top-k id set against exact
-brute-force ``cosine_topk`` ground truth.  Also reports the scan
-fraction (n_probe/n_cells approximates the share of the corpus scored —
-the cost axis of the curve).
+For each n_probe in {1,2,4,8} (n_cells=8, the lowest-id seed
+centroids): append the corpus to an ANN store once, probe a fixed set
+of vectors with ``ann_ivf_topk_store``, and compare the top-k id set
+against exact brute-force ``cosine_topk`` ground truth.  Also reports
+the scan fraction (n_probe/n_cells approximates the share of the corpus
+scored — the cost axis of the curve).
 
 Usage: python tools/recall_curve.py [sf_dir]   # default /root/testdata/sf0.1
 Output: one markdown table (pasted into SCALE.md) + a JSON line.
@@ -25,11 +26,16 @@ N_PROBES = [1, 2, 4, 8]
 
 
 def main(sf_dir: str) -> None:
-    from jurimetria_etl_spark.memo import pinned
+    import shutil
+    import tempfile
+
+    from jurimetria_etl_spark.operators.ann_store import (
+        ann_ivf_topk_store,
+        append_ann_store,
+    )
     from jurimetria_etl_spark.operators.similarity import (
-        ann_ivf_topk_indexed,
         cosine_topk,
-        ivf_index,
+        seed_centroids,
     )
     from jurimetria_etl_spark.session import get_spark
 
@@ -42,16 +48,23 @@ def main(sf_dir: str) -> None:
         p: {r.vec_id for r in cosine_topk(emb, probe_id=p, k=K).collect()}
         for p in probes
     }
-    indexed, centroids = ivf_index(emb, n_cells=N_CELLS)
-    with pinned(indexed):
+    vecs = {
+        r.vec_id: list(r.embedding)
+        for r in emb.where(emb.vec_id.isin(probes)).collect()
+    }
+    centroids = seed_centroids(emb, n_cells=N_CELLS)
+    store = tempfile.mkdtemp(prefix="recall_curve_")
+    try:
+        append_ann_store(emb.select("vec_id", "embedding"), store, centroids)
         rows = []
         for np_ in N_PROBES:
             hits = tot = 0
             for p in probes:
                 got = {
                     r.vec_id
-                    for r in ann_ivf_topk_indexed(
-                        indexed, centroids, probe_id=p, k=K, n_probe=np_
+                    for r in ann_ivf_topk_store(
+                        spark, store, vecs[p], k=K, n_probe=np_,
+                        centroids=centroids, exclude_id=p,
                     ).collect()
                 }
                 hits += len(got & truth[p])
@@ -63,6 +76,8 @@ def main(sf_dir: str) -> None:
                     "scan_fraction": round(np_ / N_CELLS, 3),
                 }
             )
+    finally:
+        shutil.rmtree(store, ignore_errors=True)
 
     print(f"| n_probe (of {N_CELLS} cells) | recall@{K} | corpus scored |")
     print("|---|---|---|")

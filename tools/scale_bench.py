@@ -123,7 +123,7 @@ def main() -> None:
 
     from jurimetria_etl_spark.memo import session_memo
     from jurimetria_etl_spark.plans.registry import REGISTRY
-    from jurimetria_etl_spark.session import get_spark
+    from jurimetria_etl_spark.session import get_spark, local_frame
 
     spark = get_spark("scale-bench")
 
@@ -151,7 +151,7 @@ def main() -> None:
         # the 100-TB posture: n_clusters grows with the corpus so
         # per-cluster size (and the quadratic scan's c_i) stays ~125;
         # assignment switches to the Arrow matmul kernel at >= 64
-        # centroids (assign="auto").
+        # centroids.
         from jurimetria_etl_spark.operators.semdedup import semdedup_flags
         from jurimetria_etl_spark.sources.fixtures import load_fixture
 
@@ -256,7 +256,7 @@ def main() -> None:
         # six staged corpus copies under /tmp per bench run fills disks
         out = load_curation_audit(spark, audit)
         rows = out.collect()
-        result = spark.createDataFrame(rows, out.schema)
+        result = local_frame(spark, rows, out.schema)
         shutil.rmtree(tmp, ignore_errors=True)
         return result
 
@@ -309,7 +309,8 @@ def main() -> None:
         rep = split_cell(spark, store, hot, k=2)
         _sh.rmtree(tmp, ignore_errors=True)
         assert rep["verified"], rep
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(rep["rows_moved"], rep["n_cells"])],
             "rows_moved long, n_cells long",
         )
@@ -329,8 +330,8 @@ def main() -> None:
         rep = recluster_ann_store(spark, store, new_cents)
         _sh.rmtree(tmp, ignore_errors=True)
         assert rep["verified"], rep
-        return spark.createDataFrame(
-            [(rep["rows"], rep["n_cells"])], "rows long, n_cells long"
+        return local_frame(
+            spark, [(rep["rows"], rep["n_cells"])], "rows long, n_cells long"
         )
 
     # r14: the PERSISTED-semdedup-store probe posture — a small batch
