@@ -19,6 +19,9 @@ to the SparkContext's JVM objects.
   is removed).  Frames and Columns of a stopped context are only dropped.
 - **clear().** Releases every entry: persisted frames of the live context
   are unpersisted and store directories removed; the next call rebuilds.
+- **Exit.** At interpreter exit every remaining entry's ``release`` runs,
+  so a store directory does not outlive its process; nothing is
+  unpersisted, since the JVM context goes with the process.
 - **cap.** Only where keys come from data: the oldest of the builder's
   entries is released first.
 
@@ -47,6 +50,7 @@ Spark's exchange reuse instead.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import functools
 import inspect
@@ -132,6 +136,13 @@ def clear() -> None:
     with _LOCK:
         for entry in list(_ENTRIES):
             _drop(entry, live=entry[0] == live)
+
+
+@atexit.register
+def _release_at_exit() -> None:
+    with _LOCK:
+        for entry in list(_ENTRIES):
+            _drop(entry, live=False)
 
 
 @contextlib.contextmanager

@@ -4,9 +4,9 @@
 ``build_dataframe`` keeps the reference's keyword contract
 (tribunais/classe_codigo/classe_nome/de/ate/max_processos —
 ``/root/reference/src/jurimetria_pipeline.py:187-194``) but returns a lazy
-Spark DataFrame: scan → flatten (P1-P3) → NULL-pass date filter (W1) →
-union (U1) → broadcast municipio enrichment (J1) → deterministic
-order+limit (O1/O3).
+Spark DataFrame: scan (one partition per tribunal, so the union U1 is
+the scan itself) → flatten (P1-P3) → NULL-pass date filter (W1) →
+broadcast municipio enrichment (J1) → deterministic order+limit (O1/O3).
 
 Determinism note (SURVEY §7 hard-part 3): the reference's ``max_processos``
 cap depends on arrival order (tribunal CLI order × per-tribunal date desc).
@@ -27,8 +27,6 @@ from jurimetria_etl_spark.functions.temporal import local_date_bound_to_utc
 from jurimetria_etl_spark.operators.filters import date_range_null_pass
 from jurimetria_etl_spark.operators.flatten import flatten_hits
 from jurimetria_etl_spark.operators.joins import enrich_municipio
-from jurimetria_etl_spark.operators.setops import union_all_by_name
-from jurimetria_etl_spark.schemas import PROCESSO_SCHEMA
 from jurimetria_etl_spark.session import get_spark
 from jurimetria_etl_spark.sinks.writers import (
     plot_horario,
@@ -49,27 +47,18 @@ def build_dataframe(
     max_processos: int | None = None,
     municipios_path: str | None = None,
     source: DataJudSource | None = None,
-    parallel: bool = True,
 ) -> DataFrame:
     """Reference EP2 contract; every stage is lazy Catalyst plan.
 
-    The multi-tribunal ingest defaults to ``parallel_scan`` — one Spark
-    partition per tribunal, so N tribunals page concurrently on executors
-    instead of looping on the driver (the scale path; the reference loops
-    sequentially at ``:217-232``).  ``parallel=False`` falls back to the
-    driver-side ``scan`` (useful when the transport cannot be pickled to
-    executors).
+    The ingest is ``DataJudSource.parallel_scan`` — one Spark partition
+    per tribunal, so N tribunals page concurrently on executors instead
+    of looping on the driver (the reference loops sequentially at
+    ``:217-232``); the source's transport must pickle.  An empty
+    ``tribunais`` list gives an empty frame of the same schema.
     """
     source = source or DataJudSource(spark)
-    if parallel and tribunais:
-        hits = source.parallel_scan(tribunais, classe_codigo, classe_nome)
-        df = flatten_hits(
-            hits.select("tribunal", "hit.*"), F.col("tribunal")
-        )
-    else:
-        per_trib = source.scan(tribunais, classe_codigo, classe_nome)
-        flat = [flatten_hits(h, trib) for trib, h in per_trib.items()]
-        df = union_all_by_name(flat, spark, PROCESSO_SCHEMA)
+    hits = source.parallel_scan(tribunais, classe_codigo, classe_nome)
+    df = flatten_hits(hits.select("tribunal", "hit.*"), F.col("tribunal"))
 
     lower = local_date_bound_to_utc(de) if de else None
     upper = local_date_bound_to_utc(ate) if ate else None

@@ -2,16 +2,19 @@
 
 Reimplements the reference's keyset-pagination protocol
 (``/root/reference/src/jurimetria_pipeline.py:96-160``) with an injectable
-transport so tests never touch the network, and a parallel scan path: one
-Spark partition per tribunal, so a multi-tribunal ingest fans out across
-executors instead of looping on the driver.
+transport so tests never touch the network.  This module holds the only
+copy of that protocol: ``fetch_page`` is one request with the per-page
+guards, ``fetch_raw_hits`` the loop over it with the cursor guards.  The
+batch scan (``DataJudSource.parallel_scan``) and both readers of the
+``datajud`` data source call them.
 
-Pagination stop guards kept verbatim from the reference's semantics:
-- empty page → stop                       (reference ``:145-147``)
-- repeated cursor → stop                  (``:150-154``)
-- >= max_requests pages → stop            (``:116-120``)
-- HTTP 400/404 → skip tribunal, no error  (``:138-140``)
-- transport error → empty result          (``:133-136``)
+Stop guards kept verbatim from the reference's semantics:
+- HTTP 400/404 → empty page, no error     (``:138-140``)  ``fetch_page``
+- transport error → empty page            (``:133-136``)  ``fetch_page``
+- HTTP error status → raised              (``:127-136``)  ``fetch_page``
+- empty page → stop                       (``:145-147``)  ``fetch_raw_hits``
+- repeated cursor → stop                  (``:150-154``)  ``fetch_raw_hits``
+- >= max_requests pages → stop            (``:116-120``)  ``fetch_raw_hits``
 
 The class filter (S3) is pushed server-side as an ES ``term`` query — name
 takes precedence over code, else match_all (``:86-93``); the sort spec (S4)
@@ -75,6 +78,44 @@ def _requests_transport(
     return resp.status_code, resp.json()
 
 
+def fetch_page(
+    tribunal: str,
+    search_after: list[Any] | None = None,
+    classe_codigo: int | None = None,
+    classe_nome: str | None = None,
+    page_size: int = PAGE_SIZE,
+    transport: Transport | None = None,
+    api_key: str | None = None,
+) -> list[dict[str, Any]]:
+    """One POST of the keyset protocol with every per-page guard: the
+    page's hits after ``search_after``; ``[]`` on a transport error or a
+    400/404; an HTTP error status raises."""
+    payload: dict[str, Any] = {
+        "size": page_size,
+        "query": build_query(classe_codigo, classe_nome),
+        "sort": [{"dataAjuizamento": {"order": "desc"}}],
+    }
+    if search_after is not None:
+        payload["search_after"] = search_after
+    try:
+        status, body = (transport or _requests_transport)(
+            build_base_url(tribunal), get_headers(api_key), payload
+        )
+    except Exception as e:
+        # Reference :127-136 guards only the request ATTEMPT
+        # (connection refused / DNS / timeout → empty); an HTTP
+        # error STATUS — 5xx, 401, 403, raised by raise_for_status
+        # AFTER the 400/404 skip — propagates loudly there, and must
+        # here too: a bad API key or a mid-pagination 500 silently
+        # masquerading as an empty tribunal is data loss.
+        if type(e).__name__ == "HTTPError":
+            raise
+        return []  # transport error → empty (reference :133-136)
+    if status in (400, 404):
+        return []  # skip tribunal (reference :138-140)
+    return body.get("hits", {}).get("hits", [])
+
+
 def fetch_raw_hits(
     tribunal: str,
     classe_codigo: int | None = None,
@@ -84,37 +125,14 @@ def fetch_raw_hits(
     transport: Transport | None = None,
     api_key: str | None = None,
 ) -> Iterator[dict[str, Any]]:
-    """S1+S2 — generator of raw hit dicts for one tribunal, keyset-paginated
-    with all reference stop guards."""
-    transport = transport or _requests_transport
-    url = build_base_url(tribunal)
-    headers = get_headers(api_key)
-    base_payload: dict[str, Any] = {
-        "size": page_size,
-        "query": build_query(classe_codigo, classe_nome),
-        "sort": [{"dataAjuizamento": {"order": "desc"}}],
-    }
+    """S1+S2 — generator of raw hit dicts for one tribunal: ``fetch_page``
+    in a loop with the reference's cursor stop guards."""
     search_after: list[Any] | None = None
     seen_cursors: set[tuple] = set()
     for _ in range(max_requests):
-        payload = dict(base_payload)
-        if search_after is not None:
-            payload["search_after"] = search_after
-        try:
-            status, body = transport(url, headers, payload)
-        except Exception as e:
-            # Reference :127-136 guards only the request ATTEMPT
-            # (connection refused / DNS / timeout → empty); an HTTP
-            # error STATUS — 5xx, 401, 403, raised by raise_for_status
-            # AFTER the 400/404 skip — propagates loudly there, and must
-            # here too: a bad API key or a mid-pagination 500 silently
-            # masquerading as an empty tribunal is data loss.
-            if type(e).__name__ == "HTTPError":
-                raise
-            return  # transport error → empty (reference :133-136)
-        if status in (400, 404):
-            return  # skip tribunal (reference :138-140)
-        hits = body.get("hits", {}).get("hits", [])
+        hits = fetch_page(
+            tribunal, search_after, classe_codigo, classe_nome, page_size, transport, api_key
+        )
         if not hits:
             return
         yield from hits
@@ -127,14 +145,15 @@ def fetch_raw_hits(
 
 
 class DataJudSource:
-    """Scan builder: tribunals → DataFrame of raw hits (HIT_SCHEMA).
+    """Scan builder: tribunals → one DataFrame of ``(tribunal, hit)`` rows.
 
-    Scale design: ``parallel_scan`` distributes one tribunal per task via
-    ``parallelize(...).flatMap`` so N tribunals page concurrently on N
-    executor cores — the distributed analogue of the reference's sequential
-    driver loop (``:217-232``).  Each hit is carried as a JSON string across
-    the Python↔JVM boundary and parsed with the explicit HIT_SCHEMA (no
-    inference pass — SURVEY §1.3).
+    ``parallel_scan`` is the one batch scan: it distributes one tribunal
+    per task via ``parallelize(...).flatMap`` so N tribunals page
+    concurrently on N executor cores — the distributed analogue of the
+    reference's sequential driver loop (``:217-232``).  Each hit is carried
+    as a JSON string across the Python↔JVM boundary and parsed with the
+    explicit HIT_SCHEMA (no inference pass — SURVEY §1.3).  The transport
+    is pickled out to the executors with the fetch closure.
     """
 
     def __init__(
@@ -150,32 +169,6 @@ class DataJudSource:
         self.page_size = page_size
         self.max_requests = max_requests
         self.api_key = api_key
-
-    def scan(
-        self,
-        tribunais: list[str],
-        classe_codigo: int | None = None,
-        classe_nome: str | None = None,
-    ) -> dict[str, DataFrame]:
-        """One DataFrame of HIT_SCHEMA rows per tribunal (driver-side fetch;
-        fine for capped pulls — CI caps at 500 rows)."""
-        out: dict[str, DataFrame] = {}
-        for trib in tribunais:
-            rows = [
-                json.dumps(h)
-                for h in fetch_raw_hits(
-                    trib,
-                    classe_codigo,
-                    classe_nome,
-                    self.page_size,
-                    self.max_requests,
-                    self.transport,
-                    self.api_key,
-                )
-            ]
-            rdd = self.spark.sparkContext.parallelize(rows or [], max(1, len(rows) // 10_000 + 1))
-            out[trib] = self.spark.read.schema(HIT_SCHEMA).json(rdd)
-        return out
 
     def parallel_scan(
         self,

@@ -8,8 +8,10 @@ reference's ingest loop (``/root/reference/src/jurimetria_pipeline.py:96-160``):
 - **partition pruning via pushFilters** — ``.where(col("tribunal") ==
   'TJCE')`` removes the other tribunals' partitions BEFORE any HTTP
   request is issued (the Python-source analogue of DSv2 pushdown);
-- **keyset-pagination protocol** — delegated to ``fetch_raw_hits`` with
-  all of the reference's stop guards (S2);
+- **keyset-pagination protocol** — not copied here: the batch reader
+  calls ``fetch_raw_hits`` with all of the reference's stop guards (S2),
+  the stream reader calls ``fetch_page`` and its per-page guards, so an
+  HTTP error status raises on both paths;
 - **streaming** — ``spark.readStream.format("datajud")`` maps the
   ``search_after`` cursor to a resumable micro-batch source: the offset is
   the per-tribunal cursor, one page per tribunal per micro-batch
@@ -46,10 +48,8 @@ from jurimetria_etl_spark.sources.datajud import (
     MAX_REQUESTS,
     PAGE_SIZE,
     Transport,
-    build_base_url,
-    build_query,
+    fetch_page,
     fetch_raw_hits,
-    get_headers,
 )
 
 RAW_SCHEMA = "tribunal string, hit_json string"
@@ -94,7 +94,7 @@ def offline_transport(pages_file: str) -> Transport:
 def _make_transport(options: dict[str, str]) -> Transport | None:
     if options.get("transport") == "offline":
         return offline_transport(options["pages_file"])
-    return None  # default requests transport inside fetch_raw_hits
+    return None  # default requests transport inside fetch_page
 
 
 def _tribunais(options: dict[str, str]) -> list[str]:
@@ -168,34 +168,21 @@ class DataJudStreamReader(SimpleDataSourceStreamReader):
         return {t: None for t in self.tribunais}
 
     def _page(self, tribunal: str, cursor) -> tuple[list[dict[str, Any]], Any]:
+        """One page after ``cursor`` and the cursor to resume from.  An
+        empty page or a repeated cursor returns no rows and keeps the
+        cursor where it is, so the next micro-batch asks again."""
         o = self.options
-        transport = _make_transport(o)
-        url = build_base_url(tribunal)
-        payload: dict[str, Any] = {
-            "size": int(o.get("page_size", PAGE_SIZE)),
-            "query": build_query(
-                int(o["classe_codigo"]) if o.get("classe_codigo") else None,
-                o.get("classe_nome"),
-            ),
-            "sort": [{"dataAjuizamento": {"order": "desc"}}],
-        }
-        if cursor is not None:
-            payload["search_after"] = cursor
-        if transport is None:
-            from jurimetria_etl_spark.sources.datajud import _requests_transport
-
-            transport = _requests_transport
-        try:
-            status, body = transport(url, get_headers(o.get("api_key")), payload)
-        except Exception:
-            return [], cursor
-        if status in (400, 404):
-            return [], cursor
-        hits = body.get("hits", {}).get("hits", [])
-        if not hits:
-            return [], cursor
-        new_cursor = hits[-1].get("sort")
-        if new_cursor == cursor:  # repeated cursor → stop advancing
+        hits = fetch_page(
+            tribunal,
+            cursor,
+            int(o["classe_codigo"]) if o.get("classe_codigo") else None,
+            o.get("classe_nome"),
+            int(o.get("page_size", PAGE_SIZE)),
+            _make_transport(o),
+            o.get("api_key"),
+        )
+        new_cursor = hits[-1].get("sort") if hits else cursor
+        if new_cursor == cursor:
             return [], cursor
         return hits, new_cursor
 

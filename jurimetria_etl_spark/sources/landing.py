@@ -20,6 +20,7 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jurimetria_etl_spark import storefs
 from jurimetria_etl_spark.operators.flatten import flatten_hits
 from jurimetria_etl_spark.schemas import HIT_SCHEMA
 
@@ -33,21 +34,16 @@ def read_hits_jsonl(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(HIT_SCHEMA).json(path)
 
 
-def _landing_layouts(spark: SparkSession, path: str) -> tuple[bool, bool]:
+def _landing_layouts(path: str) -> tuple[bool, bool]:
     """(has_pull_dirs, has_flat_tribunal_dirs) — which landing layouts
-    exist under ``path``, listed through the Hadoop FileSystem API so the
-    sniff sees the SAME filesystem Spark reads (HDFS/S3/local alike).  A
-    driver-local ``os.listdir`` here would return (False, False) on any
-    remote zone and silently drop every ``pull_id=``-landed partition
-    from ``read_processos_landing``.  Listing errors other than
-    not-found propagate — a misconfigured zone must fail loudly, not
-    read partially."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath) or not fs.getFileStatus(hpath).isDirectory():
-        return (False, False)
-    names = [s.getPath().getName() for s in fs.listStatus(hpath)]
+    exist under ``path``, listed through ``storefs`` over the Hadoop
+    FileSystem so the sniff sees the SAME filesystem Spark reads
+    (HDFS/S3/local alike).  A driver-local ``os.listdir`` here would
+    return (False, False) on any remote zone and silently drop every
+    ``pull_id=``-landed partition from ``read_processos_landing``.  A
+    missing path lists as empty; other listing errors propagate — a
+    misconfigured zone must fail loudly, not read partially."""
+    names = [name for name, is_dir, _ in storefs.listing(path) if is_dir]
     return (
         any(n.startswith("pull_id=") for n in names),
         any(n.startswith("tribunal=") for n in names),
@@ -72,7 +68,7 @@ def read_processos_landing(
     it exists so retried pulls overwrite themselves (``land_hits``)."""
     if tribunal is not None:
         return flatten_hits(read_hits_jsonl(spark, path), tribunal)
-    has_pulls, has_flat = _landing_layouts(spark, path)
+    has_pulls, has_flat = _landing_layouts(path)
     frames: list[DataFrame] = []
     if has_pulls:
         hits = spark.read.schema(HIT_SCHEMA).option("basePath", path).json(

@@ -6,10 +6,10 @@ postings and sidecars, span, bloom, benchmark probe, curation corpus)
 are parquet trees plus small ``_``-prefixed files that Spark's file
 listing ignores.  This module is the one place that knows that format
 and the one place that touches those files.  It reaches them through
-the Hadoop FileSystem of the active SparkContext (the
-``sources/landing.py:_landing_layouts`` posture), so a store behaves
+the Hadoop FileSystem of the active SparkContext, so a store behaves
 the same on a plain path, ``file:``, ``viewfs:`` or ``hdfs:`` —
-whatever Spark itself reads and writes.
+whatever Spark itself reads and writes.  The landing reader
+(``sources/landing.py``) lists its zones through the same layer.
 
 Store format:
 

@@ -129,6 +129,41 @@ def test_stream_reader_cursor_offsets(tmp_path):
     assert list(rows3) == [] and off3 == off2
 
 
+class HTTPError(Exception):
+    """Stands in for ``requests.HTTPError``: the guard matches the name."""
+
+
+def test_stream_reader_http_error_raises(monkeypatch):
+    """A 401 or 5xx raises out of the micro-batch, as it does out of the
+    batch scan, instead of reading as an empty page."""
+    import jurimetria_etl_spark.sources.datajud as datajud
+
+    def bad_auth(url, headers, payload):
+        raise HTTPError("401 Unauthorized")
+
+    monkeypatch.setattr(datajud, "_requests_transport", bad_auth)
+    r = DataJudStreamReader({"tribunais": "TJCE"})
+    with pytest.raises(HTTPError):
+        r.read(r.initialOffset())
+
+
+@pytest.mark.parametrize("failure", ["connection", 400, 404])
+def test_stream_reader_skipped_page_keeps_cursor(monkeypatch, failure):
+    import jurimetria_etl_spark.sources.datajud as datajud
+
+    def transport(url, headers, payload):
+        assert payload["search_after"] == [1673352000002]
+        if failure == "connection":
+            raise ConnectionError("down")
+        return failure, {}
+
+    monkeypatch.setattr(datajud, "_requests_transport", transport)
+    r = DataJudStreamReader({"tribunais": "TJCE"})
+    start = {"TJCE": [1673352000002]}
+    rows, end = r.read(start)
+    assert list(rows) == [] and end == start
+
+
 def test_streaming_end_to_end(spark, tmp_path):
     pages = _two_page_fixture(tmp_path)
     register_datajud_source(spark)

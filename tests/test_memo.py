@@ -6,8 +6,11 @@ everything.  Stub builders and tiny frames only — no store is built."""
 from __future__ import annotations
 
 import ast
+import json
 import os
 import re
+import subprocess
+import sys
 import tempfile
 from pathlib import Path
 from types import SimpleNamespace
@@ -19,6 +22,7 @@ from pyspark import StorageLevel
 
 from jurimetria_etl_spark import memo
 from tests.conftest import cached_relations
+from tests.test_curation import SF
 
 ROOT = Path(__file__).resolve().parents[1]
 
@@ -212,9 +216,38 @@ def test_query_leaves_nothing_cached(spark, name):
     probes share lives on disk.  The memo is cleared first, so a
     session artifact an earlier test built cannot hide in ``before``."""
     from jurimetria_etl_spark.plans.registry import REGISTRY
-    from tests.test_curation import SF
 
     memo.clear()
     before = cached_relations(spark, checkpoints=True)
     assert REGISTRY[name].spark(spark, SF).count() > 0
     assert cached_relations(spark, checkpoints=True) - before == set()
+
+
+def test_store_directories_are_removed_at_exit(tmp_path):
+    """x41's ANN store and x37b's BM25 store live in memo entries; a
+    process that exits without ``clear()`` still removes them."""
+    code = f"""
+import json, os
+from jurimetria_etl_spark.plans import extensions as X
+from jurimetria_etl_spark.plans.registry import REGISTRY
+from jurimetria_etl_spark.session import get_spark
+spark = get_spark("memo-exit", master="local[2]", shuffle_partitions=8)
+for name in ("x41_ann_store_topk", "x37b_hybrid_search_ann"):
+    REGISTRY[name].spark(spark, {SF!r}).count()
+dirs = [X._ann_store_dir(spark, {SF!r})[0], X._text_index_dir(spark, {SF!r})]
+print(json.dumps({{d: os.path.isdir(d) for d in dirs}}))
+"""
+    run = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=ROOT,
+        env={**os.environ, "TMPDIR": str(tmp_path), "SPARK_GRAFT_DRIVER_MEM": "1g"},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    dirs = json.loads(run.stdout.strip().splitlines()[-1])
+    assert len(dirs) == 2 and all(dirs.values())  # built while running
+    assert all(str(tmp_path) in d and not os.path.exists(d) for d in dirs)
+    prefixes = ("ann_store_x41_", "text_index_x37b_")
+    assert [p.name for p in tmp_path.iterdir() if p.name.startswith(prefixes)] == []

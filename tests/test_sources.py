@@ -311,18 +311,42 @@ def test_build_dataframe_parallel_scan_with_injected_transport(spark):
     from jurimetria_etl_spark.sources.datajud import DataJudSource
 
     src = DataJudSource(spark, transport=_paged_hit_transport())
-    df = build_dataframe(spark, ["TJCE", "TJSP"], source=src, parallel=True)
+    df = build_dataframe(spark, ["TJCE", "TJSP"], source=src)
     assert df.rdd.getNumPartitions() == 2  # one partition per tribunal
     rows = {r["tribunal"]: r["numero_processo"] for r in df.collect()}
     assert rows == {"TJCE": "TJCE-0001", "TJSP": "TJSP-0001"}
 
 
-def test_build_dataframe_driver_scan_fallback_matches(spark):
+def test_build_dataframe_driver_scan_fallback_matches(spark, tmp_path):
+    """The executor-side scan gives the rows a driver-side ``fetch_raw_hits``
+    run over the same transport gives through ``flatten_hits``."""
+    import json
+
+    from jurimetria_etl_spark.operators.flatten import flatten_hits
+    from jurimetria_etl_spark.pipeline import build_dataframe
+    from jurimetria_etl_spark.sources.datajud import DataJudSource
+    from jurimetria_etl_spark.sources.landing import read_hits_jsonl
+
+    transport = _paged_hit_transport()
+    tribs = ["TJCE", "TJSP"]
+    got = build_dataframe(spark, tribs, source=DataJudSource(spark, transport=transport))
+    want = []
+    for trib in tribs:
+        path = tmp_path / f"{trib}.json"
+        path.write_text(
+            "\n".join(json.dumps(h) for h in fetch_raw_hits(trib, transport=transport))
+        )
+        want += flatten_hits(read_hits_jsonl(spark, str(path)), trib).collect()
+    key = lambda r: (r["tribunal"], r["numero_processo"])  # noqa: E731
+    assert sorted(got.collect(), key=key) == sorted(want, key=key)
+    assert len(want) == 2
+
+
+def test_build_dataframe_empty_tribunais_keeps_schema(spark):
     from jurimetria_etl_spark.pipeline import build_dataframe
     from jurimetria_etl_spark.sources.datajud import DataJudSource
 
     src = DataJudSource(spark, transport=_paged_hit_transport())
-    par = build_dataframe(spark, ["TJCE", "TJSP"], source=src, parallel=True)
-    seq = build_dataframe(spark, ["TJCE", "TJSP"], source=src, parallel=False)
-    key = lambda r: (r["tribunal"], r["numero_processo"])  # noqa: E731
-    assert sorted(map(key, par.collect())) == sorted(map(key, seq.collect()))
+    empty = build_dataframe(spark, [], source=src)
+    assert empty.count() == 0
+    assert empty.schema == build_dataframe(spark, ["TJCE"], source=src).schema
